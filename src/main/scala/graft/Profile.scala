@@ -58,33 +58,7 @@ object Profile {
         println(s"    [stream terminated]")
     })
 
-    // same warmup as Bench so JIT/codegen are hot
-    try {
-      Seq("lineitem", "orders", "customer", "documents", "embeddings")
-        .foreach(t => Tables.load(spark, sfDir, t).count())
-      Tables.events(spark, sfDir).count()
-      sources.Layout.prepare(spark, sfDir)
-      sources.TxLog.prepare(spark, sfDir)
-      sources.DeltaLog.prepare(spark, sfDir)
-      sources.IcebergLog.prepare(spark, sfDir)
-      val warmDir = "/root/testdata/sf0.001"
-      if (warmDir != sfDir && new java.io.File(warmDir).isDirectory) {
-        sources.Layout.prepare(spark, warmDir)
-        val names = args.toSet
-        SparkEntry.queries.filter(q => names.isEmpty || names(q._1)).foreach { case (_, fn) =>
-          try fn(spark, warmDir).count() catch { case _: Throwable => }
-        }
-        spark.catalog.clearCache()
-        Caches.clearAll()
-      }
-      streaming.Streams.prepare(spark, sfDir)
-    } catch {
-      // NonFatal only: an OOM/linkage error must crash, not silently
-      // profile cold paths; and a skipped warmup must be VISIBLE, or
-      // the printed timings mislead
-      case scala.util.control.NonFatal(e) =>
-        System.err.println(s"WARNING: profile warmup failed (timings are cold): $e")
-    }
+    Bench.warmup(spark, sfDir, args.toSet) // same warmup as Bench so JIT/codegen are hot
 
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { n =>

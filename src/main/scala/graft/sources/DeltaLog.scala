@@ -521,11 +521,11 @@ object DeltaLog {
     val deltaV = txVersion - 1
     Files.createDirectories(logDir(table))
     if (Files.exists(commitPath(table, deltaV))) return
-    // BACKFILLED versions pass the TxLog manifest mtime (the real
-    // commit point) so an ICT table's time travel maps historical
-    // versions to commit time, not re-mirror time; the live commit
-    // uses the wall clock. The monotonic clamp below still guards
-    // against clocks (or mtimes) that step backwards.
+    // TxLog passes every version's manifest mtime (the real commit
+    // point), so an ICT table's time travel maps backfilled versions to
+    // commit time, not re-mirror time; callers without one use the wall
+    // clock. The monotonic clamp below still guards against clocks (or
+    // mtimes) that step backwards.
     val now = commitTime.getOrElse(System.currentTimeMillis())
     val lines = scala.collection.mutable.ArrayBuffer.empty[String]
     // the metaData this commit considers current — cached ONLY once the

@@ -564,21 +564,21 @@ private[graft] object CommitLog {
     kind(table.toString) match {
       case Kind.Delta => ForeignDeltaLog.manifestOp(table.toString, v)
       case Kind.Iceberg => ForeignIcebergLog.manifestOp(table.toString, v)
-      case _ => TxLog.manifestOp(table, v)
+      case _ => TxLog.readManifest(table, v).op
     }
 
   def manifestDvs(table: Path, v: Long): Map[String, String] =
     kind(table.toString) match {
       case Kind.Delta => ForeignDeltaLog.manifestDvs(table.toString, v)
       case Kind.Iceberg => ForeignIcebergLog.manifestDvs(table.toString, v)
-      case _ => TxLog.manifestDvs(table, v)
+      case _ => TxLog.readManifest(table, v).dvs
     }
 
   def manifestCdc(table: Path, v: Long): Seq[String] =
     kind(table.toString) match {
       case Kind.Delta => ForeignDeltaLog.manifestCdc(table.toString, v)
       case Kind.Iceberg => ForeignIcebergLog.manifestCdc(table.toString, v)
-      case _ => TxLog.manifestCdc(table, v)
+      case _ => TxLog.readManifest(table, v).cdc
     }
 
   def partitionColumnsOf(dir: String): Seq[String] = kind(dir) match {

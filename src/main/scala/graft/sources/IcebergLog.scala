@@ -2145,7 +2145,7 @@ object IcebergLog {
       }
     }
     var lastDvs: Map[String, String] =
-      if (from <= 0) Map.empty else TxLog.manifestDvs(table, from)
+      if (from <= 0) Map.empty else TxLog.readManifest(table, from).dvs
     // SCHEMA HISTORY: each snapshot records the schema-id in force at
     // its commit (the Delta mirror's version-accurate metaData), so
     // Iceberg time travel types pre-evolution snapshots by their OWN
@@ -2267,7 +2267,7 @@ object IcebergLog {
       // reader's `dataSeq <= deleteSeq` rule then hides exactly the
       // DV'd rows and spares later appends. Without this, the Iceberg
       // view of a DV table would RESURRECT every deleted row.
-      val dvNow = TxLog.manifestDvs(table, v)
+      val dvNow = TxLog.readManifest(table, v).dvs
       if (dvNow != lastDvs) {
         deleteManifest =
           if (dvNow.isEmpty) None // OPTIMIZE materialized the deletes
@@ -2290,7 +2290,7 @@ object IcebergLog {
       }
       val ts = math.max(
         snaps.lastOption.map(_._2).getOrElse(0L),
-        Files.getLastModifiedTime(TxLog.manifestPathOf(table, v)).toMillis)
+        Files.getLastModifiedTime(TxLog.manifestPath(table, v)).toMillis)
       val ml = writeManifestList(table, s"mirror-ml-$v.avro",
         manifests.map((_, 0)) ++ deleteManifest.map((_, 1)), v)
       snaps :+= ((v, ts, ml))

@@ -45,13 +45,10 @@ object TxLog {
     try s.iterator().asScala.toSeq finally s.close()
   }
 
-  private def manifestPath(table: Path, v: Long): Path =
+  /** The commit-point file of version `v` — its mtime is the commit
+    * time both mirrors stamp. */
+  private[sources] def manifestPath(table: Path, v: Long): Path =
     logDir(table).resolve(f"v$v%08d.manifest")
-
-  /** The commit-point file of version `v` — the Iceberg mirror reads
-    * its mtime as the snapshot timestamp. */
-  private[sources] def manifestPathOf(table: Path, v: Long): Path =
-    manifestPath(table, v)
 
   /** Latest committed version, if any commit exists. */
   def currentVersion(dir: String): Option[Long] = {
@@ -67,76 +64,123 @@ object TxLog {
     }
   }
 
-  /** Data-file lines only: `#`-prefixed lines are commit METADATA (the
-    * `#txn` idempotence token) and invisible to every path consumer —
-    * snapshots, backfill diffs, vacuum, CDF. Pre-metadata manifests
-    * have no `#` lines, so old tables parse unchanged. */
-  private def readManifest(table: Path, v: Long): Seq[String] =
-    Files.readAllLines(manifestPath(table, v)).asScala.toSeq
-      .filter(l => l.nonEmpty && !l.startsWith("#"))
-
-  /** The `#dv <rel> <descriptor-json>` header lines (URL-encoded) of
-    * one manifest: the DELETION VECTORS in force for this version's
-    * files — merge-on-read row-level deletes, riding the commit point
-    * like every other commit fact. Invisible to path consumers (the
-    * `#` rule); absent on pre-DV manifests. Carried forward by later
-    * commits for files still live; a rewrite that replaces a file
-    * drops its entry (the rewrite materialized the deletes).
-    */
-  private[graft] def manifestDvs(table: Path, v: Long): Map[String, String] =
-    Files.readAllLines(manifestPath(table, v)).asScala.iterator
-      .filter(_.startsWith("#dv ")).map(_.split(" ", 3))
-      .collect { case p if p.length >= 3 => (dec(p(1)), dec(p(2).trim)) }
-      .toMap
-
-  /** Does version `v` carry deletion vectors? The DSv2 scan refuses DV
-    * tables (its vectorized parquet readers cannot hide rows by
-    * ordinal yet) — resurrecting deleted rows silently would be far
-    * worse than the refusal. */
-  private[graft] def hasDvs(dir: String, v: Long): Boolean =
-    manifestDvs(Paths.get(dir), v).nonEmpty
-
-  private def dvLines(dvs: Map[String, String]): String =
-    dvs.toSeq.sortBy(_._1)
-      .map { case (rel, d) => s"#dv ${enc(rel)} ${enc(d)}\n" }.mkString
-
-  /** ROW TRACKING (`#rid <rel> <base> <n> <v0>` header lines): each
-    * live file's baseRowId, row count, and the version that committed
-    * its rows — a row's stable id is `base + ordinal`, and it survives
-    * merge-on-read DML because DVs hide rows without moving them.
-    * Carried forward like `#dv`; dropped with a rewritten file. The
-    * table's id high-water mark rides `#ridhwm <N>` and NEVER
-    * regresses (removed files' ids are spent forever, the spec's
-    * no-reissue rule). */
+  /** ROW TRACKING entry of one live file (`#rid`, see [[Manifest]]): its
+    * baseRowId, row count, and the version that committed its rows — a
+    * row's stable id is `base + ordinal`, and it survives merge-on-read
+    * DML because DVs hide rows without moving them. */
   private[graft] final case class Rid(base: Long, n: Long, v0: Long)
 
-  private[graft] def manifestRids(table: Path, v: Long): Map[String, Rid] =
-    Files.readAllLines(manifestPath(table, v)).asScala.iterator
-      .filter(_.startsWith("#rid ")).map(_.split(" ", 5))
-      .collect { case p if p.length >= 5 =>
-        (dec(p(1)), Rid(p(2).toLong, p(3).toLong, p(4).trim.toLong))
-      }.toMap
+  /** One `_txlog/v%08d.manifest`, the COMMIT POINT of its version: UTF-8
+    * text, header lines first, then one table-relative data-file path per
+    * line (no trailing newline). `#` lines are commit METADATA, invisible
+    * to every path consumer (snapshots, mirror diffs, vacuum, CDF);
+    * manifests from older writers lack the newer headers and parse
+    * unchanged. `<enc>` is URL-encoded UTF-8. Headers, in render order:
+    *
+    *  - `#txn <appId> <version>` — the exactly-once idempotence token
+    *    (appId holds no whitespace). Token and data land in one link.
+    *  - `#props <enc k>=<enc v> ...` — table properties a property
+    *    commit installed; the mirror re-derives them after a crash.
+    *  - `#dv <enc rel> <enc descriptor-json>` — the DELETION VECTOR in
+    *    force for a live file. Carried forward while the file lives; a
+    *    rewrite that replaces the file drops it (the deletes were
+    *    materialized).
+    *  - `#ridhwm <N>` — the row-id high-water mark. It NEVER regresses:
+    *    removed files' ids are spent forever (the spec's no-reissue rule).
+    *  - `#rid <enc rel> <base> <n> <v0>` — one [[Rid]]; carried forward
+    *    like `#dv`.
+    *  - `#ridmat <enc rel>` — a file whose rows carry MATERIALIZED row
+    *    ids (an OPTIMIZE rewrote it); carried forward like `#rid`.
+    *  - `#cdc <enc rel>` — a change-data file this commit wrote, atomic
+    *    with the data change it describes.
+    *  - `#op <enc operation> <0|1>` — the commit's operation and
+    *    dataChange flag, recorded at commit time so nothing needs the
+    *    (later-written, compactable) mirror to tell a bytes-only OPTIMIZE
+    *    from a data change. Absent on pre-`#op` manifests: `op = None`,
+    *    and consumers fall back to the mirror or classify conservatively
+    *    as a data-changing WRITE.
+    *
+    * A truncated `#op`, `#dv` or `#rid` line, or a `#props` token without
+    * `=`, is skipped rather than thrown on. [[render]] sorts every keyed
+    * header, so `parse` then `render` reproduces the bytes of every
+    * manifest this engine writes.
+    */
+  private[graft] final case class Manifest(
+      files: Seq[String],
+      txn: Option[(String, Long)] = None,
+      props: Map[String, String] = Map.empty,
+      dvs: Map[String, String] = Map.empty,
+      ridHwm: Option[Long] = None,
+      rids: Map[String, Rid] = Map.empty,
+      ridMat: Set[String] = Set.empty,
+      cdc: Seq[String] = Seq.empty,
+      op: Option[(String, Boolean)] = None) {
 
-  private[graft] def manifestRidHwm(table: Path, v: Long): Option[Long] =
-    Files.readAllLines(manifestPath(table, v)).asScala.iterator
-      .filter(_.startsWith("#ridhwm "))
-      .map(_.stripPrefix("#ridhwm ").trim.toLong).nextOption()
+    def render: Array[Byte] = {
+      def byKey[A](m: Map[String, A]): Seq[(String, A)] = m.toSeq.sortBy(_._1)
+      val header = txn.map { case (app, tv) => s"#txn $app $tv" }.toSeq ++
+        Option.when(props.nonEmpty)(byKey(props)
+          .map { case (k, v) => s"${enc(k)}=${enc(v)}" }.mkString("#props ", " ", "")) ++
+        byKey(dvs).map { case (rel, d) => s"#dv ${enc(rel)} ${enc(d)}" } ++
+        ridHwm.map(h => s"#ridhwm $h") ++
+        byKey(rids).map { case (rel, r) => s"#rid ${enc(rel)} ${r.base} ${r.n} ${r.v0}" } ++
+        ridMat.toSeq.sorted.map(rel => s"#ridmat ${enc(rel)}") ++
+        cdc.sorted.map(rel => s"#cdc ${enc(rel)}") ++
+        op.map { case (o, dc) => s"#op ${enc(o)} ${if (dc) 1 else 0}" }
+      (header.map(_ + "\n").mkString + files.mkString("\n")).getBytes("UTF-8")
+    }
+  }
 
-  private def ridLines(rids: Map[String, Rid], hwm: Option[Long],
-      mat: Set[String] = Set.empty): String =
-    hwm.map(h => s"#ridhwm $h\n").getOrElse("") +
-      rids.toSeq.sortBy(_._1).map { case (rel, r) =>
-        s"#rid ${enc(rel)} ${r.base} ${r.n} ${r.v0}\n"
-      }.mkString +
-      mat.toSeq.sorted.map(rel => s"#ridmat ${enc(rel)}\n").mkString
+  private[graft] object Manifest {
+    val empty: Manifest = Manifest(Seq.empty)
 
-  /** Files whose rows carry MATERIALIZED row ids (an OPTIMIZE rewrote
-    * them; ids ride the named column, not base + position). Carried
-    * forward like `#rid`. */
-  private[graft] def manifestRidMat(table: Path, v: Long): Set[String] =
-    Files.readAllLines(manifestPath(table, v)).asScala.iterator
-      .filter(_.startsWith("#ridmat "))
-      .map(l => dec(l.stripPrefix("#ridmat ").trim)).toSet
+    def parse(lines: Seq[String]): Manifest = {
+      def tagged(tag: String): Seq[String] =
+        lines.filter(_.startsWith(tag + " ")).map(_.drop(tag.length + 1))
+      Manifest(
+        files = lines.filter(l => l.nonEmpty && !l.startsWith("#")),
+        txn = tagged("#txn").headOption.map { l =>
+          val p = l.split(" ", 2)
+          (p(0), p(1).toLong)
+        },
+        props = tagged("#props").flatMap(_.split(" ")).collect {
+          case kv if kv.indexOf('=') > 0 =>
+            val i = kv.indexOf('=')
+            (dec(kv.take(i)), dec(kv.drop(i + 1)))
+        }.toMap,
+        dvs = tagged("#dv").map(_.split(" ", 2)).collect {
+          case Array(rel, d) => (dec(rel), dec(d.trim))
+        }.toMap,
+        ridHwm = tagged("#ridhwm").headOption.map(_.trim.toLong),
+        rids = tagged("#rid").map(_.split(" ", 4)).collect {
+          case Array(rel, b, n, v0) => (dec(rel), Rid(b.toLong, n.toLong, v0.trim.toLong))
+        }.toMap,
+        ridMat = tagged("#ridmat").map(l => dec(l.trim)).toSet,
+        cdc = tagged("#cdc").map(l => dec(l.trim)),
+        op = tagged("#op").map(_.split(" ", 2)).collectFirst {
+          case Array(o, dc) => (dec(o), dc.trim == "1")
+        })
+    }
+  }
+
+  /** The one read of a manifest file. */
+  private[graft] def readManifest(table: Path, v: Long): Manifest =
+    Manifest.parse(Files.readAllLines(manifestPath(table, v)).asScala.toSeq)
+
+  /** Put-if-absent commit of `m` as version `v`; false when another
+    * committer already holds `v`. createLink is the true put-if-absent:
+    * link(2) fails with EEXIST when the version is taken (an ATOMIC_MOVE
+    * rename would silently REPLACE an existing manifest on POSIX,
+    * clobbering the committer that won the race). */
+  private def link(table: Path, v: Long, m: Manifest): Boolean = {
+    val tmp = Files.createTempFile(logDir(table), ".commit-", ".tmp")
+    try {
+      Files.write(tmp, m.render)
+      Files.createLink(manifestPath(table, v), tmp)
+      true
+    } catch { case _: java.nio.file.FileAlreadyExistsException => false }
+    finally Files.deleteIfExists(tmp)
+  }
 
   private def matRowIdCol(dir: String): Option[String] =
     DeltaLog.tableConfig(Paths.get(dir))
@@ -165,54 +209,21 @@ object TxLog {
     }
   }
 
-  /** Fresh id spans claimed from the CURRENT high-water mark — used by
-    * the rewrite/DV commit paths only, whose `base + 1` serialization
-    * fails loudly on any racing commit (so a stale claim can never
-    * land). Fresh values' `v0` is stamped by the committer at link
-    * time (the claimed version). */
-  private def freshRids(dir: String, table: Path,
-      added: Seq[String]): (Map[String, (Long, Long)], Option[Long]) = {
+  /** Fresh id spans claimed past `hwm`, the high-water mark of the base
+    * manifest — used by the rewrite/DV commit paths only, whose
+    * `base + 1` serialization fails loudly on any racing commit (so a
+    * stale claim can never land). Fresh values' `v0` is stamped by the
+    * committer at link time (the claimed version). */
+  private def freshRids(dir: String, table: Path, added: Seq[String],
+      hwm: Option[Long]): (Map[String, (Long, Long)], Option[Long]) = {
     val counts = ridCountsOf(dir, table, added)
     if (counts.isEmpty) return (Map.empty, None)
-    val cur = currentVersion(dir)
-    var next = cur.flatMap(manifestRidHwm(table, _)).getOrElse(-1L) + 1
+    var next = hwm.getOrElse(-1L) + 1
     val m = counts.map { case (rel, n) =>
       val e = rel -> ((next, n)); next = Math.addExact(next, n); e
     }.toMap
     (m, Some(next - 1))
   }
-
-  /** The `delta.rowTracking` domain-metadata action version `v` should
-    * mirror: present exactly when its high-water mark moved. */
-  private def ridDomain(table: Path, v: Long): Map[String, String] = {
-    val h = manifestRidHwm(table, v)
-    val ph = if (v <= 1) None else manifestRidHwm(table, v - 1)
-    if (h.isDefined && h != ph)
-      Map("delta.rowTracking" -> s"""{"rowIdHighWaterMark":${h.get}}""")
-    else Map.empty
-  }
-
-  /** Mirror-side rowIds for version `v`: (baseRowId, Delta
-    * defaultRowCommitVersion) for every rel among `rels` that carries a
-    * rid — fresh adds stamp their own version, DV re-adds keep the
-    * ORIGINAL commit version per the spec. */
-  private def mirrorRids(table: Path, v: Long,
-      rels: Set[String]): Map[String, (Long, Long)] =
-    manifestRids(table, v).collect {
-      case (rel, r) if rels(rel) => rel -> ((r.base, r.v0 - 1))
-    }
-
-  /** Change-data file rels a commit recorded (`#cdc` header lines) —
-    * the manifest is the commit point, so the cdc files and the data
-    * change land atomically, and backfill re-emits the `cdc` actions
-    * after a committer crash. */
-  private[graft] def manifestCdc(table: Path, v: Long): Seq[String] =
-    Files.readAllLines(manifestPath(table, v)).asScala.iterator
-      .filter(_.startsWith("#cdc "))
-      .map(l => dec(l.stripPrefix("#cdc ").trim)).toSeq
-
-  private def cdcLines(rels: Seq[String]): String =
-    rels.sorted.map(r => s"#cdc ${enc(r)}\n").mkString
 
   /** Write one commit's row-level change records as PROTOCOL.md
     * change-data files under `_change_data/` (never listed as table
@@ -229,51 +240,8 @@ object TxLog {
     DeltaLog.tableConfig(table).get("delta.enableChangeDataFeed")
       .contains("true")
 
-  /** The `#txn <appId> <version>` token of one manifest, if the commit
-    * carried one. Rides the manifest — the COMMIT POINT — so the token
-    * and the data land in the same atomic link: no window where a
-    * crash separates them.
-    */
-  private[graft] def manifestTxn(table: Path, v: Long): Option[(String, Long)] =
-    Files.readAllLines(manifestPath(table, v)).asScala.iterator
-      .filter(_.startsWith("#txn ")).map { l =>
-        val p = l.split(" ", 3)
-        (p(1), p(2).toLong)
-      }.nextOption()
-
   private def enc(s: String): String = java.net.URLEncoder.encode(s, "UTF-8")
   private def dec(s: String): String = java.net.URLDecoder.decode(s, "UTF-8")
-
-  /** The `#op <operation> <0|1 dataChange>` header of one manifest: the
-    * commit's own classification, recorded AT COMMIT TIME in the commit
-    * point itself — so the streaming source and the mirror backfill
-    * never need the (later-written, compactable) Delta mirror to tell a
-    * bytes-only OPTIMIZE from a data-changing rewrite. Absent on
-    * manifests from pre-`#op` writers; consumers then fall back to the
-    * mirror and classify conservatively. */
-  private[graft] def manifestOp(table: Path, v: Long): Option[(String, Boolean)] =
-    Files.readAllLines(manifestPath(table, v)).asScala.iterator
-      .filter(_.startsWith("#op ")).map(_.split(" ", 3))
-      // a truncated/malformed header (fewer than 3 tokens) degrades to
-      // the documented mirror-based conservative classification instead
-      // of throwing ArrayIndexOutOfBounds mid-classification
-      .collect { case p if p.length >= 3 => (dec(p(1)), p(2).trim == "1") }
-      .nextOption()
-
-  /** The `#props k=v ...` header (URL-encoded pairs) of one manifest:
-    * table properties a property commit installed, durable in the
-    * COMMIT POINT — a committer that dies between manifest link and
-    * mirror write no longer loses installed governance; the next
-    * commit's backfill re-mirrors the properties from here. */
-  private[graft] def manifestProps(table: Path, v: Long): Map[String, String] =
-    Files.readAllLines(manifestPath(table, v)).asScala.iterator
-      .filter(_.startsWith("#props ")).flatMap(_.split(" ").iterator.drop(1))
-      // same degradation rule as [[manifestOp]]: a token without '='
-      // is a malformed pair — skip it rather than fabricate a key
-      .collect { case kv if kv.indexOf('=') > 0 =>
-        val i = kv.indexOf('=')
-        (dec(kv.take(i)), dec(kv.drop(i + 1)))
-      }.toMap
 
   /** Highest committed idempotence-token version for `appId` — the
     * exactly-once check. Manifests scan newest-first and stop at the
@@ -305,7 +273,7 @@ object TxLog {
   private def scanTxn(table: Path, upTo: Long, appId: String): Option[Long] = {
     var v = upTo
     while (v >= 1 && Files.exists(manifestPath(table, v))) {
-      manifestTxn(table, v) match {
+      readManifest(table, v).txn match {
         case Some((a, tv)) if a == appId => return Some(tv)
         case _ => ()
       }
@@ -363,7 +331,6 @@ object TxLog {
       ridCounts: Seq[(String, Long)] = Seq.empty): Long = {
     val table = Paths.get(dir)
     var committed = -1L
-    var removed: Seq[String] = Seq.empty
     while (committed < 0) {
       val cur = currentVersion(dir)
       // idempotence: re-checked on EVERY claim attempt — losing the
@@ -372,74 +339,45 @@ object TxLog {
       for ((app, tv) <- txn; last <- cur.flatMap(c => scanTxn(table, c, app)))
         if (last >= tv) return -1L
       val next = cur.getOrElse(0L) + 1
-      val previous = cur.map(readManifest(table, _)).getOrElse(Seq.empty)
+      val previous = cur.map(readManifest(table, _)).getOrElse(Manifest.empty)
       // a table's partitioning is FIXED at its first commit (Delta's own
       // rule): a mismatched later commit would silently corrupt reads —
       // the mirror's metaData would disagree with the files' layout and
       // the grouped fallback would null out or drop the column. Enforced
       // loudly against the PREVIOUS manifest's layout (overwrites
       // included — repartitioning a table is a new table).
-      for (p <- previous.headOption; a <- added.headOption) {
+      for (p <- previous.files.headOption; a <- added.headOption) {
         val (pc, ac) = (pathPartCols(p), pathPartCols(a))
         if (pc != ac)
           sys.error(s"$dir: partitioning is fixed at the first commit — " +
             s"table is partitioned by [${pc.mkString(",")}] but this commit " +
             s"writes [${ac.mkString(",")}]")
       }
-      val all = (if (carryPrevious) previous else Seq.empty) ++ added
-      removed = if (carryPrevious) Seq.empty else previous
-      // deletion vectors carry forward with the files they hide rows
-      // of; an overwrite drops every file, DVs included
-      val prevDvs =
-        if (carryPrevious) cur.map(manifestDvs(table, _)).getOrElse(Map.empty)
-        else Map.empty[String, String]
-      // row-tracking ids carry forward with their files; an overwrite
-      // drops the entries but NEVER the high-water mark (spent ids are
-      // spent — the spec's no-reissue rule)
-      val prevRids =
-        if (carryPrevious) cur.map(manifestRids(table, _)).getOrElse(Map.empty)
-        else Map.empty[String, Rid]
+      // files, deletion vectors, row-tracking ids and materialization
+      // markers carry forward with their files; an overwrite drops them
+      // all but NEVER the high-water mark (spent ids are spent — the
+      // spec's no-reissue rule)
+      val kept = if (carryPrevious) previous else Manifest.empty
       // fresh id spans are claimed HERE, inside the claim loop, against
       // the manifest mark this attempt actually links over: a lost
       // version race re-reads the racer's (possibly advanced) mark and
       // RE-CLAIMS — stale bases can never alias ids across writers.
       // Re-derivation is free because rid bases are manifest metadata,
       // not file contents (ids read as base + position).
-      val curHwm = cur.flatMap(manifestRidHwm(table, _)).getOrElse(-1L)
-      var nextRid = curHwm + 1
+      var nextRid = previous.ridHwm.getOrElse(-1L) + 1
       val newRids = ridCounts.map { case (rel, n) =>
         val e = rel -> Rid(nextRid, n, next)
         nextRid = Math.addExact(nextRid, n); e
       }.toMap
-      val rids = prevRids ++ newRids
-      val hwm = (cur.flatMap(manifestRidHwm(table, _)).toSeq ++
-        (if (ridCounts.isEmpty) Seq.empty else Seq(nextRid - 1))).maxOption
-      val prevMat =
-        if (carryPrevious)
-          cur.map(manifestRidMat(table, _)).getOrElse(Set.empty[String])
-        else Set.empty[String]
-      val tmp = Files.createTempFile(logDir(table), ".commit-", ".tmp")
-      val header = txn.map { case (app, tv) => s"#txn $app $tv\n" }.getOrElse("") +
-        (if (props.isEmpty) ""
-         else "#props " + props.toSeq.sortBy(_._1)
-           .map { case (k, v) => s"${enc(k)}=${enc(v)}" }.mkString(" ") + "\n") +
-        dvLines(prevDvs) + ridLines(rids, hwm, prevMat) +
-        "#op WRITE 1\n" // appends/overwrites always change data
-      Files.write(tmp, (header + all.mkString("\n")).getBytes("UTF-8"))
-      try {
-        // createLink is the true put-if-absent: link(2) fails with
-        // EEXIST when the version is taken. (An ATOMIC_MOVE rename
-        // would silently REPLACE an existing manifest on POSIX —
-        // clobbering the committer that won the race.)
-        Files.createLink(manifestPath(table, next), tmp)
-        Files.deleteIfExists(tmp)
-        committed = next
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException => Files.deleteIfExists(tmp)
-      }
+      val m = Manifest(kept.files ++ added, txn = txn, props = props,
+        dvs = kept.dvs,
+        ridHwm = (previous.ridHwm.toSeq ++
+          (if (ridCounts.isEmpty) Seq.empty else Seq(nextRid - 1))).maxOption,
+        rids = kept.rids ++ newRids, ridMat = kept.ridMat,
+        op = Some(("WRITE", true))) // appends/overwrites always change data
+      if (link(table, next, m)) committed = next
     }
-    mirrorWithBackfill(dir, table, committed, added, removed, schemaJson,
-      txn = txn, props = props)
+    mirrorThrough(dir, table, committed, schemaJson)
     committed
   }
 
@@ -448,107 +386,79 @@ object TxLog {
     * reader may briefly trail ours by one version but never sees an
     * uncommitted state. Same put-if-absent primitive inside.
     *
-    * BACKFILL first: a committer that died between manifest link and
-    * mirror leaves a Delta version permanently missing, and DeltaLog's
-    * replay (correctly) refuses gapped logs. Any missing predecessor is
-    * reconstructed from the manifests themselves — version v's Delta
-    * delta IS manifest(v) minus manifest(v-1). If an old manifest was
-    * vacuumed away the backfill is impossible; the loud replay guard
-    * then remains the stop.
+    * Mirrors every version from the floor through `committed`, the live
+    * commit being simply the last: a committer that died between
+    * manifest link and mirror leaves a Delta version missing, and
+    * DeltaLog's replay (correctly) refuses gapped logs. Each version's
+    * Delta commit is derived from the manifest pair (v−1, v) alone —
+    * Delta's delta IS manifest(v) minus manifest(v−1), and its token,
+    * classification, properties, cdc files, DV diff and row ids come
+    * from the headers — so a backfilled version is identical to the one
+    * its dead committer would have written. Every version is stamped
+    * with its manifest mtime, the commit point: ICTs and
+    * deletionTimestamps record commit time, so TIMESTAMP AS OF stays
+    * historically accurate. If an old manifest was vacuumed away the
+    * backfill is impossible; the loud replay guard then remains the stop.
     *
     * Best-effort throughout: the _txlog manifest IS the durable commit
     * point, so a mirror-side IOException must not fail a write that
-    * already committed — the next commit's backfill repairs the missing
-    * Delta version (and replay refuses gapped logs loudly meanwhile).
+    * already committed — the next commit repairs the missing Delta
+    * version (and replay refuses gapped logs loudly meanwhile).
     */
-  private def mirrorWithBackfill(dir: String, table: Path, committed: Long,
-      added: Seq[String], removed: Seq[String], schemaJson: String,
-      dataChange: Boolean = true, operation: String = "WRITE",
-      txn: Option[(String, Long)] = None,
-      props: Map[String, String] = Map.empty,
-      cdcAdds: Seq[String] = Seq.empty): Unit = {
+  private def mirrorThrough(dir: String, table: Path, committed: Long,
+      schemaJson: String): Unit = {
     var floor = mirrorFloor.getOrElse(dir, 0L)
     var contiguous = true
-    var v = floor + 1
-    while (v < committed) {
+    val memo = scala.collection.mutable.Map.empty[Long, Manifest]
+    def at(v: Long): Manifest =
+      if (v < 1) Manifest.empty else memo.getOrElseUpdate(v, readManifest(table, v))
+    for (v <- floor + 1 to committed) {
       if (!DeltaLog.isMirrored(table, v))
         try {
-          val prev = if (v == 1) Seq.empty[String] else readManifest(table, v - 1)
-          val cur = readManifest(table, v)
-          // a backfilled commit's token, classification, and properties
-          // come from ITS manifest headers, so the mirror's txn history,
-          // dataChange flags, and installed governance stay
-          // version-accurate across a committer crash
-          val (bop, bdc) = manifestOp(table, v).getOrElse(("WRITE", true))
-          // a backfilled DV delete re-derives its descriptor updates
-          // from the manifests' #dv diff, so the mirror's remove+add
-          // pairs stay version-accurate across a committer crash
-          val dvPrev = if (v == 1) Map.empty[String, String]
-            else manifestDvs(table, v - 1)
-          val dvUp = manifestDvs(table, v).collect {
-            case (rel, d) if !dvPrev.get(rel).contains(d) =>
-              rel -> ((d, dvPrev.get(rel)))
+          val (prev, cur) = (at(v - 1), at(v))
+          val curSet = cur.files.toSet
+          // a changed descriptor mirrors as the spec's remove+add DV
+          // pair; a file both re-added AND DV-bearing (RESTORE) must go
+          // through that pair ONLY — two add actions for one path in one
+          // version would make replay ambiguous. A surviving file whose
+          // DV was DROPPED (RESTORE to a pre-delete state) re-adds plain,
+          // so replay stops hiding the rows the restore brought back.
+          val dvUp = cur.dvs.collect {
+            case (rel, d) if !prev.dvs.get(rel).contains(d) =>
+              rel -> ((d, prev.dvs.get(rel)))
           }
-          // a file both re-added AND DV-bearing (RESTORE) must mirror
-          // through the remove+add DV pair ONLY — two add actions for
-          // one path in one version would make replay ambiguous; a
-          // surviving file whose DV was DROPPED (RESTORE to a
-          // pre-delete state) re-adds plain, so replay stops hiding
-          // the rows the restore brought back
-          val dvDropped = (dvPrev.keySet -- manifestDvs(table, v).keySet)
-            .intersect(cur.toSet).toSeq.sorted
-          val addedV = (cur.filterNot(prev.toSet).filterNot(dvUp.keySet) ++
-            dvDropped).distinct
-          DeltaLog.mirrorCommit(table, v,
-            addedV, prev.filterNot(cur.toSet), schemaJson,
-            dataChange = bdc, operation = bop,
-            txn = manifestTxn(table, v), props = manifestProps(table, v),
-            dvUpdates = dvUp, cdcAdds = manifestCdc(table, v),
-            // the manifest mtime IS the commit point: backfilled ICTs
-            // (and deletionTimestamps) stamp commit time, not backfill
-            // wall-clock — TIMESTAMP AS OF stays historically accurate
+          val dvDropped = (prev.dvs.keySet -- cur.dvs.keySet)
+            .intersect(curSet).toSeq.sorted
+          val added = (cur.files.filterNot(prev.files.toSet)
+            .filterNot(dvUp.keySet) ++ dvDropped).distinct
+          val ridRels = added.toSet ++ dvUp.keySet
+          // a pre-`#op` manifest mirrors as a data-changing WRITE:
+          // without the header it can't tell a compaction from a write,
+          // and the conservative direction for feeds is to surface rows
+          val (op, dataChange) = cur.op.getOrElse(("WRITE", true))
+          DeltaLog.mirrorCommit(table, v, added,
+            prev.files.filterNot(curSet), schemaJson,
+            dataChange = dataChange, operation = op,
+            txn = cur.txn, props = cur.props,
+            dvUpdates = dvUp, cdcAdds = cur.cdc,
             commitTime = scala.util.Try(
               Files.getLastModifiedTime(manifestPath(table, v)).toMillis)
               .toOption,
-            // row-tracking ids re-derive from the manifests' #rid state,
-            // so baseRowIds stay version-accurate across a crash too
-            rowIds = mirrorRids(table, v, addedV.toSet ++ dvUp.keySet),
-            domains = ridDomain(table, v))
+            // fresh adds stamp their own version, DV re-adds keep the
+            // ORIGINAL commit version per the spec
+            rowIds = cur.rids.collect {
+              case (rel, r) if ridRels(rel) => rel -> ((r.base, r.v0 - 1))
+            },
+            // the rowTracking domain rides exactly the versions whose
+            // high-water mark moved
+            domains = cur.ridHwm.filter(h => !prev.ridHwm.contains(h))
+              .map(h => "delta.rowTracking" -> s"""{"rowIdHighWaterMark":$h}""")
+              .toMap)
         } catch { case _: java.io.IOException => () }
       if (contiguous && DeltaLog.isMirrored(table, v)) floor = v
       else contiguous = false
-      v += 1
     }
-    try {
-      // same DV-diff discipline as the backfill: a live RESTORE can
-      // re-instate, change, or drop descriptors on files it re-adds or
-      // keeps — the mirror must carry each through the spec's
-      // remove+add pair (changed) or a plain re-add (dropped), never
-      // two adds for one path in one version
-      val dvNowL = manifestDvs(table, committed)
-      val dvPrevL = if (committed <= 1) Map.empty[String, String]
-        else manifestDvs(table, committed - 1)
-      val dvUpL = dvNowL.collect {
-        case (rel, d) if !dvPrevL.get(rel).contains(d) =>
-          rel -> ((d, dvPrevL.get(rel)))
-      }
-      val curSetL = readManifest(table, committed).toSet
-      val dvDroppedL = (dvPrevL.keySet -- dvNowL.keySet)
-        .intersect(curSetL).toSeq.sorted
-      val addedL = (added.filterNot(dvUpL.keySet) ++ dvDroppedL).distinct
-      DeltaLog.mirrorCommit(table, committed, addedL, removed, schemaJson,
-        dataChange, operation, txn, props, cdcAdds = cdcAdds,
-        dvUpdates = dvUpL,
-        rowIds = mirrorRids(table, committed, addedL.toSet ++ dvUpL.keySet),
-        domains = ridDomain(table, committed))
-      if (contiguous && floor == committed - 1) floor = committed
-    } catch { case _: java.io.IOException => () }
     mirrorFloor.updateWith(dir)(old => Some(math.max(old.getOrElse(0L), floor)))
-    // NOTE: a BACKFILLED version from a pre-`#op` writer mirrors with
-    // dataChange=true — without the header the manifest can't tell a
-    // compaction from a write, and the conservative direction for feeds
-    // is to surface rows, never to lose them. `#op` manifests backfill
-    // with their recorded classification.
   }
 
   /** `delta.appendOnly=true` refuses anything that removes or rewrites
@@ -1023,7 +933,7 @@ object TxLog {
   def commitAppendOnce(df: DataFrame, dir: String, appId: String,
       txnVersion: Long, partitionBy: Seq[String] = Seq.empty): Option[Long] = {
     // the appId is embedded in the space-separated `#txn` header line:
-    // whitespace would poison manifestTxn's parse on every later scan,
+    // whitespace would poison the `#txn` parse on every later scan,
     // a newline would inject a bogus data-file line into the manifest
     require(appId.nonEmpty && !appId.exists(_.isWhitespace),
       s"commitAppendOnce: appId must be non-empty without whitespace " +
@@ -1163,62 +1073,42 @@ object TxLog {
     val retryable = matAdded.isEmpty && restoredRids.isEmpty &&
       restoredMat.isEmpty && dvOverride.isEmpty
     // memoized across the racer-check loop: version rv's "after" state
-    // is rv+1's "before", and a k-racer chain would otherwise read
-    // each manifest + DV header set twice
-    val manifestMemo = scala.collection.mutable.Map.empty[Long, Set[String]]
-    def manifestAt(v: Long): Set[String] =
-      manifestMemo.getOrElseUpdate(v, readManifest(table, v).toSet)
-    val dvMemo = scala.collection.mutable.Map.empty[Long, Map[String, String]]
-    def dvAt(v: Long): Map[String, String] =
-      dvMemo.getOrElseUpdate(v, manifestDvs(table, v))
+    // is rv+1's "before", and a k-racer chain would otherwise read each
+    // manifest twice
+    val manifestMemo = scala.collection.mutable.Map.empty[Long, Manifest]
+    def manifestAt(v: Long): Manifest =
+      manifestMemo.getOrElseUpdate(v, readManifest(table, v))
     var effBase = base
     var attempts = 0
     while (true) {
       attempts += 1
       val next = effBase + 1
-      val prev = readManifest(table, effBase)
-      val all = prev.filterNot(removedSet) ++ added
-      val removed = prev.filter(removedSet)
-      val tmp = Files.createTempFile(logDir(table), ".commit-", ".tmp")
-      // a rewritten file's DV dies with it: the rewrite read the file
-      // DV-filtered, so the replacement materialized the deletes. RESTORE
-      // overrides wholesale: every file gets the TARGET version's DV (a
-      // carried base-version bitmap could hide MORE rows than the target
-      // did, and a restored file would otherwise come back with none).
-      val keptDvs = dvOverride.getOrElse(
-        manifestDvs(table, effBase).filterNot(d => removedSet(d._1)))
-      // surviving files keep their rid entries; the high-water mark is
-      // carried even when every tracked file is gone (ids never reissue).
+      val prev = manifestAt(effBase)
       // Materialized replacement files claim FRESH spans (spec: every add
       // gets a baseRowId; readers prefer the materialized column) —
-      // "wasted" ids, which the spec explicitly allows. RESTORE re-adds
-      // carry their ORIGINAL entries from the restored-to manifest.
+      // "wasted" ids, which the spec explicitly allows.
       val (newRids, newHwm) =
         if (matAdded.isEmpty) (Map.empty[String, (Long, Long)], None)
-        else freshRids(dir, table, added)
-      val keptRids = manifestRids(table, effBase).filterNot(r => removedSet(r._1)) ++
-        restoredRids ++
-        newRids.map { case (rel, (b, n)) => rel -> Rid(b, n, next) }
-      val hwm = (manifestRidHwm(table, effBase).toSeq ++ newHwm.toSeq).maxOption
-      val keptMat = manifestRidMat(table, effBase).filterNot(removedSet) ++
-        restoredMat ++ matAdded
-      val header = dvLines(keptDvs) +
-        ridLines(keptRids, hwm, keptMat) + cdcLines(cdcRels) +
-        s"#op ${enc(operation)} ${if (dataChange) "1" else "0"}\n"
-      Files.write(tmp, (header + all.mkString("\n")).getBytes("UTF-8"))
-      val linked =
-        try {
-          Files.createLink(manifestPath(table, next), tmp)
-          Files.deleteIfExists(tmp)
-          true
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException =>
-            Files.deleteIfExists(tmp)
-            false
-        }
-      if (linked) {
-        mirrorWithBackfill(dir, table, next, added, removed, schemaJson,
-          dataChange, operation, cdcAdds = cdcRels)
+        else freshRids(dir, table, added, prev.ridHwm)
+      val m = Manifest(prev.files.filterNot(removedSet) ++ added,
+        // a rewritten file's DV dies with it: the rewrite read the file
+        // DV-filtered, so the replacement materialized the deletes.
+        // RESTORE overrides wholesale: every file gets the TARGET
+        // version's DV (a carried base-version bitmap could hide MORE
+        // rows than the target did, and a restored file would otherwise
+        // come back with none).
+        dvs = dvOverride.getOrElse(prev.dvs.filterNot(d => removedSet(d._1))),
+        // the high-water mark is carried even when every tracked file is
+        // gone (ids never reissue)
+        ridHwm = (prev.ridHwm.toSeq ++ newHwm.toSeq).maxOption,
+        // surviving files keep their rid entries; RESTORE re-adds carry
+        // their ORIGINAL entries from the restored-to manifest
+        rids = prev.rids.filterNot(r => removedSet(r._1)) ++ restoredRids ++
+          newRids.map { case (rel, (b, n)) => rel -> Rid(b, n, next) },
+        ridMat = prev.ridMat.filterNot(removedSet) ++ restoredMat ++ matAdded,
+        cdc = cdcRels, op = Some((operation, dataChange)))
+      if (link(table, next, m)) {
+        mirrorThrough(dir, table, next, schemaJson)
         return next
       }
       def refuse(why: String): Nothing =
@@ -1231,7 +1121,7 @@ object TxLog {
       if (attempts > 20) refuse("retry budget exhausted under churn")
       val cur = currentVersion(dir).getOrElse(refuse("no current version"))
       ((effBase + 1) to cur).foreach { rv =>
-        racerConflict(dir, manifestAt, dvAt, rv, removedSet, readPreds,
+        racerConflict(dir, manifestAt, rv, removedSet, readPreds,
           dataChange, spark).foreach(refuse)
       }
       effBase = cur
@@ -1241,20 +1131,18 @@ object TxLog {
 
   /** Why racing version `rv` does NOT commute with a rewrite of
     * `removedSet` under `readPreds` — None when it provably does (see
-    * [[commitRewrite]]'s rules). `manifestAt`/`dvAt` are the caller's
-    * memoized readers (consecutive versions share endpoint states). */
-  private def racerConflict(dir: String,
-      manifestAt: Long => Set[String], dvAt: Long => Map[String, String],
+    * [[commitRewrite]]'s rules). `manifestAt` is the caller's memoized
+    * reader (consecutive versions share endpoint states). */
+  private def racerConflict(dir: String, manifestAt: Long => Manifest,
       rv: Long,
       removedSet: Set[String], readPreds: Seq[(String, Any, Any)],
       dataChange: Boolean,
       spark: Option[org.apache.spark.sql.SparkSession]): Option[String] = {
-    val before = manifestAt(rv - 1)
-    val after = manifestAt(rv)
+    val (mBefore, mAfter) = (manifestAt(rv - 1), manifestAt(rv))
+    val (before, after) = (mBefore.files.toSet, mAfter.files.toSet)
     val rAdds = after -- before
     val rRemoves = before -- after
-    val dvBefore = dvAt(rv - 1)
-    val dvAfter = dvAt(rv)
+    val (dvBefore, dvAfter) = (mBefore.dvs, mAfter.dvs)
     val dvChanged = (dvBefore.keySet ++ dvAfter.keySet)
       .filter(k => dvBefore.get(k) != dvAfter.get(k))
     if ((rRemoves ++ dvChanged).exists(removedSet))
@@ -1312,7 +1200,8 @@ object TxLog {
     val table = Paths.get(dir)
     val base = currentVersion(dir).getOrElse(
       sys.error(s"no committed version in $dir"))
-    val prev = readManifest(table, base)
+    val baseM = readManifest(table, base)
+    val prev = baseM.files
     val skipped: Set[String] =
       if (prune.isEmpty) Set.empty
       else scala.util.Try(DeltaLog.pruneFlags(spark, dir, prune)) match {
@@ -1339,7 +1228,7 @@ object TxLog {
       case Some(c) => relsWithRowIds(spark, dir, base, candidates)
         .withColumnRenamed("_row_id", c)
       case None => readRels(spark, table, candidates,
-        dvs = manifestDvs(table, base))
+        dvs = baseM.dvs)
     }
     val replaced = replace(src)
     // change-data records for CDF-enabled copy-on-write DML: the
@@ -1425,7 +1314,8 @@ object TxLog {
     enforceAppendOnly(dir, "DELETE")
     val base = currentVersion(dir).getOrElse(
       sys.error(s"no committed version in $dir"))
-    val prev = readManifest(table, base)
+    val baseM = readManifest(table, base)
+    val prev = baseM.files
     val skipped: Set[String] =
       if (prune.isEmpty) Set.empty
       else scala.util.Try(DeltaLog.pruneFlags(spark, dir, prune)) match {
@@ -1436,7 +1326,7 @@ object TxLog {
     val candidates = prev.filterNot(skipped)
     if (candidates.isEmpty)
       return RewriteResult(base, 0L, prev.size.toLong)
-    val oldDvs = manifestDvs(table, base)
+    val oldDvs = baseM.dvs
     // CDF needs the EXACT visible set for the delete's change records,
     // so the marking scan applies old DVs when the property is on (the
     // cheaper raw scan is correct for bitmaps alone — the union absorbs
@@ -1452,8 +1342,7 @@ object TxLog {
         .filter(pred).withColumn("_change_type", lit("delete")), table)
     val schemaJson = DeltaLog.currentSchemaString(table).getOrElse(
       sys.error(s"$dir: no mirrored metaData for a DV commit"))
-    val v = commitDv(dir, base, updates, oldDvs, schemaJson,
-      cdcRels = cdcRels)
+    val v = commitDv(dir, base, updates, schemaJson, cdcRels = cdcRels)
     DeltaLog.maybeCheckpoint(spark, dir, v)
     RewriteResult(v, updates.size.toLong, skipped.size.toLong)
   }
@@ -1581,41 +1470,23 @@ object TxLog {
     * against `base`).
     */
   private def commitDv(dir: String, base: Long, updates: Map[String, String],
-      oldDvs: Map[String, String], schemaJson: String,
-      added: Seq[String] = Seq.empty, operation: String = "DELETE",
-      cdcRels: Seq[String] = Seq.empty): Long = {
+      schemaJson: String, added: Seq[String] = Seq.empty,
+      operation: String = "DELETE", cdcRels: Seq[String] = Seq.empty): Long = {
     val table = Paths.get(dir)
     val next = base + 1
     val prev = readManifest(table, base)
     // a DV commit moves no file: every rid carries forward; UPDATE's
     // appended postimage files claim fresh id spans
-    val (newRids, newHwm) = freshRids(dir, table, added)
-    val keptRids = manifestRids(table, base) ++ newRids.map {
-      case (rel, (b, n)) => rel -> Rid(b, n, next)
-    }
-    val hwm = (manifestRidHwm(table, base).toSeq ++ newHwm.toSeq).maxOption
-    val tmp = Files.createTempFile(logDir(table), ".commit-", ".tmp")
-    val header = dvLines(oldDvs ++ updates) +
-      ridLines(keptRids, hwm, manifestRidMat(table, base)) +
-      cdcLines(cdcRels) + s"#op $operation 1\n"
-    Files.write(tmp, (header + (prev ++ added).mkString("\n")).getBytes("UTF-8"))
-    try {
-      Files.createLink(manifestPath(table, next), tmp)
-      Files.deleteIfExists(tmp)
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        Files.deleteIfExists(tmp)
-        sys.error(s"$dir: concurrent commit at version $next — this $operation " +
-          s"read version $base and cannot serialize past a racing writer; " +
-          "re-run against the new snapshot")
-    }
-    try DeltaLog.mirrorCommit(table, next, added, Seq.empty, schemaJson,
-      dataChange = true, operation = operation,
-      dvUpdates = updates.map { case (rel, d) => rel -> ((d, oldDvs.get(rel))) },
-      cdcAdds = cdcRels,
-      rowIds = mirrorRids(table, next, added.toSet ++ updates.keySet),
-      domains = ridDomain(table, next))
-    catch { case _: java.io.IOException => () }
+    val (newRids, newHwm) = freshRids(dir, table, added, prev.ridHwm)
+    val m = Manifest(prev.files ++ added, dvs = prev.dvs ++ updates,
+      ridHwm = (prev.ridHwm.toSeq ++ newHwm.toSeq).maxOption,
+      rids = prev.rids ++ newRids.map { case (rel, (b, n)) => rel -> Rid(b, n, next) },
+      ridMat = prev.ridMat, cdc = cdcRels, op = Some((operation, true)))
+    if (!link(table, next, m))
+      sys.error(s"$dir: concurrent commit at version $next — this $operation " +
+        s"read version $base and cannot serialize past a racing writer; " +
+        "re-run against the new snapshot")
+    mirrorThrough(dir, table, next, schemaJson)
     next
   }
 
@@ -1684,7 +1555,8 @@ object TxLog {
     enforceAppendOnly(dir, "UPDATE")
     val base = currentVersion(dir).getOrElse(
       sys.error(s"no committed version in $dir"))
-    val prev = readManifest(table, base)
+    val baseM = readManifest(table, base)
+    val prev = baseM.files
     val skipped: Set[String] =
       if (prune.isEmpty) Set.empty
       else scala.util.Try(DeltaLog.pruneFlags(spark, dir, prune)) match {
@@ -1695,7 +1567,7 @@ object TxLog {
     val candidates = prev.filterNot(skipped)
     if (candidates.isEmpty)
       return RewriteResult(base, 0L, prev.size.toLong)
-    val oldDvs = manifestDvs(table, base)
+    val oldDvs = baseM.dvs
     val updates = dvDescriptorUpdates(spark, table, dir, candidates, pred,
       oldDvs, applyOldDvs = true)
     if (updates.isEmpty)
@@ -1724,7 +1596,7 @@ object TxLog {
           .unionByName(readRels(spark, table, added)
             .withColumn("_change_type", lit("update_postimage")),
             allowMissingColumns = true), table)
-    val v = commitDv(dir, base, updates, oldDvs,
+    val v = commitDv(dir, base, updates,
       effectiveSchemaJson(replacement, dir), added = added,
       operation = "UPDATE", cdcRels = cdcRels)
     DeltaLog.maybeCheckpoint(spark, dir, v)
@@ -1769,7 +1641,7 @@ object TxLog {
     if (res.filesRewritten == 0L) {
       // no live file can hold any source key: every source row inserts
       val table = Paths.get(dir)
-      val partCols = readManifest(table, res.version).headOption
+      val partCols = readManifest(table, res.version).files.headOption
         .map(pathPartCols).getOrElse(Seq.empty)
       RewriteResult(commitAppend(source, dir, partCols), 0L, res.filesSkipped)
     } else res
@@ -1832,7 +1704,8 @@ object TxLog {
       .collect().head
     val prune = keys.zipWithIndex.map { case (k, i) =>
       (k, bounds.get(2 * i), bounds.get(2 * i + 1)) }
-    val prev = readManifest(table, base)
+    val baseM = readManifest(table, base)
+    val prev = baseM.files
     val skipped: Set[String] =
       scala.util.Try(DeltaLog.pruneFlags(spark, dir, prune)) match {
         case scala.util.Success((flags, _)) =>
@@ -1845,7 +1718,7 @@ object TxLog {
     // key side; a genuinely large source falls back to a shuffled
     // semi-join, still O(changed rows + candidate files)
     val srcKeys = source.select(keys.map(col): _*).dropDuplicates(keys)
-    val oldDvs = manifestDvs(table, base)
+    val oldDvs = baseM.dvs
     val updates =
       if (candidates.isEmpty) Map.empty[String, String]
       else dvDescriptorUpdatesBy(spark, table, dir, candidates,
@@ -1874,7 +1747,7 @@ object TxLog {
               .withColumn("_change_type", lit("insert")),
               allowMissingColumns = true), table)
       }
-    val v = commitDv(dir, base, updates, oldDvs,
+    val v = commitDv(dir, base, updates,
       effectiveSchemaJson(replacement, dir), added = added,
       operation = "MERGE", cdcRels = cdcRels)
     DeltaLog.maybeCheckpoint(spark, dir, v)
@@ -2131,9 +2004,10 @@ object TxLog {
     val discovery: Option[(Set[String], DataFrame)] =
       if (bySource.isEmpty) None
       else {
-        val prevRels = readManifest(table, base)
+        val baseM = readManifest(table, base)
+        val prevRels = baseM.files
         val prov = readRels(spark, table, prevRels,
-          dvs = manifestDvs(table, base), provenance = true)
+          dvs = baseM.dvs, provenance = true)
         val absToRel = prevRels.map(rel =>
           table.resolve(rel).toAbsolutePath.normalize().toString -> rel).toMap
         val touched = prov.alias("t")
@@ -2253,7 +2127,7 @@ object TxLog {
             cand0.join(d._2, keys, "left_anti")).getOrElse(cand0))
           if (rows.isEmpty) res
           else {
-            val partCols = readManifest(table, res.version).headOption
+            val partCols = readManifest(table, res.version).files.headOption
               .map(pathPartCols).getOrElse(Seq.empty)
             RewriteResult(commitAppend(rows, dir, partCols), 0L,
               res.filesSkipped)
@@ -2324,7 +2198,8 @@ object TxLog {
     val bysDelIdxs = clauseIdxs(bySource, deletes = true)
     val bysUpdIdxs = clauseIdxs(bySource, deletes = false)
     val insCond = insertCond(inserts)
-    val prev = readManifest(table, base)
+    val baseM = readManifest(table, base)
+    val prev = baseM.files
     val skipped: Set[String] =
       if (prune.isEmpty) Set.empty
       else scala.util.Try(DeltaLog.pruneFlags(spark, dir, prune)) match {
@@ -2345,7 +2220,7 @@ object TxLog {
         case _ => RewriteResult(base, 0L, skipped.size.toLong)
       }
     }
-    val oldDvs = manifestDvs(table, base)
+    val oldDvs = baseM.dvs
     val srcKeys = source.select(keys.map(col): _*)
     // hide exactly the visible rows SOME clause accepts — matched rows
     // through the matched cascade, unmatched-by-source rows through the
@@ -2472,7 +2347,7 @@ object TxLog {
     val schemaJson = replacement.map(effectiveSchemaJson(_, dir))
       .orElse(DeltaLog.currentSchemaString(table))
       .getOrElse(sys.error(s"$dir: no mirrored metaData for a DV commit"))
-    val v = commitDv(dir, base, updates, oldDvs, schemaJson, added = added,
+    val v = commitDv(dir, base, updates, schemaJson, added = added,
       operation = "MERGE", cdcRels = cdcRels)
     DeltaLog.maybeCheckpoint(spark, dir, v)
     RewriteResult(v, updates.size.toLong, skipped.size.toLong)
@@ -2489,7 +2364,8 @@ object TxLog {
     val table = Paths.get(dir)
     val base = currentVersion(dir).getOrElse(
       sys.error(s"no committed version in $dir"))
-    val prev = readManifest(table, base)
+    val baseM = readManifest(table, base)
+    val prev = baseM.files
     val skipped: Set[String] =
       scala.util.Try(DeltaLog.pruneFlags(spark, dir, prune)) match {
         case scala.util.Success((flags, _)) =>
@@ -2503,7 +2379,7 @@ object TxLog {
     val rows =
       if (candidates.isEmpty) eligible
       else eligible.join(
-        readRels(spark, table, candidates, dvs = manifestDvs(table, base))
+        readRels(spark, table, candidates, dvs = baseM.dvs)
           .select(keys.map(col): _*),
         keys, "left_anti")
     if (rows.isEmpty) RewriteResult(base, 0L, skipped.size.toLong)
@@ -2530,8 +2406,9 @@ object TxLog {
     if (!Files.exists(manifestPath(table, version)))
       sys.error(s"$dir: cannot restore to v$version — its manifest is " +
         "expired (vacuumed past the retention window)")
-    val target = readManifest(table, version)
-    val prevSet = readManifest(table, base).toSet
+    val targetM = readManifest(table, version)
+    val target = targetM.files
+    val prevSet = readManifest(table, base).files.toSet
     val missing = target.filterNot(rel => Files.exists(table.resolve(rel)))
     if (missing.nonEmpty)
       sys.error(s"$dir: cannot restore to v$version — ${missing.size} data " +
@@ -2547,13 +2424,12 @@ object TxLog {
     // otherwise come back DV-less and resurrect deleted rows), and
     // re-added files on row-tracked tables bring back their ORIGINAL
     // rid entries and materialization markers
-    val targetDvs = manifestDvs(table, version)
     val addedSet = added.toSet
-    val targetRids = manifestRids(table, version).filter(r => addedSet(r._1))
-    val targetMat = manifestRidMat(table, version).filter(addedSet)
     val v = commitRewrite(dir, base, removedSet, added, schemaJson,
-      operation = "RESTORE", restoredRids = targetRids,
-      restoredMat = targetMat, dvOverride = Some(targetDvs))
+      operation = "RESTORE",
+      restoredRids = targetM.rids.filter(r => addedSet(r._1)),
+      restoredMat = targetM.ridMat.filter(addedSet),
+      dvOverride = Some(targetM.dvs))
     DeltaLog.maybeCheckpoint(spark, dir, v)
     v
   }
@@ -2579,7 +2455,8 @@ object TxLog {
     DeltaLog.warmMetaCache(spark, table)
     val base = currentVersion(dir).getOrElse(
       sys.error(s"no committed version in $dir"))
-    val prev = readManifest(table, base)
+    val baseM = readManifest(table, base)
+    val prev = baseM.files
     val (small, big) = prev.partition(rel =>
       Files.size(table.resolve(rel)) < smallBytes)
     if (small.size < 2) // nothing to pack (0/1 small file = no win)
@@ -2598,7 +2475,7 @@ object TxLog {
         .withColumnRenamed("_row_id", matRowIdCol(dir).getOrElse(
           sys.error(s"$dir: row tracking on but no materialized row-id " +
             "column name configured")))
-      else readRels(spark, table, small, dvs = manifestDvs(table, base))
+      else readRels(spark, table, small, dvs = baseM.dvs)
     val packed =
       if (partCols.nonEmpty) df.repartition(nOut, partCols.map(col): _*)
       else df.repartition(nOut)
@@ -2635,7 +2512,8 @@ object TxLog {
     DeltaLog.warmMetaCache(spark, table)
     val base = currentVersion(dir).getOrElse(
       sys.error(s"no committed version in $dir"))
-    val prev = readManifest(table, base)
+    val baseM = readManifest(table, base)
+    val prev = baseM.files
     require(prev.nonEmpty, s"$dir: nothing to cluster")
     // PARTITIONED tables z-order WITHIN partitions (stock OPTIMIZE's
     // semantics): the range split runs on (partition cols, z-value),
@@ -2643,7 +2521,7 @@ object TxLog {
     // the partitioned write preserves the hive layout — partition
     // pruning composes with the 2-D stats skipping
     val partCols = pathPartCols(prev.head)
-    val df = readRels(spark, table, prev, dvs = manifestDvs(table, base))
+    val df = readRels(spark, table, prev, dvs = baseM.dvs)
     val zv = Layout.zval(col(xCol).cast("bigint"), col(yCol).cast("bigint"))
     val rangeKeys = partCols.map(col) :+ col("__zv")
     val clustered = df.withColumn("__zv", zv)
@@ -2691,7 +2569,8 @@ object TxLog {
     // this window — keep is the union of those that still exist
     val retained = (oldest to cur)
       .filter(v => Files.exists(manifestPath(table, v)))
-    val keep = retained.flatMap(readManifest(table, _)).toSet
+      .map(readManifest(table, _))
+    val keep = retained.flatMap(_.files).toSet
     // deletion-vector files referenced by any retained manifest's #dv
     // headers: every OTHER deletion_vector_*.bin at the table root is
     // superseded (each DV update replaces a file's bin with a merged
@@ -2700,7 +2579,7 @@ object TxLog {
     // exist for. Same retention contract as data files: a bin needed
     // only by an expired version goes with that version.
     val keepDv: Set[Path] = retained
-      .flatMap(v => manifestDvs(table, v).values)
+      .flatMap(_.dvs.values)
       .map(DeletionVectors.parseDescriptor)
       .collect { case d if d.storageType == "u" =>
         DeletionVectors.uPath(table, d.pathOrInlineDv).toAbsolutePath
@@ -2781,7 +2660,7 @@ object TxLog {
     val cdcRoot = table.resolve("_change_data")
     if (Files.isDirectory(cdcRoot)) {
       val keepCdc: Set[String] =
-        retained.flatMap(v => manifestCdc(table, v)).toSet
+        retained.flatMap(_.cdc).toSet
       def allFiles(p: Path): Seq[Path] = listDir(p).flatMap(f =>
         if (Files.isDirectory(f)) allFiles(f) else Seq(f))
       def rm(p: Path): Unit = {
@@ -2878,9 +2757,9 @@ object TxLog {
     */
   def snapshotAt(spark: SparkSession, dir: String, version: Long): DataFrame = {
     val table = Paths.get(dir)
-    readRels(spark, table, readManifest(table, version),
-      DeltaLog.mirroredSchemaAt(spark, table, version - 1),
-      dvs = manifestDvs(table, version))
+    val m = readManifest(table, version)
+    readRels(spark, table, m.files,
+      DeltaLog.mirroredSchemaAt(spark, table, version - 1), dvs = m.dvs)
   }
 
   def snapshot(spark: SparkSession, dir: String): DataFrame =
@@ -2905,7 +2784,7 @@ object TxLog {
     val version = currentVersion(dir).getOrElse(
       sys.error(s"no committed version in $dir"))
     relsWithRowIds(spark, dir, version,
-      readManifest(Paths.get(dir), version))
+      readManifest(Paths.get(dir), version).files)
   }
 
   /** The row-id-attaching scan over a rel subset of `version`'s live
@@ -2920,8 +2799,8 @@ object TxLog {
     DeltaLog.warmMetaCache(spark, table)
     if (!rowTrackingOn(dir))
       sys.error(s"$dir: snapshotWithRowIds needs delta.enableRowTracking=true")
-    val rids = manifestRids(table, version)
-    val mat = manifestRidMat(table, version)
+    val m = readManifest(table, version)
+    val (rids, mat, dvs) = (m.rids, m.ridMat, m.dvs)
     val matCol = matRowIdCol(dir)
     val missing = rels.filterNot(rids.contains)
       .filterNot(rel => DeltaLog.fileRowCount(table.resolve(rel)).contains(0L))
@@ -2932,7 +2811,6 @@ object TxLog {
     if (mat.nonEmpty && matCol.isEmpty)
       sys.error(s"$dir: #ridmat files present but " +
         "delta.rowTracking.materializedRowIdColumnName is unset")
-    val dvs = manifestDvs(table, version)
     val schema = DeltaLog.mirroredSchemaAt(spark, table, version - 1)
       .getOrElse(sys.error(s"$dir: row-id reads need the mirrored schema"))
     // materialized ids live in a column HIDDEN from the table schema:
@@ -3425,13 +3303,13 @@ object TxLog {
   /** Live manifest-relative data files of one committed version — the
     * streaming source's first-batch (history) file list. */
   private[graft] def liveRelsAt(dir: String, v: Long): Seq[String] =
-    readManifest(Paths.get(dir), v)
+    readManifest(Paths.get(dir), v).files
 
   /** The table's partition-column names (from the current manifest's
     * hive path segments; fixed at the first commit). */
   private[graft] def partitionColumnsOf(dir: String): Seq[String] =
     currentVersion(dir)
-      .flatMap(v => readManifest(Paths.get(dir), v).headOption)
+      .flatMap(v => readManifest(Paths.get(dir), v).files.headOption)
       .map(pathPartCols).getOrElse(Seq.empty)
 
   /** (version, added files, removed-anything?) for every version in
@@ -3445,9 +3323,9 @@ object TxLog {
     val table = Paths.get(dir)
     var prev: Set[String] =
       if (fromV <= 1) Set.empty
-      else readManifest(table, fromV - 1).toSet
+      else readManifest(table, fromV - 1).files.toSet
     (fromV to toV).map { v =>
-      val cur = readManifest(table, v)
+      val cur = readManifest(table, v).files
       val curSet = cur.toSet
       val out = (v, cur.filterNot(prev), prev.exists(p => !curSet(p)))
       prev = curSet
@@ -3460,8 +3338,8 @@ object TxLog {
     * change). Metadata-scale: two manifest reads. */
   private[graft] def commitDelta(dir: String, v: Long): (Seq[String], Seq[String]) = {
     val table = Paths.get(dir)
-    val prev = if (v <= 1) Seq.empty[String] else readManifest(table, v - 1)
-    val cur = readManifest(table, v)
+    val prev = if (v <= 1) Seq.empty[String] else readManifest(table, v - 1).files
+    val cur = readManifest(table, v).files
     (cur.filterNot(prev.toSet), prev.filterNot(cur.toSet))
   }
 
@@ -3475,7 +3353,7 @@ object TxLog {
     val table = Paths.get(dir)
     readRels(spark, table, rels,
       DeltaLog.mirroredSchemaAt(spark, table, asOfVersion - 1),
-      dvs = manifestDvs(table, asOfVersion))
+      dvs = readManifest(table, asOfVersion).dvs)
   }
 
   /** Change data feed between two committed versions: with append-only
@@ -3488,13 +3366,14 @@ object TxLog {
     */
   def changesBetween(spark: SparkSession, dir: String, fromV: Long, toV: Long): DataFrame = {
     val table = Paths.get(dir)
-    val before = readManifest(table, fromV).toSet
-    val added = readManifest(table, toV).filterNot(before)
+    val (from, to) = (readManifest(table, fromV), readManifest(table, toV))
+    val before = from.files.toSet
+    val added = to.files.filterNot(before)
     // a DV delete changes rows WITHOUT adding files — this added-files
     // feed cannot express it (the change set is the newly-hidden rows
     // of UNCHANGED files). Refuse loudly rather than emit a feed that
     // silently misses the delete.
-    if (manifestDvs(table, fromV) != manifestDvs(table, toV))
+    if (from.dvs != to.dvs)
       sys.error(s"$dir: deletion vectors changed between versions $fromV " +
         s"and $toV — the added-files change feed cannot express a " +
         "merge-on-read delete; read the two snapshots instead")
@@ -3503,7 +3382,7 @@ object TxLog {
     // readRels keeps partition columns for partitioned batches — the
     // change feed must carry the same schema as the snapshot.
     if (added.nonEmpty) readRels(spark, table, added,
-      dvs = manifestDvs(table, toV))
+      dvs = to.dvs)
     else snapshotAt(spark, dir, toV).limit(0)
   }
 
@@ -3543,7 +3422,8 @@ object TxLog {
         DeletionVectors.parseDescriptor(json))).values.toSet
     import spark.implicits._
     val feeds: Seq[DataFrame] = ((fromV + 1) to toV).flatMap { v =>
-      val (op, dataChange) = manifestOp(table, v).getOrElse(("WRITE", true))
+      val m = readManifest(table, v)
+      val (op, dataChange) = m.op.getOrElse(("WRITE", true))
       if (!dataChange) Seq.empty
       else if (op == "MERGE") {
         // a MERGE's appended batch mixes update_postimage and insert
@@ -3551,7 +3431,7 @@ object TxLog {
         // keys are not in the manifest). Under CDF the commit wrote
         // per-row-typed change-data files: read those. Without CDF,
         // refuse loudly rather than mistype half the batch.
-        val cdcRels = manifestCdc(table, v)
+        val cdcRels = m.cdc
         if (cdcRels.isEmpty)
           sys.error(s"$dir: version $v is a MERGE without change-data " +
             "files — enable delta.enableChangeDataFeed before merging, " +
@@ -3566,7 +3446,7 @@ object TxLog {
         // versions) — but under CDF the commit wrote per-row-typed
         // change-data files: read those. Only a cdc-less rewrite
         // (pre-CDF DML, RESTORE) still refuses.
-        val cowCdc = if (removed.isEmpty) Seq.empty else manifestCdc(table, v)
+        val cowCdc = if (removed.isEmpty) Seq.empty else m.cdc
         if (cowCdc.nonEmpty)
           Seq(readRels(spark, table, cowCdc)
             .withColumn("_commit_version", lit(v)))
@@ -3580,8 +3460,8 @@ object TxLog {
         // "whole history" spelling and must not die reading v0
         val dvPrev =
           if (v <= 1L) Map.empty[String, String]
-          else manifestDvs(table, v - 1)
-        val dvNow = manifestDvs(table, v)
+          else readManifest(table, v - 1).dvs
+        val dvNow = m.dvs
         val hiddenType = if (op == "UPDATE") "update_preimage" else "delete"
         val addedType = if (op == "UPDATE") "update_postimage" else "insert"
         val hidden: Option[DataFrame] =

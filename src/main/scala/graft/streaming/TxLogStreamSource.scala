@@ -230,7 +230,7 @@ class TxLogSink(dir: String, appId: String, partitionBy: Seq[String],
     // (the ForeachBatchSink move) — the commit path re-executes the
     // plan for its validation aggregate and staged write, which the
     // streaming-flagged original would refuse
-    val batch = org.apache.spark.sql.graftbridge.SqlBridge.asBatch(data)
+    val batch = org.apache.spark.sql.graft.Bridge.asBatch(data)
     if (complete) { TxLog.commitOverwrite(batch, dir, partitionBy); () }
     else { TxLog.commitAppendOnce(batch, dir, appId, batchId, partitionBy); () }
   }
@@ -503,7 +503,7 @@ object TxLogScan {
       case other => Seq(other)
     }
     val fs = conjuncts(cond).flatMap(
-      org.apache.spark.sql.graftbridge.SqlBridge.translateFilter)
+      org.apache.spark.sql.graft.Bridge.translateFilter)
     require(fs.nonEmpty, s"graft-txlog: no conjunct of filterExpr " +
       s"'$exprStr' translates to a source filter — nothing to prune with")
     fs.toArray

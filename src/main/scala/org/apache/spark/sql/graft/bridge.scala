@@ -3,16 +3,19 @@ package org.apache.spark.sql.graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
+import org.apache.spark.sql.execution.LogicalRDD
 
-/** The one `private[sql]` seam a whole-operator extension needs:
-  * turning a hand-built `LogicalPlan` back into a public `DataFrame`.
-  * Placing this object under `org.apache.spark.sql` is the standard
-  * pattern every Spark extension library uses for exactly this hop
-  * (`Dataset.ofRows` is package-private by design; the planner
-  * strategy and the logical node themselves use only public
-  * extension APIs).
+/** The ONE place the engine touches `private[sql]` Spark API, from a
+  * package nested under `org.apache.spark.sql` — the standard
+  * external-connector seam (delta-spark compiles inside
+  * `org.apache.spark.sql.delta` for exactly this access). Everything
+  * here is COMPILE-CHECKED against the Spark version on the classpath:
+  * an API change surfaces as a build error, never a runtime reflection
+  * failure.
   */
 object Bridge {
+  /** A hand-built `LogicalPlan` as a public `DataFrame`
+    * (`Dataset.ofRows` is package-private by design). */
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
@@ -37,4 +40,28 @@ object Bridge {
       strategy: org.apache.spark.sql.execution.SparkStrategy): Boolean =
     spark.asInstanceOf[classic.SparkSession]
       .sessionState.planner.strategies.contains(strategy)
+
+  /** Re-wrap a micro-batch DataFrame handed to a DSv1 `Sink.addBatch`
+    * as a BATCH DataFrame over the already-planned batch RDD — the
+    * identical move `ForeachBatchSink` makes: the incoming Dataset's
+    * logical plan still contains the streaming scan relations, so any
+    * re-planning (a `.write`, an aggregate) would trip the
+    * streaming-execution guard; `queryExecution.toRdd` pins THIS
+    * batch's physical plan and `LogicalRDD` presents it as batch
+    * input. */
+  def asBatch(df: DataFrame): DataFrame = {
+    val data = df.asInstanceOf[classic.DataFrame]
+    val node = LogicalRDD.fromDataset(
+      data.queryExecution.toRdd, data, isStreaming = false)
+    classic.Dataset.ofRows(data.sparkSession, node)
+  }
+
+  /** Catalyst predicate → DSv2 [[org.apache.spark.sql.sources.Filter]],
+    * Spark's own translation (`protected[sql]`) — how the graft-txlog
+    * source turns its `filterExpr` option into the same filter objects
+    * the batch pushdown path receives. */
+  def translateFilter(predicate: org.apache.spark.sql.catalyst.expressions.Expression)
+      : Option[org.apache.spark.sql.sources.Filter] =
+    org.apache.spark.sql.execution.datasources.DataSourceStrategy
+      .translateFilter(predicate, supportNestedPredicatePushdown = true)
 }

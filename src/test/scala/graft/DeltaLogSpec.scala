@@ -208,6 +208,31 @@ class DeltaLogSpec extends SparkSpec {
       expected + events.filter(col("event_id") === 0).count())
   }
 
+  test("a DV commit backfills a lost mirror version before mirroring its own") {
+    val s = spark
+    import org.apache.spark.sql.functions._
+    val t = freshTable()
+    TxLog.commitAppend(events.filter(col("event_id") < 200), t)
+    TxLog.setTableProperties(s, t, Map("delta.enableDeletionVectors" -> "true"))
+    TxLog.commitAppend(events.filter(col("event_id").between(200, 400)), t)
+    TxLog.commitAppend(events.filter(col("event_id") > 400), t)
+    // a committer killed between manifest link and mirror: Delta version
+    // 2 (the second append) vanishes, and this process forgets its floor
+    Files.delete(Paths.get(t, "_delta_log", f"${2L}%020d.json"))
+    TxLog.resetMirrorCache()
+    // only merge-on-read DML follows — no append may repair the gap
+    TxLog.deleteWhereDv(s, t, col("event_id") % 7 === 0)
+    TxLog.mergeIntoDv(s, t,
+      events.filter(col("event_id") % 11 === 0).withColumn("value", lit(1.0)),
+      Seq("event_id"))
+    val cur = TxLog.currentVersion(t).get
+    assert(DeltaLog.versions(t) == (0L until cur),
+      s"the Delta log must be contiguous through v${cur - 1}: ${DeltaLog.versions(t)}")
+    val rows = (df: org.apache.spark.sql.DataFrame) =>
+      df.select("event_id", "value").collect().map(_.toString).sorted.toSeq
+    assert(rows(DeltaLog.snapshot(s, t)) == rows(TxLog.snapshot(s, t)))
+  }
+
   test("paths with '+' and '%' survive the log encoding round-trip") {
     val s = spark
     import org.apache.spark.sql.functions._
@@ -1904,7 +1929,7 @@ class DeltaLogSpec extends SparkSpec {
     TxLog.optimize(s, t, smallBytes = Long.MaxValue)
     assert(TxLog.snapshot(s, t).count() ==
       ev.filter(col("event_id") > 300).count())
-    assert(!TxLog.hasDvs(t, TxLog.currentVersion(t).get),
+    assert(TxLog.readManifest(Paths.get(t), TxLog.currentVersion(t).get).dvs.isEmpty,
       "optimize must drop the DVs of the files it rewrites")
   }
 

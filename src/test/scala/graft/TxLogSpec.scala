@@ -920,7 +920,7 @@ class TxLogSpec extends SparkSpec {
     val t = freshTable()
     TxLog.commitAppend(events.filter(col("event_id") < 20), t)
     // a healthy manifest classifies
-    assert(TxLog.manifestOp(java.nio.file.Paths.get(t), 1L).isDefined)
+    assert(TxLog.readManifest(java.nio.file.Paths.get(t), 1L).op.isDefined)
     // fabricate version 2 with a TRUNCATED #op line (2 tokens) and a
     // #props pair without '=': classification must fall back (None) and
     // the props parse must skip the malformed pair -- the documented
@@ -928,9 +928,54 @@ class TxLogSpec extends SparkSpec {
     val bad = java.nio.file.Paths.get(t, "_txlog", "v00000002.manifest")
     java.nio.file.Files.writeString(bad,
       "#op WRITE\n#props delta.appendOnly=true junk\n")
-    assert(TxLog.manifestOp(java.nio.file.Paths.get(t), 2L).isEmpty)
-    assert(TxLog.manifestProps(java.nio.file.Paths.get(t), 2L) ==
+    assert(TxLog.readManifest(java.nio.file.Paths.get(t), 2L).op.isEmpty)
+    assert(TxLog.readManifest(java.nio.file.Paths.get(t), 2L).props ==
       Map("delta.appendOnly" -> "true"))
+  }
+
+  test("manifest codec: every writer's manifest re-renders byte-identically") {
+    val s = spark
+    import org.apache.spark.sql.functions._
+    import scala.jdk.CollectionConverters._
+    val t = freshTable()
+    TxLog.commitAppend(events.limit(0), t)
+    TxLog.setTableProperties(s, t, Map(
+      "delta.enableRowTracking" -> "true",
+      "delta.enableDeletionVectors" -> "true",
+      "delta.enableChangeDataFeed" -> "true"))
+    TxLog.commitAppend(events.filter(col("event_id") < 300).coalesce(1), t)
+    TxLog.commitAppendOnce(events.filter(col("event_id").between(300, 499))
+      .coalesce(1), t, "codec-app", 1L)
+    TxLog.deleteWhere(s, t, col("event_id") === 5)
+    TxLog.deleteWhereDv(s, t, pmod(col("event_id"), lit(7)) === 0)
+    TxLog.updateWhereDv(s, t, pmod(col("event_id"), lit(11)) === 0,
+      Map("value" -> lit(2.0)))
+    TxLog.mergeIntoDv(s, t, events.filter(pmod(col("event_id"), lit(13)) === 0)
+      .withColumn("value", lit(3.0)), Seq("event_id"))
+    TxLog.optimize(s, t)
+    TxLog.restoreTo(s, t, 4L)
+    TxLog.commitOverwrite(events.filter(col("event_id") < 100), t)
+    def roundTrip(p: java.nio.file.Path): TxLog.Manifest = {
+      val m = TxLog.Manifest.parse(Files.readAllLines(p).asScala.toSeq)
+      assert(m.render.sameElements(Files.readAllBytes(p)),
+        s"$p does not re-render byte-identically")
+      m
+    }
+    val ms = (1L to TxLog.currentVersion(t).get).map(v =>
+      roundTrip(java.nio.file.Paths.get(t, "_txlog", f"v$v%08d.manifest")))
+    // the sequence exercised every header the grammar defines
+    assert(ms.exists(_.txn.contains(("codec-app", 1L))))
+    assert(ms.exists(_.props.contains("delta.enableRowTracking")))
+    assert(ms.exists(_.dvs.nonEmpty) && ms.exists(_.cdc.nonEmpty))
+    assert(ms.exists(_.rids.nonEmpty) && ms.exists(_.ridHwm.nonEmpty) &&
+      ms.exists(_.ridMat.nonEmpty))
+    assert(Set("WRITE", "DELETE", "UPDATE", "MERGE", "OPTIMIZE", "RESTORE")
+      .subsetOf(ms.flatMap(_.op.map(_._1)).toSet))
+    assert(ms.exists(_.op.contains(("OPTIMIZE", false))))
+    // manifests from writers that predate `#op` carry no header at all
+    val legacy = roundTrip(java.nio.file.Paths.get(
+      "fixtures/golden_delta/v1/_txlog/v00000003.manifest"))
+    assert(legacy.op.isEmpty && legacy.files.size == 2)
   }
 
   test("identity columns: generated-always values, dense continuation across a restart") {
