@@ -45,19 +45,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(graft.functions.GraftExtensions.register)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // same UTC pin as Verify/Smoke/Explain: on a non-UTC host the
-      // date_trunc/to_date buckets (and thus the measured work) would
-      // silently diverge from the oracle-checked semantics
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.warehouse.dir", sys.props("java.io.tmpdir") + "/graft_warehouse")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(cpus)
     warmup(spark, sfDir)
     // Optional args = subset of query names (local iteration on hotspots),
     // plus --reps=N: run each query N times and report the per-query MEDIAN,

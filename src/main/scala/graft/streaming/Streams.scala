@@ -1,12 +1,14 @@
 package graft.streaming
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Deduplicate, DeduplicateWithinWatermark,
+  Distinct, FlatMapGroupsWithState, GlobalLimit, Join, LogicalPlan, TransformWithState}
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQueryProgress, Trigger}
 
 import graft.Tables
 import graft.silver.SilverAgg
@@ -31,6 +33,20 @@ import graft.silver.SilverAgg
   * 1 minute are dropped, closed windows are evicted. At 100 TB/day the
   * knobs are shuffle partitions, RocksDB state store, and watermark
   * tightness; the plan shape is unchanged.
+  *
+  * Driver contract: every `run*` query hands its stream (source +
+  * transform) and its sink to [[drain]], which runs it the same way:
+  *  - trigger: `AvailableNow`, i.e. drain what is there, then stop;
+  *  - checkpoint: the caller's, so a second drain on the same checkpoint
+  *    resumes where the first stopped (a fresh one when none is given);
+  *  - state partitions: when the plan holds state,
+  *    `spark.sql.shuffle.partitions` is pinned to [[statePartitions]]
+  *    for the run and restored after it; a stateless plan runs at the
+  *    session's setting;
+  *  - loud failure: a batch that throws fails the call, and the confs
+  *    are restored all the same;
+  *  - progress returned: the run's `recentProgress`, one entry per
+  *    micro-batch, so callers read batch ids from it.
   */
 object Streams {
 
@@ -57,12 +73,67 @@ object Streams {
     */
   private val statePartitions = 2
 
-  private def withStatePartitions[T](spark: SparkSession)(f: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, statePartitions.toString)
-    try f finally spark.conf.set(key, prev)
+  /** Runs `f` with each conf key set, then restores each one in a
+    * `finally`: to its previous value, or unset if it had none.
+    */
+  private[graft] def withConfs[T](spark: SparkSession, confs: (String, String)*)(f: => T): T = {
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
+
+  /** Whether a streaming plan keeps state across micro-batches: a
+    * streaming aggregation, distinct, dedup, limit, stream-stream join
+    * or (flatMap|transform)WithState node. Stateless plans run per batch
+    * with nothing carried over, so the state-partition pin means nothing
+    * to them.
+    */
+  private def holdsState(plan: LogicalPlan): Boolean = plan.exists {
+    case j: Join => j.left.isStreaming && j.right.isStreaming
+    case p @ (_: Aggregate | _: Distinct | _: Deduplicate | _: DeduplicateWithinWatermark |
+        _: GlobalLimit | _: FlatMapGroupsWithState | _: TransformWithState) => p.isStreaming
+    case _ => false
+  }
+
+  /** The one stream driver (see the contract above): `sink` shapes
+    * `stream`'s writer, and the run pins [[statePartitions]] only when
+    * the stream's analyzed plan [[holdsState]].
+    */
+  private[graft] def drain(stream: DataFrame,
+      ckpt: String = graft.Scratch.dir("graft_stream_ckpt").toString)(
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row]): Array[StreamingQueryProgress] = {
+    val pin = if (!holdsState(stream.queryExecution.analyzed)) Nil
+      else Seq("spark.sql.shuffle.partitions" -> statePartitions.toString)
+    withConfs(stream.sparkSession, pin: _*) {
+      val q = sink(stream.writeStream).trigger(Trigger.AvailableNow())
+        .option("checkpointLocation", ckpt).start()
+      q.awaitTermination()
+      q.recentProgress
+    }
+  }
+
+  /** Sink: each batch's result rewrites `out` whole (complete/update mode). */
+  private def overwriteTo(out: String, mode: OutputMode = OutputMode.Complete())(
+      w: DataStreamWriter[Row]): DataStreamWriter[Row] =
+    w.outputMode(mode)
+      .foreachBatch { (batch: DataFrame, _: Long) => batch.write.mode("overwrite").parquet(out) }
+
+  /** Sink: each batch's rows append to the parquet path `out`. */
+  private def appendTo(out: String)(w: DataStreamWriter[Row]): DataStreamWriter[Row] =
+    w.outputMode(OutputMode.Append()).option("path", out).format("parquet")
+
+  /** A `graft-txlog` stream of `table` (its change feed when `cdf`). */
+  private def txlogTail(spark: SparkSession, table: String, cdf: Boolean = false): DataFrame =
+    spark.readStream.format("graft-txlog").option("path", table)
+      .option("readChangeFeed", cdf).load()
+
+  /** Row count and value total per group: the check most tails report. */
+  private def totals(df: DataFrame, keys: String*): DataFrame =
+    df.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"))
 
   /** Streaming file source over the events parquet (S4/S6 analog —
     * tails a directory exactly like the Delta/Kafka source tails a log).
@@ -189,7 +260,6 @@ object Streams {
     */
   def runSilverAvailableNow(spark: SparkSession, dir: String): DataFrame = {
     val out = graft.Scratch.dir("graft_stream_out").toString
-    val ckpt = graft.Scratch.dir("graft_stream_ckpt").toString
     val bars = eventsStream(spark, dir)
       .groupBy(window(col("ts"), "1 minute").as("w"), col("event_type"))
       .agg(
@@ -201,17 +271,7 @@ object Streams {
         col("w.start").as("window_start"), col("w.end").as("window_end"),
         col("event_type"), col("volatility"), col("average_price"),
         col("processed_time"), col("n_rows"))
-    withStatePartitions(spark) {
-      val q = bars.writeStream
-        .outputMode(OutputMode.Complete())
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("overwrite").parquet(out)
-        }
-        .start()
-      q.awaitTermination()
-    }
+    drain(bars)(overwriteTo(out))
     spark.read.parquet(out)
   }
 
@@ -228,7 +288,6 @@ object Streams {
     */
   def runStreamEnrich(spark: SparkSession, dir: String): DataFrame = {
     val out = graft.Scratch.dir("graft_stream_enr_out").toString
-    val ckpt = graft.Scratch.dir("graft_stream_enr_ckpt").toString
     val sp = spark
     import sp.implicits._
     val dim = Seq(("click", 1.0), ("view", 0.1), ("purchase", 10.0),
@@ -240,17 +299,7 @@ object Streams {
         count(lit(1)).as("n_rows"))
       .select(col("w.start").as("window_start"), col("event_type"),
         col("weighted_value"), col("n_rows"))
-    withStatePartitions(spark) {
-      val q = enriched.writeStream
-        .outputMode(OutputMode.Complete())
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("overwrite").parquet(out)
-        }
-        .start()
-      q.awaitTermination()
-    }
+    drain(enriched)(overwriteTo(out))
     spark.read.parquet(out)
   }
 
@@ -321,7 +370,6 @@ object Streams {
   def runSilverAppendChecked(spark: SparkSession, dir: String): DataFrame = {
     val staged = rangedDirs.getOrElseUpdate(dir, stageRanged(spark, dir))
     val out = graft.Scratch.dir("graft_stream_app_out").toString
-    val ckpt = graft.Scratch.dir("graft_stream_app_ckpt").toString
     val schema = stagedSchema(spark, staged)
     val bars = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(staged)
@@ -336,16 +384,7 @@ object Streams {
         col("w.start").as("window_start"), col("w.end").as("window_end"),
         col("event_type"), col("volatility"), col("average_price"),
         col("processed_time"), col("n_rows"))
-    withStatePartitions(spark) {
-      val q = bars.writeStream
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt)
-        .option("path", out)
-        .trigger(Trigger.AvailableNow())
-        .format("parquet")
-        .start()
-      q.awaitTermination()
-    }
+    drain(bars)(appendTo(out))
     spark.read.parquet(out)
   }
 
@@ -362,7 +401,6 @@ object Streams {
   def runStreamOhlc(spark: SparkSession, dir: String): DataFrame = {
     val staged = rangedDirs.getOrElseUpdate(dir, stageRanged(spark, dir))
     val out = graft.Scratch.dir("graft_stream_ohlc_out").toString
-    val ckpt = graft.Scratch.dir("graft_stream_ohlc_ckpt").toString
     val schema = stagedSchema(spark, staged)
     val pick = struct(col("ts").as("t"), col("event_id").as("i"),
       col("value").as("v"))
@@ -377,17 +415,7 @@ object Streams {
         count(lit(1)).as("n_trades"))
       .select(col("w.start").as("window_start"), col("event_type"),
         col("open"), col("high"), col("low"), col("close"), col("n_trades"))
-    withStatePartitions(spark) {
-      val q = bars.writeStream
-        .outputMode(OutputMode.Complete())
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("overwrite").parquet(out)
-        }
-        .start()
-      q.awaitTermination()
-    }
+    drain(bars)(overwriteTo(out))
     spark.read.parquet(out)
   }
 
@@ -408,7 +436,6 @@ object Streams {
   def runStreamDistinct(spark: SparkSession, dir: String): DataFrame = {
     val staged = rangedDirs.getOrElseUpdate(dir, stageRanged(spark, dir))
     val out = graft.Scratch.dir("graft_stream_dist_out").toString
-    val ckpt = graft.Scratch.dir("graft_stream_dist_ckpt").toString
     val schema = stagedSchema(spark, staged)
     val agg = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(staged)
@@ -418,17 +445,7 @@ object Streams {
       .select(col("w.start").as("window_start"), col("event_type"),
         call_function("graft_set_card", col("sketch")).as("distinct_users"),
         col("n_events"))
-    withStatePartitions(spark) {
-      val q = agg.writeStream
-        .outputMode(OutputMode.Complete())
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("overwrite").parquet(out)
-        }
-        .start()
-      q.awaitTermination()
-    }
+    drain(agg)(overwriteTo(out))
     spark.read.parquet(out)
   }
 
@@ -454,33 +471,21 @@ object Streams {
   def runStreamExactlyOnce(spark: SparkSession, dir: String): DataFrame = {
     val staged = rangedDirs.getOrElseUpdate(dir, stageRanged(spark, dir))
     val tbl = graft.Scratch.dir("graft_stream_eo_tbl").toString
-    val ckpt = graft.Scratch.dir("graft_stream_eo_ckpt").toString
     val schema = stagedSchema(spark, staged)
     val appId = "graft-eo-ingest"
-    @volatile var lastBatch = -1L
-    withStatePartitions(spark) {
-      val q = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(staged)
-        .writeStream
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    val lastBatch = drain(spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", "1").parquet(staged))(_.foreachBatch {
+        (batch: DataFrame, batchId: Long) =>
           graft.sources.TxLog.commitAppendOnce(batch, tbl, appId, batchId)
-          lastBatch = batchId
           ()
-        }
-        .start()
-      q.awaitTermination()
-    }
+      }).map(_.batchId).max
     // crash-replay simulation: the checkpoint "lost" the last commit,
     // so the writer re-runs the SAME (appId, batchId) — must skip
     val replayed = graft.sources.TxLog.commitAppendOnce(
       spark.read.schema(schema).parquet(staged), tbl, appId, lastBatch)
     require(replayed.isEmpty,
       s"replaying batch $lastBatch must be skipped, got $replayed")
-    graft.sources.TxLog.snapshot(spark, tbl)
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"))
+    totals(graft.sources.TxLog.snapshot(spark, tbl), "event_type")
   }
 
   val runStreamExactlyOnceOracle: String =
@@ -506,23 +511,11 @@ object Streams {
     graft.sources.TxLog.commitAppend(ev.filter(col("event_id") < 400), tbl)
     graft.sources.TxLog.commitAppend(
       ev.filter(col("event_id").between(400, 699)), tbl)
-    def drain(): Unit = withStatePartitions(spark) {
-      val q = spark.readStream.format("graft-txlog").option("path", tbl)
-        .load()
-        .writeStream
-        .option("checkpointLocation", ckpt)
-        .option("path", out)
-        .trigger(Trigger.AvailableNow())
-        .format("parquet")
-        .start()
-      q.awaitTermination()
-    }
-    drain() // run 1: history (versions 1-2) in one batch
+    val tail = txlogTail(spark, tbl)
+    drain(tail, ckpt)(appendTo(out)) // run 1: history (versions 1-2) in one batch
     graft.sources.TxLog.commitAppend(ev.filter(col("event_id") >= 700), tbl)
-    drain() // run 2: resumes at version 2, reads ONLY commit 3's files
-    spark.read.parquet(out)
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"))
+    drain(tail, ckpt)(appendTo(out)) // run 2: resumes at version 2, reads ONLY commit 3's files
+    totals(spark.read.parquet(out), "event_type")
   }
 
   val runStreamTableSourceOracle: String =
@@ -546,71 +539,67 @@ object Streams {
     * streamed half (both aggregated), so a re-delivered batch, a
     * missed resume, or an unapplied DV each flip a different half. */
   def runStreamForeignDelta(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.{DeletionVectors, DeltaLog}
     val ev = graft.Tables.events(spark, dir)
     val root = graft.Scratch.dir("graft_stream_foreign_tbl")
     val out = graft.Scratch.dir("graft_stream_foreign_out").toString
     val ckpt = graft.Scratch.dir("graft_stream_foreign_ckpt").toString
-    val schema = ev.schema.json
-    def mirrorBatch(df: DataFrame, name: String): String = {
-      val tmp = graft.Scratch.dir(s"graft_stream_foreign_$name")
-      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val st = java.nio.file.Files.list(tmp)
-      val part = try st.iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet")).get
-      finally st.close()
-      java.nio.file.Files.move(part, root.resolve(s"$name.parquet"))
-      s"$name.parquet"
-    }
-    DeltaLog.mirrorCommit(root, 1L,
-      Seq(mirrorBatch(ev.filter(col("event_id") < 400), "b0")),
-      Seq.empty, schema)
-    DeltaLog.mirrorCommit(root, 2L,
-      Seq(mirrorBatch(ev.filter(col("event_id").between(400, 699)), "b1")),
-      Seq.empty, schema)
-    def drain(): Unit = withStatePartitions(spark) {
-      val q = spark.readStream.format("graft-txlog")
-        .option("path", root.toString).load()
-        .writeStream.option("checkpointLocation", ckpt).option("path", out)
-        .trigger(Trigger.AvailableNow()).format("parquet").start()
-      q.awaitTermination()
-    }
-    drain() // run 1: delta history 0-1 as one batch
-    DeltaLog.mirrorCommit(root, 3L,
-      Seq(mirrorBatch(ev.filter(col("event_id") >= 700), "b2")),
-      Seq.empty, schema)
-    drain() // run 2: resumes from the checkpoint, reads ONLY commit 2
-    // a foreign merge-on-read DELETE hiding ids < 100 of b0
-    val doomed = spark.read.parquet(root.resolve("b0.parquet").toString)
-      .select(col("_metadata.row_index"), col("event_id"))
-      .filter(col("event_id") < 100)
+    foreignDeltaAppend(root, 1L, ev.filter(col("event_id") < 400), "b0")
+    foreignDeltaAppend(root, 2L, ev.filter(col("event_id").between(400, 699)), "b1")
+    val tail = txlogTail(spark, root.toString)
+    drain(tail, ckpt)(appendTo(out)) // run 1: delta history 0-1 as one batch
+    foreignDeltaAppend(root, 3L, ev.filter(col("event_id") >= 700), "b2")
+    drain(tail, ckpt)(appendTo(out)) // run 2: resumes from the checkpoint, reads ONLY commit 2
+    foreignDvDelete(spark, root, 4L, "b0.parquet", col("event_id") < 100, ev.schema.json)
+    drain(tail, ckpt)(appendTo(out)) // run 3: the DV commit delivers nothing (native semantics)
+    streamedVsSnapshot(spark, out, root)
+  }
+
+  /** Lands `df` as the one data file `root/<name>.parquet` and commits it
+    * as Delta `version`: a stock (foreign) Delta writer's append.
+    */
+  private[graft] def foreignDeltaAppend(root: Path, version: Long, df: DataFrame,
+      name: String): Unit = {
+    val tmp = graft.Scratch.dir(s"graft_stream_foreign_$name")
+    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    val st = Files.list(tmp)
+    val part = try st.iterator().asScala
+      .find(_.getFileName.toString.endsWith(".parquet")).get
+    finally st.close()
+    Files.move(part, root.resolve(s"$name.parquet"))
+    graft.sources.DeltaLog.mirrorCommit(root, version, Seq(s"$name.parquet"),
+      Seq.empty, df.schema.json)
+  }
+
+  /** A stock merge-on-read DELETE on a foreign Delta table: the rows of
+    * `file` matching `pred` go into a uuid-named ("u") deletion-vector
+    * file, and Delta `version` re-adds `file` with that vector's
+    * descriptor.
+    */
+  private[graft] def foreignDvDelete(spark: SparkSession, root: Path, version: Long,
+      file: String, pred: Column, schemaJson: String): Unit = {
+    import graft.sources.{DeletionVectors => DV}
+    val doomed = spark.read.parquet(root.resolve(file).toString)
+      .select(col("_metadata.row_index"), col("*")).filter(pred)
       .collect().map(_.getLong(0)).toSeq.sorted
-    val bitmap = DeletionVectors.serialize(doomed)
-    val uuid = java.util.UUID.nameUUIDFromBytes(
-      "graft-stream-foreign-dv".getBytes("UTF-8"))
+    val bitmap = DV.serialize(doomed)
+    val uuid = java.util.UUID.nameUUIDFromBytes(s"$file@$version".getBytes("UTF-8"))
     val bb = java.nio.ByteBuffer.allocate(16)
     bb.putLong(uuid.getMostSignificantBits)
     bb.putLong(uuid.getLeastSignificantBits)
-    val off = DeletionVectors.writeDvFile(
-      root.resolve(s"deletion_vector_$uuid.bin"), Seq(bitmap)).head
-    val desc = s"""{"storageType":"u","pathOrInlineDv":"${
-      DeletionVectors.z85Encode(bb.array())}","offset":$off,""" +
-      s""""sizeInBytes":${bitmap.length},"cardinality":${doomed.size}}"""
-    DeltaLog.mirrorCommit(root, 4L, Seq.empty, Seq.empty, schema,
-      operation = "DELETE",
-      dvUpdates = Map("b0.parquet" -> ((desc, None))))
-    drain() // run 3: the DV commit delivers nothing (native semantics)
-    val streamed = spark.read.parquet(out)
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"))
-      .withColumn("side", lit("streamed"))
-    val snap = spark.read.format("graft-txlog")
-      .option("path", root.toString).load()
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"))
-      .withColumn("side", lit("snapshot"))
-    streamed.unionByName(snap)
+    val off = DV.writeDvFile(root.resolve(s"deletion_vector_$uuid.bin"), Seq(bitmap)).head
+    val desc = s"""{"storageType":"u","pathOrInlineDv":"${DV.z85Encode(bb.array())}",""" +
+      s""""offset":$off,"sizeInBytes":${bitmap.length},"cardinality":${doomed.size}}"""
+    graft.sources.DeltaLog.mirrorCommit(root, version, Seq.empty, Seq.empty, schemaJson,
+      operation = "DELETE", dvUpdates = Map(file -> ((desc, None))))
   }
+
+  /** The foreign tails' result: the streamed rows beside the table's
+    * current snapshot, each totalled by event type.
+    */
+  private def streamedVsSnapshot(spark: SparkSession, out: String, root: Path): DataFrame =
+    totals(spark.read.parquet(out), "event_type").withColumn("side", lit("streamed"))
+      .unionByName(totals(spark.read.format("graft-txlog").option("path", root.toString)
+        .load(), "event_type").withColumn("side", lit("snapshot")))
 
   val runStreamForeignDeltaOracle: String =
     """SELECT event_type, count(*) AS n, round(sum(value), 2) AS total_value,
@@ -646,18 +635,12 @@ object Streams {
     val b1 = IcebergLog.writeDataFile(
       ev.filter(col("event_id").between(400, 699)), root, "b1.parquet")
     IcebergLog.appendForeignSnapshot(root, ev.schema, Seq(b1))
-    def drain(): Unit = withStatePartitions(spark) {
-      val q = spark.readStream.format("graft-txlog")
-        .option("path", root.toString).load()
-        .writeStream.option("checkpointLocation", ckpt).option("path", out)
-        .trigger(Trigger.AvailableNow()).format("parquet").start()
-      q.awaitTermination()
-    }
-    drain() // run 1: snapshots 1-2 as one batch
+    val tail = txlogTail(spark, root.toString)
+    drain(tail, ckpt)(appendTo(out)) // run 1: snapshots 1-2 as one batch
     val b2 = IcebergLog.writeDataFile(
       ev.filter(col("event_id") >= 700), root, "b2.parquet")
     IcebergLog.appendForeignSnapshot(root, ev.schema, Seq(b2))
-    drain() // run 2: resumes from the checkpoint, reads ONLY snapshot 3
+    drain(tail, ckpt)(appendTo(out)) // run 2: resumes from the checkpoint, reads ONLY snapshot 3
     // a merge-on-read position delete hiding ids < 100 of b0
     val doomed = spark.read.parquet(root.resolve(b0).toString)
       .select(col("_metadata.file_path").as("file_path"),
@@ -667,17 +650,8 @@ object Streams {
     val del = IcebergLog.writeDataFile(doomed, root, "del0.parquet")
     IcebergLog.appendForeignSnapshot(root, ev.schema, Seq.empty, Seq(del),
       operation = "delete")
-    drain() // run 3: the delete snapshot delivers nothing (DV semantics)
-    val streamed = spark.read.parquet(out)
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"))
-      .withColumn("side", lit("streamed"))
-    val snap = spark.read.format("graft-txlog")
-      .option("path", root.toString).load()
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"))
-      .withColumn("side", lit("snapshot"))
-    streamed.unionByName(snap)
+    drain(tail, ckpt)(appendTo(out)) // run 3: the delete snapshot delivers nothing (DV semantics)
+    streamedVsSnapshot(spark, out, root)
   }
 
   /** FOREIGN Delta tail over a CHECKPOINT-COMPACTED log — the shape of
@@ -696,75 +670,25 @@ object Streams {
     * a double-delivered history, or an unapplied post-checkpoint DV
     * each flip one half. */
   def runStreamForeignCkpt(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.{DeletionVectors, DeltaLog}
     val ev = graft.Tables.events(spark, dir)
     val root = graft.Scratch.dir("graft_stream_fckpt_tbl")
     val out = graft.Scratch.dir("graft_stream_fckpt_out").toString
     val ckpt = graft.Scratch.dir("graft_stream_fckpt_ckpt").toString
-    val schema = ev.schema.json
-    def mirrorBatch(df: DataFrame, name: String): String = {
-      val tmp = graft.Scratch.dir(s"graft_stream_fckpt_$name")
-      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val st = java.nio.file.Files.list(tmp)
-      val part = try st.iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet")).get
-      finally st.close()
-      java.nio.file.Files.move(part, root.resolve(s"$name.parquet"))
-      s"$name.parquet"
-    }
-    DeltaLog.mirrorCommit(root, 1L,
-      Seq(mirrorBatch(ev.filter(col("event_id") < 400), "b0")),
-      Seq.empty, schema)
-    DeltaLog.mirrorCommit(root, 2L,
-      Seq(mirrorBatch(ev.filter(col("event_id").between(400, 699)), "b1")),
-      Seq.empty, schema)
+    foreignDeltaAppend(root, 1L, ev.filter(col("event_id") < 400), "b0")
+    foreignDeltaAppend(root, 2L, ev.filter(col("event_id").between(400, 699)), "b1")
     // compact: classic checkpoint at delta version 1, then AGE OUT the
     // JSON prefix — exactly what logRetentionDuration does in production
-    DeltaLog.checkpoint(spark, root.toString)
-    Seq(0L, 1L).foreach(v => java.nio.file.Files.delete(
+    graft.sources.DeltaLog.checkpoint(spark, root.toString)
+    Seq(0L, 1L).foreach(v => Files.delete(
       root.resolve("_delta_log").resolve(f"$v%020d.json")))
-    def drain(): Unit = withStatePartitions(spark) {
-      val q = spark.readStream.format("graft-txlog")
-        .option("path", root.toString).load()
-        .writeStream.option("checkpointLocation", ckpt).option("path", out)
-        .trigger(Trigger.AvailableNow()).format("parquet").start()
-      q.awaitTermination()
-    }
-    drain() // run 1: the CHECKPOINT-SEEDED snapshot as the first batch
-    DeltaLog.mirrorCommit(root, 3L,
-      Seq(mirrorBatch(ev.filter(col("event_id") >= 700), "b2")),
-      Seq.empty, schema)
-    drain() // run 2: resumes past the checkpoint, reads ONLY commit 2
+    val tail = txlogTail(spark, root.toString)
+    drain(tail, ckpt)(appendTo(out)) // run 1: the CHECKPOINT-SEEDED snapshot as the first batch
+    foreignDeltaAppend(root, 3L, ev.filter(col("event_id") >= 700), "b2")
+    drain(tail, ckpt)(appendTo(out)) // run 2: resumes past the checkpoint, reads ONLY commit 2
     // a post-checkpoint merge-on-read DELETE hiding ids < 100 of b0
-    val doomed = spark.read.parquet(root.resolve("b0.parquet").toString)
-      .select(col("_metadata.row_index"), col("event_id"))
-      .filter(col("event_id") < 100)
-      .collect().map(_.getLong(0)).toSeq.sorted
-    val bitmap = DeletionVectors.serialize(doomed)
-    val uuid = java.util.UUID.nameUUIDFromBytes(
-      "graft-stream-fckpt-dv".getBytes("UTF-8"))
-    val bb = java.nio.ByteBuffer.allocate(16)
-    bb.putLong(uuid.getMostSignificantBits)
-    bb.putLong(uuid.getLeastSignificantBits)
-    val off = DeletionVectors.writeDvFile(
-      root.resolve(s"deletion_vector_$uuid.bin"), Seq(bitmap)).head
-    val desc = s"""{"storageType":"u","pathOrInlineDv":"${
-      DeletionVectors.z85Encode(bb.array())}","offset":$off,""" +
-      s""""sizeInBytes":${bitmap.length},"cardinality":${doomed.size}}"""
-    DeltaLog.mirrorCommit(root, 4L, Seq.empty, Seq.empty, schema,
-      operation = "DELETE",
-      dvUpdates = Map("b0.parquet" -> ((desc, None))))
-    drain() // run 3: the DV commit delivers nothing (native semantics)
-    val streamed = spark.read.parquet(out)
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"))
-      .withColumn("side", lit("streamed"))
-    val snap = spark.read.format("graft-txlog")
-      .option("path", root.toString).load()
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"))
-      .withColumn("side", lit("snapshot"))
-    streamed.unionByName(snap)
+    foreignDvDelete(spark, root, 4L, "b0.parquet", col("event_id") < 100, ev.schema.json)
+    drain(tail, ckpt)(appendTo(out)) // run 3: the DV commit delivers nothing (native semantics)
+    streamedVsSnapshot(spark, out, root)
   }
 
   /** FOREIGN Iceberg tail over EQUALITY DELETES — the Flink-CDC shape
@@ -787,14 +711,8 @@ object Streams {
     val b0 = IcebergLog.writeDataFile(
       ev.filter(pmod(col("event_id"), lit(2)) === 0), root, "b0.parquet")
     IcebergLog.appendForeignSnapshot(root, ev.schema, Seq(b0)) // seq 1
-    def drain(): Unit = withStatePartitions(spark) {
-      val q = spark.readStream.format("graft-txlog")
-        .option("path", root.toString).load()
-        .writeStream.option("checkpointLocation", ckpt).option("path", out)
-        .trigger(Trigger.AvailableNow()).format("parquet").start()
-      q.awaitTermination()
-    }
-    drain() // run 1: b0
+    val tail = txlogTail(spark, root.toString)
+    drain(tail, ckpt)(appendTo(out)) // run 1: b0
     // seq 2: a PURE equality-delete snapshot naming event_type='error'
     // (field ids are 1-based over the schema, the metadataJson rule)
     val delRel = IcebergLog.writeDataFile(
@@ -803,21 +721,12 @@ object Streams {
     IcebergLog.appendForeignSnapshot(root, ev.schema, Seq.empty,
       operation = "delete", newEqDeletes = Seq(delRel),
       equalityIds = Seq(ev.schema.fieldIndex("event_type") + 1))
-    drain() // run 2: the eq-delete delivers nothing on an append stream
+    drain(tail, ckpt)(appendTo(out)) // run 2: the eq-delete delivers nothing on an append stream
     val b1 = IcebergLog.writeDataFile(
       ev.filter(pmod(col("event_id"), lit(2)) === 1), root, "b1.parquet")
     IcebergLog.appendForeignSnapshot(root, ev.schema, Seq(b1)) // seq 3
-    drain() // run 3: b1 (its rows POSTDATE the delete and must survive)
-    val streamed = spark.read.parquet(out)
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"))
-      .withColumn("side", lit("streamed"))
-    val snap = spark.read.format("graft-txlog")
-      .option("path", root.toString).load()
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"))
-      .withColumn("side", lit("snapshot"))
-    streamed.unionByName(snap)
+    drain(tail, ckpt)(appendTo(out)) // run 3: b1 (its rows POSTDATE the delete and must survive)
+    streamedVsSnapshot(spark, out, root)
   }
 
   /** FLINK-UPSERT CDC TAIL, oracle-checked: a stock Iceberg tree takes
@@ -836,7 +745,6 @@ object Streams {
     val ev = graft.Tables.events(spark, dir)
     val root = graft.Scratch.dir("graft_stream_fice_upsert_tbl")
     val out = graft.Scratch.dir("graft_stream_fice_upsert_out").toString
-    val ckpt = graft.Scratch.dir("graft_stream_fice_upsert_ckpt").toString
     val b0 = IcebergLog.writeDataFile(
       ev.filter(col("event_id") < 500), root, "b0.parquet")
     IcebergLog.appendForeignSnapshot(root, ev.schema, Seq(b0)) // seq 1
@@ -848,17 +756,8 @@ object Streams {
     IcebergLog.appendForeignSnapshot(root, ev.schema, Seq(b1),
       operation = "overwrite", newEqDeletes = Seq(del),
       equalityIds = Seq(ev.schema.fieldIndex("event_id") + 1)) // seq 2
-    withStatePartitions(spark) {
-      val q = spark.readStream.format("graft-txlog")
-        .option("path", root.toString)
-        .option("readChangeFeed", "true").load()
-        .writeStream.option("checkpointLocation", ckpt).option("path", out)
-        .trigger(Trigger.AvailableNow()).format("parquet").start()
-      q.awaitTermination()
-    }
-    spark.read.parquet(out)
-      .groupBy(col("_commit_version"), col("_change_type"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"))
+    drain(txlogTail(spark, root.toString, cdf = true))(appendTo(out))
+    totals(spark.read.parquet(out), "_commit_version", "_change_type")
   }
 
   /** Streaming tail of a HIVE-LAYOUT foreign Iceberg tree (the
@@ -888,20 +787,12 @@ object Streams {
         partitions = rels.toMap, partitionCols = pcols)
       ()
     }
-    def drain(): Unit = withStatePartitions(spark) {
-      val q = spark.readStream.format("graft-txlog")
-        .option("path", root.toString).load()
-        .writeStream.option("checkpointLocation", ckpt).option("path", out)
-        .trigger(Trigger.AvailableNow()).format("parquet").start()
-      q.awaitTermination()
-    }
     landSnap(col("event_id") < 500, "a")
-    drain()
+    val tail = txlogTail(spark, root.toString)
+    drain(tail, ckpt)(appendTo(out))
     landSnap(col("event_id") >= 500, "b") // only snapshot 2's files stream
-    drain()
-    spark.read.parquet(out)
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"))
+    drain(tail, ckpt)(appendTo(out))
+    totals(spark.read.parquet(out), "event_type")
   }
 
   val runStreamIcebergHiveOracle: String =
@@ -923,7 +814,6 @@ object Streams {
     val ev = graft.Tables.events(spark, dir)
     val root = graft.Scratch.dir("graft_stream_fice_rewrite_tbl")
     val out = graft.Scratch.dir("graft_stream_fice_rewrite_out").toString
-    val ckpt = graft.Scratch.dir("graft_stream_fice_rewrite_ckpt").toString
     val b0 = IcebergLog.writeDataFile(
       ev.filter(col("event_id") < 600), root, "b0.parquet")
     IcebergLog.appendForeignSnapshot(root, ev.schema, Seq(b0)) // seq 1
@@ -936,17 +826,8 @@ object Streams {
       ev.filter(col("event_id").between(600, 699)), root, "b1.parquet")
     IcebergLog.appendForeignSnapshot(root, ev.schema, Seq(b0r, b1),
       operation = "overwrite", removedData = Seq(b0))
-    withStatePartitions(spark) {
-      val q = spark.readStream.format("graft-txlog")
-        .option("path", root.toString)
-        .option("readChangeFeed", "true").load()
-        .writeStream.option("checkpointLocation", ckpt).option("path", out)
-        .trigger(Trigger.AvailableNow()).format("parquet").start()
-      q.awaitTermination()
-    }
-    spark.read.parquet(out)
-      .groupBy(col("_commit_version"), col("_change_type"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"))
+    drain(txlogTail(spark, root.toString, cdf = true))(appendTo(out))
+    totals(spark.read.parquet(out), "_commit_version", "_change_type")
   }
 
   val runStreamIcebergRewriteCdfOracle: String =
@@ -1005,21 +886,13 @@ object Streams {
       ev.filter(pmod(col("event_id"), lit(3)) === 0), tbl)
     graft.sources.TxLog.commitAppend(
       ev.filter(pmod(col("event_id"), lit(3)) === 1), tbl)
-    def drain(): Unit = withStatePartitions(spark) {
-      val q = spark.readStream.format("graft-txlog").option("path", tbl)
-        .option("readChangeFeed", "true").load()
-        .writeStream.option("checkpointLocation", ckpt).option("path", out)
-        .trigger(Trigger.AvailableNow()).format("parquet").start()
-      q.awaitTermination()
-    }
-    drain() // run 1: versions 1-2, replayed per version
+    val tail = txlogTail(spark, tbl, cdf = true)
+    drain(tail, ckpt)(appendTo(out)) // run 1: versions 1-2, replayed per version
     graft.sources.TxLog.optimize(spark, tbl) // v3: bytes-only, no change rows
     graft.sources.TxLog.commitAppend(
       ev.filter(pmod(col("event_id"), lit(3)) === 2), tbl) // v4
-    drain() // run 2: only v4's inserts
-    spark.read.parquet(out)
-      .groupBy(col("_commit_version"), col("_change_type"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"))
+    drain(tail, ckpt)(appendTo(out)) // run 2: only v4's inserts
+    totals(spark.read.parquet(out), "_commit_version", "_change_type")
   }
 
   val runStreamCdfOracle: String =
@@ -1053,14 +926,8 @@ object Streams {
     graft.sources.TxLog.deleteWhereDv(spark, tbl,
       col("event_id") <= 300,
       Seq(("event_id", null, java.lang.Long.valueOf(300L))))         // v3
-    def drain(): Unit = withStatePartitions(spark) {
-      val q = spark.readStream.format("graft-txlog").option("path", tbl)
-        .option("readChangeFeed", "true").load()
-        .writeStream.option("checkpointLocation", ckpt).option("path", out)
-        .trigger(Trigger.AvailableNow()).format("parquet").start()
-      q.awaitTermination()
-    }
-    drain() // run 1: v1 inserts + v3 deletes
+    val tail = txlogTail(spark, tbl, cdf = true)
+    drain(tail, ckpt)(appendTo(out)) // run 1: v1 inserts + v3 deletes
     graft.sources.TxLog.updateWhereDv(spark, tbl,
       col("event_id").between(400L, 500L),
       Map("value" -> (col("value") + 10)),
@@ -1068,10 +935,8 @@ object Streams {
         java.lang.Long.valueOf(500L))))                              // v4
     graft.sources.TxLog.commitAppend(
       ev.filter(col("event_id").between(900L, 1000L)), tbl)          // v5
-    drain() // run 2: resumes the checkpoint across the DV commits
-    spark.read.parquet(out)
-      .groupBy(col("_commit_version"), col("_change_type"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"))
+    drain(tail, ckpt)(appendTo(out)) // run 2: resumes the checkpoint across the DV commits
+    totals(spark.read.parquet(out), "_commit_version", "_change_type")
   }
 
   val runStreamCdfDvOracle: String =
@@ -1111,39 +976,22 @@ object Streams {
     val ckpt = graft.Scratch.dir("graft_pipe_ckpt").toString
     val appId = "graft-pipe-silver"
     graft.sources.TxLog.commitAppend(ev.filter(col("event_id") < 500), bronze)
-    @volatile var lastBatch = -1L
-    def cycle(): Unit = withStatePartitions(spark) {
-      val q = spark.readStream.format("graft-txlog").option("path", bronze)
-        .load()
-        // the silver transform: typed enrichment, stateless per batch
-        .withColumn("day", col("ts").cast("date"))
-        .withColumn("value_band",
-          when(col("value") >= 50, "hi").otherwise("lo"))
-        .writeStream
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .format("graft-txlog")
-        .option("path", silver)
-        .option("txnAppId", appId)
-        .start()
-      q.awaitTermination()
-      lastBatch = math.max(lastBatch,
-        q.recentProgress.map(_.batchId).foldLeft(lastBatch)(math.max))
-    }
-    cycle() // run 1: bronze history
+    // the silver transform: typed enrichment, stateless per batch
+    def enrich(df: DataFrame): DataFrame = df
+      .withColumn("day", col("ts").cast("date"))
+      .withColumn("value_band", when(col("value") >= 50, "hi").otherwise("lo"))
+    val silverRows = enrich(txlogTail(spark, bronze))
+    val sink = (w: DataStreamWriter[Row]) =>
+      w.format("graft-txlog").option("path", silver).option("txnAppId", appId)
+    drain(silverRows, ckpt)(sink) // run 1: bronze history
     graft.sources.TxLog.commitAppend(ev.filter(col("event_id") >= 500), bronze)
-    cycle() // run 2: only the new bronze commit
+    // run 2: only the new bronze commit
+    val lastBatch = drain(silverRows, ckpt)(sink).map(_.batchId).max
     // crash replay of the final token: must skip, not duplicate
     val replay = graft.sources.TxLog.commitAppendOnce(
-      graft.sources.TxLog.snapshot(spark, bronze)
-        .withColumn("day", col("ts").cast("date"))
-        .withColumn("value_band",
-          when(col("value") >= 50, "hi").otherwise("lo")),
-      silver, appId, lastBatch)
+      enrich(graft.sources.TxLog.snapshot(spark, bronze)), silver, appId, lastBatch)
     require(replay.isEmpty, s"pipeline replay must skip, got $replay")
-    graft.sources.TxLog.snapshot(spark, silver)
-      .groupBy(col("day"), col("value_band"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"))
+    totals(graft.sources.TxLog.snapshot(spark, silver), "day", "value_band")
       .orderBy(col("day"), col("value_band"))
   }
 
@@ -1192,7 +1040,6 @@ object Streams {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode => OM}
     val staged = rangedDirs.getOrElseUpdate(dir, stageRanged(spark, dir))
     val out = graft.Scratch.dir("graft_stream_topk_out").toString
-    val ckpt = graft.Scratch.dir("graft_stream_topk_ckpt").toString
     val sp = spark
     import sp.implicits._
     val schema = stagedSchema(spark, staged)
@@ -1217,16 +1064,7 @@ object Streams {
           touched.iterator.filter(m.contains).map(u => (u, m(u)))
       }
       .toDF("user_id", "cnt")
-    withStatePartitions(spark) {
-      val q = emitted.writeStream
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt)
-        .option("path", out)
-        .trigger(Trigger.AvailableNow())
-        .format("parquet")
-        .start()
-      q.awaitTermination()
-    }
+    drain(emitted)(appendTo(out))
     spark.read.parquet(out)
       .groupBy(col("user_id"))
       .agg(max(col("cnt")).as("cnt"))
@@ -1271,17 +1109,8 @@ object Streams {
     * oracle-checkable (append withholds the final open windows by
     * design).
     */
-  def runSilverAppend(spark: SparkSession, dir: String, out: String, ckpt: String): Unit = {
-    val bars = silverTransform(eventsStream(spark, dir))
-    val q = bars.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", ckpt)
-      .option("path", out)
-      .trigger(Trigger.AvailableNow())
-      .format("parquet")
-      .start()
-    q.awaitTermination()
-  }
+  def runSilverAppend(spark: SparkSession, dir: String, out: String, ckpt: String): Unit =
+    drain(silverTransform(eventsStream(spark, dir)), ckpt)(appendTo(out))
 
   /** The reference's FULL silver composition (`process_silver.py:60-89`):
     * streaming window agg → foreachBatch { empty-batch guard (P7) →
@@ -1294,7 +1123,6 @@ object Streams {
     import graft.ml.PriceModel
     val model = PriceModel.model(spark, dir)
     val out = graft.Scratch.dir("graft_stream_ml_out").toString
-    val ckpt = graft.Scratch.dir("graft_stream_ml_ckpt").toString
     val bars = eventsStream(spark, dir)
       .groupBy(window(col("ts"), "1 minute").as("w"), col("event_type"))
       .agg(
@@ -1302,21 +1130,14 @@ object Streams {
         avg(col("value")).as("average_price"))
       .select(col("w.start").as("window_start"), col("event_type"),
         col("volatility"), col("average_price"))
-    withStatePartitions(spark) {
-      val q = bars.writeStream
-        .outputMode(OutputMode.Complete())
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          if (!batch.isEmpty) { // P7 guard (isEmpty, not the reference's extra count())
-            val filled = batch.na.fill(0.0, Seq("volatility")) // P4
-            graft.ml.PriceModel.withPrediction(filled, Some(model)) // M3 + M5 fallback
-              .write.mode("overwrite").parquet(out) // S7 (overwrite: complete mode)
-          }
+    drain(bars)(_.outputMode(OutputMode.Complete())
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        if (!batch.isEmpty) { // P7 guard (isEmpty, not the reference's extra count())
+          val filled = batch.na.fill(0.0, Seq("volatility")) // P4
+          graft.ml.PriceModel.withPrediction(filled, Some(model)) // M3 + M5 fallback
+            .write.mode("overwrite").parquet(out) // S7 (overwrite: complete mode)
         }
-        .start()
-      q.awaitTermination()
-    }
+      })
     spark.read.parquet(out).select(
       col("window_start"), col("event_type"),
       round(col("volatility"), 6).as("volatility"),
@@ -1382,21 +1203,11 @@ object Streams {
     */
   def runClickPurchaseJoin(spark: SparkSession, dir: String): DataFrame = {
     val out = graft.Scratch.dir("graft_ssj_out").toString
-    val ckpt = graft.Scratch.dir("graft_ssj_ckpt").toString
     val ev = eventsStream(spark, dir)
     val joined = clickPurchaseJoin(
       ev.filter(col("event_type") === "click"),
       ev.filter(col("event_type") === "purchase"))
-    withStatePartitions(spark) {
-      val q = joined.writeStream
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt)
-        .option("path", out)
-        .trigger(Trigger.AvailableNow())
-        .format("parquet")
-        .start()
-      q.awaitTermination()
-    }
+    drain(joined)(appendTo(out))
     spark.read.parquet(out)
       .groupBy(col("c_user").as("user_id"))
       .agg(count(lit(1)).as("n_pairs"),
@@ -1447,20 +1258,10 @@ object Streams {
   def runStreamDedup(spark: SparkSession, dir: String): DataFrame = {
     val staged = stageDuped(spark, dir)
     val out = graft.Scratch.dir("graft_sdd_out").toString
-    val ckpt = graft.Scratch.dir("graft_sdd_ckpt").toString
     val schema = stagedSchema(spark, staged)
     val deduped = dedupStream(graft.Tables.normalizeEventsTs(
       spark.readStream.schema(schema).parquet(staged)))
-    withStatePartitions(spark) {
-      val q = deduped.writeStream
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt)
-        .option("path", out)
-        .trigger(Trigger.AvailableNow())
-        .format("parquet")
-        .start()
-      q.awaitTermination()
-    }
+    drain(deduped)(appendTo(out))
     spark.read.parquet(out)
       .groupBy(col("event_type"))
       .agg(
@@ -1525,7 +1326,6 @@ object Streams {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode => OM}
     val staged = docRangedDirs.getOrElseUpdate(dir, stageRangedDocs(spark, dir))
     val out = graft.Scratch.dir("graft_snd_out").toString
-    val ckpt = graft.Scratch.dir("graft_snd_ckpt").toString
     val sp = spark
     import sp.implicits._
     val schema = stagedSchema(spark, staged)
@@ -1549,16 +1349,7 @@ object Streams {
           outRows.iterator
       }
       .toDF("doc_id", "band", "hit")
-    withStatePartitions(spark) {
-      val q = flagged.writeStream
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt)
-        .option("path", out)
-        .trigger(Trigger.AvailableNow())
-        .format("parquet")
-        .start()
-      q.awaitTermination()
-    }
+    drain(flagged)(appendTo(out))
     spark.read.parquet(out)
       .groupBy(col("doc_id"))
       .agg(sum(col("hit")).cast("bigint").as("n_hit_bands"))
@@ -1686,24 +1477,18 @@ object Streams {
   def runStreamAdmission(spark: SparkSession, dir: String): DataFrame = {
     val staged = docRangedDirs.getOrElseUpdate(dir, stageRangedDocs(spark, dir))
     val out = graft.Scratch.dir("graft_adm_out").toString
-    val ckpt = graft.Scratch.dir("graft_adm_ckpt").toString
     val (idxBands, idxShingles) = admissionIndex(spark, dir)
     val schema = stagedSchema(spark, staged)
     val newDocs = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(staged)
       .filter(pmod(col("doc_id"), lit(5)) === 4)
-    val q = newDocs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
+    drain(newDocs)(_.outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         if (!batch.isEmpty) {
           graft.ext.Dedup.incrementalDedupPrepared(idxBands, idxShingles, batch)
             .write.mode("append").parquet(out)
         }
-      }
-      .start()
-    q.awaitTermination()
+      })
     spark.read.parquet(out)
   }
 
@@ -1751,33 +1536,18 @@ object Streams {
   def runRunningStats(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.{OutputMode => OM, TimeMode}
     val out = graft.Scratch.dir("graft_tws_out").toString
-    val ckpt = graft.Scratch.dir("graft_tws_ckpt").toString
     val sp = spark
     import sp.implicits._
     val src = eventsStream(spark, dir)
       .select(col("event_type"), col("value")).as[(String, Double)]
     val res = src.groupByKey(_._1)
       .transformWithState(new RunningTypeStats, TimeMode.None(), OM.Update())
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try withStatePartitions(spark) {
-      val q = res.toDF().writeStream
-        .outputMode(OM.Update())
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        // single staged file => single batch: the one emission per key IS
-        // the final running total (multi-batch append semantics are
-        // covered by q_stream_append/q_stream_dedup)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("overwrite").parquet(out)
-        }
-        .start()
-      q.awaitTermination()
-    } finally prevProvider match {
-      case Some(p) => spark.conf.set(providerKey, p)
-      case None => spark.conf.unset(providerKey)
+    // single staged file => single batch: the one emission per key IS
+    // the final running total (multi-batch append semantics are
+    // covered by q_stream_append/q_stream_dedup)
+    withConfs(spark, "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+      drain(res.toDF())(overwriteTo(out, OM.Update()))
     }
     spark.read.parquet(out).select(
       col("event_type"), col("n"),

@@ -417,6 +417,70 @@ class StreamingSpec extends SparkSpec {
     assert(n < total)
   }
 
+  test("drain: a throwing batch fails loudly and restores confs; a resumed drain continues batch ids") {
+    val s = spark
+    import s.implicits._
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.streaming.stateStore.providerClass")
+    val before = keys.map(s.conf.getOption)
+    val in = Files.createTempDirectory("graft_drain_in").toString
+    Seq((1L, 1.0)).toDF("id", "v").write.mode("append").parquet(in)
+    val rows = s.readStream.schema(s.read.parquet(in).schema).parquet(in)
+    val e = intercept[Exception] {
+      Streams.withConfs(s, keys(1) ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+        Streams.drain(rows)(_.foreachBatch { (_: org.apache.spark.sql.DataFrame, _: Long) =>
+          throw new IllegalStateException("boom in batch")
+        })
+      }
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("boom in batch")), e.toString)
+    assert(keys.map(s.conf.getOption) == before)
+
+    // the runStreamCdf shape: two drains of one writer on one checkpoint
+    val ev = Tables.events(s, "/root/testdata/sf0.001")
+    val tbl = Files.createTempDirectory("graft_drain_tbl").toString
+    val out = Files.createTempDirectory("graft_drain_out").toString
+    val ckpt = Files.createTempDirectory("graft_drain_ckpt").toString
+    graft.sources.TxLog.commitAppend(ev.filter(col("event_id") < 500), tbl)
+    val tail = s.readStream.format("graft-txlog").option("path", tbl)
+      .option("readChangeFeed", "true").load()
+    val toOut = (w: org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row]) =>
+      w.option("path", out).format("parquet")
+    val run1 = Streams.drain(tail, ckpt)(toOut).map(_.batchId).toSeq
+    graft.sources.TxLog.commitAppend(ev.filter(col("event_id") >= 500), tbl)
+    val run2 = Streams.drain(tail, ckpt)(toOut).map(_.batchId).toSeq
+    assert(run1.nonEmpty && run2.nonEmpty, s"$run1 / $run2")
+    assert(run1 ++ run2 == (run1.head to run2.last), s"batch ids must continue: $run1 / $run2")
+    assert(s.read.parquet(out).count() == ev.count())
+    assert(keys.map(s.conf.getOption) == before)
+  }
+
+  test("drain pins the state partitions only for a plan that holds state") {
+    val s = spark
+    import s.implicits._
+    val in = Files.createTempDirectory("graft_pin_in").toString
+    Seq((1L, "a"), (2L, "b")).toDF("id", "k").write.mode("append").parquet(in)
+    val rows = s.readStream.schema(s.read.parquet(in).schema).parquet(in)
+    // the shuffle-partition count each batch's session runs with
+    def batchPartitions(stream: org.apache.spark.sql.DataFrame, mode: String): String = {
+      val seen = new java.util.concurrent.atomic.AtomicReference[String]()
+      Streams.drain(stream)(_.outputMode(mode).foreachBatch {
+        (b: org.apache.spark.sql.DataFrame, _: Long) =>
+          b.collect() // a stateful batch must run every state partition to commit
+          seen.set(b.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+      })
+      seen.get
+    }
+    Streams.withConfs(s, "spark.sql.shuffle.partitions" -> "7") {
+      assert(batchPartitions(rows.filter(col("id") > 0), "append") == "7",
+        "a stateless plan keeps the session's setting")
+      assert(batchPartitions(rows.groupBy(col("k")).count(), "complete") == "2",
+        "a stateful plan runs at the pinned state-partition count")
+      assert(s.conf.get("spark.sql.shuffle.partitions") == "7")
+    }
+  }
+
   test("horizon near-dup: in-horizon re-sighting flagged, beyond-horizon arrival starts fresh") {
     val s = spark
     import s.implicits._
@@ -1199,29 +1263,13 @@ class StreamingSpec extends SparkSpec {
     val s = spark
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.streaming.Trigger
-    import graft.sources.{DeletionVectors, DeltaLog}
     val ev = Tables.events(s, "/root/testdata/sf0.001")
     val root = Files.createTempDirectory("graft_foreign_tail")
     val out = Files.createTempDirectory("graft_foreign_out").toString
     val ckpt = Files.createTempDirectory("graft_foreign_ckpt").toString
-    val schema = ev.schema.json
-    def mirrorBatch(df: org.apache.spark.sql.DataFrame, name: String): String = {
-      val tmp = Files.createTempDirectory(s"graft_foreign_$name")
-      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      import scala.jdk.CollectionConverters._
-      val st = Files.list(tmp)
-      val part = try st.iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet")).get
-      finally st.close()
-      Files.move(part, root.resolve(s"$name.parquet"))
-      s"$name.parquet"
-    }
-    DeltaLog.mirrorCommit(root, 1L,
-      Seq(mirrorBatch(ev.filter(col("event_id") < 400), "b0")),
-      Seq.empty, schema)                                             // delta 0
-    DeltaLog.mirrorCommit(root, 2L,
-      Seq(mirrorBatch(ev.filter(col("event_id").between(400, 699)), "b1")),
-      Seq.empty, schema)                                             // delta 1
+    Streams.foreignDeltaAppend(root, 1L, ev.filter(col("event_id") < 400), "b0") // delta 0
+    Streams.foreignDeltaAppend(root, 2L,
+      ev.filter(col("event_id").between(400, 699)), "b1")            // delta 1
     def drain(): Unit = {
       val q = s.readStream.format("graft-txlog").option("path", root.toString)
         .load()
@@ -1232,26 +1280,11 @@ class StreamingSpec extends SparkSpec {
     }
     drain() // run 1: delta history 0-1 in one batch
     assert(s.read.parquet(out).count() == 700L)
-    DeltaLog.mirrorCommit(root, 3L,
-      Seq(mirrorBatch(ev.filter(col("event_id") >= 700), "b2")),
-      Seq.empty, schema)                                             // delta 2
+    Streams.foreignDeltaAppend(root, 3L, ev.filter(col("event_id") >= 700), "b2") // delta 2
     // delta 3: a FOREIGN merge-on-read DELETE — the spec's remove +
     // re-add(same path, new deletionVector) pair on b0 hiding ids < 100
-    val doomed = s.read.parquet(root.resolve("b0.parquet").toString)
-      .select(col("_metadata.row_index"), col("event_id"))
-      .filter(col("event_id") < 100)
-      .collect().map(_.getLong(0)).toSeq.sorted
-    val bitmap = DeletionVectors.serialize(doomed)
-    val uuid = java.util.UUID.nameUUIDFromBytes("foreign-tail-dv".getBytes)
-    val bb = java.nio.ByteBuffer.allocate(16)
-    bb.putLong(uuid.getMostSignificantBits)
-    bb.putLong(uuid.getLeastSignificantBits)
-    val off = DeletionVectors.writeDvFile(
-      root.resolve(s"deletion_vector_$uuid.bin"), Seq(bitmap)).head
-    val desc = s"""{"storageType":"u","pathOrInlineDv":"${DeletionVectors.z85Encode(bb.array())}","offset":$off,"sizeInBytes":${bitmap.length},"cardinality":${doomed.size}}"""
-    DeltaLog.mirrorCommit(root, 4L, Seq.empty, Seq.empty, schema,
-      operation = "DELETE",
-      dvUpdates = Map("b0.parquet" -> ((desc, None))))               // delta 3
+    Streams.foreignDvDelete(s, root, 4L, "b0.parquet", col("event_id") < 100,
+      ev.schema.json)                                               // delta 3
     drain() // run 2: ONLY delta 2's adds; the DV commit delivers nothing
     assert(s.read.parquet(out).count() == ev.count(),
       "an append stream never re-delivers or retracts over a DV commit")
