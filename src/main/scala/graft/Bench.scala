@@ -46,7 +46,6 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = Session.local(cpus)
-    warmup(spark, sfDir)
     // Optional args = subset of query names (local iteration on hotspots),
     // plus --reps=N: run each query N times and report the per-query MEDIAN,
     // so regression calls don't hinge on single-shot box variance (same-HEAD
@@ -62,6 +61,7 @@ object Bench {
     // hold next to the count series without losing comparability.
     val noop = args.contains("--noop")
     val names = args.filterNot(_.startsWith("--"))
+    warmup(spark, sfDir, names.toSet) // warms only the named queries, or all
     val selected =
       if (names.nonEmpty) SparkEntry.queries.filter { case (n, _) => names.contains(n) }
       else SparkEntry.queries

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
@@ -9,10 +9,9 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
-/** FOREIGN-Delta commit history: the same primitives the DSv2 source
-  * consumes from `_txlog` manifests ([[TxLog.currentVersion]],
-  * `commitDelta`, `manifestOp`/`manifestDvs`/`manifestCdc`, …),
-  * derived instead from a STOCK `_delta_log` — so `format
+/** FOREIGN-Delta commit history: the [[CommitLog]] primitives the DSv2
+  * source reads from `_txlog` manifests on native tables, derived
+  * instead from a STOCK `_delta_log` — so `format
   * ("graft-txlog")` can tail a table some other Delta writer owns, the
   * most common production streaming read (reference:
   * `consumer_lake.py:48-54` writes Delta that a separate process
@@ -62,7 +61,7 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   *    (what stock delta-spark writes) — partition values are parsed
   *    from path segments by the shared scan machinery.
   */
-object ForeignDeltaLog {
+object ForeignDeltaLog extends CommitLog {
 
   private val mapper = new ObjectMapper()
 
@@ -224,7 +223,7 @@ object ForeignDeltaLog {
     * fallback, so its planner refuses with a floor-aware message
     * instead of failing mid-parse with append-stream advice. One past
     * the newest version when no JSON survives at all. */
-  def replayFloor(dir: String): Long =
+  override def cdfReplayFloor(dir: String): Long =
     DeltaLog.versions(dir).headOption.map(_ + 1)
       .orElse(currentVersion(dir).map(_ + 1)).getOrElse(1L)
 
@@ -245,13 +244,6 @@ object ForeignDeltaLog {
     (c.adds.filter(_.dataChange).map(_.rel).filterNot(removeSet),
       c.removes.filter(_._2).map(_._1).filterNot(addSet))
   }
-
-  def commitDeltasRange(dir: String, fromV: Long,
-      toV: Long): Seq[(Long, Seq[String], Boolean)] =
-    (math.max(1L, fromV) to toV).map { v =>
-      val (a, r) = commitDelta(dir, v)
-      (v, a, r.nonEmpty)
-    }
 
   /** Live file rels at version `v`: fold adds over removes (every add,
     * dataChange or not — an OPTIMIZE's re-adds ARE the state), removes
@@ -350,7 +342,7 @@ object ForeignDeltaLog {
     * column mapping enabled (empty otherwise). Partition-segment
     * parsing and parquet pushed-filter translation both key files'
     * physical spellings back to the logical schema through this. */
-  def partitionPhysicalNames(dir: String): Map[String, String] =
+  override def partitionPhysicalNames(dir: String): Map[String, String] =
     currentVersion(dir).flatMap(metaAt(dir, _)) match {
       case Some((schemaJson, _, cfg))
           if cfg.get("delta.columnMapping.mode").exists(_ != "none") =>
@@ -367,7 +359,7 @@ object ForeignDeltaLog {
     * parquet filters translate through so row-group/page pruning keeps
     * working against physically-named footers (files carry physical
     * names under BOTH mapping modes). Empty for unmapped tables. */
-  def physicalPathMap(dir: String): Map[String, String] = {
+  override def physicalPathMap(dir: String): Map[String, String] = {
     val cur = currentVersion(dir).getOrElse(return Map.empty)
     metaAt(dir, cur) match {
       case Some((schemaJson, _, cfg))
@@ -432,7 +424,7 @@ object ForeignDeltaLog {
     * Fields the table schema does not know (synthetic scan columns
     * like the row-index temporary or CDF `_change_type` in cdc files)
     * pass through unchanged. None for unmapped tables. */
-  def fileFieldRename(dir: String): Option[StructType => StructType] = {
+  override def fileFieldRename(dir: String): Option[StructType => StructType] = {
     val cur = currentVersion(dir).getOrElse(return None)
     val (schemaJson, _, cfg) = metaAt(dir, cur).getOrElse(return None)
     cfg.get("delta.columnMapping.mode").filter(_ != "none").map {
@@ -475,7 +467,7 @@ object ForeignDeltaLog {
 
   /** True when the table needs parquet FIELD-ID resolution (mapping
     * mode "id") — the reader factory force-enables it per scan. */
-  def fileFieldIdRead(dir: String): Boolean =
+  override def fileFieldIdRead(dir: String): Boolean =
     currentVersion(dir).flatMap(metaAt(dir, _)).exists(
       _._3.get("delta.columnMapping.mode").contains("id"))
 
@@ -484,220 +476,4 @@ object ForeignDeltaLog {
       sys.error(s"no Delta commits in $dir"))
     schemaAt(spark, dir, cur)
   }
-}
-
-/** Dispatch between the commit-history backends by what the table dir
-  * contains: graft `_txlog` manifests (native), a stock `_delta_log`
-  * with no manifests (foreign Delta tail via [[ForeignDeltaLog]]), or
-  * a stock Iceberg `metadata/` tree with neither (foreign Iceberg tail
-  * via [[ForeignIcebergLog]]). The DSv2 source reads history
-  * exclusively through this object, so every read feature — version
-  * offsets, startingVersion, ReadLimit, AvailableNow, DV application,
-  * CDF replay, time travel — works identically over all three. */
-private[graft] object CommitLog {
-
-  private object Kind extends Enumeration { val Native, Delta, Iceberg = Value }
-
-  private def kind(dir: String): Kind.Value =
-    if (ForeignDeltaLog.isForeign(dir)) Kind.Delta
-    else if (ForeignIcebergLog.isForeign(dir)) Kind.Iceberg
-    else Kind.Native
-
-  /** Another writer owns the table (the graft sink must refuse it). */
-  def foreign(dir: String): Boolean = kind(dir) != Kind.Native
-
-  /** Enable the parquet field-id SESSION resolution flag for a table
-    * that requires it (Delta mapping mode "id"; Iceberg with a rename
-    * in its schema history) — the one shared enable rule for every
-    * call site (analysis, factory build, eq-delete folds, carryover
-    * compares). The flag only activates for requested schemas that
-    * CARRY id metadata, so enabling it is behavior-neutral elsewhere —
-    * but a user who EXPLICITLY set it false (their own parquet may
-    * carry bogus ids that must resolve by name) gets a loud refusal:
-    * silently overriding their setting would change their other reads,
-    * and silently honoring it would null-fill this table's columns. */
-  def ensureFieldIdSessionFlag(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit = {
-    if (!fileFieldIdRead(dir)) return
-    val conf = spark.sessionState.conf
-    if (conf.parquetFieldIdReadEnabled) return
-    val key = org.apache.spark.sql.internal.SQLConf
-      .PARQUET_FIELD_ID_READ_ENABLED.key
-    if (conf.contains(key))
-      sys.error(s"graft-txlog: $dir requires parquet field-id " +
-        s"resolution (id-mode column mapping or a renamed Iceberg " +
-        s"schema history), but $key is EXPLICITLY false in this " +
-        "session — unset it, or set it true, to read this table")
-    System.err.println(s"graft-txlog: enabling $key for $dir " +
-      "(field-id-resolved table; the parquet ROW reader consults the " +
-      "session conf captured at action start)")
-    spark.conf.set(key, "true")
-  }
-
-  def currentVersion(dir: String): Option[Long] = kind(dir) match {
-    case Kind.Delta => ForeignDeltaLog.currentVersion(dir)
-    case Kind.Iceberg => ForeignIcebergLog.currentVersion(dir)
-    case _ => TxLog.currentVersion(dir)
-  }
-
-  def commitDelta(dir: String, v: Long): (Seq[String], Seq[String]) =
-    kind(dir) match {
-      case Kind.Delta => ForeignDeltaLog.commitDelta(dir, v)
-      case Kind.Iceberg => ForeignIcebergLog.commitDelta(dir, v)
-      case _ => TxLog.commitDelta(dir, v)
-    }
-
-  def commitDeltasRange(dir: String, fromV: Long,
-      toV: Long): Seq[(Long, Seq[String], Boolean)] = kind(dir) match {
-    case Kind.Delta => ForeignDeltaLog.commitDeltasRange(dir, fromV, toV)
-    case Kind.Iceberg => ForeignIcebergLog.commitDeltasRange(dir, fromV, toV)
-    case _ => TxLog.commitDeltasRange(dir, fromV, toV)
-  }
-
-  def liveRelsAt(dir: String, v: Long): Seq[String] = kind(dir) match {
-    case Kind.Delta => ForeignDeltaLog.liveRelsAt(dir, v)
-    case Kind.Iceberg => ForeignIcebergLog.liveRelsAt(dir, v)
-    case _ => TxLog.liveRelsAt(dir, v)
-  }
-
-  def manifestOp(table: Path, v: Long): Option[(String, Boolean)] =
-    kind(table.toString) match {
-      case Kind.Delta => ForeignDeltaLog.manifestOp(table.toString, v)
-      case Kind.Iceberg => ForeignIcebergLog.manifestOp(table.toString, v)
-      case _ => TxLog.readManifest(table, v).op
-    }
-
-  def manifestDvs(table: Path, v: Long): Map[String, String] =
-    kind(table.toString) match {
-      case Kind.Delta => ForeignDeltaLog.manifestDvs(table.toString, v)
-      case Kind.Iceberg => ForeignIcebergLog.manifestDvs(table.toString, v)
-      case _ => TxLog.readManifest(table, v).dvs
-    }
-
-  def manifestCdc(table: Path, v: Long): Seq[String] =
-    kind(table.toString) match {
-      case Kind.Delta => ForeignDeltaLog.manifestCdc(table.toString, v)
-      case Kind.Iceberg => ForeignIcebergLog.manifestCdc(table.toString, v)
-      case _ => TxLog.readManifest(table, v).cdc
-    }
-
-  def partitionColumnsOf(dir: String): Seq[String] = kind(dir) match {
-    case Kind.Delta => ForeignDeltaLog.partitionColumnsOf(dir)
-    case Kind.Iceberg => ForeignIcebergLog.partitionColumnsOf(dir)
-    case _ => TxLog.partitionColumnsOf(dir)
-  }
-
-  /** Full table schema (current version). */
-  def schema(spark: SparkSession, dir: String): StructType = kind(dir) match {
-    case Kind.Delta => ForeignDeltaLog.schema(spark, dir)
-    case Kind.Iceberg => ForeignIcebergLog.schema(spark, dir)
-    case _ => TxLog.snapshot(spark, dir).schema
-  }
-
-  /** Table schema AT a version (time travel presents that era's). */
-  def schemaAt(spark: SparkSession, dir: String, v: Long): StructType =
-    kind(dir) match {
-      case Kind.Delta => ForeignDeltaLog.schemaAt(spark, dir, v)
-      case Kind.Iceberg => ForeignIcebergLog.schemaAt(spark, dir, v)
-      case _ => TxLog.snapshotAt(spark, dir, v).schema
-    }
-
-  /** `timestampAsOf` → graft version, per backend: the Delta mirror's
-    * commit timestamps (native + foreign Delta, versions trail TxLog
-    * by one) or the Iceberg snapshot-log. */
-  def versionAsOf(dir: String, tsMillis: Long): Long = kind(dir) match {
-    case Kind.Iceberg => ForeignIcebergLog.versionAsOf(dir, tsMillis)
-    case _ => DeltaLog.versionAsOf(dir, tsMillis) + 1L
-  }
-
-  /** Streaming `startingTimestamp` → the first graft version committed
-    * at or after the timestamp (one past the newest when it postdates
-    * every commit — the stream starts empty and tails what lands
-    * next), per backend through the same clocks as [[versionAsOf]]. */
-  def versionAtOrAfter(dir: String, tsMillis: Long): Long = kind(dir) match {
-    case Kind.Iceberg => ForeignIcebergLog.versionAtOrAfter(dir, tsMillis)
-    case _ => DeltaLog.versionAtOrAfter(dir, tsMillis) + 1L
-  }
-
-  /** Stats-based whole-file skip flags for the scan's filterExpr /
-    * pushed range predicates, keyed by the backend's rel spelling:
-    * the Delta mirror's per-file stats (native tables AND foreign
-    * `_delta_log` tables — the stats ride the log either way) or the
-    * Iceberg manifests' column bounds. */
-  def pruneFlags(spark: SparkSession, dir: String,
-      preds: Seq[(String, Any, Any)]): Seq[(String, Boolean)] =
-    kind(dir) match {
-      case Kind.Iceberg => IcebergLog.pruneFlags(dir, preds)
-      case _ => DeltaLog.pruneFlags(spark, dir, preds)._1
-        .map { case (f, keep) => f.path -> keep }
-    }
-
-  /** FILE-schema translation for the parquet reader factory — defined
-    * for column-mapped foreign Delta tables (physical rename / id
-    * annotation) and for RENAMED foreign Iceberg tables (field-id
-    * annotation — stock Iceberg's resolution). */
-  def fileFieldRename(dir: String): Option[StructType => StructType] =
-    kind(dir) match {
-      case Kind.Delta => ForeignDeltaLog.fileFieldRename(dir)
-      case Kind.Iceberg => ForeignIcebergLog.fileFieldRename(dir)
-      case _ => None
-    }
-
-  /** Force parquet field-id resolution for the scan (Delta mapping
-    * mode "id"; Iceberg tables with a rename in their schema
-    * history). */
-  def fileFieldIdRead(dir: String): Boolean = kind(dir) match {
-    case Kind.Delta => ForeignDeltaLog.fileFieldIdRead(dir)
-    case Kind.Iceberg => ForeignIcebergLog.fileFieldIdRead(dir)
-    case _ => false
-  }
-
-  /** Logical → physical TOP-LEVEL column names (column-mapped foreign
-    * Delta tables; empty elsewhere) — hive partition segments of mapped
-    * tables are keyed by the physical spelling. */
-  def partitionPhysicalNames(dir: String): Map[String, String] =
-    kind(dir) match {
-      case Kind.Delta => ForeignDeltaLog.partitionPhysicalNames(dir)
-      case _ => Map.empty
-    }
-
-  /** Dotted logical → physical paths for pushed-filter translation
-    * (column-mapped foreign Delta tables; empty elsewhere). */
-  def physicalPathMap(dir: String): Map[String, String] = kind(dir) match {
-    case Kind.Delta => ForeignDeltaLog.physicalPathMap(dir)
-    case _ => Map.empty
-  }
-
-  /** First version a CDF read can replay PER COMMIT — foreign-Delta
-    * logs compacted past a checkpoint lose the aged-out prefix; native
-    * manifests and Iceberg metadata retain full history until
-    * vacuum/expiry (whose own failures stay loud at parse). */
-  def cdfReplayFloor(dir: String): Long = kind(dir) match {
-    case Kind.Delta => ForeignDeltaLog.replayFloor(dir)
-    case _ => 1L
-  }
-
-  /** Per-file MANIFEST partition values at a version (hive-layout
-    * foreign Iceberg trees, whose identity values live only in the
-    * manifests' partition tuples; empty elsewhere — hive Delta/native
-    * tables parse values from path segments instead). */
-  def filePartitionValues(dir: String,
-      v: Long): Map[String, Map[String, String]] = kind(dir) match {
-    case Kind.Iceberg => ForeignIcebergLog.filePartitionValues(dir, v)
-    case _ => Map.empty
-  }
-
-  /** The schema version `v` DECLARED (a metaData action / a snapshot
-    * schema-id change), None when it declared nothing — what the
-    * streaming schema-change detector compares against the schema
-    * pinned at stream start. Cheap on every backend: cached commit
-    * parses (foreign Delta), cached metadata (Iceberg), or one small
-    * mirror-commit JSON read (native — per NEW version only). */
-  def declaredSchemaAt(dir: String, v: Long): Option[StructType] =
-    kind(dir) match {
-      case Kind.Delta => ForeignDeltaLog.declaredSchemaAt(dir, v)
-      case Kind.Iceberg => ForeignIcebergLog.declaredSchemaAt(dir, v)
-      // native graft version v mirrors to Delta commit v-1
-      case _ => DeltaLog.metaSchemaInCommit(Paths.get(dir), v - 1)
-    }
 }

@@ -65,7 +65,7 @@ import org.apache.spark.sql.types.StructType
   *    probed once against one footer) — hive-layout trees whose values
   *    live only in manifests refuse with a pointer to the batch reader.
   */
-object ForeignIcebergLog {
+object ForeignIcebergLog extends CommitLog {
 
   /** A dir with an Iceberg `metadata/` tree but neither graft manifests
     * nor a Delta log: some other Iceberg writer owns it. */
@@ -186,13 +186,6 @@ object ForeignIcebergLog {
       .map(p => dataRels(dir, p._2)).getOrElse(Set.empty[String])
     ((curSet -- prevSet).toSeq.sorted, (prevSet -- curSet).toSeq.sorted)
   }
-
-  def commitDeltasRange(dir: String, fromV: Long,
-      toV: Long): Seq[(Long, Seq[String], Boolean)] =
-    (math.max(1L, fromV) to toV).map { v =>
-      val (a, r) = commitDelta(dir, v)
-      (v, a, r.nonEmpty)
-    }
 
   /** Live DATA file rels at version `v` (canonical absolute paths the
     * shared scan resolves as-is). */
@@ -570,7 +563,7 @@ object ForeignIcebergLog {
     * value) — the scan's per-file append source on hive-layout trees.
     * Derived from the cached [[liveAt]] snapshot walk, O(files) map
     * build per (version, scan). */
-  def filePartitionValues(dir: String,
+  override def filePartitionValues(dir: String,
       v: Long): Map[String, Map[String, String]] =
     if (hiveLayoutCols(dir).isEmpty) Map.empty
     else {
@@ -671,7 +664,7 @@ object ForeignIcebergLog {
     * the table schema and pass through unannotated (Spark matches
     * unannotated fields by name even in id mode). Top-level fields
     * only — the flat-table shape this engine reads. */
-  def fileFieldRename(dir: String): Option[StructType => StructType] = {
+  override def fileFieldRename(dir: String): Option[StructType => StructType] = {
     val meta = IcebergLog.readMetadata(Paths.get(dir))
     val everRenamed = IcebergLog.fieldNamesByIdAcrossSchemas(meta)
       .values.exists(_.size > 1)
@@ -695,14 +688,14 @@ object ForeignIcebergLog {
 
   /** Force parquet field-id resolution for the scan — only once a
     * rename makes by-name resolution unsound (see [[fileFieldRename]]). */
-  def fileFieldIdRead(dir: String): Boolean =
+  override def fileFieldIdRead(dir: String): Boolean =
     IcebergLog.fieldNamesByIdAcrossSchemas(
       IcebergLog.readMetadata(Paths.get(dir))).values.exists(_.size > 1)
 
   /** `timestampAsOf` resolution: the newest main-line snapshot whose
     * commit timestamp is ≤ `tsMillis` (the Iceberg snapshot-log
     * contract, same shape as [[DeltaLog.versionAsOf]]). */
-  def versionAsOf(dir: String, tsMillis: Long): Long =
+  override def versionAsOf(dir: String, tsMillis: Long): Long =
     mainLine(dir).filter(s => longOf(s._2, "timestamp-ms") <= tsMillis)
       .lastOption.map(_._1)
       .getOrElse(sys.error(s"$dir: no Iceberg snapshot at or before " +
@@ -712,8 +705,13 @@ object ForeignIcebergLog {
     * snapshot committed at or after `tsMillis`; one past the newest
     * when the timestamp postdates every snapshot (the stream starts
     * empty and tails future commits). */
-  def versionAtOrAfter(dir: String, tsMillis: Long): Long =
+  override def versionAtOrAfter(dir: String, tsMillis: Long): Long =
     mainLine(dir).find(s => longOf(s._2, "timestamp-ms") >= tsMillis)
       .map(_._1)
       .getOrElse(currentVersion(dir).getOrElse(0L) + 1L)
+
+  /** Whole-file skip flags from the manifests' column bounds. */
+  override def pruneFlags(spark: SparkSession, dir: String,
+      preds: Seq[(String, Any, Any)]): Seq[(String, Boolean)] =
+    IcebergLog.pruneFlags(dir, preds)
 }

@@ -281,7 +281,7 @@ object IcebergLog {
         "^file:/+", "/"))
       .otherwise(c)
 
-  private def applyDeletes(spark: SparkSession, df: DataFrame,
+  private def applyDeletes(spark: SparkSession, table: Path, df: DataFrame,
       files: Seq[IceFile], sf: SnapshotFiles,
       fieldName: Map[Int, String]): DataFrame = {
     val hasDeletes = sf.posDeletes.nonEmpty || sf.eqDeletes.nonEmpty
@@ -354,8 +354,13 @@ object IcebergLog {
           col("__file")))))
     if (sf.posDeletes.nonEmpty) {
       val dels = sf.posDeletes.map { case (p, dseq) =>
+        // a relative `file_path` (the TxLog mirror's spelling, like its
+        // data entries) names a file under this table's root
+        val fp = col("file_path")
         spark.read.parquet(p.toString)
-          .select(norm(col("file_path")).as("__del_file"),
+          .select(norm(when(fp.startsWith("/") || fp.startsWith("file:"), fp)
+            .otherwise(concat(lit(table.toAbsolutePath.toString + "/"), fp)))
+            .as("__del_file"),
             col("pos").as("__del_pos"), lit(dseq).as("__del_seq"))
       }.reduce(_.unionByName(_))
       out = out.join(dels, col("__file") === col("__del_file") &&
@@ -711,7 +716,7 @@ object IcebergLog {
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     }
     val rd = schemaOpt.map(spark.read.schema).getOrElse(spark.read)
-    val base = applyDeletes(spark,
+    val base = applyDeletes(spark, table,
       rd.parquet(surviving.map(_.path.toString): _*),
       surviving, snapFiles, fieldNamesById(meta))
     preds.foldLeft(base) { case (df, (c, lo, hi)) =>
@@ -818,7 +823,7 @@ object IcebergLog {
       .getOrElse(spark.read)
     if (sf.data.isEmpty)
       sys.error(s"$dir: snapshot $snapshotId lists no data files")
-    applyDeletes(spark, rd.parquet(sf.data.map(_.path.toString): _*),
+    applyDeletes(spark, table, rd.parquet(sf.data.map(_.path.toString): _*),
       sf.data, sf, fieldNamesById(meta))
   }
 
@@ -2272,11 +2277,14 @@ object IcebergLog {
         deleteManifest =
           if (dvNow.isEmpty) None // OPTIMIZE materialized the deletes
           else {
+            // `file_path` is table-relative, the spelling the data
+            // entries use: an absolute one would keep naming the files
+            // of the ORIGINAL root after the tree is copied or moved,
+            // and the copy's deleted rows would come back
             val rows = dvNow.toSeq.sortBy(_._1).flatMap { case (rel, json) =>
-              val abs = table.resolve(rel).toString
               DeletionVectors.parse(DeletionVectors.readBytes(table,
                 DeletionVectors.parseDescriptor(json))).values
-                .map(p => (abs, p)).toSeq
+                .map(p => (rel, p)).toSeq
             }
             import spark.implicits._
             val delRel = writeDataFile(

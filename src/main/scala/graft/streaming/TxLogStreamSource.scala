@@ -127,7 +127,8 @@ class TxLogStreamProvider extends TableProvider with DataSourceRegister
     * empty table still fails loudly at planning. */
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val dir = dirOf(options)
-    if (CommitLog.currentVersion(dir).isEmpty) new StructType()
+    def log = CommitLog.of(dir)
+    if (log.currentVersion(dir).isEmpty) new StructType()
     else {
       val spark = SparkSession.getActiveSession.getOrElse(
         sys.error("graft-txlog: no active SparkSession"))
@@ -146,8 +147,8 @@ class TxLogStreamProvider extends TableProvider with DataSourceRegister
       val full = TxLogScan.asOfOption(options.asCaseSensitiveMap()
             .asScala.toMap, dir) match {
         case Some(v) =>
-          val pcols = CommitLog.partitionColumnsOf(dir)
-          val s = CommitLog.schemaAt(spark, dir, v)
+          val pcols = log.partitionColumnsOf(dir)
+          val s = log.schemaAt(spark, dir, v)
           val data = s.fields.filterNot(f => pcols.contains(f.name))
           val part = pcols.flatMap(n => s.fields.find(_.name == n))
           StructType(data ++ part)
@@ -180,7 +181,7 @@ class TxLogStreamProvider extends TableProvider with DataSourceRegister
     // foreign _delta_log (or a stock Iceberg metadata tree) is owned by
     // another writer — writing graft manifests beside it would fork the
     // commit history
-    require(!graft.sources.CommitLog.foreign(dir),
+    require(CommitLog.of(dir) == CommitLog.Native,
       s"graft-txlog sink: $dir is a foreign table (a _delta_log or " +
         "Iceberg metadata/ tree with no graft manifests) — the source " +
         "can TAIL it, but writes belong to its owning writer")
@@ -368,17 +369,23 @@ object TxLogScan {
     * every set entry into the built configuration). Participates in the
     * broadcast memo key so ANY mid-session conf mutation misses and
     * rebuilds instead of serving a stale broadcast. O(set entries) per
-    * factory build — microseconds against the 15–60 ms build it guards. */
-  private[streaming] def baseConfFingerprint(
-      spark: org.apache.spark.sql.SparkSession): (Int, Int) = {
-    var h = 1
-    val it = spark.sparkContext.hadoopConfiguration.iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      h = h * 31 + e.getKey.hashCode
-      h = h * 31 + (if (e.getValue == null) 0 else e.getValue.hashCode)
-    }
-    (h, spark.sessionState.conf.getAllConfs.hashCode)
+    * factory build — well under a millisecond against the 15–60 ms build
+    * it guards. */
+  private[streaming] def baseConfFingerprint(spark: SparkSession): String =
+    confDigest(spark.sparkContext.hadoopConfiguration.asScala
+        .map(e => e.getKey -> e.getValue),
+      spark.sessionState.conf.getAllConfs)
+
+  /** SHA-256 over the key-sorted entries of the Hadoop conf and the SQL
+    * conf, each entry NUL-terminated and each conf tagged, so neither
+    * iteration order nor a key/value boundary can alias two confs. */
+  private[graft] def confDigest(hadoop: Iterable[(String, String)],
+      sql: Iterable[(String, String)]): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    def add(s: String): Unit = { md.update(s.getBytes("UTF-8")); md.update(0: Byte) }
+    for ((tag, conf) <- Seq("H" -> hadoop, "S" -> sql);
+         (k, v) <- conf.toSeq.sorted) { add(tag + k); add(v) }
+    java.util.Base64.getEncoder.encodeToString(md.digest())
   }
 
   /** Observability for specs: (rows the driver collected, total bitmap
@@ -518,8 +525,8 @@ object TxLogScan {
     * pseudo-columns after that when `readChangeFeed` is on. */
   private[streaming] def readSchema(spark: SparkSession, dir: String,
       cdf: Boolean): StructType = {
-    val full = CommitLog.schema(spark, dir)
-    val pcols = CommitLog.partitionColumnsOf(dir)
+    val full = CommitLog.of(dir).schema(spark, dir)
+    val pcols = CommitLog.of(dir).partitionColumnsOf(dir)
     val data = full.fields.filterNot(f => pcols.contains(f.name))
     val part = pcols.map(n => full.fields.find(_.name == n).getOrElse(
       sys.error(s"$dir: partition column $n missing from table schema")))
@@ -593,13 +600,13 @@ object TxLogScan {
     val byTs = ci.get("timestampasof").map { raw =>
       // backend-resolved: mirror commit timestamps (Delta paths, where
       // DeltaLog versions trail TxLog by one) or the Iceberg snapshot-log
-      graft.sources.CommitLog.versionAsOf(dir, parseTsMillis(raw))
+      CommitLog.of(dir).versionAsOf(dir, parseTsMillis(raw))
     }
     require(byV.isEmpty || byTs.isEmpty,
       "graft-txlog: versionAsOf and timestampAsOf are mutually exclusive")
     val asOf = byV.orElse(byTs)
     asOf.foreach { v =>
-      val latest = CommitLog.currentVersion(dir).getOrElse(
+      val latest = CommitLog.of(dir).currentVersion(dir).getOrElse(
         sys.error(s"graft-txlog: no committed version in $dir"))
       require(v >= 1L && v <= latest, s"graft-txlog: versionAsOf $v " +
         s"outside the committed range 1..$latest of $dir")
@@ -628,6 +635,9 @@ class TxLogScan(dir: String, fullSchema: StructType,
     options.map { case (k, v) => k.toLowerCase(java.util.Locale.ROOT) -> v }
   private def opt(name: String): Option[String] =
     optsCI.get(name.toLowerCase(java.util.Locale.ROOT))
+  // resolved per use: an empty table turns native or foreign when its
+  // first writer lands, under a scan that already exists
+  private def log: CommitLog = CommitLog.of(dir)
 
   private val cdf = opt("readChangeFeed").exists(_.toBoolean)
   // time travel (batch only): versionAsOf / timestampAsOf
@@ -636,18 +646,18 @@ class TxLogScan(dir: String, fullSchema: StructType,
     "graft-txlog: time travel does not combine with readChangeFeed — " +
       "bound the feed with startingVersion instead")
   // appended (non-file) columns: real partition cols + CDF pseudo-cols
-  private val partCols = CommitLog.partitionColumnsOf(dir)
+  private val partCols = log.partitionColumnsOf(dir)
   // logical → physical partition-segment spelling (column-mapped
   // foreign tables hive-partition by physical names; empty otherwise)
   private lazy val partPhysNames: Map[String, String] =
-    CommitLog.partitionPhysicalNames(dir)
+    log.partitionPhysicalNames(dir)
   // graft-written change-data files are FLAT (partition columns ride
   // in-file as data; only `_commit_version` appends); stock Delta
   // writers HIVE-PARTITION `_change_data/`, so a foreign partitioned
   // table's cdc reads append the partition columns from the cdc file's
   // own path segments instead — this set names what appends per shape
   private lazy val cdcAppendedNames: Set[String] =
-    if (partCols.nonEmpty && graft.sources.ForeignDeltaLog.isForeign(dir))
+    if (partCols.nonEmpty && log == graft.sources.ForeignDeltaLog)
       partCols.toSet + "_commit_version"
     else Set("_commit_version")
   private val appendedNames: Set[String] =
@@ -692,7 +702,7 @@ class TxLogScan(dir: String, fullSchema: StructType,
     val preds = TxLogScan.rangeTriples(allFilters)
     if (preds.isEmpty) Set.empty
     else scala.util.Try(
-      graft.sources.CommitLog.pruneFlags(
+      log.pruneFlags(
         SparkSession.getActiveSession.get, dir, preds)
         .collect { case (f, false) => f }.toSet)
       .getOrElse(Set.empty)
@@ -752,7 +762,7 @@ class TxLogScan(dir: String, fullSchema: StructType,
       "and startingTimestamp are mutually exclusive")
     val resolveStart: () => Long = () =>
       byV.orElse(byTsRaw.map(raw =>
-        CommitLog.versionAtOrAfter(dir, TxLogScan.parseTsMillis(raw))))
+        log.versionAtOrAfter(dir, TxLogScan.parseTsMillis(raw))))
         .getOrElse(0L)
     val policy = ChangePolicy(
       opt("skipChangeCommits").exists(_.toBoolean),
@@ -783,7 +793,7 @@ class TxLogScan(dir: String, fullSchema: StructType,
       * snapshot-shaped read would mislabel the whole history with the
       * current version. */
     override def planInputPartitions(): Array[InputPartition] = {
-      val cur = CommitLog.currentVersion(dir).getOrElse(
+      val cur = log.currentVersion(dir).getOrElse(
         sys.error(s"no committed version in $dir"))
       if (cdf) {
         val skip = opt("skipChangeCommits").exists(_.toBoolean)
@@ -807,11 +817,11 @@ class TxLogScan(dir: String, fullSchema: StructType,
         val fromV = math.max(1L,
           opt("startingVersion").map(_.toLong)
             .orElse(opt("startingTimestamp").map(raw =>
-              CommitLog.versionAtOrAfter(dir, tsMillis(raw))))
+              log.versionAtOrAfter(dir, tsMillis(raw))))
             .getOrElse(1L))
         val toV = opt("endingVersion").map(_.toLong)
           .orElse(opt("endingTimestamp").map(raw =>
-            CommitLog.versionAsOf(dir, tsMillis(raw))))
+            log.versionAsOf(dir, tsMillis(raw))))
           .getOrElse(cur)
         require(toV >= fromV && toV <= cur, s"graft-txlog: endingVersion " +
           s"$toV outside the range $fromV..$cur of $dir")
@@ -820,13 +830,13 @@ class TxLogScan(dir: String, fullSchema: StructType,
       }
       val effV = asOf match {
         case Some(v) =>
-          if (scala.util.Try(CommitLog.liveRelsAt(dir, v)).isFailure)
+          if (scala.util.Try(log.liveRelsAt(dir, v)).isFailure)
             sys.error(s"graft-txlog: cannot read $dir at version $v — " +
               "its manifest is expired (vacuumed past retention)")
           v
         case None => cur
       }
-      val rels = CommitLog.liveRelsAt(dir, effV)
+      val rels = log.liveRelsAt(dir, effV)
       packPartitions(Seq((effV, rels.filterNot(skippedFiles()))))
     }
     override def createReaderFactory(): PartitionReaderFactory =
@@ -871,14 +881,14 @@ class TxLogScan(dir: String, fullSchema: StructType,
     // catches a rename/drop declared BEFORE any change inside the
     // range — if it cannot be derived, refuse rather than silently
     // skip the contract in exactly the degraded-history case
-    compat(start, scala.util.Try(CommitLog.schemaAt(spark, dir, start))
+    compat(start, scala.util.Try(log.schemaAt(spark, dir, start))
       .getOrElse(sys.error(s"graft-txlog: readChangeFeed range " +
         s"$fromV..$toV of $dir — the schema in force at version $start " +
         "cannot be derived (expired or unreadable history), so " +
         "read-compatibility with the presented schema cannot be " +
         "proven; start the range at a retained version")))
     ((start + 1) to toV).foreach { v =>
-      CommitLog.declaredSchemaAt(dir, v).foreach(compat(v, _))
+      log.declaredSchemaAt(dir, v).foreach(compat(v, _))
     }
   }
 
@@ -890,7 +900,7 @@ class TxLogScan(dir: String, fullSchema: StructType,
     * change when both are silent (the change policy recovers). */
   private[streaming] def classifiedAddsOf(v: Long,
       policy: ChangePolicy): Seq[String] = {
-    val (added, removed) = CommitLog.commitDelta(dir, v)
+    val (added, removed) = log.commitDelta(dir, v)
     classify(v, added, removed.nonEmpty, policy)
   }
 
@@ -898,7 +908,7 @@ class TxLogScan(dir: String, fullSchema: StructType,
       policy: ChangePolicy): Seq[String] = {
     if (!removedAny) return added
     val table = Paths.get(dir)
-    val bytesOnly = CommitLog.manifestOp(table, v).map(!_._2)
+    val bytesOnly = log.manifestOp(dir, v).map(!_._2)
       .orElse(graft.sources.DeltaLog.isBytesOnlyCommit(table, v))
     if (bytesOnly.contains(true)) Seq.empty // OPTIMIZE/REORG: rows already delivered
     else if (policy.skipChangeCommits) Seq.empty
@@ -938,8 +948,8 @@ class TxLogScan(dir: String, fullSchema: StructType,
     val table = Paths.get(dir)
     // a time-travel read applies the DVs in force AT THAT VERSION — a
     // later delete must not hide rows from a historical snapshot
-    asOf.orElse(CommitLog.currentVersion(dir))
-      .map(v => CommitLog.manifestDvs(table, v).map { case (rel, d) =>
+    asOf.orElse(log.currentVersion(dir))
+      .map(v => log.manifestDvs(dir, v).map { case (rel, d) =>
         // key through the SAME SparkPath conversion the lookup uses, so
         // escaped path segments can't split the two spellings
         SparkPath.fromPathString(table.resolve(rel).toString)
@@ -967,7 +977,7 @@ class TxLogScan(dir: String, fullSchema: StructType,
   private def partValsAt(v: Long): Map[String, Map[String, String]] =
     manifestPartVals.synchronized {
       Option(manifestPartVals.get(v)).getOrElse {
-        val m = graft.sources.CommitLog.filePartitionValues(dir, v)
+        val m = log.filePartitionValues(dir, v)
         manifestPartVals.put(v, m)
         m
       }
@@ -1126,7 +1136,7 @@ class TxLogScan(dir: String, fullSchema: StructType,
     // snapshot") does not exist here (a CDF read has no initial
     // snapshot), so refuse with the floor instead of failing mid-parse
     // with circular advice
-    val floor = CommitLog.cdfReplayFloor(dir)
+    val floor = log.cdfReplayFloor(dir)
     if (math.max(1L, fromV) < floor)
       sys.error(s"graft-txlog: readChangeFeed cannot replay versions " +
         s"${math.max(1L, fromV)}..${floor - 1} of $dir — their per-commit " +
@@ -1142,13 +1152,13 @@ class TxLogScan(dir: String, fullSchema: StructType,
     // make a long CDF resume O(range × v)
     val start = math.max(1L, fromV)
     var dvPrev: Map[String, String] =
-      if (start <= 1) Map.empty else CommitLog.manifestDvs(table, start - 1)
-    CommitLog.commitDeltasRange(dir, fromV, toV).foreach {
+      if (start <= 1) Map.empty else log.manifestDvs(dir, start - 1)
+    log.commitDeltasRange(dir, fromV, toV).foreach {
       case (v, added, removedAny) =>
         val (op, dataChange) =
-          CommitLog.manifestOp(table, v).getOrElse(("WRITE", true))
-        val dvNow = CommitLog.manifestDvs(table, v)
-        val cdc = CommitLog.manifestCdc(table, v)
+          log.manifestOp(dir, v).getOrElse(("WRITE", true))
+        val dvNow = log.manifestDvs(dir, v)
+        val cdc = log.manifestCdc(dir, v)
         // merge-on-read DV-diff synthesis, shared by the plain MoR
         // branch and the Iceberg-changelog MERGE shape below
         def dvDiffSynthesis(hiddenType: String, addedType: String): Unit = {
@@ -1178,8 +1188,7 @@ class TxLogScan(dir: String, fullSchema: StructType,
           if (skipChangeCommits) ()
           else if (cdc.nonEmpty)
             synthetic ++= cdc.map(rel => CdfCdcPartition(mkCdcFile(v, rel)))
-          else if (!removedAny &&
-              graft.sources.ForeignIcebergLog.isForeign(dir))
+          else if (!removedAny && log == graft.sources.ForeignIcebergLog)
             // an Iceberg MoR row-delta (the Flink-CDC upsert: new data
             // files + new delete files, no data file removed) has NO
             // update images by FORMAT DESIGN — stock Iceberg's own
@@ -1188,7 +1197,7 @@ class TxLogScan(dir: String, fullSchema: StructType,
             // and the appended batch `insert` (the DV diff attributes
             // them exactly; nothing mixes)
             dvDiffSynthesis("delete", "insert")
-          else if (graft.sources.ForeignIcebergLog.isForeign(dir))
+          else if (log == graft.sources.ForeignIcebergLog)
             // foreign-Iceberg MERGE that BOTH adds delete files and
             // removes data files (upsert + compaction in one snapshot):
             // the carryover analysis and the delete-file diff cannot
@@ -1231,8 +1240,7 @@ class TxLogScan(dir: String, fullSchema: StructType,
             else dvDiffSynthesis("delete", "insert")
           }
         }
-        else if (removedAny &&
-            graft.sources.ForeignIcebergLog.isForeign(dir)) {
+        else if (removedAny && log == graft.sources.ForeignIcebergLog) {
           // foreign-Iceberg COPY-ON-WRITE rewrite (Spark-on-Iceberg
           // MERGE/DELETE/UPDATE: data files removed, survivors
           // re-housed in new files, no cdc anywhere in the format) —
@@ -1246,7 +1254,7 @@ class TxLogScan(dir: String, fullSchema: StructType,
                 "files AND changes delete files in one snapshot — the " +
                 "carryover analysis and the DV diff cannot attribute " +
                 "one batch between them; set skipChangeCommits to skip it")
-            val (_, removedRels) = CommitLog.commitDelta(dir, v)
+            val (_, removedRels) = log.commitDelta(dir, v)
             synthetic ++= planCarryover(v, removedRels, added)
           }
         }
@@ -1334,7 +1342,7 @@ class TxLogScan(dir: String, fullSchema: StructType,
     // buildParquetFactory applies; these reads execute AFTER planning
     // returns, inside the net aggregates below)
     val sideSchema = toFileSchema(dataSchema)
-    graft.sources.CommitLog.ensureFieldIdSessionFlag(spark, dir)
+    CommitLog.ensureFieldIdSessionFlag(spark, dir)
     def side(rels: Seq[String]) = {
       val base = spark.read.schema(sideSchema)
         .parquet(rels.map(r => table.resolve(r).toString): _*)
@@ -1477,16 +1485,16 @@ class TxLogScan(dir: String, fullSchema: StructType,
     * just drops from the hint — every filter stays a residual, so
     * correctness never depends on the translation. */
   private lazy val toFileSchema: StructType => StructType =
-    graft.sources.CommitLog.fileFieldRename(dir).getOrElse(identity)
+    log.fileFieldRename(dir).getOrElse(identity)
   private lazy val fileRenamed: Boolean =
-    graft.sources.CommitLog.fileFieldRename(dir).isDefined
+    log.fileFieldRename(dir).isDefined
 
   /** `dataFilters` with references respelled physically for the file
     * footers (identity for unmapped tables). */
   private lazy val fileFilters: Array[SFilter] =
     if (!fileRenamed) dataFilters
     else {
-      val m = graft.sources.CommitLog.physicalPathMap(dir)
+      val m = log.physicalPathMap(dir)
       dataFilters.flatMap(TxLogScan.renameFilterCols(_, m))
     }
 
@@ -1504,7 +1512,7 @@ class TxLogScan(dir: String, fullSchema: StructType,
     // ROW-path converter (the row-index reads merge-on-read/DV/CDF
     // partitions ride) consults the SESSION conf via SQLConf.get — left
     // unset, those reads would silently NULL every id-resolved column.
-    graft.sources.CommitLog.ensureFieldIdSessionFlag(spark, dir)
+    CommitLog.ensureFieldIdSessionFlag(spark, dir)
     val sqlConf =
       if (vectorized) spark.sessionState.conf
       else {
@@ -1516,7 +1524,7 @@ class TxLogScan(dir: String, fullSchema: StructType,
     // ids the writer stamped — force the resolution on for the scan
     // (the translated requested schema carries the id metadata)
     val fieldIdRead = sqlConf.parquetFieldIdReadEnabled ||
-      graft.sources.CommitLog.fileFieldIdRead(dir)
+      log.fileFieldIdRead(dir)
     // every input the broadcast conf is built from participates in the
     // memo key — the explicitly-copied SQLConf values below PLUS a
     // fingerprint of the mutable base conf (SparkContext Hadoop conf +
@@ -1740,6 +1748,8 @@ class TxLogMicroBatchStream(scan: TxLogScan, dir: String,
     extends MicroBatchStream with SupportsAdmissionControl
     with SupportsTriggerAvailableNow {
 
+  private def log: CommitLog = CommitLog.of(dir)
+
   /** The starting version is INCLUSIVE (stock Delta): the stream's
     * base offset is the version before it. LAZY — a resumed stream
     * takes its position from the checkpoint and must never pay (or be
@@ -1779,9 +1789,9 @@ class TxLogMicroBatchStream(scan: TxLogScan, dir: String,
   private lazy val pinned: (Set[(String, org.apache.spark.sql.types.DataType)], Long) = {
     val spark = SparkSession.getActiveSession.getOrElse(
       sys.error("graft-txlog: no active SparkSession"))
-    val full = CommitLog.schema(spark, dir).fields
+    val full = log.schema(spark, dir).fields
       .map(f => (f.name, f.dataType)).toSet
-    val pinV = CommitLog.currentVersion(dir).getOrElse(0L)
+    val pinV = log.currentVersion(dir).getOrElse(0L)
     val scanFields = scan.tableFields
     val consistent =
       if (scan.columnsPruned) scanFields.subsetOf(full)
@@ -1797,7 +1807,7 @@ class TxLogMicroBatchStream(scan: TxLogScan, dir: String,
     if (fromV > toV) return
     val (pinnedF, pinV) = pinned
     (fromV to toV).foreach { v =>
-      CommitLog.declaredSchemaAt(dir, v).foreach { s =>
+      log.declaredSchemaAt(dir, v).foreach { s =>
         val now = s.fields.map(f => (f.name, f.dataType)).toSet
         val ok =
           if (v <= pinV) now.subsetOf(pinnedF) // replayed history
@@ -1855,10 +1865,10 @@ class TxLogMicroBatchStream(scan: TxLogScan, dir: String,
   @volatile private var availableNowCap: Option[Long] = None
 
   override def prepareForTriggerAvailableNow(): Unit =
-    availableNowCap = Some(CommitLog.currentVersion(dir).getOrElse(baseV))
+    availableNowCap = Some(log.currentVersion(dir).getOrElse(baseV))
 
   override def reportLatestOffset(): OffsetV2 =
-    CommitLog.currentVersion(dir).map(LongOffset(_)).orNull
+    log.currentVersion(dir).map(LongOffset(_)).orNull
 
   /** Admission control: advance at most `maxVersionsPerTrigger`
     * commits and/or `maxFilesPerTrigger` added files per batch (whole
@@ -1872,7 +1882,7 @@ class TxLogMicroBatchStream(scan: TxLogScan, dir: String,
     // only be at or past the base) — baseV resolves only on a fresh
     // start, keeping startingTimestamp re-resolution off the resume path
     val base = Option(startOffset).map(ver).getOrElse(baseV)
-    val cur = CommitLog.currentVersion(dir).getOrElse(return null)
+    val cur = log.currentVersion(dir).getOrElse(return null)
     val capped = availableNowCap.fold(cur)(math.min(cur, _))
     def targetFor(l: ReadLimit): Long = l match {
       case MaxVersions(n) => math.min(capped, base + n)
@@ -1886,7 +1896,7 @@ class TxLogMicroBatchStream(scan: TxLogScan, dir: String,
         var stop = false
         while (!stop && v < capped) {
           val n = scala.util.Try(
-            CommitLog.commitDelta(dir, v + 1)._1.size).getOrElse(0)
+            log.commitDelta(dir, v + 1)._1.size).getOrElse(0)
           if (v > base && files + n > mf.maxFiles()) stop = true
           else { v += 1; files += n }
         }
@@ -1927,7 +1937,7 @@ class TxLogMicroBatchStream(scan: TxLogScan, dir: String,
       return parts
     }
     val versioned =
-      if (fromV <= 0) Seq((toV, CommitLog.liveRelsAt(dir, toV)))
+      if (fromV <= 0) Seq((toV, log.liveRelsAt(dir, toV)))
       else {
         // fresh initial-snapshot batches (fromV <= 0) are read with the
         // pinned CURRENT schema by construction and never checked —

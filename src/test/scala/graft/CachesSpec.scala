@@ -108,4 +108,29 @@ class CachesSpec extends SparkSpec {
         "the changed conf memoizes in turn")
     } finally s.conf.unset(key)
   }
+
+  test("conf broadcast key: same entries in any order give one key; a changed value gives another") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.hadoop.conf.Configuration
+    import graft.streaming.TxLogScan
+    val entries = (1 to 40).map(i => s"graft.test.k$i" -> s"v$i")
+    def hadoop(kvs: Seq[(String, String)]): Iterable[(String, String)] = {
+      val c = new Configuration(false)
+      kvs.foreach { case (k, v) => c.set(k, v) }
+      c.asScala.map(e => e.getKey -> e.getValue)
+    }
+    def sql(kvs: Seq[(String, String)]) =
+      scala.collection.immutable.ListMap(kvs: _*)
+    val key = TxLogScan.confDigest(hadoop(entries), sql(entries))
+    assert(TxLogScan.confDigest(hadoop(entries.reverse), sql(entries.reverse)) == key,
+      "insertion order must not change the key")
+    val changed = entries.updated(17, entries(17)._1 -> "other")
+    assert(TxLogScan.confDigest(hadoop(changed), sql(entries)) != key,
+      "a changed Hadoop value must change the key")
+    assert(TxLogScan.confDigest(hadoop(entries), sql(changed)) != key,
+      "a changed SQL value must change the key")
+    assert(TxLogScan.confDigest(hadoop(entries), Nil) !=
+      TxLogScan.confDigest(Nil, sql(entries)),
+      "an entry must not alias across the two confs")
+  }
 }

@@ -3045,4 +3045,49 @@ class StreamingSpec extends SparkSpec {
         msgs.contains("amount"), msgs)
     } finally q.stop()
   }
+
+  test("CommitLog.of: one table read through its native, Delta and Iceberg histories agrees") {
+    val s = spark
+    import org.apache.spark.sql.functions._
+    import graft.sources.{CommitLog, ForeignDeltaLog, ForeignIcebergLog, IcebergLog, TxLog}
+    val ev = s.range(0, 700).select(col("id").as("event_id"),
+      (col("id") % 7).cast("string").as("event_type"), (col("id") * 1.5).as("value"))
+    val native = Files.createTempDirectory("graft_backends")
+    TxLog.commitAppend(ev.filter(col("event_id") < 400), native.toString)
+    TxLog.setTableProperties(s, native.toString,
+      Map("delta.enableDeletionVectors" -> "true"))
+    TxLog.deleteWhereDv(s, native.toString, col("event_id") < 100)
+    TxLog.commitAppend(ev.filter(col("event_id").between(400, 699)),
+      native.toString)
+    IcebergLog.mirror(s, native.toString)
+    // a copy of the tree with some logs dropped: what another writer's
+    // table of the same content looks like
+    def copyWithout(drop: String*): java.nio.file.Path = {
+      val to = Files.createTempDirectory("graft_backends_copy")
+      val walk = Files.walk(native)
+      try walk.iterator().asScala.foreach { p =>
+        val rel = native.relativize(p)
+        if (rel.toString.nonEmpty && !drop.contains(rel.getName(0).toString))
+          if (Files.isDirectory(p)) Files.createDirectories(to.resolve(rel))
+          else Files.copy(p, to.resolve(rel))
+      } finally walk.close()
+      to
+    }
+    val delta = copyWithout("_txlog")
+    val iceberg = copyWithout("_txlog", "_delta_log")
+    val empty = Files.createTempDirectory("graft_backends_empty")
+    assert(CommitLog.of(native.toString) == CommitLog.Native)
+    assert(CommitLog.of(delta.toString) == ForeignDeltaLog)
+    assert(CommitLog.of(iceberg.toString) == ForeignIcebergLog)
+    assert(CommitLog.of(empty.toString) == CommitLog.Native)
+    def rows(dir: java.nio.file.Path): Seq[String] = {
+      val df = s.read.format("graft-txlog").option("path", dir.toString).load()
+      df.select(df.columns.sorted.map(col).toIndexedSeq: _*).collect()
+        .map(_.toString).toSeq.sorted
+    }
+    val expect = rows(native)
+    assert(expect.size == 600, s"native read: ${expect.size} rows")
+    assert(rows(delta) == expect, "foreign Delta read disagrees with native")
+    assert(rows(iceberg) == expect, "foreign Iceberg read disagrees with native")
+  }
 }

@@ -1994,7 +1994,7 @@ class TxLogSpec extends SparkSpec {
     // 8 range files: the clauses below touch only the low id bands, so
     // the high-band files must SURVIVE IN PLACE (never rewritten)
     TxLog.commitAppend(ev.repartitionByRange(8, col("event_id")), t) // v1
-    val live1 = CommitLog.liveRelsAt(t, 1L).toSet
+    val live1 = CommitLog.of(t).liveRelsAt(t, 1L).toSet
     assert(live1.size == 8)
     // source: updates for 100..150, PLUS key 700 (matched, but no
     // clause accepts it — its file must stay untouched) and key 2000
@@ -2008,7 +2008,7 @@ class TxLogSpec extends SparkSpec {
         Some(col("s.event_id").between(100, 150))),
       NotMatchedInsert(None),
       NotMatchedBySourceDelete(Some(col("t.event_id").between(200, 220)))))
-    val live2 = CommitLog.liveRelsAt(t, res.version).toSet
+    val live2 = CommitLog.of(t).liveRelsAt(t, res.version).toSet
     val kept = live1.intersect(live2)
     assert(res.filesRewritten > 0 && res.filesRewritten < live1.size,
       s"discovery must rewrite a strict subset: $res")
