@@ -271,9 +271,35 @@ object DeletionVectors {
 
   // ------------------------------------------------ descriptor + file
 
+  private lazy val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
   /** The `add.deletionVector` descriptor, verbatim per PROTOCOL.md. */
   final case class Descriptor(storageType: String, pathOrInlineDv: String,
-      offset: Option[Int], sizeInBytes: Int, cardinality: Long)
+      offset: Option[Int], sizeInBytes: Int, cardinality: Long) {
+    /** The descriptor JSON, the inverse of [[parseDescriptor]]: spec key
+      * order, `offset` only when set. */
+    def render: String = {
+      val n = mapper.createObjectNode()
+      n.put("storageType", storageType)
+      n.put("pathOrInlineDv", pathOrInlineDv)
+      offset.foreach(n.put("offset", _))
+      n.put("sizeInBytes", sizeInBytes)
+      n.put("cardinality", cardinality)
+      mapper.writeValueAsString(n)
+    }
+  }
+
+  object Descriptor {
+    /** A "u" descriptor for `deletion_vector_<uuid>.bin` under the table
+      * root: pathOrInlineDv is the UUID's 16 big-endian bytes in Z85 (no
+      * prefix directory), the inverse of [[uPath]]. */
+    def u(uuid: java.util.UUID, offset: Int, sizeInBytes: Int,
+        cardinality: Long): Descriptor = {
+      val bb = ByteBuffer.allocate(16)
+      bb.putLong(uuid.getMostSignificantBits).putLong(uuid.getLeastSignificantBits)
+      Descriptor("u", z85Encode(bb.array()), Some(offset), sizeInBytes, cardinality)
+    }
+  }
 
   /** Absolute path of a "u"-style DV file: the LAST 20 chars of
     * pathOrInlineDv are the Z85 of the 16-byte UUID; anything before is
@@ -343,8 +369,8 @@ object DeletionVectors {
 
   // ------------------------------------------------- Spark application
 
-  private[sources] def parseDescriptor(json: String): Descriptor = {
-    val n = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+  private[graft] def parseDescriptor(json: String): Descriptor = {
+    val n = mapper.readTree(json)
     Descriptor(
       n.get("storageType").asText(),
       n.get("pathOrInlineDv").asText(),

@@ -317,9 +317,19 @@ object DeltaLog {
     (adds, checkpointMetaNode(spark, table, cpV))
   }
 
+  // ----------------------------------------------------- commit format
+  //
+  // Every commit file this object writes is assembled from the builders
+  // below (one per action kind, each returning one rendered line with
+  // the kind's one key order) and lands through [[writeCommit]].
+
+  /** The `metaData` action, wrapped (`{"metaData": ...}`). `configuration`
+    * entries are put in order, so a later duplicate key overrides an
+    * earlier one in place. */
   private def metaDataNode(table: Path, schemaJson: String,
       id: String, createdTime: Long,
-      partitionCols: Seq[String] = Seq.empty): ObjectNode = {
+      partitionCols: Seq[String] = Seq.empty,
+      configuration: Iterable[(String, String)] = Nil): ObjectNode = {
     val metaData = mapper.createObjectNode()
     val m = metaData.putObject("metaData")
     m.put("id", id)
@@ -329,10 +339,147 @@ object DeltaLog {
     m.put("schemaString", schemaJson)
     val pcs = m.putArray("partitionColumns")
     partitionCols.foreach(pcs.add)
-    m.putObject("configuration")
+    val cfg = m.putObject("configuration")
+    configuration.foreach { case (k, v) => cfg.put(k, v); () }
     m.put("createdTime", createdTime)
     metaData
   }
+
+  /** A metaData node's `configuration` entries, in log order. */
+  private def cfgPairs(m: ObjectNode): Seq[(String, String)] =
+    Option(m.get("configuration")).toSeq.flatMap(_.fields().asScala
+      .map(e => e.getKey -> e.getValue.asText()))
+
+  private def protocol(minReaderVersion: Int, minWriterVersion: Int,
+      readerFeatures: Option[Seq[String]] = None,
+      writerFeatures: Option[Seq[String]] = None): String = {
+    val n = mapper.createObjectNode()
+    val p = n.putObject("protocol")
+    p.put("minReaderVersion", minReaderVersion)
+    p.put("minWriterVersion", minWriterVersion)
+    readerFeatures.foreach { fs => val a = p.putArray("readerFeatures"); fs.foreach(a.add(_)) }
+    writerFeatures.foreach { fs => val a = p.putArray("writerFeatures"); fs.foreach(a.add(_)) }
+    mapper.writeValueAsString(n)
+  }
+
+  /** `operationParameters` values are strings, or JSON numbers for Longs. */
+  private def commitInfo(timestamp: Long, operation: String,
+      operationParameters: Option[Seq[(String, Any)]] = None,
+      inCommitTimestamp: Option[Long] = None): String = {
+    val n = mapper.createObjectNode()
+    val c = n.putObject("commitInfo")
+    c.put("timestamp", timestamp)
+    c.put("operation", operation)
+    operationParameters.foreach { ps =>
+      val op = c.putObject("operationParameters")
+      ps.foreach {
+        case (k, v: Long) => op.put(k, v)
+        case (k, v) => op.put(k, v.toString)
+      }
+    }
+    inCommitTimestamp.foreach(c.put("inCommitTimestamp", _))
+    mapper.writeValueAsString(n)
+  }
+
+  /** The SetTransaction (`txn`) action. */
+  private def setTransaction(appId: String, version: Long, lastUpdated: Long): String = {
+    val n = mapper.createObjectNode()
+    val t = n.putObject("txn")
+    t.put("appId", appId)
+    t.put("version", version)
+    t.put("lastUpdated", lastUpdated)
+    mapper.writeValueAsString(n)
+  }
+
+  /** `path` is the table-relative (or absolute) file path, unencoded;
+    * `deletionVector` a descriptor JSON. */
+  private def add(path: String, partitionValues: Iterable[(String, String)],
+      size: Long, modificationTime: Long, dataChange: Boolean,
+      stats: Option[String], deletionVector: Option[String] = None,
+      baseRowId: Option[Long] = None,
+      defaultRowCommitVersion: Option[Long] = None): String = {
+    val n = mapper.createObjectNode()
+    val a = n.putObject("add")
+    a.put("path", encodePath(path))
+    val pv = a.putObject("partitionValues")
+    partitionValues.foreach { case (k, v) =>
+      if (v == null) pv.putNull(k) else pv.put(k, v); ()
+    }
+    a.put("size", size)
+    a.put("modificationTime", modificationTime)
+    a.put("dataChange", dataChange)
+    stats.foreach(a.put("stats", _))
+    deletionVector.foreach(d => a.set[ObjectNode]("deletionVector", mapper.readTree(d)))
+    baseRowId.foreach(a.put("baseRowId", _))
+    defaultRowCommitVersion.foreach(a.put("defaultRowCommitVersion", _))
+    mapper.writeValueAsString(n)
+  }
+
+  /** [[add]] of the file at `table/rel` as it is on disk: size, mtime
+    * and footer stats read from it. */
+  private def addFile(table: Path, rel: String, dataChange: Boolean = true,
+      partitionValues: Iterable[(String, String)] = Nil,
+      deletionVector: Option[String] = None,
+      rowId: Option[(Long, Long)] = None): String = {
+    val f = table.resolve(rel)
+    add(rel, partitionValues, Files.size(f), Files.getLastModifiedTime(f).toMillis,
+      dataChange, fileStats(f), deletionVector, rowId.map(_._1), rowId.map(_._2))
+  }
+
+  private def remove(path: String, deletionTimestamp: Long, dataChange: Boolean,
+      deletionVector: Option[String] = None): String = {
+    val n = mapper.createObjectNode()
+    val r = n.putObject("remove")
+    r.put("path", encodePath(path))
+    r.put("deletionTimestamp", deletionTimestamp)
+    r.put("dataChange", dataChange)
+    deletionVector.foreach(d => r.set[ObjectNode]("deletionVector", mapper.readTree(d)))
+    mapper.writeValueAsString(n)
+  }
+
+  /** A change-data file of this commit (unpartitioned, dataChange=false). */
+  private def cdc(path: String, size: Long): String = {
+    val n = mapper.createObjectNode()
+    val c = n.putObject("cdc")
+    c.put("path", encodePath(path))
+    c.putObject("partitionValues")
+    c.put("size", size)
+    c.put("dataChange", false)
+    mapper.writeValueAsString(n)
+  }
+
+  private def domainMetadata(domain: String, configuration: String): String = {
+    val n = mapper.createObjectNode()
+    val dm = n.putObject("domainMetadata")
+    dm.put("domain", domain)
+    dm.put("configuration", configuration)
+    dm.put("removed", false)
+    mapper.writeValueAsString(n)
+  }
+
+  /** Commit `lines` as Delta `version` of `table`, put-if-absent: the
+    * file is staged under `_delta_log` and hard-linked to its final
+    * name, so it appears whole or not at all and never replaces a
+    * committed version. False when `version` already exists (a
+    * concurrent writer won the race).
+    */
+  private def writeCommit(table: Path, version: Long, lines: Seq[String]): Boolean = {
+    val tmp = Files.createTempFile(Files.createDirectories(logDir(table)), ".delta-", ".tmp")
+    try {
+      Files.write(tmp, (lines.mkString("\n") + "\n").getBytes("UTF-8"))
+      Files.createLink(commitPath(table, version), tmp)
+      true
+    } catch { case _: java.nio.file.FileAlreadyExistsException => false }
+    finally Files.deleteIfExists(tmp)
+  }
+
+  /** The newest committed version: the last JSON commit, or the
+    * `_last_checkpoint` version when the JSON prefix was aged out. */
+  private def latestVersionOption(dir: String): Option[Long] =
+    (versions(dir) ++ lastCheckpointVersion(Paths.get(dir))).maxOption
+
+  private def latestVersion(dir: String): Long =
+    latestVersionOption(dir).getOrElse(sys.error(s"no Delta commits in $dir"))
 
   /** Hive-style `col=value` segments of a TxLog-written relative path,
     * in directory order — how the mirror recovers a partitioned batch's
@@ -490,11 +637,14 @@ object DeltaLog {
   /** Mirror one TxLog commit as a Delta commit file. `txVersion` is the
     * 1-based TxLog manifest version; Delta versions are 0-based, so the
     * mirrored commit lands at `txVersion - 1`. Commit 0 carries the
-    * mandatory `protocol` and `metaData` actions (reader/writer version 1/2
-    * = the base protocol: plain parquet, no column mapping / deletion
-    * vectors, which is all these tables use). `metaData.id` must be stable
-    * for the table's lifetime — derived from the table path so re-staging
-    * is deterministic.
+    * mandatory `protocol` and `metaData` actions. The protocol starts at
+    * the base reader/writer 1/2; any commit that brings in deletion
+    * vectors, change-data files, in-commit timestamps, domain metadata,
+    * row tracking or a governed schema/property feature upgrades it to
+    * reader 1 or 3 / writer 7 with the feature lists, merged with the
+    * newest committed protocol. `metaData.id` must be stable for the
+    * table's lifetime — derived from the table path so re-staging is
+    * deterministic.
     *
     * Later commits re-emit a metaData action ONLY when the committed
     * schema differs from the newest mirrored one — Delta readers take
@@ -504,9 +654,10 @@ object DeltaLog {
     * schema current at backfill time; same-schema tables — the normal
     * case — are unaffected).
     *
-    * Put-if-absent createLink, same primitive as the TxLog commit itself:
-    * losing a race (or re-mirroring an already-mirrored version) is a
-    * silent no-op, so the mirror never clobbers a committed Delta version.
+    * Lands through [[writeCommit]], the same put-if-absent primitive as
+    * the TxLog commit itself: losing a race (or re-mirroring an
+    * already-mirrored version) is a silent no-op, so the mirror never
+    * clobbers a committed Delta version.
     */
   def mirrorCommit(table: Path, txVersion: Long, added: Seq[String],
       removed: Seq[String], schemaJson: String,
@@ -519,7 +670,6 @@ object DeltaLog {
       domains: Map[String, String] = Map.empty,
       rowIds: Map[String, (Long, Long)] = Map.empty): Unit = {
     val deltaV = txVersion - 1
-    Files.createDirectories(logDir(table))
     if (Files.exists(commitPath(table, deltaV))) return
     // TxLog passes every version's manifest mtime (the real commit
     // point), so an ICT table's time travel maps backfilled versions to
@@ -527,20 +677,11 @@ object DeltaLog {
     // clock. The monotonic clamp below still guards against clocks (or
     // mtimes) that step backwards.
     val now = commitTime.getOrElse(System.currentTimeMillis())
-    val lines = scala.collection.mutable.ArrayBuffer.empty[String]
-    // the metaData this commit considers current — cached ONLY once the
-    // createLink lands: a committer that loses the version race must not
-    // cache a schemaString that never reached the log (its next commit
-    // would then wrongly suppress the metaData re-emission)
-    var effectiveMeta: Option[ObjectNode] = None
     // partitioning is derivable from the hive-style batch layout itself
     // (TxLog writes partitionBy → col=value dirs); a table's partitioning
     // is fixed at its first commit, matching Delta's own rule
     val pcols = added.headOption.map(partSegments(_).map(_._1)).getOrElse(Seq.empty)
-    def cfgOf(m: Option[ObjectNode]): Map[String, String] =
-      m.flatMap(n => Option(n.get("configuration"))).map(_.fields().asScala
-        .map(e => e.getKey -> e.getValue.asText()).toMap)
-        .getOrElse(Map.empty[String, String])
+    def cfgOf(m: Option[ObjectNode]): Map[String, String] = m.toSeq.flatMap(cfgPairs).toMap
     val prevMeta: Option[ObjectNode] =
       if (deltaV == 0L) None
       else mirroredMeta.get(table.toString)
@@ -575,81 +716,33 @@ object DeltaLog {
           ("delta.inCommitTimestampEnablementVersion" -> deltaV.toString) +
           ("delta.inCommitTimestampEnablementTimestamp" -> ict.get.toString)
       else props
-    def withConfig(node: ObjectNode, prevCfg: Map[String, String]): ObjectNode = {
-      // configuration survives re-emission: previous properties carry
-      // forward, this commit's `props` merge over them (last wins)
-      val cfg = node.get("metaData").asInstanceOf[ObjectNode]
-        .putObject("configuration")
-      (prevCfg ++ effProps).foreach { case (k, v) => cfg.put(k, v); () }
-      node
-    }
-    if (deltaV == 0L) {
-      val protocol = mapper.createObjectNode()
-      val p = protocol.putObject("protocol")
-      p.put("minReaderVersion", 1)
-      p.put("minWriterVersion", 2)
-      lines += mapper.writeValueAsString(protocol)
-      val node = withConfig(
-        metaDataNode(table, schemaJson, stableTableId(table), now, pcols),
-        Map.empty)
-      lines += mapper.writeValueAsString(node)
-      effectiveMeta = Some(node.get("metaData").asInstanceOf[ObjectNode])
-    } else {
-      val prev = prevMeta
-      if (!prev.exists(_.get("schemaString").asText() == schemaJson) ||
-          props.nonEmpty) {
-        // schema changed, or a property set forces re-emission (or the
-        // aged-out prefix hides the schema — re-emitting is idempotent
-        // under last-metaData-wins): keep id/createdTime/partitionColumns
-        // AND configuration stable from the previous metaData when known
-        val prevPcols = prev.map(m => partitionColsOf(Some(m)))
-        val node = withConfig(metaDataNode(table, schemaJson,
-          prev.map(_.get("id").asText()).getOrElse(stableTableId(table)),
-          prev.filter(_.has("createdTime")).map(_.get("createdTime").asLong())
-            .getOrElse(now),
-          prevPcols.getOrElse(pcols)), cfgOf(prev))
-        lines += mapper.writeValueAsString(node)
-        effectiveMeta = Some(node.get("metaData").asInstanceOf[ObjectNode])
-      } else effectiveMeta = prev
-    }
-    val commitInfo = mapper.createObjectNode()
-    val ci = commitInfo.putObject("commitInfo")
-    ci.put("timestamp", now)
-    ci.put("operation", operation)
-    ci.putObject("operationParameters")
-      .put("mode", if (removed.nonEmpty) "Overwrite" else "Append")
-    // IN-COMMIT TIMESTAMPS, write side (the inCommitTimestamp writer
-    // feature the AS-OF resolver already honors on read): when the
-    // table property is on, the commit's authoritative time rides the
-    // commitInfo action. File mtimes stop mattering for time travel.
-    ict.foreach { v => ci.put("inCommitTimestamp", v); () }
-    lines += mapper.writeValueAsString(commitInfo)
-    // SetTransaction: the idempotence token a foreign streaming writer
-    // (or this engine's commitAppendOnce) coordinates retries on
-    txn.foreach { case (app, tv) =>
-      val n = mapper.createObjectNode()
-      val t = n.putObject("txn")
-      t.put("appId", app)
-      t.put("version", tv)
-      t.put("lastUpdated", now)
-      lines += mapper.writeValueAsString(n)
-    }
-    removed.foreach { rel =>
-      val n = mapper.createObjectNode()
-      val r = n.putObject("remove")
-      r.put("path", encodePath(rel))
-      r.put("deletionTimestamp", now)
-      r.put("dataChange", dataChange)
-      lines += mapper.writeValueAsString(n)
-    }
+    // metaData is emitted at version 0, on a schema change, on a
+    // property set, or when the aged-out prefix hides the schema
+    // (re-emitting is idempotent under last-metaData-wins). It keeps
+    // id/createdTime/partitionColumns stable from the previous metaData
+    // when known, and configuration survives re-emission: previous
+    // properties carry forward, this commit's `props` merge over them.
+    val metaNode: Option[ObjectNode] =
+      if (prevMeta.exists(_.get("schemaString").asText() == schemaJson) && props.isEmpty) None
+      else Some(metaDataNode(table, schemaJson,
+        prevMeta.map(_.get("id").asText()).getOrElse(stableTableId(table)),
+        prevMeta.filter(_.has("createdTime")).map(_.get("createdTime").asLong())
+          .getOrElse(now),
+        prevMeta.map(m => partitionColsOf(Some(m))).getOrElse(pcols),
+        cfgOf(prevMeta) ++ effProps))
+    // the metaData this commit considers current — cached ONLY once the
+    // link lands: a committer that loses the version race must not
+    // cache a schemaString that never reached the log (its next commit
+    // would then wrongly suppress the metaData re-emission)
+    val effectiveMeta: Option[ObjectNode] =
+      metaNode.map(_.get("metaData").asInstanceOf[ObjectNode]).orElse(prevMeta)
     // MERGE-ON-READ DELETE: each touched file re-commits as the spec's
     // remove(old DV) + add(same path, NEW deletionVector) pair — the
     // replay's intra-version add-wins rule reconstructs it. The commit
     // also upgrades the protocol to reader 3 / writer 7 with the
     // deletionVectors feature (PROTOCOL.md's gate), so a foreign
     // reader that cannot hide rows refuses instead of resurrecting.
-    var emittedProtocol: Option[ObjectNode] = None
-    locally {
+    val protocolLine: Option[String] = {
       // feature-advertising protocol action: DV commits gate readers
       // (reader 3) AND writers; CDC-file, in-commit-timestamp, and
       // governance-feature commits gate writers only (any reader may
@@ -700,116 +793,52 @@ object DeltaLog {
           (needWf -- prevWf).nonEmpty || uncovered.nonEmpty) {
         val rf = prevRf ++ needRf
         val wf = prevWf ++ needWf ++ inUse
-        val protocol = mapper.createObjectNode()
-        val p = protocol.putObject("protocol")
-        p.put("minReaderVersion", math.max(prevMrv, if (rf.nonEmpty) 3 else 1))
-        p.put("minWriterVersion", math.max(prevMwv, 7))
-        if (rf.nonEmpty) {
-          val ra = p.putArray("readerFeatures")
-          rf.toSeq.sorted.foreach(ra.add(_))
-        }
-        val wa = p.putArray("writerFeatures")
-        wf.toSeq.sorted.foreach(wa.add(_))
-        val pj = mapper.writeValueAsString(protocol)
-        // version 0 already leads with the base protocol — upgrade it in
-        // place rather than emit two protocol actions in one commit
-        if (lines.nonEmpty && lines.head.contains("\"protocol\"")) lines(0) = pj
-        else lines.insert(0, pj)
-        emittedProtocol = Some(p)
-      } else if (deltaV == 0L)
-        emittedProtocol = Some(lines.head).map(l =>
-          mapper.readTree(l).get("protocol").asInstanceOf[ObjectNode])
+        Some(protocol(math.max(prevMrv, if (rf.nonEmpty) 3 else 1), math.max(prevMwv, 7),
+          Some(rf.toSeq.sorted).filter(_.nonEmpty), Some(wf.toSeq.sorted)))
+      } else if (deltaV == 0L) Some(protocol(1, 2))
+      else None
     }
-    if (dvUpdates.nonEmpty) {
-      dvUpdates.toSeq.sortBy(_._1).foreach { case (rel, (newDesc, oldDesc)) =>
-        val rn = mapper.createObjectNode()
-        val r = rn.putObject("remove")
-        r.put("path", encodePath(rel))
-        r.put("deletionTimestamp", now)
-        r.put("dataChange", true)
-        oldDesc.foreach(d => r.set[ObjectNode]("deletionVector",
-          mapper.readTree(d).asInstanceOf[ObjectNode]))
-        lines += mapper.writeValueAsString(rn)
-        val an = mapper.createObjectNode()
-        val a = an.putObject("add")
-        a.put("path", encodePath(rel))
-        val pv = a.putObject("partitionValues")
-        partSegments(rel).foreach { case (k, v) =>
-          if (v == null) pv.putNull(k) else pv.put(k, v); ()
-        }
-        a.put("size", Files.size(table.resolve(rel)))
-        a.put("modificationTime",
-          Files.getLastModifiedTime(table.resolve(rel)).toMillis)
-        a.put("dataChange", true)
-        fileStats(table.resolve(rel)).foreach(a.put("stats", _))
-        a.set[ObjectNode]("deletionVector",
-          mapper.readTree(newDesc).asInstanceOf[ObjectNode])
+    val lines = protocolLine.toSeq ++ metaNode.map(mapper.writeValueAsString) ++
+      // IN-COMMIT TIMESTAMPS, write side (the inCommitTimestamp writer
+      // feature the AS-OF resolver already honors on read): when the
+      // table property is on, the commit's authoritative time rides the
+      // commitInfo action. File mtimes stop mattering for time travel.
+      Seq(commitInfo(now, operation,
+        Some(Seq("mode" -> (if (removed.nonEmpty) "Overwrite" else "Append"))), ict)) ++
+      // SetTransaction: the idempotence token a foreign streaming writer
+      // (or this engine's commitAppendOnce) coordinates retries on
+      txn.map { case (app, tv) => setTransaction(app, tv, now) } ++
+      removed.map(remove(_, now, dataChange)) ++
+      dvUpdates.toSeq.sortBy(_._1).flatMap { case (rel, (newDesc, oldDesc)) =>
         // a DV re-add is the SAME file: its stable row ids must ride
         // along unchanged or replay's add-wins rule would drop them
-        rowIds.get(rel).foreach { case (b, v0) =>
-          a.put("baseRowId", b); a.put("defaultRowCommitVersion", v0); ()
-        }
-        lines += mapper.writeValueAsString(an)
-      }
-    }
-    added.foreach { rel =>
-      val n = mapper.createObjectNode()
-      val a = n.putObject("add")
-      a.put("path", encodePath(rel))
-      val pv = a.putObject("partitionValues")
-      partSegments(rel).foreach { case (k, v) =>
-        if (v == null) pv.putNull(k) else pv.put(k, v); ()
-      }
-      a.put("size", Files.size(table.resolve(rel)))
-      a.put("modificationTime",
-        Files.getLastModifiedTime(table.resolve(rel)).toMillis)
-      a.put("dataChange", dataChange)
+        Seq(remove(rel, now, dataChange = true, oldDesc),
+          addFile(table, rel, partitionValues = partSegments(rel),
+            deletionVector = Some(newDesc), rowId = rowIds.get(rel)))
+      } ++
       // footer-harvested per-file stats: what stock Delta writers emit,
       // what [[skipScan]] (and any foreign data-skipping reader) prunes on
-      fileStats(table.resolve(rel)).foreach(a.put("stats", _))
-      rowIds.get(rel).foreach { case (b, v0) =>
-        a.put("baseRowId", b); a.put("defaultRowCommitVersion", v0); ()
-      }
-      lines += mapper.writeValueAsString(n)
-    }
-    // PROTOCOL.md change-data files: row-level change records of THIS
-    // commit, under _change_data/, carried as `cdc` actions
-    // (dataChange=false — CDF readers consume them INSTEAD of the
-    // add/remove reconciliation for this version)
-    cdcAdds.foreach { rel =>
-      val n = mapper.createObjectNode()
-      val c = n.putObject("cdc")
-      c.put("path", encodePath(rel))
-      c.putObject("partitionValues")
-      c.put("size", Files.size(table.resolve(rel)))
-      c.put("dataChange", false)
-      lines += mapper.writeValueAsString(n)
-    }
-    // domain metadata: per-domain configuration, newest-wins on replay
-    // (rowTracking's rowIdHighWaterMark rides the delta.rowTracking
-    // domain — the spec's home for it)
-    domains.toSeq.sortBy(_._1).foreach { case (d, cfg) =>
-      val n = mapper.createObjectNode()
-      val dm = n.putObject("domainMetadata")
-      dm.put("domain", d)
-      dm.put("configuration", cfg)
-      dm.put("removed", false)
-      lines += mapper.writeValueAsString(n)
-    }
-    val tmp = Files.createTempFile(logDir(table), ".delta-", ".tmp")
-    Files.write(tmp, (lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    try {
-      Files.createLink(commitPath(table, deltaV), tmp)
+      added.map(rel => addFile(table, rel, dataChange, partSegments(rel),
+        rowId = rowIds.get(rel))) ++
+      // PROTOCOL.md change-data files: row-level change records of THIS
+      // commit, under _change_data/, carried as `cdc` actions
+      // (dataChange=false — CDF readers consume them INSTEAD of the
+      // add/remove reconciliation for this version)
+      cdcAdds.map(rel => cdc(rel, Files.size(table.resolve(rel)))) ++
+      // domain metadata: per-domain configuration, newest-wins on replay
+      // (rowTracking's rowIdHighWaterMark rides the delta.rowTracking
+      // domain — the spec's home for it)
+      domains.toSeq.sortBy(_._1).map { case (d, cfg) => domainMetadata(d, cfg) }
+    if (writeCommit(table, deltaV, lines)) {
       effectiveMeta.foreach(mirroredMeta.put(table.toString, _))
-      emittedProtocol.foreach(mirroredProtocol.put(table.toString, _))
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        // lost the race: whatever the winner wrote is the truth now —
-        // drop the caches so the next commit re-derives them from disk
-        mirroredMeta.remove(table.toString)
-        mirroredProtocol.remove(table.toString); ()
+      protocolLine.foreach(l => mirroredProtocol.put(table.toString,
+        mapper.readTree(l).get("protocol").asInstanceOf[ObjectNode]))
+    } else {
+      // lost the race: whatever the winner wrote is the truth now —
+      // drop the caches so the next commit re-derives them from disk
+      mirroredMeta.remove(table.toString)
+      mirroredProtocol.remove(table.toString); ()
     }
-    finally Files.deleteIfExists(tmp)
   }
 
   /** Spec hook: forget the in-process metaData cache, modeling a fresh
@@ -914,9 +943,7 @@ object DeltaLog {
     val newest = versions(table.toString).maxOption
     mirroredMeta.get(table.toString)
       .orElse(newest.flatMap(v => lastMirroredMeta(table, v)))
-      .flatMap(n => Option(n.get("configuration")))
-      .map(_.fields().asScala.map(e => e.getKey -> e.getValue.asText()).toMap)
-      .getOrElse(Map.empty)
+      .map(cfgPairs(_).toMap).getOrElse(Map.empty)
   }
 
   // -------------------------------------------------------------- read
@@ -1136,9 +1163,7 @@ object DeltaLog {
   def domainMetadataMap(spark: SparkSession, dir: String,
       upTo: Option[Long] = None): Map[String, String] = {
     val table = Paths.get(dir)
-    val latest = upTo
-      .orElse((versions(dir) ++ lastCheckpointVersion(table)).maxOption)
-      .getOrElse(return Map.empty)
+    val latest = upTo.orElse(latestVersionOption(dir)).getOrElse(return Map.empty)
     val pl = replayPlan(table, latest)
     val seen = scala.collection.mutable.LinkedHashMap.empty[String, Option[String]]
     pl.tail.reverseIterator.foreach { v =>
@@ -1556,8 +1581,7 @@ object DeltaLog {
   def checkpoint(spark: SparkSession, dir: String,
       parts: Option[Int] = None, v2: Boolean = false): Long = {
     val table = Paths.get(dir)
-    val v = (versions(dir) ++ lastCheckpointVersion(table))
-      .maxOption.getOrElse(sys.error(s"no Delta commits in $dir"))
+    val v = latestVersion(dir)
     // ONE log scan serves live-file state, the txn rows, and the
     // protocol row below (cached: the replay inputs are metadata-scale)
     val pl = replayPlan(table, v)
@@ -2101,8 +2125,7 @@ object DeltaLog {
     */
   def txnVersion(spark: SparkSession, dir: String, appId: String): Option[Long] = {
     val table = Paths.get(dir)
-    val latest = (versions(dir) ++ lastCheckpointVersion(table))
-      .maxOption.getOrElse(return None)
+    val latest = latestVersionOption(dir).getOrElse(return None)
     val pl = replayPlan(table, latest)
     def fromJson(v: Long): Option[Long] =
       Files.readAllLines(commitPath(table, v)).asScala.iterator
@@ -2137,8 +2160,7 @@ object DeltaLog {
   def snapshot(spark: SparkSession, dir: String): DataFrame = {
     // the newest version may live only in the checkpoint if the JSON
     // commits were aged out after compaction
-    val latest = (versions(dir) ++ lastCheckpointVersion(Paths.get(dir)))
-      .maxOption.getOrElse(sys.error(s"no Delta commits in $dir"))
+    val latest = latestVersion(dir)
     snapshotAt(spark, dir, latest)
   }
 
@@ -2168,8 +2190,7 @@ object DeltaLog {
     */
   def snapshotWithRowIds(spark: SparkSession, dir: String): DataFrame = {
     val table = Paths.get(dir)
-    val latest = (versions(dir) ++ lastCheckpointVersion(table))
-      .maxOption.getOrElse(sys.error(s"no Delta commits in $dir"))
+    val latest = latestVersion(dir)
     val pl = replayPlan(table, latest)
     protocolGuard(spark, table, pl)
     val (live, _, metaOpt) = liveState(spark, table, pl)
@@ -2561,8 +2582,7 @@ object DeltaLog {
   private[graft] def pruneFlags(spark: SparkSession, dir: String,
       preds: Seq[(String, Any, Any)]): (Seq[(LiveFile, Boolean)], Option[ObjectNode]) = {
     val table = Paths.get(dir)
-    val latest = (versions(dir) ++ lastCheckpointVersion(table))
-      .maxOption.getOrElse(sys.error(s"no Delta commits in $dir"))
+    val latest = latestVersion(dir)
     val pl = replayPlan(table, latest)
     protocolGuard(spark, table, pl)
     val pvType = MapType(StringType, StringType)
@@ -2605,8 +2625,7 @@ object DeltaLog {
       preds: Seq[(String, Any, Any)]): DataFrame = {
     val table = Paths.get(dir)
     if (preds.isEmpty) {
-      val latest = (versions(dir) ++ lastCheckpointVersion(table))
-        .maxOption.getOrElse(sys.error(s"no Delta commits in $dir"))
+      val latest = latestVersion(dir)
       return snapshotAt(spark, dir, latest)
     }
     val (flags, meta) = pruneFlags(spark, dir, preds)
@@ -2643,21 +2662,23 @@ object DeltaLog {
     *    storage, stock naming) and the commit re-adds each affected
     *    file (remove + add of the same path, the spec's DV-update
     *    shape) keeping its partitionValues and stats;
-    *  - the version is claimed put-if-absent; losing the race is a
-    *    loud serialization failure like the TxLog rewrites.
+    *  - the version is claimed put-if-absent ([[writeCommit]]); losing
+    *    the race is a loud serialization failure like the TxLog rewrites.
     *
     * Works on Delta-log-only tables (foreign-style). NOT for TxLog-
-    * mirrored tables: the manifest knows nothing of DVs, so the two
-    * logs would diverge — mirrored tables delete via
-    * [[TxLog.deleteWhere]]. The table's protocol should already
-    * advertise the deletionVectors feature (reader 3 / writer 7).
+    * mirrored tables: their commit point is the `_txlog` manifest (which
+    * carries DVs as `#dv` lines), and a Delta-only commit would leave
+    * the two logs diverged — mirrored tables delete via
+    * [[TxLog.deleteWhereDv]] or [[TxLog.deleteWhere]]. The table's
+    * protocol should already advertise the deletionVectors feature
+    * (reader 3 / writer 7).
     */
   def deleteVectors(spark: SparkSession, dir: String, pred: Column,
       prune: Seq[(String, Any, Any)] = Seq.empty): DvDeleteResult = {
     val table = Paths.get(dir)
     require(!Files.isDirectory(table.resolve("_txlog")),
-      s"$dir is TxLog-mirrored — use TxLog.deleteWhere (the manifest " +
-        "cannot represent deletion vectors)")
+      s"$dir is TxLog-mirrored — use TxLog.deleteWhereDv or TxLog.deleteWhere " +
+        "(its manifest is the commit point)")
     // warm from the checkpoint first: on a compacted-prefix table a cold
     // cache would read an EMPTY configuration here and let a DV delete
     // through on an appendOnly table — the silent-ungoverned case
@@ -2666,8 +2687,7 @@ object DeltaLog {
     if (tableConfig(table).get("delta.appendOnly").contains("true"))
       sys.error(s"$dir: delta.appendOnly=true — a DV delete removes " +
         "committed rows and is refused")
-    val latest = (versions(dir) ++ lastCheckpointVersion(table))
-      .maxOption.getOrElse(sys.error(s"no Delta commits in $dir"))
+    val latest = latestVersion(dir)
     val (flags, meta) =
       if (prune.isEmpty) {
         val (files, m) = replay(spark, table, latest)
@@ -2705,12 +2725,6 @@ object DeltaLog {
       affected.flatMap(_._2).toArray)
     val offsets = DeletionVectors.writeDvFile(
       table.resolve(s"deletion_vector_$uuid.bin"), affected.map(_._2))
-    val uuidBytes = {
-      val bb = java.nio.ByteBuffer.allocate(16)
-      bb.putLong(uuid.getMostSignificantBits)
-      bb.putLong(uuid.getLeastSignificantBits)
-      bb.array()
-    }
     val rowsDeleted = affected.map { case (f, bytes) =>
       DeletionVectors.parse(bytes).cardinality -
         f.dv.map(_ => DeletionVectors.parse(
@@ -2718,56 +2732,24 @@ object DeltaLog {
           .getOrElse(0L)
     }.sum
     val now = System.currentTimeMillis()
-    val lines = scala.collection.mutable.ArrayBuffer.empty[String]
-    val commitInfo = mapper.createObjectNode()
-    val ci = commitInfo.putObject("commitInfo")
-    ci.put("timestamp", now)
-    ci.put("operation", "DELETE")
-    lines += mapper.writeValueAsString(commitInfo)
-    affected.zip(offsets).foreach { case ((f, bytes), off) =>
-      val rm = mapper.createObjectNode()
-      val r = rm.putObject("remove")
-      r.put("path", encodePath(f.path))
-      r.put("deletionTimestamp", now)
-      r.put("dataChange", true)
-      // the superseded DV rides the remove so VACUUM protects its file
-      // through the retention era (old-version readers may need it)
-      f.dv.foreach(d => r.set[ObjectNode]("deletionVector",
-        mapper.readTree(d).asInstanceOf[ObjectNode]))
-      lines += mapper.writeValueAsString(rm)
-      val ad = mapper.createObjectNode()
-      val a = ad.putObject("add")
-      a.put("path", encodePath(f.path))
-      val pv = a.putObject("partitionValues")
-      f.partitionValues.foreach { case (k, v) =>
-        if (v == null) pv.putNull(k) else pv.put(k, v); ()
-      }
-      a.put("size", Files.size(table.resolve(f.path)))
-      a.put("modificationTime",
-        Files.getLastModifiedTime(table.resolve(f.path)).toMillis)
-      a.put("dataChange", true)
-      // stats kept from the old add: row counts overcount deleted rows,
-      // which only ever KEEPS files in a skip-scan — still sound
-      f.stats.foreach(a.put("stats", _))
-      val dvn = a.putObject("deletionVector")
-      dvn.put("storageType", "u")
-      dvn.put("pathOrInlineDv", DeletionVectors.z85Encode(uuidBytes))
-      dvn.put("offset", off)
-      dvn.put("sizeInBytes", bytes.length)
-      dvn.put("cardinality", DeletionVectors.parse(bytes).cardinality)
-      lines += mapper.writeValueAsString(ad)
+    val lines = commitInfo(now, "DELETE") +: affected.zip(offsets).flatMap {
+      case ((f, bytes), off) =>
+        val file = table.resolve(f.path)
+        // the superseded DV rides the remove so VACUUM protects its file
+        // through the retention era (old-version readers may need it);
+        // stats are kept from the old add: row counts overcount deleted
+        // rows, which only ever KEEPS files in a skip-scan — still sound
+        Seq(remove(f.path, now, dataChange = true, f.dv),
+          add(f.path, f.partitionValues, Files.size(file),
+            Files.getLastModifiedTime(file).toMillis, dataChange = true, f.stats,
+            Some(DeletionVectors.Descriptor.u(uuid, off, bytes.length,
+              DeletionVectors.parse(bytes).cardinality).render)))
     }
     val next = latest + 1
-    val tmp = Files.createTempFile(logDir(table), ".delta-", ".tmp")
-    Files.write(tmp, (lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    try {
-      Files.createLink(commitPath(table, next), tmp)
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        sys.error(s"$dir: concurrent commit at Delta version $next — " +
-          "this DV delete read version " + latest + "; re-run against " +
-          "the new snapshot")
-    } finally Files.deleteIfExists(tmp)
+    if (!writeCommit(table, next, lines))
+      sys.error(s"$dir: concurrent commit at Delta version $next — " +
+        "this DV delete read version " + latest + "; re-run against " +
+        "the new snapshot")
     DvDeleteResult(next, affected.size.toLong, skipped, rowsDeleted)
   }
 
@@ -2788,9 +2770,8 @@ object DeltaLog {
   def purgeVectors(spark: SparkSession, dir: String): DvPurgeResult = {
     val table = Paths.get(dir)
     require(!Files.isDirectory(table.resolve("_txlog")),
-      s"$dir is TxLog-mirrored — mirrored tables have no DVs to purge")
-    val latest = (versions(dir) ++ lastCheckpointVersion(table))
-      .maxOption.getOrElse(sys.error(s"no Delta commits in $dir"))
+      s"$dir is TxLog-mirrored — its DVs go when TxLog.optimize rewrites their files")
+    val latest = latestVersion(dir)
     val (files, meta) = replay(spark, table, latest)
     require(partitionColsOf(meta).isEmpty,
       s"$dir: purgeVectors supports unpartitioned tables")
@@ -2808,44 +2789,13 @@ object DeltaLog {
         rel
       }
     val now = System.currentTimeMillis()
-    val lines = scala.collection.mutable.ArrayBuffer.empty[String]
-    val commitInfo = mapper.createObjectNode()
-    val ci = commitInfo.putObject("commitInfo")
-    ci.put("timestamp", now)
-    ci.put("operation", "REORG")
-    lines += mapper.writeValueAsString(commitInfo)
-    dvFiles.foreach { f =>
-      val rm = mapper.createObjectNode()
-      val r = rm.putObject("remove")
-      r.put("path", encodePath(f.path))
-      r.put("deletionTimestamp", now)
-      r.put("dataChange", false)
-      f.dv.foreach(d => r.set[ObjectNode]("deletionVector",
-        mapper.readTree(d).asInstanceOf[ObjectNode]))
-      lines += mapper.writeValueAsString(rm)
-    }
-    added.foreach { rel =>
-      val n = mapper.createObjectNode()
-      val a = n.putObject("add")
-      a.put("path", encodePath(rel))
-      a.putObject("partitionValues")
-      a.put("size", Files.size(table.resolve(rel)))
-      a.put("modificationTime",
-        Files.getLastModifiedTime(table.resolve(rel)).toMillis)
-      a.put("dataChange", false)
-      fileStats(table.resolve(rel)).foreach(a.put("stats", _))
-      lines += mapper.writeValueAsString(n)
-    }
+    val lines = commitInfo(now, "REORG") +:
+      (dvFiles.map(f => remove(f.path, now, dataChange = false, f.dv)) ++
+        added.map(addFile(table, _, dataChange = false)))
     val next = latest + 1
-    val tmpf = Files.createTempFile(logDir(table), ".delta-", ".tmp")
-    Files.write(tmpf, (lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    try {
-      Files.createLink(commitPath(table, next), tmpf)
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        sys.error(s"$dir: concurrent commit at Delta version $next — " +
-          s"this purge read version $latest; re-run against the new snapshot")
-    } finally Files.deleteIfExists(tmpf)
+    if (!writeCommit(table, next, lines))
+      sys.error(s"$dir: concurrent commit at Delta version $next — " +
+        s"this purge read version $latest; re-run against the new snapshot")
     DvPurgeResult(next, dvFiles.size.toLong)
   }
 
@@ -2929,8 +2879,7 @@ object DeltaLog {
   def vacuum(spark: SparkSession, dir: String,
       retentionMs: Long = tombstoneRetentionMs): (Long, Long) = {
     val table = Paths.get(dir)
-    val latest = (versions(dir) ++ lastCheckpointVersion(table))
-      .maxOption.getOrElse(sys.error(s"no Delta commits in $dir"))
+    val latest = latestVersion(dir)
     val pl = replayPlan(table, latest)
     val (live, tombstones, _) = liveState(spark, table, pl)
     val collected = live.select("path", "dv").collect()
@@ -3101,8 +3050,7 @@ object DeltaLog {
     val srcT = Paths.get(src)
     val dstT = Paths.get(dst)
     require(!Files.isDirectory(logDir(dstT)), s"$dst: already a Delta table")
-    val v = version.getOrElse((versions(src) ++ lastCheckpointVersion(srcT))
-      .maxOption.getOrElse(sys.error(s"no Delta commits in $src")))
+    val v = version.getOrElse(latestVersion(src))
     val pl = replayPlan(srcT, v)
     protocolGuard(spark, srcT, pl)
     val (live, _, metaOpt) = liveState(spark, srcT, pl)
@@ -3110,100 +3058,46 @@ object DeltaLog {
     val rows = live.select(col("path"), col("partitionValues"), col("size"),
       col("modificationTime"), col("stats"), col("dv"),
       col("baseRowId"), col("defaultRowCommitVersion")).collect()
-    Files.createDirectories(logDir(dstT))
     val now = System.currentTimeMillis()
-    val lines = scala.collection.mutable.ArrayBuffer.empty[String]
+    def features(p: com.fasterxml.jackson.databind.JsonNode, k: String) =
+      Option(p.get(k)).map(_.asScala.map(_.asText()).toSeq)
     // protocol: the source's newest gate verbatim — tail OR checkpoint
     // (a compacted DV-bearing source must not clone with a fabricated
     // 1/2 gate that would let readers ignore the descriptors); base 1/2
     // only when the source genuinely predates protocol actions
-    lines += newestProtocolNode(spark, srcT, pl).map { p =>
-      val env = mapper.createObjectNode()
-      val node = env.putObject("protocol")
-      node.put("minReaderVersion",
-        Option(p.get("minReaderVersion")).map(_.asInt()).getOrElse(1))
-      node.put("minWriterVersion",
-        Option(p.get("minWriterVersion")).map(_.asInt()).getOrElse(2))
-      Option(p.get("readerFeatures")).foreach { fs =>
-        val a = node.putArray("readerFeatures")
-        fs.asScala.foreach(f => { a.add(f.asText()); () })
-      }
-      Option(p.get("writerFeatures")).foreach { fs =>
-        val a = node.putArray("writerFeatures")
-        fs.asScala.foreach(f => { a.add(f.asText()); () })
-      }
-      mapper.writeValueAsString(env)
-    }.getOrElse("""{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""")
+    val protocolLine = newestProtocolNode(spark, srcT, pl).map(p => protocol(
+      Option(p.get("minReaderVersion")).map(_.asInt()).getOrElse(1),
+      Option(p.get("minWriterVersion")).map(_.asInt()).getOrElse(2),
+      features(p, "readerFeatures"), features(p, "writerFeatures")))
+      .getOrElse(protocol(1, 2))
     val metaData = metaDataNode(dstT, m.get("schemaString").asText(),
       java.util.UUID.randomUUID().toString, now,
-      partitionCols = partitionColsOf(Some(m)))
-    val cfg = metaData.get("metaData").asInstanceOf[ObjectNode]
-      .putObject("configuration")
-    Option(m.get("configuration")).foreach(_.fields().asScala
-      .foreach(e => { cfg.put(e.getKey, e.getValue.asText()); () }))
-    lines += mapper.writeValueAsString(metaData)
-    val ci = mapper.createObjectNode()
-    val c = ci.putObject("commitInfo")
-    c.put("timestamp", now)
-    c.put("operation", "CLONE")
-    c.putObject("operationParameters").put("source", src).put("sourceVersion", v)
-    lines += mapper.writeValueAsString(ci)
+      partitionCols = partitionColsOf(Some(m)), configuration = cfgPairs(m))
     // live domain metadata clones too — losing delta.rowTracking's
     // high-water mark would let a clone-side writer reissue spent ids,
     // and the cloned adds below keep their baseRowId, so the clone's
     // row ids equal the source's
-    domainMetadataMap(spark, src, Some(v)).toSeq.sortBy(_._1)
-      .foreach { case (d, cfgJson) =>
-        val n = mapper.createObjectNode()
-        val dm = n.putObject("domainMetadata")
-        dm.put("domain", d)
-        dm.put("configuration", cfgJson)
-        dm.put("removed", false)
-        lines += mapper.writeValueAsString(n)
-      }
-    rows.foreach { r =>
+    val domains = domainMetadataMap(spark, src, Some(v)).toSeq.sortBy(_._1)
+      .map { case (d, cfgJson) => domainMetadata(d, cfgJson) }
+    val adds = rows.toSeq.map { r =>
       val abs = resolveDataPath(srcT, decodePath(r.getString(0))).toAbsolutePath
-      val n = mapper.createObjectNode()
-      val a = n.putObject("add")
-      a.put("path", encodePath(abs.toString))
-      val pv = a.putObject("partitionValues")
-      Option(r.getMap[String, String](1)).foreach(_.foreach { case (k, vv) =>
-        if (vv == null) pv.putNull(k) else pv.put(k, vv); ()
-      })
-      a.put("size", if (r.isNullAt(2)) Files.size(abs) else r.getLong(2))
-      a.put("modificationTime", if (r.isNullAt(3))
-        Files.getLastModifiedTime(abs).toMillis else r.getLong(3))
-      a.put("dataChange", true)
-      Option(r.getString(4)).foreach(a.put("stats", _))
-      Option(r.getString(5)).foreach { dvJson =>
-        val d = DeletionVectors.parseDescriptor(dvJson)
-        val node = a.putObject("deletionVector")
-        if (d.storageType == "u") {
-          // u-style paths resolve against the TABLE root — which is now
-          // the clone's; pin the bitmap file absolutely instead
-          node.put("storageType", "p")
-          node.put("pathOrInlineDv",
-            DeletionVectors.uPath(srcT, d.pathOrInlineDv).toAbsolutePath.toString)
-        } else {
-          node.put("storageType", d.storageType)
-          node.put("pathOrInlineDv", d.pathOrInlineDv)
-        }
-        d.offset.foreach(node.put("offset", _))
-        node.put("sizeInBytes", d.sizeInBytes)
-        node.put("cardinality", d.cardinality)
-      }
+      // u-style DV paths resolve against the TABLE root — which is now
+      // the clone's; pin the bitmap file absolutely instead
+      val dv = Option(r.getString(5)).map(DeletionVectors.parseDescriptor).map(d =>
+        if (d.storageType != "u") d
+        else d.copy(storageType = "p", pathOrInlineDv =
+          DeletionVectors.uPath(srcT, d.pathOrInlineDv).toAbsolutePath.toString))
+      def opt(i: Int): Option[Long] = if (r.isNullAt(i)) None else Some(r.getLong(i))
       // row-tracking fields ride the cloned add: same file, same ids
-      if (!r.isNullAt(6)) a.put("baseRowId", r.getLong(6))
-      if (!r.isNullAt(7)) a.put("defaultRowCommitVersion", r.getLong(7))
-      lines += mapper.writeValueAsString(n)
+      add(abs.toString, Option(r.getMap[String, String](1)).getOrElse(Map.empty),
+        opt(2).getOrElse(Files.size(abs)),
+        opt(3).getOrElse(Files.getLastModifiedTime(abs).toMillis),
+        dataChange = true, Option(r.getString(4)), dv.map(_.render), opt(6), opt(7))
     }
-    val tmp = Files.createTempFile(logDir(dstT), ".delta-", ".tmp")
-    Files.write(tmp, (lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    try Files.createLink(commitPath(dstT, 0L), tmp)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        sys.error(s"$dst: concurrent clone created version 0")
-    } finally Files.deleteIfExists(tmp)
+    val lines = Seq(protocolLine, mapper.writeValueAsString(metaData),
+      commitInfo(now, "CLONE", Some(Seq("source" -> src, "sourceVersion" -> v)))) ++
+      domains ++ adds
+    if (!writeCommit(dstT, 0L, lines)) sys.error(s"$dst: concurrent clone created version 0")
     0L
   }
 
@@ -3236,8 +3130,7 @@ object DeltaLog {
     val table = Paths.get(dir)
     require(!Files.isDirectory(table.resolve("_txlog")),
       s"$dir is TxLog-mirrored — the manifest cannot represent logical schema evolution")
-    val latest = (versions(dir) ++ lastCheckpointVersion(table))
-      .maxOption.getOrElse(sys.error(s"no Delta commits in $dir"))
+    val latest = latestVersion(dir)
     val (_, metaOpt) = replay(spark, table, latest)
     val m = metaOpt.getOrElse(sys.error(s"$dir: no metaData action in log"))
     val schema0 = DataType.fromJson(m.get("schemaString").asText())
@@ -3254,55 +3147,29 @@ object DeltaLog {
       })
     val (evolved, pcs) = evolve(base, partitionColsOf(metaOpt))
     val nowMapped = evolved.fields.exists(_.metadata.contains(MapIdKey))
-    val lines = scala.collection.mutable.ArrayBuffer.empty[String]
-    if (doUpgrade) {
-      // the upgrade commit carries the protocol bump (legacy
-      // column-mapping gate); an already-mapped table is already gated
-      val protocol = mapper.createObjectNode()
-      val p = protocol.putObject("protocol")
-      p.put("minReaderVersion", 2)
-      p.put("minWriterVersion", 5)
-      lines += mapper.writeValueAsString(protocol)
-    }
+    // an id-mode table STAYS id-mode (its files are resolved by field
+    // ids, not physicalName — flipping the mode would misread them);
+    // only an unmapped table upgrading here gets "name"
+    val mapping =
+      if (!nowMapped) Nil
+      else Seq("delta.columnMapping.mode" -> cfgPairs(m).toMap
+          .get("delta.columnMapping.mode").filterNot(_ == "none").getOrElse("name"),
+        "delta.columnMapping.maxColumnId" -> evolved.fields
+          .map(f => if (f.metadata.contains(MapIdKey)) f.metadata.getLong(MapIdKey) else 0L)
+          .max.toString)
     val metaData = metaDataNode(table, evolved.json,
       m.get("id").asText(),
       if (m.has("createdTime")) m.get("createdTime").asLong() else 0L,
-      partitionCols = pcs)
-    val cfg = metaData.get("metaData").asInstanceOf[ObjectNode]
-      .putObject("configuration")
-    Option(m.get("configuration")).foreach(_.fields().asScala
-      .foreach(e => { cfg.put(e.getKey, e.getValue.asText()); () }))
-    props.foreach { case (k, v) => cfg.put(k, v); () }
-    if (nowMapped) {
-      // an id-mode table STAYS id-mode (its files are resolved by field
-      // ids, not physicalName — flipping the mode would misread them);
-      // only an unmapped table upgrading here gets "name"
-      val prevMode = Option(m.get("configuration"))
-        .flatMap(c => Option(c.get("delta.columnMapping.mode")))
-        .map(_.asText()).filterNot(_ == "none")
-      cfg.put("delta.columnMapping.mode", prevMode.getOrElse("name"))
-      cfg.put("delta.columnMapping.maxColumnId", evolved.fields
-        .map(f => if (f.metadata.contains(MapIdKey)) f.metadata.getLong(MapIdKey) else 0L)
-        .max.toString)
-    }
-    lines += mapper.writeValueAsString(metaData)
-    val ci = mapper.createObjectNode()
-    val c = ci.putObject("commitInfo")
-    c.put("timestamp", System.currentTimeMillis())
-    c.put("operation", operation)
-    val op = c.putObject("operationParameters")
-    params.foreach { case (k, v) => op.put(k, v); () }
-    lines += mapper.writeValueAsString(ci)
+      partitionCols = pcs, configuration = cfgPairs(m) ++ props ++ mapping)
+    // the upgrade commit carries the protocol bump (legacy
+    // column-mapping gate); an already-mapped table is already gated
+    val lines = (if (doUpgrade) Seq(protocol(2, 5)) else Nil) ++
+      Seq(mapper.writeValueAsString(metaData),
+        commitInfo(System.currentTimeMillis(), operation, Some(params)))
     val next = latest + 1
-    val tmp = Files.createTempFile(logDir(table), ".delta-", ".tmp")
-    Files.write(tmp, (lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    try {
-      Files.createLink(commitPath(table, next), tmp)
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        sys.error(s"$dir: concurrent commit at Delta version $next — " +
-          s"this $operation read version $latest; re-run against the new snapshot")
-    } finally Files.deleteIfExists(tmp)
+    if (!writeCommit(table, next, lines))
+      sys.error(s"$dir: concurrent commit at Delta version $next — " +
+        s"this $operation read version $latest; re-run against the new snapshot")
     next
   }
 
@@ -3312,6 +3179,19 @@ object DeltaLog {
   // through the DELTA log (not the TxLog manifest) — proving a foreign
   // reader following only `_delta_log` sees exactly the committed state.
   private val staged = scala.collection.concurrent.TrieMap.empty[String, String]
+
+  /** Write `df` as the one parquet file `root/rel` (fixture staging). */
+  private[graft] def landFile(df: DataFrame, root: Path, rel: String): Unit = {
+    val tmp = graft.Scratch.dir("graft_land")
+    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    Files.move(listDir(tmp).filter(_.getFileName.toString.endsWith(".parquet")).head,
+      root.resolve(rel))
+  }
+
+  /** The deletion-vector fixtures' gate: reader 3 / writer 7 with the
+    * deletionVectors feature on both sides. */
+  private def dvProtocol: String =
+    protocol(3, 7, Some(Seq("deletionVectors")), Some(Seq("deletionVectors")))
 
   private def deltaTable(spark: SparkSession, dir: String): String =
     staged.getOrElseUpdate(dir, {
@@ -3343,7 +3223,7 @@ object DeltaLog {
     * and footer stats. No `_txlog` at all: this is the
     * foreign-partitioned-table read path end to end.
     */
-  private def deltaPartitionedTable(spark: SparkSession, dir: String): String =
+  private[graft] def deltaPartitionedTable(spark: SparkSession, dir: String): String =
     staged.getOrElseUpdate(s"part:$dir", {
       val table = graft.Scratch.dir("graft_delta_part").toString
       val ev = graft.Tables.events(spark, dir)
@@ -3359,29 +3239,12 @@ object DeltaLog {
             .map(f => (d.getFileName.toString.stripPrefix("bucket="),
               s"${d.getFileName}/${f.getFileName}"))
         }
-      val ld = Files.createDirectories(logDir(root))
-      val lines = scala.collection.mutable.ArrayBuffer.empty[String]
-      val protocol = mapper.createObjectNode()
-      val p = protocol.putObject("protocol")
-      p.put("minReaderVersion", 1)
-      p.put("minWriterVersion", 2)
-      lines += mapper.writeValueAsString(protocol)
-      val metaData = metaDataNode(root, ev.schema.json, stableTableId(root), 1L)
-      metaData.get("metaData").asInstanceOf[ObjectNode]
-        .putArray("partitionColumns").add("bucket")
-      lines += mapper.writeValueAsString(metaData)
-      files.foreach { case (bucket, rel) =>
-        val n = mapper.createObjectNode()
-        val a = n.putObject("add")
-        a.put("path", encodePath(rel))
-        a.putObject("partitionValues").put("bucket", bucket)
-        a.put("size", Files.size(root.resolve(rel)))
-        a.put("modificationTime", Files.getLastModifiedTime(root.resolve(rel)).toMillis)
-        a.put("dataChange", true)
-        fileStats(root.resolve(rel)).foreach(a.put("stats", _))
-        lines += mapper.writeValueAsString(n)
-      }
-      Files.write(commitPath(root, 0L), (lines.mkString("\n") + "\n").getBytes("UTF-8"))
+      require(writeCommit(root, 0L, Seq(protocol(1, 2),
+        mapper.writeValueAsString(metaDataNode(root, ev.schema.json, stableTableId(root),
+          1L, partitionCols = Seq("bucket")))) ++
+        files.map { case (bucket, rel) =>
+          addFile(root, rel, partitionValues = Seq("bucket" -> bucket))
+        }))
       table
     })
 
@@ -3436,7 +3299,7 @@ object DeltaLog {
     * logical names. Protocol gate: minReaderVersion 2 /
     * minWriterVersion 5 — the legacy column-mapping versions.
     */
-  private def deltaColMapTable(spark: SparkSession, dir: String): String =
+  private[graft] def deltaColMapTable(spark: SparkSession, dir: String): String =
     staged.getOrElseUpdate(s"cmap:$dir", {
       val table = graft.Scratch.dir("graft_delta_cmap").toString
       val root = Paths.get(table)
@@ -3456,32 +3319,14 @@ object DeltaLog {
             .map(f => (d.getFileName.toString.stripPrefix(s"$physBucket="),
               s"${d.getFileName}/${f.getFileName}"))
         }
-      Files.createDirectories(logDir(root))
-      val lines = scala.collection.mutable.ArrayBuffer.empty[String]
-      val protocol = mapper.createObjectNode()
-      val p = protocol.putObject("protocol")
-      p.put("minReaderVersion", 2)
-      p.put("minWriterVersion", 5)
-      lines += mapper.writeValueAsString(protocol)
-      val metaData = metaDataNode(root, mappedSchema(ev.schema).json,
-        stableTableId(root), 1L, partitionCols = Seq("bucket"))
-      metaData.get("metaData").asInstanceOf[ObjectNode]
-        .putObject("configuration")
-        .put("delta.columnMapping.mode", "name")
-        .put("delta.columnMapping.maxColumnId", ev.schema.size.toString)
-      lines += mapper.writeValueAsString(metaData)
-      files.foreach { case (bucket, rel) =>
-        val n = mapper.createObjectNode()
-        val a = n.putObject("add")
-        a.put("path", encodePath(rel))
-        a.putObject("partitionValues").put(physBucket, bucket)
-        a.put("size", Files.size(root.resolve(rel)))
-        a.put("modificationTime", Files.getLastModifiedTime(root.resolve(rel)).toMillis)
-        a.put("dataChange", true)
-        fileStats(root.resolve(rel)).foreach(a.put("stats", _))
-        lines += mapper.writeValueAsString(n)
-      }
-      Files.write(commitPath(root, 0L), (lines.mkString("\n") + "\n").getBytes("UTF-8"))
+      require(writeCommit(root, 0L, Seq(protocol(2, 5),
+        mapper.writeValueAsString(metaDataNode(root, mappedSchema(ev.schema).json,
+          stableTableId(root), 1L, partitionCols = Seq("bucket"),
+          configuration = Seq("delta.columnMapping.mode" -> "name",
+            "delta.columnMapping.maxColumnId" -> ev.schema.size.toString)))) ++
+        files.map { case (bucket, rel) =>
+          addFile(root, rel, partitionValues = Seq(physBucket -> bucket))
+        }))
       table
     })
 
@@ -3503,35 +3348,13 @@ object DeltaLog {
         col("event_id").between(400, 799),
         col("event_id") >= 800)
       val rels = bands.zipWithIndex.map { case (pred, i) =>
-        val tmp = graft.Scratch.dir(s"graft_rename_band$i")
-        ev.filter(pred).coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = listDir(tmp)
-          .filter(_.getFileName.toString.endsWith(".parquet")).head
         val rel = f"band-$i%02d.parquet"
-        Files.move(part, root.resolve(rel))
+        landFile(ev.filter(pred), root, rel)
         rel
       }
-      Files.createDirectories(logDir(root))
-      val lines = scala.collection.mutable.ArrayBuffer.empty[String]
-      val protocol = mapper.createObjectNode()
-      val p = protocol.putObject("protocol")
-      p.put("minReaderVersion", 1)
-      p.put("minWriterVersion", 2)
-      lines += mapper.writeValueAsString(protocol)
-      lines += mapper.writeValueAsString(
-        metaDataNode(root, ev.schema.json, stableTableId(root), 1L))
-      rels.foreach { rel =>
-        val n = mapper.createObjectNode()
-        val a = n.putObject("add")
-        a.put("path", encodePath(rel))
-        a.putObject("partitionValues")
-        a.put("size", Files.size(root.resolve(rel)))
-        a.put("modificationTime", Files.getLastModifiedTime(root.resolve(rel)).toMillis)
-        a.put("dataChange", true)
-        fileStats(root.resolve(rel)).foreach(a.put("stats", _))
-        lines += mapper.writeValueAsString(n)
-      }
-      Files.write(commitPath(root, 0L), (lines.mkString("\n") + "\n").getBytes("UTF-8"))
+      require(writeCommit(root, 0L, Seq(protocol(1, 2), mapper.writeValueAsString(
+        metaDataNode(root, ev.schema.json, stableTableId(root), 1L))) ++
+        rels.map(addFile(root, _))))
       renameColumn(spark, table, "value", "price")
       renameColumn(spark, table, "event_id", "event_no")
       table
@@ -3550,39 +3373,17 @@ object DeltaLog {
       val table = graft.Scratch.dir("graft_delta_evolve").toString
       val root = Paths.get(table)
       val ev = graft.Tables.events(spark, dir)
-      def land(df: DataFrame, rel: String): Unit = {
-        val tmp = graft.Scratch.dir(s"graft_evolve_$rel")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = listDir(tmp)
-          .filter(_.getFileName.toString.endsWith(".parquet")).head
-        Files.move(part, root.resolve(rel))
-      }
-      def addLine(rel: String): String = {
-        val n = mapper.createObjectNode()
-        val a = n.putObject("add")
-        a.put("path", encodePath(rel))
-        a.putObject("partitionValues")
-        a.put("size", Files.size(root.resolve(rel)))
-        a.put("modificationTime", Files.getLastModifiedTime(root.resolve(rel)).toMillis)
-        a.put("dataChange", true)
-        fileStats(root.resolve(rel)).foreach(a.put("stats", _))
-        mapper.writeValueAsString(n)
-      }
       // v0: pre-evolution band, original schema
-      land(ev.filter(col("event_id") < 500), "band-00.parquet")
-      Files.createDirectories(logDir(root))
-      Files.write(commitPath(root, 0L), (Seq(
-        """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
-        mapper.writeValueAsString(
+      landFile(ev.filter(col("event_id") < 500), root, "band-00.parquet")
+      require(writeCommit(root, 0L, Seq(protocol(1, 2), mapper.writeValueAsString(
           metaDataNode(root, ev.schema.json, stableTableId(root), 1L)),
-        addLine("band-00.parquet")).mkString("\n") + "\n").getBytes("UTF-8"))
+        addFile(root, "band-00.parquet"))))
       // v1: ADD COLUMN tier (nullable; table stays unmapped)
       addColumn(spark, table, "tier", StringType)
       // v2: append a band that CARRIES the new column
-      land(ev.filter(col("event_id") >= 500).withColumn("tier",
-        when(col("value") > 50, "hi").otherwise("lo")), "band-01.parquet")
-      Files.write(commitPath(root, 2L),
-        (addLine("band-01.parquet") + "\n").getBytes("UTF-8"))
+      landFile(ev.filter(col("event_id") >= 500).withColumn("tier",
+        when(col("value") > 50, "hi").otherwise("lo")), root, "band-01.parquet")
+      require(writeCommit(root, 2L, Seq(addFile(root, "band-01.parquet"))))
       // v3: DROP COLUMN props (upgrades to column mapping)
       dropColumn(spark, table, "props")
       table
@@ -3714,12 +3515,8 @@ object DeltaLog {
       val root = Paths.get(table)
       val ev = graft.Tables.events(spark, dir)
       val rels = (0 until 3).map { i =>
-        val tmp = graft.Scratch.dir(s"graft_dv_band$i")
-        ev.filter(pmod(col("event_id"), lit(3)) === i).coalesce(1)
-          .write.mode("overwrite").parquet(tmp.toString)
-        val part = listDir(tmp).filter(_.getFileName.toString.endsWith(".parquet")).head
         val rel = f"part-$i%05d.parquet"
-        Files.move(part, root.resolve(rel))
+        landFile(ev.filter(pmod(col("event_id"), lit(3)) === i), root, rel)
         rel
       }
       // per-file ordinal row indexes of the to-delete rows (fixture-scale)
@@ -3731,64 +3528,28 @@ object DeltaLog {
       }
       val bitmaps = deletedIdx.map(DeletionVectors.serialize)
       // "i": inline Z85 payload
-      val descI = {
-        val n = mapper.createObjectNode()
-        n.put("storageType", "i")
-        n.put("pathOrInlineDv", DeletionVectors.z85Encode(bitmaps(0)))
-        n.put("sizeInBytes", bitmaps(0).length)
-        n.put("cardinality", deletedIdx(0).size.toLong)
-      }
+      val descI = DeletionVectors.Descriptor("i", DeletionVectors.z85Encode(bitmaps(0)),
+        None, bitmaps(0).length, deletedIdx(0).size.toLong)
       // "u": UUID-derived file under the table root
       val descU = {
         val uuid = java.util.UUID.nameUUIDFromBytes(
           "graft-dv-fixture".getBytes("UTF-8"))
-        val bb = java.nio.ByteBuffer.allocate(16)
-        bb.putLong(uuid.getMostSignificantBits)
-        bb.putLong(uuid.getLeastSignificantBits)
         val off = DeletionVectors.writeDvFile(
           root.resolve(s"deletion_vector_$uuid.bin"), Seq(bitmaps(1))).head
-        val n = mapper.createObjectNode()
-        n.put("storageType", "u")
-        n.put("pathOrInlineDv", DeletionVectors.z85Encode(bb.array()))
-        n.put("offset", off)
-        n.put("sizeInBytes", bitmaps(1).length)
-        n.put("cardinality", deletedIdx(1).size.toLong)
+        DeletionVectors.Descriptor.u(uuid, off, bitmaps(1).length, deletedIdx(1).size.toLong)
       }
       // "p": absolute path
       val descP = {
         val target = root.resolve("dv_absolute.bin")
         val off = DeletionVectors.writeDvFile(target, Seq(bitmaps(2))).head
-        val n = mapper.createObjectNode()
-        n.put("storageType", "p")
-        n.put("pathOrInlineDv", target.toAbsolutePath.toString)
-        n.put("offset", off)
-        n.put("sizeInBytes", bitmaps(2).length)
-        n.put("cardinality", deletedIdx(2).size.toLong)
+        DeletionVectors.Descriptor("p", target.toAbsolutePath.toString, Some(off),
+          bitmaps(2).length, deletedIdx(2).size.toLong)
       }
-      val lines = scala.collection.mutable.ArrayBuffer.empty[String]
-      val protocol = mapper.createObjectNode()
-      val p = protocol.putObject("protocol")
-      p.put("minReaderVersion", 3)
-      p.put("minWriterVersion", 7)
-      p.putArray("readerFeatures").add("deletionVectors")
-      p.putArray("writerFeatures").add("deletionVectors")
-      lines += mapper.writeValueAsString(protocol)
-      lines += mapper.writeValueAsString(
-        metaDataNode(root, ev.schema.json, stableTableId(root), 1L))
-      rels.zip(Seq(descI, descU, descP)).foreach { case (rel, desc) =>
-        val n = mapper.createObjectNode()
-        val a = n.putObject("add")
-        a.put("path", encodePath(rel))
-        a.putObject("partitionValues")
-        a.put("size", Files.size(root.resolve(rel)))
-        a.put("modificationTime", Files.getLastModifiedTime(root.resolve(rel)).toMillis)
-        a.put("dataChange", true)
-        fileStats(root.resolve(rel)).foreach(a.put("stats", _))
-        a.set[ObjectNode]("deletionVector", desc)
-        lines += mapper.writeValueAsString(n)
-      }
-      Files.createDirectories(logDir(root))
-      Files.write(commitPath(root, 0L), (lines.mkString("\n") + "\n").getBytes("UTF-8"))
+      require(writeCommit(root, 0L, Seq(dvProtocol, mapper.writeValueAsString(
+        metaDataNode(root, ev.schema.json, stableTableId(root), 1L))) ++
+        rels.zip(Seq(descI, descU, descP)).map { case (rel, desc) =>
+          addFile(root, rel, deletionVector = Some(desc.render))
+        }))
       table
     })
 
@@ -3807,36 +3568,13 @@ object DeltaLog {
         ev.filter(col("event_id").between(400, 799)),
         ev.filter(col("event_id") >= 800))
       val rels = bands.zipWithIndex.map { case (b, i) =>
-        val tmp = graft.Scratch.dir(s"graft_dvw_band$i")
-        b.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = listDir(tmp).filter(_.getFileName.toString.endsWith(".parquet")).head
         val rel = f"part-$i%05d.parquet"
-        Files.move(part, root.resolve(rel))
+        landFile(b, root, rel)
         rel
       }
-      val lines = scala.collection.mutable.ArrayBuffer.empty[String]
-      val protocol = mapper.createObjectNode()
-      val p = protocol.putObject("protocol")
-      p.put("minReaderVersion", 3)
-      p.put("minWriterVersion", 7)
-      p.putArray("readerFeatures").add("deletionVectors")
-      p.putArray("writerFeatures").add("deletionVectors")
-      lines += mapper.writeValueAsString(protocol)
-      lines += mapper.writeValueAsString(
-        metaDataNode(root, ev.schema.json, stableTableId(root), 1L))
-      rels.foreach { rel =>
-        val n = mapper.createObjectNode()
-        val a = n.putObject("add")
-        a.put("path", encodePath(rel))
-        a.putObject("partitionValues")
-        a.put("size", Files.size(root.resolve(rel)))
-        a.put("modificationTime", Files.getLastModifiedTime(root.resolve(rel)).toMillis)
-        a.put("dataChange", true)
-        fileStats(root.resolve(rel)).foreach(a.put("stats", _))
-        lines += mapper.writeValueAsString(n)
-      }
-      Files.createDirectories(logDir(root))
-      Files.write(commitPath(root, 0L), (lines.mkString("\n") + "\n").getBytes("UTF-8"))
+      require(writeCommit(root, 0L, Seq(dvProtocol, mapper.writeValueAsString(
+        metaDataNode(root, ev.schema.json, stableTableId(root), 1L))) ++
+        rels.map(addFile(root, _))))
       // two DV deletes in the low band: %7 first, then %5 (merges)
       deleteVectors(spark, table,
         pmod(col("event_id"), lit(7)) === 0 && col("event_id") <= 300,

@@ -1415,29 +1415,22 @@ object TxLog {
           val files = perFile.keys.toSeq
           val bitmaps = files.map(f => DeletionVectors.serialize(perFile(f).toSeq))
           val uuid = java.util.UUID.randomUUID()
-          val ub = java.nio.ByteBuffer.allocate(16)
-          ub.putLong(uuid.getMostSignificantBits)
-          ub.putLong(uuid.getLeastSignificantBits)
-          val encU = DeletionVectors.z85Encode(ub.array())
           val offsets = DeletionVectors.writeDvFile(
             Paths.get(tableStr).resolve(s"deletion_vector_$uuid.bin"), bitmaps)
           files.iterator.zip(bitmaps.iterator).zip(offsets.iterator).map {
             case ((f, bytes), off) =>
-              (f, encU, off, bytes.length, perFile(f).size.toLong)
+              (f, uuid.toString, off, bytes.length, perFile(f).size.toLong)
           }
         }
       }.collect().toSeq
     if (descRows.isEmpty) return Map.empty
-    def descJson(d: DeletionVectors.Descriptor): String =
-      s"""{"storageType":"${d.storageType}","pathOrInlineDv":"${d.pathOrInlineDv}",""" +
-        s""""offset":${d.offset.getOrElse(0)},"sizeInBytes":${d.sizeInBytes},""" +
-        s""""cardinality":${d.cardinality}}"""
     val updates: Map[String, String] = descRows.map {
-      case (abs, encU, off, size, card) =>
+      case (abs, uuid, off, size, card) =>
         val path = new java.net.URI(abs).getPath
         val rel = relByAbs.getOrElse(path,
           sys.error(s"$dir: scanned file $path missing from the manifest"))
-        val fresh = DeletionVectors.Descriptor("u", encU, Some(off), size, card)
+        val fresh = DeletionVectors.Descriptor.u(
+          java.util.UUID.fromString(uuid), off, size, card)
         val desc = oldDvs.get(rel) match {
           case None => fresh
           case Some(oldJson) =>
@@ -1449,16 +1442,11 @@ object TxLog {
                 .values).toSeq.distinct
             val bytes = DeletionVectors.serialize(merged)
             val uuid = java.util.UUID.randomUUID()
-            val ub = java.nio.ByteBuffer.allocate(16)
-            ub.putLong(uuid.getMostSignificantBits)
-            ub.putLong(uuid.getLeastSignificantBits)
             val mOff = DeletionVectors.writeDvFile(
               table.resolve(s"deletion_vector_$uuid.bin"), Seq(bytes)).head
-            DeletionVectors.Descriptor("u",
-              DeletionVectors.z85Encode(ub.array()), Some(mOff),
-              bytes.length, merged.size.toLong)
+            DeletionVectors.Descriptor.u(uuid, mOff, bytes.length, merged.size.toLong)
         }
-        rel -> descJson(desc)
+        rel -> desc.render
     }.toMap
     updates
   }

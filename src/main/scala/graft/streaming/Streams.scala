@@ -2,8 +2,6 @@ package graft.streaming
 
 import java.nio.file.{Files, Path}
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Deduplicate, DeduplicateWithinWatermark,
@@ -559,13 +557,7 @@ object Streams {
     */
   private[graft] def foreignDeltaAppend(root: Path, version: Long, df: DataFrame,
       name: String): Unit = {
-    val tmp = graft.Scratch.dir(s"graft_stream_foreign_$name")
-    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val st = Files.list(tmp)
-    val part = try st.iterator().asScala
-      .find(_.getFileName.toString.endsWith(".parquet")).get
-    finally st.close()
-    Files.move(part, root.resolve(s"$name.parquet"))
+    graft.sources.DeltaLog.landFile(df, root, s"$name.parquet")
     graft.sources.DeltaLog.mirrorCommit(root, version, Seq(s"$name.parquet"),
       Seq.empty, df.schema.json)
   }
@@ -583,14 +575,10 @@ object Streams {
       .collect().map(_.getLong(0)).toSeq.sorted
     val bitmap = DV.serialize(doomed)
     val uuid = java.util.UUID.nameUUIDFromBytes(s"$file@$version".getBytes("UTF-8"))
-    val bb = java.nio.ByteBuffer.allocate(16)
-    bb.putLong(uuid.getMostSignificantBits)
-    bb.putLong(uuid.getLeastSignificantBits)
     val off = DV.writeDvFile(root.resolve(s"deletion_vector_$uuid.bin"), Seq(bitmap)).head
-    val desc = s"""{"storageType":"u","pathOrInlineDv":"${DV.z85Encode(bb.array())}",""" +
-      s""""offset":$off,"sizeInBytes":${bitmap.length},"cardinality":${doomed.size}}"""
+    val desc = DV.Descriptor.u(uuid, off, bitmap.length, doomed.size.toLong)
     graft.sources.DeltaLog.mirrorCommit(root, version, Seq.empty, Seq.empty, schemaJson,
-      operation = "DELETE", dvUpdates = Map(file -> ((desc, None))))
+      operation = "DELETE", dvUpdates = Map(file -> ((desc.render, None))))
   }
 
   /** The foreign tails' result: the streamed rows beside the table's

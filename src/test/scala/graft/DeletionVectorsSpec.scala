@@ -111,6 +111,25 @@ class DeletionVectorsSpec extends SparkSpec {
     assert(e.getMessage.contains("checksum"))
   }
 
+  test("descriptor codec: render is the inverse of parseDescriptor for i, u and p") {
+    val dir = Files.createTempDirectory("graft_dv_desc")
+    val bm = DV.serialize(Seq(3L, 9L, 70000L))
+    val uuid = java.util.UUID.nameUUIDFromBytes("desc-codec".getBytes("UTF-8"))
+    val off = DV.writeDvFile(dir.resolve(s"deletion_vector_$uuid.bin"), Seq(bm)).head
+    val i = DV.Descriptor("i", DV.z85Encode(bm), None, bm.length, 3L)
+    val u = DV.Descriptor.u(uuid, off, bm.length, 3L)
+    val p = DV.Descriptor("p", dir.resolve("x y+%.bin").toString, Some(1), bm.length, 3L)
+    Seq(i, u, p).foreach(d => assert(DV.parseDescriptor(d.render) == d, d.render))
+    // spec key order, offset only when set
+    assert(i.render == s"""{"storageType":"i","pathOrInlineDv":"${i.pathOrInlineDv}",""" +
+      s""""sizeInBytes":${bm.length},"cardinality":3}""")
+    assert(u.render == s"""{"storageType":"u","pathOrInlineDv":"${u.pathOrInlineDv}",""" +
+      s""""offset":$off,"sizeInBytes":${bm.length},"cardinality":3}""")
+    // the "u" constructor's Z85 names exactly the file the UUID names
+    assert(u.pathOrInlineDv.length == 20)
+    assert(DV.readBytes(dir, u).toSeq == bm.toSeq)
+  }
+
   test("DV table snapshot hides deleted rows across all three storage types") {
     val s = spark
     val t = DeltaLog.deltaDvTable(s, "/root/testdata/sf0.001")

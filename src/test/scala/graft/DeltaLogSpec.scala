@@ -1024,6 +1024,203 @@ class DeltaLogSpec extends SparkSpec {
       "checkpoint add rows must retain stats")
   }
 
+  // ----------------------------------------------- writer-format pins
+
+  /** The JSON commits of `table` (versions 0..`upTo`), each line with
+    * its run-dependent values masked: timestamps, mtimes,
+    * deletionTimestamp, metaData id/createdTime, and data-file paths
+    * (numbered by first appearance, so a remove still names the add it
+    * cancels). Key order and every other value are kept. */
+  private def maskedCommits(table: String, upTo: Long): Seq[Seq[String]] = {
+    val files = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    (0L to upTo).map { v =>
+      Files.readAllLines(Paths.get(table, "_delta_log", f"$v%020d.json")).asScala.toSeq
+        .map { l =>
+          val n = mapper.readTree(l)
+          val kind = n.fieldNames().next()
+          val a = n.get(kind).asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+          def mask(k: String): Unit = if (a.has(k)) { a.put(k, "<masked>"); () }
+          Seq("timestamp", "modificationTime", "deletionTimestamp").foreach(mask)
+          if (kind == "metaData") Seq("id", "createdTime").foreach(mask)
+          if (a.has("path")) {
+            val p = a.get("path").asText()
+            a.put("path", files.getOrElseUpdate(p, s"<file${files.size}>"))
+          }
+          mapper.writeValueAsString(n)
+        }
+    }
+  }
+
+  /** Lands `df` as the one parquet file `root/rel`. Kept apart from
+    * `DeltaLog.landFile` so the pins below stage their inputs without
+    * the code they pin. */
+  private def land(df: org.apache.spark.sql.DataFrame, root: java.nio.file.Path,
+      rel: String): Unit = {
+    val tmp = Files.createTempDirectory("graft_delta_spec_land")
+    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    Files.createDirectories(root.resolve(rel).getParent)
+    Files.move(Files.list(tmp).iterator().asScala
+      .find(_.getFileName.toString.endsWith(".parquet")).get, root.resolve(rel))
+  }
+
+  test("writer-format pin: the golden v2 recipe regenerates line for line") {
+    val s = spark
+    import s.implicits._
+    // GoldenFixtureGen's recipe: append 3 / overwrite 2 / append 1
+    val t = freshTable()
+    TxLog.commitAppend(Seq((1L, "alpha", 10.5), (2L, "beta", 20.25), (3L, "gamma", 30.0))
+      .toDF("id", "name", "score").coalesce(1), t)
+    TxLog.commitOverwrite(Seq((4L, "delta", 40.75), (5L, "epsilon", 50.5))
+      .toDF("id", "name", "score").coalesce(1), t)
+    TxLog.commitAppend(Seq((6L, "zeta", 60.125)).toDF("id", "name", "score").coalesce(1), t)
+    val fresh = maskedCommits(t, 2L)
+    val frozen = maskedCommits(golden2, 2L)
+    fresh.zip(frozen).zipWithIndex.foreach { case ((f, g), v) =>
+      assert(f == g, s"Delta version $v drifted from the frozen v2 writer")
+    }
+    assert(fresh.size == frozen.size)
+  }
+
+  test("writer-format pin: every Delta writer emits one action per line, in its kind's key order") {
+    val s = spark
+    import org.apache.spark.sql.functions._
+    val sf = "/root/testdata/sf0.001"
+    // optional keys end in '?'
+    val descOrder = Seq("storageType", "pathOrInlineDv", "offset?", "sizeInBytes", "cardinality")
+    val orders = Map(
+      "protocol" -> Seq("minReaderVersion", "minWriterVersion", "readerFeatures?",
+        "writerFeatures?"),
+      "metaData" -> Seq("id", "format", "schemaString", "partitionColumns",
+        "configuration", "createdTime"),
+      "commitInfo" -> Seq("timestamp", "operation", "operationParameters?",
+        "inCommitTimestamp?"),
+      "txn" -> Seq("appId", "version", "lastUpdated"),
+      "add" -> Seq("path", "partitionValues", "size", "modificationTime", "dataChange",
+        "stats?", "deletionVector?", "baseRowId?", "defaultRowCommitVersion?"),
+      "remove" -> Seq("path", "deletionTimestamp", "dataChange", "deletionVector?"),
+      "cdc" -> Seq("path", "partitionValues", "size", "dataChange"),
+      "domainMetadata" -> Seq("domain", "configuration", "removed"))
+    def conforms(keys: Seq[String], order: Seq[String]): Boolean =
+      keys == order.map(_.stripSuffix("?")).filter(keys.contains) &&
+        order.filterNot(_.endsWith("?")).forall(keys.contains)
+
+    // mirrorCommit, with every optional action kind
+    val m = Paths.get(freshTable())
+    val ev = events
+    Seq("p=a/f0.parquet", "p=b/f1.parquet", "p=a/f2.parquet", "_change_data/c0.parquet")
+      .zipWithIndex.foreach { case (rel, i) =>
+        land(ev.filter(col("event_id") % 4 === i), m, rel)
+      }
+    // descriptors are carried, not read, by the mirror
+    val d0 = """{"storageType":"i","pathOrInlineDv":"wi5b=00001","sizeInBytes":20,"cardinality":1}"""
+    val d1 = """{"storageType":"u","pathOrInlineDv":"ab^D=]gSk-KjmgdINQ9f","offset":1,""" +
+      """"sizeInBytes":20,"cardinality":2}"""
+    DeltaLog.mirrorCommit(m, 1L, Seq("p=a/f0.parquet", "p=b/f1.parquet"), Seq.empty,
+      ev.schema.json, txn = Some(("app", 1L)))
+    DeltaLog.mirrorCommit(m, 2L, Seq("p=a/f2.parquet"), Seq.empty, ev.schema.json,
+      props = Map("delta.enableRowTracking" -> "true",
+        "delta.enableInCommitTimestamps" -> "true"),
+      rowIds = Map("p=a/f2.parquet" -> ((0L, 1L))),
+      domains = Map("delta.rowTracking" -> """{"rowIdHighWaterMark":9}"""))
+    DeltaLog.mirrorCommit(m, 3L, Seq.empty, Seq.empty, ev.schema.json, operation = "DELETE",
+      dvUpdates = Map("p=a/f0.parquet" -> ((d0, None)), "p=a/f2.parquet" -> ((d1, None))),
+      rowIds = Map("p=a/f2.parquet" -> ((0L, 1L))))
+    DeltaLog.mirrorCommit(m, 4L, Seq.empty, Seq("p=b/f1.parquet"), ev.schema.json,
+      cdcAdds = Seq("_change_data/c0.parquet"),
+      dvUpdates = Map("p=a/f0.parquet" -> ((d1, Some(d0)))))
+    // the Delta-only writers: DV delete (twice, so a remove carries a
+    // DV), clone (u -> p), purge, and the schema/property commits
+    val d = Paths.get(freshTable())
+    land(ev.filter(col("event_id") < 300), d, "a.parquet")
+    DeltaLog.mirrorCommit(d, 1L, Seq("a.parquet"), Seq.empty, ev.schema.json)
+    DeltaLog.deleteVectors(s, d.toString, pmod(col("event_id"), lit(7)) === 0)
+    DeltaLog.deleteVectors(s, d.toString, pmod(col("event_id"), lit(5)) === 0)
+    val c = Files.createTempDirectory("graft_delta_spec_clone")
+    DeltaLog.shallowClone(s, d.toString, c.toString)
+    DeltaLog.purgeVectors(s, d.toString)
+    DeltaLog.renameColumn(s, d.toString, "value", "price")
+    DeltaLog.addColumn(s, d.toString, "tier", org.apache.spark.sql.types.StringType)
+    DeltaLog.dropColumn(s, d.toString, "tier")
+    DeltaLog.setTableProperties(s, d.toString, Map("delta.appendOnly" -> "false"))
+    // the fixture tables
+    val fixtures = Seq(DeltaLog.deltaPartitionedTable(s, sf), DeltaLog.deltaColMapTable(s, sf),
+      DeltaLog.deltaRenamedTable(s, sf), DeltaLog.deltaEvolvedTable(s, sf),
+      DeltaLog.deltaDvTable(s, sf), DeltaLog.deltaDvWriteTable(s, sf))
+
+    val kinds = scala.collection.mutable.Set.empty[String]
+    (Seq(m.toString, d.toString, c.toString) ++ fixtures).foreach { t =>
+      DeltaLog.versions(t).foreach { v =>
+        Files.readAllLines(Paths.get(t, "_delta_log", f"$v%020d.json")).asScala.foreach { l =>
+          val n = mapper.readTree(l)
+          assert(n.size == 1, s"$t v$v: one action per line: $l")
+          val kind = n.fieldNames().next()
+          val a = n.get(kind)
+          assert(orders.contains(kind), s"$t v$v: unknown action '$kind'")
+          assert(conforms(a.fieldNames().asScala.toSeq, orders(kind)),
+            s"$t v$v: $kind keys out of order: $l")
+          Option(a.get("deletionVector")).foreach(dv =>
+            assert(conforms(dv.fieldNames().asScala.toSeq, descOrder),
+              s"$t v$v: deletionVector keys out of order: $l"))
+          kinds += kind
+        }
+      }
+    }
+    assert(kinds == orders.keySet, s"every action kind written at least once: $kinds")
+  }
+
+  test("lost race: the Delta-only writers fail loudly and leave the racer's commit intact") {
+    val s = spark
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.catalyst.rules.Rule
+    val ev = events
+    val racer = """{"commitInfo":{"timestamp":1,"operation":"RACER"}}""" + "\n"
+    def tmps(t: String): Seq[String] =
+      Files.list(Paths.get(t, "_delta_log")).iterator().asScala
+        .map(_.getFileName.toString).filter(_.endsWith(".tmp")).toSeq
+    // a racing writer lands `racer` as the next Delta version the first
+    // time `write` plans a query on this thread: after it read the
+    // latest version, before its own commit
+    def raced(t: String)(write: => Any): Unit = {
+      val target = Paths.get(t, "_delta_log", f"${DeltaLog.versions(t).max + 1}%020d.json")
+      val me = Thread.currentThread()
+      val rule = new Rule[LogicalPlan] {
+        def apply(plan: LogicalPlan): LogicalPlan = {
+          if ((Thread.currentThread() eq me) && !Files.exists(target))
+            Files.write(target, racer.getBytes("UTF-8"))
+          plan
+        }
+      }
+      val saved = s.experimental.extraOptimizations
+      s.experimental.extraOptimizations = saved :+ rule
+      val e = try intercept[RuntimeException](write)
+        finally s.experimental.extraOptimizations = saved
+      assert(e.getMessage.contains("concurrent commit"), e.getMessage)
+      assert(Files.readString(target) == racer, "the racer's commit must stay as written")
+      assert(tmps(t).isEmpty, s"no staged commit may be left behind: ${tmps(t)}")
+    }
+    val t = Paths.get(freshTable())
+    land(ev.filter(col("event_id") < 300), t, "a.parquet")
+    DeltaLog.mirrorCommit(t, 1L, Seq("a.parquet"), Seq.empty, ev.schema.json)
+    raced(t.toString)(DeltaLog.deleteVectors(s, t.toString, pmod(col("event_id"), lit(7)) === 0))
+    DeltaLog.deleteVectors(s, t.toString, pmod(col("event_id"), lit(7)) === 0)
+    raced(t.toString)(DeltaLog.purgeVectors(s, t.toString))
+    // the schema commits replay driver-side on a small log: force the
+    // distributed replay so they plan a query before committing
+    val saved = DeltaLog.driverMaxLogBytes
+    try {
+      DeltaLog.driverMaxLogBytes = 0L
+      raced(t.toString)(DeltaLog.renameColumn(s, t.toString, "value", "price"))
+      raced(t.toString)(DeltaLog.setTableProperties(s, t.toString, Map("k" -> "v")))
+    } finally DeltaLog.driverMaxLogBytes = saved
+    // re-mirroring a present version is a no-op, not an overwrite
+    val v0 = Paths.get(t.toString, "_delta_log", f"${0L}%020d.json")
+    val before = Files.readAllBytes(v0).toSeq
+    DeltaLog.mirrorCommit(t, 1L, Seq.empty, Seq("a.parquet"), ev.schema.json)
+    assert(Files.readAllBytes(v0).toSeq == before)
+    assert(tmps(t.toString).isEmpty)
+  }
+
   test("partitioned TxLog writes mirror partitionValues and read back pruned") {
     val s = spark
     import org.apache.spark.sql.functions._
