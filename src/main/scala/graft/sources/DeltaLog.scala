@@ -2308,7 +2308,7 @@ object DeltaLog {
         val pcFields = pcs.map(c => schema.find(_.name == c).getOrElse(
           sys.error(s"$dir: partition column '$c' missing from schemaString")))
         fs.groupBy(f => physPcs.map(p => f.pv.getOrElse(p, null)))
-          .toSeq.sortBy(_._1.mkString(" "))
+          .toSeq.sortBy(_._1.mkString("\u0000"))
           .map { case (vals, g) =>
             val base = withProvenance(rd.parquet(
               g.map(f => resolveDataPath(table, f.path).toString): _*))

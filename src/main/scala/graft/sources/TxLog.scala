@@ -1172,6 +1172,23 @@ object TxLog {
     }
   }
 
+  /** The live files of `base` a DML under the `prune` ranges must read
+    * — those the Delta mirror's per-file stats CANNOT prove outside
+    * the ranges — and the files they prove outside. Only an explicit
+    * no-match proof skips: a file the mirror does not know yet stays a
+    * candidate, and a missing or unreadable mirror disables pruning. */
+  private def candidates(spark: SparkSession, dir: String, base: Manifest,
+      prune: Seq[(String, Any, Any)]): (Seq[String], Set[String]) = {
+    val skipped: Set[String] =
+      if (prune.isEmpty) Set.empty
+      else scala.util.Try(DeltaLog.pruneFlags(spark, dir, prune)) match {
+        case scala.util.Success((flags, _)) =>
+          flags.collect { case (f, false) => f.path }.toSet
+        case scala.util.Failure(_) => Set.empty
+      }
+    (base.files.filterNot(skipped), skipped)
+  }
+
   /** Copy-on-write core shared by DELETE/UPDATE/MERGE: pick the
     * candidate files (live files the Delta mirror's per-file stats
     * CANNOT prove unaffected by the `prune` ranges), read only those,
@@ -1202,22 +1219,15 @@ object TxLog {
       sys.error(s"no committed version in $dir"))
     val baseM = readManifest(table, base)
     val prev = baseM.files
-    val skipped: Set[String] =
-      if (prune.isEmpty) Set.empty
-      else scala.util.Try(DeltaLog.pruneFlags(spark, dir, prune)) match {
-        case scala.util.Success((flags, _)) =>
-          flags.collect { case (f, false) => f.path }.toSet
-        case scala.util.Failure(_) => Set.empty
-      }
+    val (unpruned, skipped) = candidates(spark, dir, baseM, prune)
     // `keepOnly`: a caller-supplied TOUCHED-FILE set (positive
     // discovery, e.g. the by-source merge's join pass) — candidates
     // narrow to it; the caller owns the proof that excluded files hold
     // no row its closure would change
-    val candidates = keepOnly.fold(prev.filterNot(skipped))(k =>
-      prev.filterNot(skipped).filter(k))
-    if (candidates.isEmpty)
+    val cands = keepOnly.fold(unpruned)(unpruned.filter)
+    if (cands.isEmpty)
       return RewriteResult(base, 0L, prev.size.toLong)
-    val partCols = pathPartCols(candidates.head)
+    val partCols = pathPartCols(cands.head)
     DeltaLog.warmMetaCache(spark, table)
     val tracked = rowTrackingOn(dir)
     val matCol = matRowIdCol(dir).filter(_ => tracked)
@@ -1225,9 +1235,9 @@ object TxLog {
       sys.error(s"$dir: row tracking on but no materialized row-id " +
         "column name configured")
     val src = matCol match {
-      case Some(c) => relsWithRowIds(spark, dir, base, candidates)
+      case Some(c) => relsWithRowIds(spark, dir, base, cands)
         .withColumnRenamed("_row_id", c)
-      case None => readRels(spark, table, candidates,
+      case None => readRels(spark, table, cands,
         dvs = baseM.dvs)
     }
     val replaced = replace(src)
@@ -1250,12 +1260,12 @@ object TxLog {
     val added = writeBatch(replacement, table, partCols)
     // the committed schema stays the TABLE schema — the materialized id
     // column is file-level, never a table column
-    val v = commitRewrite(dir, base, candidates.toSet, added,
+    val v = commitRewrite(dir, base, cands.toSet, added,
       effectiveSchemaJson(matCol.foldLeft(replacement)(_.drop(_)), dir),
       cdcRels = cdcRels, matAdded = if (tracked) added.toSet else Set.empty,
       readPreds = prune, spark = Some(spark))
     DeltaLog.maybeCheckpoint(spark, dir, v)
-    RewriteResult(v, candidates.size.toLong, skipped.size.toLong)
+    RewriteResult(v, cands.size.toLong, skipped.size.toLong)
   }
 
   /** Row-level DELETE (copy-on-write): removes rows where `pred` is
@@ -1274,102 +1284,122 @@ object TxLog {
       changeRows = Some(_.filter(pred)
         .withColumn("_change_type", lit("delete"))))
 
-  /** Row-level DELETE, MERGE-ON-READ (Delta deletion vectors): the
-    * matched rows' ordinal indexes are roaring-serialized into DV
-    * files and the commit records `#dv` descriptors — NO data file is
-    * rewritten. At 100 TB this is the difference between an O(deleted
-    * rows) bitmap commit and rewriting a 1 GB file to drop 10 rows;
-    * merge-on-read is how every production lakehouse writes deletes.
+  /** Merge-on-read core shared by the deletion-vector DELETE, UPDATE
+    * and MERGE — the twin of the copy-on-write [[rewriteWhere]], and
+    * the reason the DV machinery exists: NO data file is rewritten, so
+    * updating 10 rows of a 1 GB file commits O(changed rows), not the
+    * GB.
     *
-    * Shape: the matched (file, ordinal) pairs are computed
-    * distributed, hash-partitioned BY FILE, and each non-empty
-    * partition writes ONE DV file packing its files' bitmaps (the
-    * spec's multi-DV file layout) — executors write O(their deleted
-    * rows) bitmap bytes to table storage; only the DESCRIPTORS travel
-    * to the driver. A file that already carries a DV gets the UNION
-    * bitmap (the spec: a new DV replaces the old and must contain
-    * every hidden row). `prune` as in [[deleteWhere]].
+    * Shape: prune the live files to [[candidates]] under `prune`; hide
+    * the rows `mark` selects from the candidate scan with DV bitmaps on
+    * their files ([[dvDescriptorUpdatesBy]]); append `rows` — the new
+    * row versions, computed from the VISIBLE candidate rows (existing
+    * DVs applied) — as one batch, validated and generated-column
+    * completed like any write; commit both in one serializable version
+    * ([[commitDv]], `#op op`), mirrored as the spec's remove(old DV) /
+    * add(same path, new DV) pairs plus the batch's adds. Under
+    * `delta.enableChangeDataFeed` the commit also writes
+    * `changes(visible, appended)` as change-data files, `appended`
+    * being the committed batch read back (postimages carry their
+    * recomputed generated columns). When nothing is hidden the commit
+    * degenerates to a plain append of `rows`, and to no commit at all
+    * when they are empty. `visible` is passed by name: an operation
+    * that appends nothing and records nothing never builds that scan.
     *
-    * Gated on `delta.enableDeletionVectors=true` (stock Delta's own
-    * writer gate); the mirror commit upgrades the protocol to
-    * reader 3 / writer 7 with the `deletionVectors` feature so
-    * foreign readers that cannot hide the rows refuse the table
-    * instead of resurrecting them.
-    *
-    * Semantics as [[deleteWhere]]: null-predicate rows survive,
-    * dataChange=true, `delta.appendOnly` refuses. The added-files CDF
-    * cannot express a DV delete — [[changesBetween]] refuses across
-    * one. A later OPTIMIZE materializes the deletes (rewrites read
-    * DV-filtered) and drops the DV with the rewritten file.
+    * Gated on `delta.enableDeletionVectors=true` (stock Delta's writer
+    * gate); the mirror commit upgrades the protocol to reader 3 /
+    * writer 7 with the `deletionVectors` feature, so foreign readers
+    * that cannot hide the rows refuse the table instead of
+    * resurrecting them. `delta.appendOnly` refuses. Untouched and
+    * DV-hidden rows keep their stable row ids by construction (no file
+    * moves); the appended batch claims fresh spans. A later OPTIMIZE
+    * materializes the deletes (rewrites read DV-filtered) and drops
+    * the DV with the rewritten file.
     */
-  def deleteWhereDv(spark: SparkSession, dir: String, pred: Column,
-      prune: Seq[(String, Any, Any)] = Seq.empty): RewriteResult = {
+  private def markWhere(spark: SparkSession, dir: String, op: String,
+      prune: Seq[(String, Any, Any)], mark: DataFrame => DataFrame,
+      rows: (=> DataFrame) => Option[DataFrame],
+      changes: (DataFrame, Option[DataFrame]) => DataFrame): RewriteResult = {
     val table = Paths.get(dir)
     DeltaLog.warmMetaCache(spark, table)
     if (!DeltaLog.tableConfig(table).get("delta.enableDeletionVectors")
         .contains("true"))
-      sys.error(s"$dir: merge-on-read DELETE requires the deletionVectors " +
+      sys.error(s"$dir: merge-on-read $op requires the deletionVectors " +
         "feature — setTableProperties(delta.enableDeletionVectors=true) " +
         "first (stock Delta's writer gate)")
-    enforceAppendOnly(dir, "DELETE")
+    enforceAppendOnly(dir, op)
     val base = currentVersion(dir).getOrElse(
       sys.error(s"no committed version in $dir"))
     val baseM = readManifest(table, base)
-    val prev = baseM.files
-    val skipped: Set[String] =
-      if (prune.isEmpty) Set.empty
-      else scala.util.Try(DeltaLog.pruneFlags(spark, dir, prune)) match {
-        case scala.util.Success((flags, _)) =>
-          flags.collect { case (f, false) => f.path }.toSet
-        case scala.util.Failure(_) => Set.empty
-      }
-    val candidates = prev.filterNot(skipped)
-    if (candidates.isEmpty)
-      return RewriteResult(base, 0L, prev.size.toLong)
-    val oldDvs = baseM.dvs
-    // CDF needs the EXACT visible set for the delete's change records,
-    // so the marking scan applies old DVs when the property is on (the
-    // cheaper raw scan is correct for bitmaps alone — the union absorbs
-    // re-matches — but would record already-dead rows as deleted again)
+    val (cands, skipped) = candidates(spark, dir, baseM, prune)
+    lazy val tableSchema = DeltaLog.currentSchemaString(table).getOrElse(
+      sys.error(s"$dir: no mirrored metaData for a DV commit"))
+    lazy val visible =
+      if (cands.nonEmpty) readRels(spark, table, cands, dvs = baseM.dvs)
+      else spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](),
+        org.apache.spark.sql.types.DataType.fromJson(tableSchema)
+          .asInstanceOf[org.apache.spark.sql.types.StructType])
+    val batch = rows(visible)
     val cdf = cdfEnabled(table)
-    val updates = dvDescriptorUpdates(spark, table, dir, candidates, pred,
-      oldDvs, applyOldDvs = cdf)
-    if (updates.isEmpty)
-      return RewriteResult(base, 0L, skipped.size.toLong)
+    // rows re-emitted as new versions or change records must be exactly
+    // the VISIBLE matches (a raw re-match would resurrect a deleted row
+    // as an "update"), so the marking scan applies existing DVs first;
+    // a DELETE without CDF keeps the cheaper raw scan, whose re-matches
+    // the bitmap union absorbs
+    val updates =
+      if (cands.isEmpty) Map.empty[String, String]
+      else dvDescriptorUpdatesBy(spark, table, dir, cands, mark, baseM.dvs,
+        applyOldDvs = cdf || op != "DELETE")
+    val partCols = baseM.files.headOption.map(pathPartCols).getOrElse(Seq.empty)
+    if (updates.isEmpty) {
+      // nothing hidden: the batch, if any, is pure inserts
+      val appended = batch.filter(!_.isEmpty).map(commitAppend(_, dir, partCols))
+      return RewriteResult(appended.getOrElse(base), 0L,
+        (if (cands.isEmpty) baseM.files.size else skipped.size).toLong)
+    }
+    val replacement = batch.map(b => validateAndComplete(
+      generatedColumnNames(dir).foldLeft(b)(_.drop(_)), dir))
+    val added = replacement.map(writeBatch(_, table, partCols))
+      .getOrElse(Seq.empty)
     val cdcRels =
       if (!cdf) Seq.empty
-      else writeCdcFiles(readRels(spark, table, candidates, dvs = oldDvs)
-        .filter(pred).withColumn("_change_type", lit("delete")), table)
-    val schemaJson = DeltaLog.currentSchemaString(table).getOrElse(
-      sys.error(s"$dir: no mirrored metaData for a DV commit"))
-    val v = commitDv(dir, base, updates, schemaJson, cdcRels = cdcRels)
+      else writeCdcFiles(changes(visible,
+        Option.when(added.nonEmpty)(readRels(spark, table, added))), table)
+    val v = commitDv(dir, base, updates,
+      replacement.fold(tableSchema)(effectiveSchemaJson(_, dir)),
+      added = added, operation = op, cdcRels = cdcRels)
     DeltaLog.maybeCheckpoint(spark, dir, v)
     RewriteResult(v, updates.size.toLong, skipped.size.toLong)
   }
 
-  /** The DV-marking core shared by merge-on-read DELETE and UPDATE. */
-  private def dvDescriptorUpdates(spark: SparkSession, table: Path,
-      dir: String, candidates: Seq[String], pred: Column,
-      oldDvs: Map[String, String],
-      applyOldDvs: Boolean): Map[String, String] =
-    dvDescriptorUpdatesBy(spark, table, dir, candidates, _.filter(pred),
-      oldDvs, applyOldDvs)
+  /** Row-level DELETE, MERGE-ON-READ (Delta deletion vectors): the
+    * matched rows' ordinal indexes are roaring-serialized into DV
+    * files and the commit records `#dv` descriptors through
+    * [[markWhere]] — no data file is rewritten, no row appended.
+    * Semantics and `prune` as [[deleteWhere]]: null-predicate rows
+    * survive, dataChange=true. Gates as [[markWhere]]. The added-files
+    * [[changesBetween]] cannot express a DV delete and refuses across
+    * one; [[changeFeed]] synthesizes its `delete` rows from the DV
+    * diff, and under CDF the commit writes them as change-data files.
+    */
+  def deleteWhereDv(spark: SparkSession, dir: String, pred: Column,
+      prune: Seq[(String, Any, Any)] = Seq.empty): RewriteResult =
+    markWhere(spark, dir, "DELETE", prune, _.filter(pred), _ => None,
+      (visible, _) => visible.filter(pred)
+        .withColumn("_change_type", lit("delete")))
 
-  /** The general DV-marking core (merge-on-read DELETE/UPDATE/MERGE):
-    * scan `candidates`, select the matched rows with `mark` (a filter
-    * for DELETE/UPDATE; a semi-join against the source keys for MERGE
-    * — which a Column predicate cannot express), roaring-serialize the
+  /** The DV-marking step of [[markWhere]]: scan `candidates`, select
+    * the matched rows with `mark` (a filter for DELETE/UPDATE; joins
+    * against the source for MERGE — which a Column predicate cannot
+    * express), roaring-serialize the
     * matched ordinals per file (executor-side, one DV file per
     * non-empty partition), union with any superseded bitmap, and
     * return the per-file descriptor-JSON updates. Provenance columns
     * `__f`/`__p` are captured from `_metadata` BEFORE `mark` runs —
     * metadata columns do not survive a join — and `mark` must preserve
-    * them (filters and semi-joins do). With `applyOldDvs` the scan
-    * first hides rows existing DVs already delete — required by
-    * UPDATE/MERGE, whose re-written rows must be exactly the VISIBLE
-    * matches (a raw re-match would resurrect deleted rows as
-    * "updates"); DELETE keeps the cheaper raw scan, whose re-matches
-    * the bitmap union absorbs. */
+    * them (filters and joins that keep the target's columns do). With
+    * `applyOldDvs` the scan first hides rows existing DVs already
+    * delete ([[markWhere]] says when). */
   private def dvDescriptorUpdatesBy(spark: SparkSession, table: Path,
       dir: String, candidates: Seq[String], mark: DataFrame => DataFrame,
       oldDvs: Map[String, String],
@@ -1509,238 +1539,69 @@ object TxLog {
 
   /** Row-level UPDATE, MERGE-ON-READ (deletion vectors): the matched
     * rows' OLD versions are hidden by DV bitmaps on their files and
-    * their NEW versions land in one appended batch — no data file is
-    * rewritten, the same O(changed rows) commit [[deleteWhereDv]]
-    * makes for deletes (stock Delta's UPDATE under
-    * `delta.enableDeletionVectors`; at 100 TB, updating 10 rows of a
-    * 1 GB file must not rewrite the GB). One serializable commit
-    * carries both: `#dv` descriptors + the added file lines, mirrored
-    * as the spec's remove(old DV)/add(same path, new DV) pairs plus
-    * the add of the re-written rows, `#op UPDATE`.
-    *
-    * Exactness: the DV-marking scan applies EXISTING DVs first — the
-    * re-written rows must be exactly the VISIBLE matches, or a
-    * previously-deleted row would resurrect as an "update" (the
-    * raw-scan shortcut the DELETE path can afford, this path cannot).
-    * Assignment semantics as [[updateWhere]]: expressions evaluate
-    * against the OLD row, cast back to the declared type; generated
-    * columns recompute; CHECK constraints apply to the new rows.
-    * Updates may move rows across partitions (the DV hides the old
-    * location, the append lands the new). Same gates as
-    * [[deleteWhereDv]]: `delta.enableDeletionVectors` required,
-    * `delta.appendOnly` refuses, CDF refuses across the commit.
+    * their NEW versions land in one appended batch, in one commit
+    * through [[markWhere]] (stock Delta's UPDATE under
+    * `delta.enableDeletionVectors`). The new versions are exactly the
+    * VISIBLE matches, assigned as [[updateWhere]] assigns: expressions
+    * evaluate against the OLD row, cast back to the declared type;
+    * generated columns recompute; CHECK constraints apply to the new
+    * rows. Updates may move rows across partitions (the DV hides the
+    * old location, the append lands the new). Under CDF the commit
+    * writes `update_preimage` / `update_postimage` change-data files.
+    * Gates as [[markWhere]].
     */
   def updateWhereDv(spark: SparkSession, dir: String, pred: Column,
       set: Map[String, Column],
-      prune: Seq[(String, Any, Any)] = Seq.empty): RewriteResult = {
-    val table = Paths.get(dir)
-    DeltaLog.warmMetaCache(spark, table)
-    if (!DeltaLog.tableConfig(table).get("delta.enableDeletionVectors")
-        .contains("true"))
-      sys.error(s"$dir: merge-on-read UPDATE requires the deletionVectors " +
-        "feature — setTableProperties(delta.enableDeletionVectors=true) " +
-        "first (stock Delta's writer gate)")
-    enforceAppendOnly(dir, "UPDATE")
-    val base = currentVersion(dir).getOrElse(
-      sys.error(s"no committed version in $dir"))
-    val baseM = readManifest(table, base)
-    val prev = baseM.files
-    val skipped: Set[String] =
-      if (prune.isEmpty) Set.empty
-      else scala.util.Try(DeltaLog.pruneFlags(spark, dir, prune)) match {
-        case scala.util.Success((flags, _)) =>
-          flags.collect { case (f, false) => f.path }.toSet
-        case scala.util.Failure(_) => Set.empty
-      }
-    val candidates = prev.filterNot(skipped)
-    if (candidates.isEmpty)
-      return RewriteResult(base, 0L, prev.size.toLong)
-    val oldDvs = baseM.dvs
-    val updates = dvDescriptorUpdates(spark, table, dir, candidates, pred,
-      oldDvs, applyOldDvs = true)
-    if (updates.isEmpty)
-      return RewriteResult(base, 0L, skipped.size.toLong)
-    // the new row versions: visible matches only (same DV-filtered
-    // view the marking scan used — parquet is immutable, so the two
-    // scans see identical matches), assignments applied old-row-wise
-    val visible = readRels(spark, table, candidates, dvs = oldDvs)
-      .filter(pred)
-    val bad = set.keySet -- visible.columns.toSet
-    require(bad.isEmpty,
-      s"updateWhereDv: unknown column(s) ${bad.mkString(", ")}")
-    val updated = visible.select(visible.schema.fields.toSeq.map { f =>
-      set.get(f.name).map(_.cast(f.dataType).as(f.name))
-        .getOrElse(col(f.name))
-    }: _*)
-    val replacement = validateAndComplete(
-      generatedColumnNames(dir).foldLeft(updated)(_.drop(_)), dir)
-    val added = writeBatch(replacement, table, pathPartCols(candidates.head))
-    // change-data records: the old rows as preimage, the committed new
-    // rows (generated columns recomputed) as postimage
-    val cdcRels =
-      if (!cdfEnabled(table)) Seq.empty
-      else writeCdcFiles(
-        visible.withColumn("_change_type", lit("update_preimage"))
-          .unionByName(readRels(spark, table, added)
-            .withColumn("_change_type", lit("update_postimage")),
-            allowMissingColumns = true), table)
-    val v = commitDv(dir, base, updates,
-      effectiveSchemaJson(replacement, dir), added = added,
-      operation = "UPDATE", cdcRels = cdcRels)
-    DeltaLog.maybeCheckpoint(spark, dir, v)
-    RewriteResult(v, updates.size.toLong, skipped.size.toLong)
-  }
+      prune: Seq[(String, Any, Any)] = Seq.empty): RewriteResult =
+    markWhere(spark, dir, "UPDATE", prune, _.filter(pred), { visible =>
+      val hit = visible.filter(pred)
+      val bad = set.keySet -- hit.columns.toSet
+      require(bad.isEmpty,
+        s"updateWhereDv: unknown column(s) ${bad.mkString(", ")}")
+      Some(hit.select(hit.schema.fields.toSeq.map { f =>
+        set.get(f.name).map(_.cast(f.dataType).as(f.name))
+          .getOrElse(col(f.name))
+      }: _*))
+    }, (visible, appended) =>
+      (visible.filter(pred).withColumn("_change_type", lit("update_preimage"))
+        +: appended.toSeq.map(_.withColumn("_change_type",
+          lit("update_postimage"))))
+        .reduce(_.unionByName(_, allowMissingColumns = true)))
 
-  /** Transactional MERGE (whole-row upsert): source rows REPLACE target
-    * rows sharing `keys`; unmatched source rows are INSERTED — one
-    * serializable commit. Candidate files come from the mirror's stats
-    * against the source's own key envelope (min..max per key column,
-    * one config-scale agg): a file whose key range cannot intersect the
-    * source's is never read or rewritten, and a source that matches no
-    * live file degenerates to a pure append. The rewrite itself is
-    * target-⋈-source anti-join (drop the matched) + union (bring every
-    * source row) — AQE broadcasts the typical small CDC batch.
-    * Precondition (as in Delta MERGE): at most one source row per key.
+  /** The whole-row upsert as a clause list — stock Delta's
+    * `whenMatched().updateAll().whenNotMatched().insertAll()`: every
+    * source column is SET on a matched row, and an unmatched source row
+    * inserts. */
+  private def upsert(source: DataFrame): Seq[MergeClause] =
+    Seq(MatchedUpdate(source.columns.map(c => c -> col(s"s.$c")).toMap),
+      NotMatchedInsert())
+
+  /** Transactional MERGE (whole-row upsert), COPY-ON-WRITE: the
+    * [[upsert]] clause list through [[mergeIntoClauses]]. A target row
+    * sharing `keys` with a source row takes every source column's
+    * value; target-only columns keep theirs (stock `updateAll`), and a
+    * source column the table lacks fails ("unknown SET column"). An
+    * unmatched source row inserts, its target-only columns null;
+    * NULL-keyed source rows never match and always insert. At most one
+    * source row per non-null key (stock MERGE's multiple-match rule).
+    * On a row-tracked table updated rows keep their row ids. Under
+    * CDF the commit writes `update_preimage` / `update_postimage` /
+    * `insert` change-data files.
     */
   def mergeInto(spark: SparkSession, dir: String, source: DataFrame,
-      keys: Seq[String]): RewriteResult = {
-    require(keys.nonEmpty, "mergeInto: at least one key column")
-    if (source.isEmpty)
-      return RewriteResult(currentVersion(dir).getOrElse(
-        sys.error(s"no committed version in $dir")), 0L, 0L)
-    requireUniqueSourceKeys(source, keys, "mergeInto")
-    val bounds = source.select(keys.flatMap(k =>
-      Seq(min(col(k)).as(s"lo_$k"), max(col(k)).as(s"hi_$k"))): _*)
-      .collect().head
-    val prune = keys.zipWithIndex.map { case (k, i) =>
-      (k, bounds.get(2 * i), bounds.get(2 * i + 1)) }
-    val res = rewriteWhere(spark, dir, prune, { tgt =>
-      // on a row-tracked table the target carries the hidden
-      // materialized-id column — source rows are NEW rows and union in
-      // with it null, so they read fresh ids from the replacement
-      // file's claimed span
-      val extra = tgt.columns.toSet -- source.columns.toSet
-      val src2 = extra.foldLeft(source)((d, c) =>
-        d.withColumn(c, lit(null).cast(tgt.schema(c).dataType)))
-      tgt.join(source.select(keys.map(col): _*).dropDuplicates(keys),
-          keys, "left_anti")
-        .unionByName(src2)
-    })
-    if (res.filesRewritten == 0L) {
-      // no live file can hold any source key: every source row inserts
-      val table = Paths.get(dir)
-      val partCols = readManifest(table, res.version).files.headOption
-        .map(pathPartCols).getOrElse(Seq.empty)
-      RewriteResult(commitAppend(source, dir, partCols), 0L, res.filesSkipped)
-    } else res
-  }
+      keys: Seq[String]): RewriteResult =
+    mergeIntoClauses(spark, dir, source, keys, upsert(source))
 
-  /** Transactional MERGE, MERGE-ON-READ (deletion vectors): the same
-    * whole-row upsert as [[mergeInto]] — source rows REPLACE visible
-    * target rows sharing `keys`, unmatched source rows INSERT — but the
-    * matched target rows are HIDDEN by DV bitmaps on their files and
-    * the entire source lands as one appended batch: NO data file is
-    * rewritten. At 100 TB this is the production upsert shape — a CDC
-    * batch touching 1000 rows across 1000 files must not rewrite a TB;
-    * the commit is O(changed rows), the reason the DV machinery exists.
-    *
-    * Shape: candidates come from the mirror's stats against the
-    * source's key envelope (as [[mergeInto]]); the matched VISIBLE
-    * (file, ordinal) pairs come from one semi-join of the candidate
-    * scan against the distinct source keys ([[dvDescriptorUpdatesBy]] —
-    * existing DVs applied first, so a previously deleted row can never
-    * resurrect as an "update"); the appended batch is the source
-    * itself, validated and generated-column-completed like any write.
-    * One serializable commit carries the `#dv` descriptors + the added
-    * file lines, `#op MERGE`, mirrored as remove/add DV pairs plus the
-    * batch's adds. On a row-tracked table the untouched and DV-hidden
-    * survivors keep their stable ids by construction (no file moves)
-    * and the appended batch claims fresh spans — copy-on-write MERGE
-    * would renumber every row of every touched file.
-    *
-    * Under `delta.enableChangeDataFeed` the commit writes PROTOCOL.md
-    * change-data files typed per row — `update_preimage` (the hidden
-    * matched rows), `update_postimage` (source rows whose key matched),
-    * `insert` (the rest) — which [[changeFeed]] and the Delta mirror's
-    * `tableChanges` read back; without CDF a later `changeFeed` across
-    * the merge refuses loudly (the DV diff alone cannot attribute the
-    * appended batch between postimages and inserts).
-    *
-    * Gates as [[deleteWhereDv]]/[[updateWhereDv]]:
-    * `delta.enableDeletionVectors` required, `delta.appendOnly`
-    * refuses. Precondition (as in Delta MERGE): at most one source row
-    * per key. A source matching no visible row degenerates to a pure
-    * append.
+  /** Transactional MERGE (whole-row upsert), MERGE-ON-READ: the same
+    * [[upsert]] clause list and semantics as [[mergeInto]], through
+    * [[mergeIntoDvClauses]] — matched rows are hidden by DV bitmaps and
+    * their new versions land with the inserts in one appended batch;
+    * no data file is rewritten. Without CDF a later [[changeFeed]]
+    * across the merge refuses loudly.
     */
   def mergeIntoDv(spark: SparkSession, dir: String, source: DataFrame,
-      keys: Seq[String]): RewriteResult = {
-    require(keys.nonEmpty, "mergeIntoDv: at least one key column")
-    val table = Paths.get(dir)
-    DeltaLog.warmMetaCache(spark, table)
-    if (!DeltaLog.tableConfig(table).get("delta.enableDeletionVectors")
-        .contains("true"))
-      sys.error(s"$dir: merge-on-read MERGE requires the deletionVectors " +
-        "feature — setTableProperties(delta.enableDeletionVectors=true) " +
-        "first (stock Delta's writer gate)")
-    enforceAppendOnly(dir, "MERGE")
-    val base = currentVersion(dir).getOrElse(
-      sys.error(s"no committed version in $dir"))
-    if (source.isEmpty) return RewriteResult(base, 0L, 0L)
-    requireUniqueSourceKeys(source, keys, "mergeIntoDv")
-    val bounds = source.select(keys.flatMap(k =>
-      Seq(min(col(k)).as(s"lo_$k"), max(col(k)).as(s"hi_$k"))): _*)
-      .collect().head
-    val prune = keys.zipWithIndex.map { case (k, i) =>
-      (k, bounds.get(2 * i), bounds.get(2 * i + 1)) }
-    val baseM = readManifest(table, base)
-    val prev = baseM.files
-    val skipped: Set[String] =
-      scala.util.Try(DeltaLog.pruneFlags(spark, dir, prune)) match {
-        case scala.util.Success((flags, _)) =>
-          flags.collect { case (f, false) => f.path }.toSet
-        case scala.util.Failure(_) => Set.empty
-      }
-    val candidates = prev.filterNot(skipped)
-    val partCols = prev.headOption.map(pathPartCols).getOrElse(Seq.empty)
-    // the typical CDC batch is small — AQE broadcasts the semi-join's
-    // key side; a genuinely large source falls back to a shuffled
-    // semi-join, still O(changed rows + candidate files)
-    val srcKeys = source.select(keys.map(col): _*).dropDuplicates(keys)
-    val oldDvs = baseM.dvs
-    val updates =
-      if (candidates.isEmpty) Map.empty[String, String]
-      else dvDescriptorUpdatesBy(spark, table, dir, candidates,
-        _.join(srcKeys, keys, "left_semi"), oldDvs, applyOldDvs = true)
-    if (updates.isEmpty)
-      // no visible target row shares a source key: pure insert
-      return RewriteResult(commitAppend(source, dir, partCols), 0L,
-        skipped.size.toLong)
-    val replacement = validateAndComplete(
-      generatedColumnNames(dir).foldLeft(source)(_.drop(_)), dir)
-    val added = writeBatch(replacement, table, partCols)
-    val cdcRels =
-      if (!cdfEnabled(table)) Seq.empty
-      else {
-        val visMatched = readRels(spark, table, candidates, dvs = oldDvs)
-          .join(srcKeys, keys, "left_semi")
-        val matchedKeys = visMatched.select(keys.map(col): _*)
-          .dropDuplicates(keys)
-        val appended = readRels(spark, table, added)
-        writeCdcFiles(
-          visMatched.withColumn("_change_type", lit("update_preimage"))
-            .unionByName(appended.join(matchedKeys, keys, "left_semi")
-              .withColumn("_change_type", lit("update_postimage")),
-              allowMissingColumns = true)
-            .unionByName(appended.join(matchedKeys, keys, "left_anti")
-              .withColumn("_change_type", lit("insert")),
-              allowMissingColumns = true), table)
-      }
-    val v = commitDv(dir, base, updates,
-      effectiveSchemaJson(replacement, dir), added = added,
-      operation = "MERGE", cdcRels = cdcRels)
-    DeltaLog.maybeCheckpoint(spark, dir, v)
-    RewriteResult(v, updates.size.toLong, skipped.size.toLong)
-  }
+      keys: Seq[String]): RewriteResult =
+    mergeIntoDvClauses(spark, dir, source, keys, upsert(source))
 
   // ------------------------------------------------ conditional MERGE
 
@@ -1767,7 +1628,7 @@ object TxLog {
   final case class MatchedDelete(condition: Option[Column] = None)
       extends MergeClause
   /** `WHEN NOT MATCHED [AND condition] THEN INSERT` — the whole source
-    * row, as [[mergeInto]]'s insert half. */
+    * row, target-only columns null. */
   final case class NotMatchedInsert(condition: Option[Column] = None)
       extends MergeClause
   /** `WHEN NOT MATCHED BY SOURCE [AND condition] THEN UPDATE SET …` —
@@ -1884,10 +1745,6 @@ object TxLog {
       .getOrElse(col(s"t.${f.name}"))
   }
 
-  private def clauseValue(f: org.apache.spark.sql.types.StructField,
-      matched: Seq[MergeClause]): Column =
-    cascadeValue(f, matched, "__idx").as(f.name)
-
   private def clauseIdxs(cls: Seq[MergeClause],
       deletes: Boolean): Seq[Int] =
     cls.zipWithIndex.collect {
@@ -1904,8 +1761,102 @@ object TxLog {
     inserts.map(c => coalesce(c.condition.getOrElse(lit(true)), lit(false)))
       .reduceOption(_ || _)
 
+  /** The source's key envelope as prune hints — `(key, min, max)` per
+    * key column, one config-scale aggregate: a file whose key range
+    * cannot meet it holds no row the source can match. */
+  private def keyEnvelope(source: DataFrame,
+      keys: Seq[String]): Seq[(String, Any, Any)] = {
+    val bounds = source.select(keys.flatMap(k =>
+      Seq(min(col(k)).as(s"lo_$k"), max(col(k)).as(s"hi_$k"))): _*)
+      .collect().head
+    keys.zipWithIndex.map { case (k, i) =>
+      (k, bounds.get(2 * i), bounds.get(2 * i + 1)) }
+  }
+
+  /** A clause list resolved against the merge keys: what both clause
+    * merges evaluate over target rows `t` and the source `s`.
+    * Construction validates the keys and the clauses' reachability. */
+  private final class ClauseMerge(source: DataFrame, keys: Seq[String],
+      clauses: Seq[MergeClause], what: String) {
+    require(keys.nonEmpty, s"$what: at least one key column")
+    val (matched, inserts, bySource) = splitClauses(clauses, what)
+    val keyCond: Column =
+      keys.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _)
+    val idxExpr: Column = matchedIdxExpr(matched)
+    val bIdxExpr: Column = matchedIdxExpr(bySource)
+    val insCond: Option[Column] = insertCond(inserts)
+
+    /** Rows whose family index names a DELETE (`deletes`) or an UPDATE
+      * clause; None when the family has no such clause. */
+    def matchedIs(deletes: Boolean): Option[Column] =
+      in("__idx", clauseIdxs(matched, deletes))
+    def bySourceIs(deletes: Boolean): Option[Column] =
+      in("__bidx", clauseIdxs(bySource, deletes))
+    private def in(c: String, idxs: Seq[Int]): Option[Column] =
+      Option.when(idxs.nonEmpty)(col(c).isin(idxs.map(Integer.valueOf): _*))
+
+    /** Prune hints: the source key envelope. BY SOURCE clauses can
+      * touch ANY target row, so the envelope proves nothing and
+      * pruning is off (stock Delta rewrites the same span; the clause
+      * CONDITIONS bound the change set, not the scan). */
+    def prune: Seq[(String, Any, Any)] =
+      if (bySource.nonEmpty) Seq.empty else keyEnvelope(source, keys)
+
+    /** Target rows matching a source row, with their matched index. */
+    def matchedRows(t: DataFrame): DataFrame = t.alias("t")
+      .join(source.alias("s"), keyCond, "inner")
+      .withColumn("__idx", idxExpr)
+    /** Target rows matching NO source row, with their by-source index. */
+    def unmatchedRows(t: DataFrame): DataFrame = t.alias("t")
+      .join(source.select(keys.map(col): _*).alias("s"), keyCond,
+        "left_anti")
+      .withColumn("__bidx", bIdxExpr)
+
+    def requireKnownSet(columns: Seq[String]): Unit = {
+      val bad = (matched ++ bySource).collect {
+        case MatchedUpdate(set, _) => set.keySet -- columns
+        case NotMatchedBySourceUpdate(set, _) => set.keySet -- columns
+      }.fold(Set.empty)(_ ++ _)
+      require(bad.isEmpty,
+        s"$what: unknown SET column(s) ${bad.mkString(", ")}")
+    }
+
+    /** The old images of the rows some DELETE or UPDATE clause accepts
+      * (both families), typed `delete` / `update_preimage`. */
+    def oldImages(t: DataFrame): Seq[DataFrame] = {
+      val tCols = t.columns.toSeq.map(c => col(s"t.$c").as(c))
+      def typed(rows: => DataFrame, cond: Option[Column], kind: String) =
+        cond.map(c => rows.filter(c).select(tCols: _*)
+          .withColumn("_change_type", lit(kind)))
+      (typed(matchedRows(t), matchedIs(deletes = true), "delete") ++
+        typed(matchedRows(t), matchedIs(deletes = false), "update_preimage") ++
+        typed(unmatchedRows(t), bySourceIs(deletes = true), "delete") ++
+        typed(unmatchedRows(t), bySourceIs(deletes = false),
+          "update_preimage")).toSeq
+    }
+
+    /** The new versions of the rows some UPDATE clause accepts, in
+      * `t`'s shape. */
+    def newImages(t: DataFrame): Seq[DataFrame] = {
+      def assigned(rows: => DataFrame, cond: Option[Column],
+          cls: Seq[MergeClause], idxCol: String) =
+        cond.map(c => rows.filter(c).select(t.schema.fields.toSeq.map(f =>
+          cascadeValue(f, cls, idxCol).as(f.name)): _*))
+      (assigned(matchedRows(t), matchedIs(deletes = false), matched, "__idx") ++
+        assigned(unmatchedRows(t), bySourceIs(deletes = false), bySource,
+          "__bidx")).toSeq
+    }
+
+    /** Insert-eligible source rows whose key is not in `targetKeys`, in
+      * `t`'s shape — target-only columns null (stock INSERT). */
+    def insertRows(t: DataFrame, targetKeys: DataFrame): Option[DataFrame] =
+      insCond.map(ic => fillToTarget(source.alias("s").filter(ic)
+        .join(targetKeys, keys, "left_anti"), t.schema)
+        .select(t.columns.toSeq.map(col): _*))
+  }
+
   /** Conditional MERGE, COPY-ON-WRITE — stock Delta's full clause
-    * model over [[mergeInto]]'s machinery: ordered
+    * model over [[rewriteWhere]]: ordered
     * `WHEN MATCHED [AND cond] THEN UPDATE SET …/DELETE`,
     * `WHEN NOT MATCHED [AND cond] THEN INSERT`, and
     * `WHEN NOT MATCHED BY SOURCE [AND cond] THEN UPDATE SET …/DELETE`
@@ -1913,8 +1864,8 @@ object TxLog {
     * tombstone deletes — the shape every real CDC pipeline applies
     * (see [[MergeClause]] for the `t`/`s` reference convention).
     * Candidate files come from the mirror's stats against the source's
-    * key envelope exactly as [[mergeInto]]; untouched files are never
-    * read or rewritten. With BY SOURCE clauses the envelope proves
+    * key envelope ([[keyEnvelope]]); untouched files are never read or
+    * rewritten. With BY SOURCE clauses the envelope proves
     * nothing (any target row may be affected), so candidates come from
     * a TOUCHED-FILE DISCOVERY pass instead — one provenance-tagged
     * join of the visible rows against the source keeps exactly the
@@ -1933,8 +1884,8 @@ object TxLog {
     * accepted row).
     *
     * Under `delta.enableChangeDataFeed` the commit writes per-row-typed
-    * change-data files — `delete` for matched-DELETE rows,
-    * `update_preimage`/`update_postimage` for matched-UPDATE rows,
+    * change-data files — `delete` for DELETE-clause rows,
+    * `update_preimage`/`update_postimage` for UPDATE-clause rows,
     * `insert` for inserted source rows — so [[changeFeed]] and the
     * mirror's `tableChanges` type the merge exactly.
     *
@@ -1944,8 +1895,8 @@ object TxLog {
     * rewritten). */
   def mergeIntoClauses(spark: SparkSession, dir: String, source: DataFrame,
       keys: Seq[String], clauses: Seq[MergeClause]): RewriteResult = {
-    require(keys.nonEmpty, "mergeIntoClauses: at least one key column")
-    val (matched, inserts, bySource) = splitClauses(clauses, "mergeIntoClauses")
+    val cm = new ClauseMerge(source, keys, clauses, "mergeIntoClauses")
+    import cm.{bySource, matched}
     val base = currentVersion(dir).getOrElse(
       sys.error(s"no committed version in $dir"))
     // an EMPTY source still drives the by-source family (a full sync
@@ -1953,30 +1904,11 @@ object TxLog {
     if (source.isEmpty && bySource.isEmpty) return RewriteResult(base, 0L, 0L)
     requireUniqueSourceKeys(source, keys, "mergeIntoClauses")
     val table = Paths.get(dir)
-    // by-source clauses can touch ANY target row, matched or not — the
-    // source key envelope proves nothing about them, so pruning is off
-    // (stock Delta rewrites the same span; the clause CONDITIONS bound
-    // the change set, not the scan)
-    val prune =
-      if (bySource.nonEmpty) Seq.empty
-      else {
-        val bounds = source.select(keys.flatMap(k =>
-          Seq(min(col(k)).as(s"lo_$k"), max(col(k)).as(s"hi_$k"))): _*)
-          .collect().head
-        keys.zipWithIndex.map { case (k, i) =>
-          (k, bounds.get(2 * i), bounds.get(2 * i + 1)) }
-      }
-    val keyCond = keys.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _)
-    val idxExpr = matchedIdxExpr(matched)
-    val bIdxExpr = matchedIdxExpr(bySource)
-    val delIdxs = clauseIdxs(matched, deletes = true)
-    val bysDelIdxs = clauseIdxs(bySource, deletes = true)
-    val bysUpdIdxs = clauseIdxs(bySource, deletes = false)
-    val insCond = insertCond(inserts)
+    val prune = cm.prune
     if (matched.isEmpty && bySource.isEmpty)
-      return clauseInsertOnly(spark, dir, source, keys, prune, insCond.get)
+      return clauseInsertOnly(spark, dir, source, keys, prune, cm.insCond.get)
     def outValue(f: org.apache.spark.sql.types.StructField): Column =
-      if (bySource.isEmpty) clauseValue(f, matched)
+      if (bySource.isEmpty) cascadeValue(f, matched, "__idx").as(f.name)
       else when(col("__matched"), cascadeValue(f, matched, "__idx"))
         .otherwise(cascadeValue(f, bySource, "__bidx")).as(f.name)
     // TOUCHED-FILE DISCOVERY (by-source family): the key envelope
@@ -2000,10 +1932,10 @@ object TxLog {
           table.resolve(rel).toAbsolutePath.normalize().toString -> rel).toMap
         val touched = prov.alias("t")
           .join(source.withColumn("__m", lit(true)).alias("s"),
-            keyCond, "left_outer")
+            cm.keyCond, "left_outer")
           .withColumn("__matched", coalesce(col("__m"), lit(false)))
-          .filter((col("__matched") && idxExpr >= 0) ||
-            (!col("__matched") && bIdxExpr >= 0))
+          .filter((col("__matched") && cm.idxExpr >= 0) ||
+            (!col("__matched") && cm.bIdxExpr >= 0))
           .select(col("__file")).distinct()
           .collect().map(_.getString(0))
           .map(f => absToRel.getOrElse(f, sys.error(
@@ -2011,95 +1943,35 @@ object TxLog {
           .toSet
         Some((touched, prov.select(keys.map(col): _*)))
       }
+    // the visible keys a source row must miss to insert: under
+    // discovery every visible key, not just the touched files'
+    def targetKeys(t: DataFrame): DataFrame =
+      discovery.map(_._2).getOrElse(t.select(keys.map(col): _*))
     val res = rewriteWhere(spark, dir, prune, { tgt =>
-      val bad = (matched ++ bySource).collect {
-        case MatchedUpdate(set, _) => set.keySet -- tgt.columns.toSet
-        case NotMatchedBySourceUpdate(set, _) => set.keySet -- tgt.columns.toSet
-      }.fold(Set.empty)(_ ++ _)
-      require(bad.isEmpty,
-        s"mergeIntoClauses: unknown SET column(s) ${bad.mkString(", ")}")
+      cm.requireKnownSet(tgt.columns.toSeq)
       val joined = tgt.alias("t")
         .join(source.withColumn("__m", lit(true)).alias("s"),
-          keyCond, "left_outer")
+          cm.keyCond, "left_outer")
         .withColumn("__matched", coalesce(col("__m"), lit(false)))
         .withColumn("__idx",
-          when(col("__matched"), idxExpr).otherwise(lit(-1)))
+          when(col("__matched"), cm.idxExpr).otherwise(lit(-1)))
         .withColumn("__bidx",
-          when(!col("__matched"), bIdxExpr).otherwise(lit(-1)))
-      val dropCond = Seq(
-        if (delIdxs.isEmpty) None
-        else Some(col("__matched") &&
-          col("__idx").isin(delIdxs.map(Integer.valueOf): _*)),
-        if (bysDelIdxs.isEmpty) None
-        else Some(!col("__matched") &&
-          col("__bidx").isin(bysDelIdxs.map(Integer.valueOf): _*))
-      ).flatten.reduceOption(_ || _)
-      val kept = dropCond.fold(joined)(c => joined.filter(!c))
-      val survivors = kept.select(
-        tgt.schema.fields.toSeq.map(outValue): _*)
-      insCond match {
-        case None => survivors
-        case Some(ic) =>
-          val extra = tgt.columns.toSet -- source.columns.toSet
-          val antiKeys = discovery.map(_._2)
-            .getOrElse(tgt.select(keys.map(col): _*))
-          val ins0 = source.alias("s").filter(ic)
-            .join(antiKeys, keys, "left_anti")
-          survivors.unionByName(extra.foldLeft(ins0)((d, c) =>
-            d.withColumn(c, lit(null).cast(tgt.schema(c).dataType))))
-      }
+          when(!col("__matched"), cm.bIdxExpr).otherwise(lit(-1)))
+      val dropCond = (cm.matchedIs(deletes = true).map(col("__matched") && _) ++
+        cm.bySourceIs(deletes = true).map(!col("__matched") && _))
+        .reduceOption(_ || _)
+      val survivors = dropCond.fold(joined)(c => joined.filter(!c))
+        .select(tgt.schema.fields.toSeq.map(outValue): _*)
+      // on a row-tracked table an inserted row's materialized-id column
+      // is null: it reads a fresh id from the replacement file's span
+      cm.insertRows(tgt, targetKeys(tgt))
+        .fold(survivors)(survivors.unionByName(_))
     }, keepOnly = discovery.map(_._1),
     changeRows = Some { df => // df = visible candidate TABLE rows
-      val joined = df.alias("t")
-        .join(source.alias("s"), keyCond, "inner")
-        .withColumn("__idx", idxExpr)
-      val tCols = df.columns.toSeq.map(c => col(s"t.$c").as(c))
-      val updIdxs = clauseIdxs(matched, deletes = false)
-      val del =
-        if (delIdxs.isEmpty) None
-        else Some(joined
-          .filter(col("__idx").isin(delIdxs.map(Integer.valueOf): _*))
-          .select(tCols: _*).withColumn("_change_type", lit("delete")))
-      val upd =
-        if (updIdxs.isEmpty) None
-        else {
-          val hit = joined
-            .filter(col("__idx").isin(updIdxs.map(Integer.valueOf): _*))
-          Some(hit.select(tCols: _*)
-            .withColumn("_change_type", lit("update_preimage"))
-            .unionByName(hit.select(df.schema.fields.toSeq
-              .map(f => clauseValue(f, matched)): _*)
-              .withColumn("_change_type", lit("update_postimage"))))
-        }
-      // by-source change rows: unmatched TARGET rows the family accepts
-      val bysJ =
-        if (bySource.isEmpty) None
-        else Some(df.alias("t")
-          .join(source.select(keys.map(col): _*).alias("s"),
-            keyCond, "left_anti")
-          .withColumn("__bidx", bIdxExpr))
-      val bysDel = bysJ.filter(_ => bysDelIdxs.nonEmpty).map(
-        _.filter(col("__bidx").isin(bysDelIdxs.map(Integer.valueOf): _*))
-          .select(tCols: _*).withColumn("_change_type", lit("delete")))
-      val bysUpd = bysJ.filter(_ => bysUpdIdxs.nonEmpty).map { j =>
-        val hit = j.filter(col("__bidx").isin(bysUpdIdxs.map(Integer.valueOf): _*))
-        hit.select(tCols: _*)
-          .withColumn("_change_type", lit("update_preimage"))
-          .unionByName(hit.select(df.schema.fields.toSeq.map(f =>
-            cascadeValue(f, bySource, "__bidx").as(f.name)): _*)
-            .withColumn("_change_type", lit("update_postimage")))
-      }
-      val ins = insCond.map(ic =>
-        // a partial-width source null-fills target-only columns, same
-        // as the rewrite closure's insert union; under discovery the
-        // anti-join sees every visible key, not just touched files'
-        fillToTarget(source.alias("s").filter(ic)
-          .join(discovery.map(_._2)
-            .getOrElse(df.select(keys.map(col): _*)), keys, "left_anti"),
-          df.schema)
-          .select(df.columns.toSeq.map(col): _*)
-          .withColumn("_change_type", lit("insert")))
-      (del.toSeq ++ upd.toSeq ++ bysDel.toSeq ++ bysUpd.toSeq ++ ins.toSeq)
+      (cm.oldImages(df) ++ cm.newImages(df).map(
+          _.withColumn("_change_type", lit("update_postimage"))) ++
+        cm.insertRows(df, targetKeys(df)).map(
+          _.withColumn("_change_type", lit("insert"))))
         .reduce(_.unionByName(_))
     })
     if (res.filesRewritten == 0L) {
@@ -2107,7 +1979,7 @@ object TxLog {
       // source row is unmatched — conditional pure insert. Discovery
       // path: zero TOUCHED files still allows matched-but-unaccepted
       // keys to exist, so the anti-join against the visible keys stays.
-      insCond match {
+      cm.insCond match {
         case None => res
         case Some(ic) =>
           val cand0 = source.alias("s").filter(ic)
@@ -2126,225 +1998,79 @@ object TxLog {
 
   /** Conditional MERGE, MERGE-ON-READ — [[mergeIntoClauses]]'s clause
     * model (all three families, BY SOURCE included) over
-    * [[mergeIntoDv]]'s machinery: rows an UPDATE or DELETE clause
-    * accepts — matched rows through the matched cascade,
-    * unmatched-by-source rows through the by-source cascade — are
-    * HIDDEN by DV bitmaps on their files (rows no clause accepts stay
-    * visible — nothing is touched), the UPDATE clauses' new row
-    * versions plus the insert-eligible source rows land as ONE
-    * appended batch, and no data file is rewritten: the commit stays
-    * O(changed rows), the production CDC shape at 100 TB. Candidates
-    * prune by the source key envelope (pruning off under BY SOURCE
-    * clauses — any row may be affected); the matched cascade marks via
-    * one inner join of the VISIBLE candidate rows against the
-    * (AQE-broadcast) source, the by-source cascade via one anti-join
-    * against the source keys — existing DVs applied first, so a dead
-    * row can never resurrect as a match. Untouched and DV-hidden
-    * survivors keep stable row ids by construction; the appended batch
-    * claims fresh spans.
+    * [[markWhere]]: rows an UPDATE or DELETE clause accepts — matched
+    * rows through the matched cascade, unmatched-by-source rows
+    * through the by-source cascade — are HIDDEN by DV bitmaps on their
+    * files (rows no clause accepts stay visible — nothing is touched),
+    * the UPDATE clauses' new row versions plus the insert-eligible
+    * source rows land as ONE appended batch, and no data file is
+    * rewritten: the commit stays O(changed rows), the production CDC
+    * shape at 100 TB. Candidates prune by the source key envelope
+    * (pruning off under BY SOURCE clauses — any row may be affected);
+    * the matched cascade marks via one inner join of the VISIBLE
+    * candidate rows against the (AQE-broadcast) source, the by-source
+    * cascade via one anti-join against the source keys — existing DVs
+    * applied first, so a dead row can never resurrect as a match.
     *
     * Under `delta.enableChangeDataFeed` the commit writes
     * per-row-typed change-data files (`delete` / `update_preimage` /
     * `update_postimage` / `insert`); without CDF a later [[changeFeed]]
-    * across the merge refuses loudly, as for [[mergeIntoDv]]. Gates as
-    * [[mergeIntoDv]]: `delta.enableDeletionVectors` required,
-    * `delta.appendOnly` refuses, source-key uniqueness enforced. */
+    * across the merge refuses loudly — the DV diff alone cannot split
+    * the appended batch between postimages and inserts. Gates as
+    * [[markWhere]]; source-key uniqueness enforced. A merge that hides
+    * no row degenerates to a plain append of its inserts. */
   def mergeIntoDvClauses(spark: SparkSession, dir: String, source: DataFrame,
       keys: Seq[String], clauses: Seq[MergeClause]): RewriteResult = {
-    require(keys.nonEmpty, "mergeIntoDvClauses: at least one key column")
-    val (matched, inserts, bySource) =
-      splitClauses(clauses, "mergeIntoDvClauses")
-    val table = Paths.get(dir)
-    DeltaLog.warmMetaCache(spark, table)
-    if (!DeltaLog.tableConfig(table).get("delta.enableDeletionVectors")
-        .contains("true"))
-      sys.error(s"$dir: merge-on-read MERGE requires the deletionVectors " +
-        "feature — setTableProperties(delta.enableDeletionVectors=true) " +
-        "first (stock Delta's writer gate)")
-    enforceAppendOnly(dir, "MERGE")
-    val base = currentVersion(dir).getOrElse(
-      sys.error(s"no committed version in $dir"))
+    val cm = new ClauseMerge(source, keys, clauses, "mergeIntoDvClauses")
+    import cm.{bySource, matched}
     // an EMPTY source still drives the by-source family
-    if (source.isEmpty && bySource.isEmpty) return RewriteResult(base, 0L, 0L)
+    if (source.isEmpty && bySource.isEmpty)
+      return RewriteResult(currentVersion(dir).getOrElse(
+        sys.error(s"no committed version in $dir")), 0L, 0L)
     requireUniqueSourceKeys(source, keys, "mergeIntoDvClauses")
-    // by-source clauses can touch any target row — pruning off (see
-    // mergeIntoClauses)
-    val prune =
-      if (bySource.nonEmpty) Seq.empty[(String, Any, Any)]
-      else {
-        val bounds = source.select(keys.flatMap(k =>
-          Seq(min(col(k)).as(s"lo_$k"), max(col(k)).as(s"hi_$k"))): _*)
-          .collect().head
-        keys.zipWithIndex.map { case (k, i) =>
-          (k, bounds.get(2 * i), bounds.get(2 * i + 1)) }
-      }
-    val keyCond = keys.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _)
-    val idxExpr = matchedIdxExpr(matched)
-    val bIdxExpr = matchedIdxExpr(bySource)
-    val delIdxs = clauseIdxs(matched, deletes = true)
-    val updIdxs = clauseIdxs(matched, deletes = false)
-    val bysDelIdxs = clauseIdxs(bySource, deletes = true)
-    val bysUpdIdxs = clauseIdxs(bySource, deletes = false)
-    val insCond = insertCond(inserts)
-    val baseM = readManifest(table, base)
-    val prev = baseM.files
-    val skipped: Set[String] =
-      if (prune.isEmpty) Set.empty
-      else scala.util.Try(DeltaLog.pruneFlags(spark, dir, prune)) match {
-        case scala.util.Success((flags, _)) =>
-          flags.collect { case (f, false) => f.path }.toSet
-        case scala.util.Failure(_) => Set.empty
-      }
-    val candidates = prev.filterNot(skipped)
-    val partCols = prev.headOption.map(pathPartCols).getOrElse(Seq.empty)
-    if (candidates.isEmpty) {
-      // no live file can hold any source key: conditional pure insert
-      val rows = insCond.map(ic =>
-        fillToTableSchema(dir, source.alias("s").filter(ic)))
-      return rows match {
-        case Some(r) if !r.isEmpty =>
-          RewriteResult(commitAppend(r, dir, partCols), 0L,
-            skipped.size.toLong)
-        case _ => RewriteResult(base, 0L, skipped.size.toLong)
-      }
-    }
-    val oldDvs = baseM.dvs
-    val srcKeys = source.select(keys.map(col): _*)
-    // hide exactly the visible rows SOME clause accepts — matched rows
-    // through the matched cascade, unmatched-by-source rows through the
-    // by-source cascade; rows no clause accepts stay live and untouched
-    val updates =
-      if (matched.isEmpty && bySource.isEmpty) Map.empty[String, String]
-      else dvDescriptorUpdatesBy(spark, table, dir, candidates,
-        { v =>
-          val m =
-            if (matched.isEmpty) None
-            else Some(v.alias("t").join(source.alias("s"), keyCond, "inner")
-              .withColumn("__idx", idxExpr).filter(col("__idx") =!= -1)
-              .select(col("__f"), col("__p")))
-          val b =
-            if (bySource.isEmpty) None
-            else Some(v.alias("t")
-              .join(srcKeys.alias("s"), keyCond, "left_anti")
-              .withColumn("__bidx", bIdxExpr).filter(col("__bidx") =!= -1)
-              .select(col("__f"), col("__p")))
-          (m.toSeq ++ b.toSeq).reduce(_.unionByName(_))
-        },
-        oldDvs, applyOldDvs = true)
-    val visible = readRels(spark, table, candidates, dvs = oldDvs)
-    val bad = (matched ++ bySource).collect {
-      case MatchedUpdate(set, _) => set.keySet -- visible.columns.toSet
-      case NotMatchedBySourceUpdate(set, _) =>
-        set.keySet -- visible.columns.toSet
-    }.fold(Set.empty)(_ ++ _)
-    require(bad.isEmpty,
-      s"mergeIntoDvClauses: unknown SET column(s) ${bad.mkString(", ")}")
-    val visJoined = visible.alias("t")
-      .join(source.alias("s"), keyCond, "inner")
-      .withColumn("__idx", idxExpr)
-    val updatedNew =
-      if (updIdxs.isEmpty) None
-      else Some(visJoined
-        .filter(col("__idx").isin(updIdxs.map(Integer.valueOf): _*))
-        .select(visible.schema.fields.toSeq
-          .map(f => clauseValue(f, matched)): _*))
-    // unmatched-by-source visible rows, routed through their cascade
-    val bysJoined =
-      if (bySource.isEmpty) None
-      else Some(visible.alias("t")
-        .join(srcKeys.alias("s"), keyCond, "left_anti")
-        .withColumn("__bidx", bIdxExpr))
-    val bysUpdNew = bysJoined.filter(_ => bysUpdIdxs.nonEmpty).map(
-      _.filter(col("__bidx").isin(bysUpdIdxs.map(Integer.valueOf): _*))
-        .select(visible.schema.fields.toSeq.map(f =>
-          cascadeValue(f, bySource, "__bidx").as(f.name)): _*))
-    // a source key in matchedKeys matched SOME visible row (unique
-    // source keys make the anti-join exact); the rest are inserts — a
-    // partial-width source null-fills target-only columns (stock
-    // INSERT semantics, matching the copy-on-write twin)
-    val matchedKeys = visJoined
-      .select(keys.map(k => col(s"t.$k").as(k)): _*).dropDuplicates(keys)
-    val insRows = insCond.map(ic =>
-      fillToTarget(source.alias("s").filter(ic)
-        .join(matchedKeys, keys, "left_anti"), visible.schema)
-        .select(visible.columns.toSeq.map(col): _*))
-    val batch = (updatedNew.toSeq ++ bysUpdNew.toSeq ++ insRows.toSeq)
-      .reduceOption(_.unionByName(_))
-    if (updates.isEmpty) {
-      // no row hidden — nothing was updated or deleted; the batch (if
-      // any) is pure inserts, a plain append
-      return batch.filter(!_.isEmpty) match {
-        case Some(b) => RewriteResult(commitAppend(b, dir, partCols), 0L,
-          skipped.size.toLong)
-        case None => RewriteResult(base, 0L, skipped.size.toLong)
-      }
-    }
-    val replacement = batch.map(b => validateAndComplete(
-      generatedColumnNames(dir).foldLeft(b)(_.drop(_)), dir))
-    val added = replacement.map(writeBatch(_, table, partCols))
-      .getOrElse(Seq.empty)
-    val cdcRels =
-      if (!cdfEnabled(table)) Seq.empty
-      else {
-        val tCols = visible.columns.toSeq.map(c => col(s"t.$c").as(c))
-        val del =
-          if (delIdxs.isEmpty) None
-          else Some(visJoined
-            .filter(col("__idx").isin(delIdxs.map(Integer.valueOf): _*))
-            .select(tCols: _*).withColumn("_change_type", lit("delete")))
-        val pre =
-          if (updIdxs.isEmpty) None
-          else Some(visJoined
-            .filter(col("__idx").isin(updIdxs.map(Integer.valueOf): _*))
-            .select(tCols: _*)
-            .withColumn("_change_type", lit("update_preimage")))
-        val bysDel = bysJoined.filter(_ => bysDelIdxs.nonEmpty).map(
-          _.filter(col("__bidx").isin(bysDelIdxs.map(Integer.valueOf): _*))
-            .select(tCols: _*).withColumn("_change_type", lit("delete")))
-        val bysPre = bysJoined.filter(_ => bysUpdIdxs.nonEmpty).map(
-          _.filter(col("__bidx").isin(bysUpdIdxs.map(Integer.valueOf): _*))
-            .select(tCols: _*)
-            .withColumn("_change_type", lit("update_preimage")))
-        // postimages/inserts read back from the COMMITTED files, so
-        // generated columns carry their final recomputed values; the
-        // by-source updates' keys come from the TARGET side (they have
-        // no source row by definition)
-        val updKeysM =
-          if (updIdxs.isEmpty) None
-          else Some(visJoined
-            .filter(col("__idx").isin(updIdxs.map(Integer.valueOf): _*))
-            .select(keys.map(k => col(s"s.$k").as(k)): _*))
-        val updKeysB = bysJoined.filter(_ => bysUpdIdxs.nonEmpty).map(
-          _.filter(col("__bidx").isin(bysUpdIdxs.map(Integer.valueOf): _*))
-            .select(keys.map(k => col(s"t.$k").as(k)): _*))
-        val updKeys = (updKeysM.toSeq ++ updKeysB.toSeq)
+    markWhere(spark, dir, "MERGE", cm.prune,
+      // hide exactly the visible rows SOME clause accepts; rows no
+      // clause accepts stay live and untouched
+      mark = { v =>
+        (Option.when(matched.nonEmpty)(
+          cm.matchedRows(v).filter(col("__idx") =!= -1)) ++
+          Option.when(bySource.nonEmpty)(
+            cm.unmatchedRows(v).filter(col("__bidx") =!= -1)))
+          .map(_.select(col("__f"), col("__p")))
+          .reduceOption(_.unionByName(_)).getOrElse(v.limit(0))
+      },
+      rows = { visible =>
+        cm.requireKnownSet(visible.columns.toSeq)
+        (cm.newImages(visible) ++ cm.insertRows(visible,
+          visible.select(keys.map(col): _*))).reduceOption(_.unionByName(_))
+      },
+      changes = { (visible, appended) =>
+        // postimages and inserts read back from the COMMITTED batch, so
+        // generated columns carry their recomputed values; an updated
+        // row's key comes from the source (matched) or, having no
+        // source row, from the target (by-source)
+        val updKeys = (cm.matchedIs(deletes = false).map(c =>
+            cm.matchedRows(visible).filter(c)
+              .select(keys.map(k => col(s"s.$k").as(k)): _*)) ++
+          cm.bySourceIs(deletes = false).map(c =>
+            cm.unmatchedRows(visible).filter(c)
+              .select(keys.map(k => col(s"t.$k").as(k)): _*)))
           .reduceOption(_.unionByName(_)).map(_.dropDuplicates(keys))
-        val appended =
-          if (added.isEmpty) None else Some(readRels(spark, table, added))
         val post = appended.zip(updKeys).map { case (a, uk) =>
           a.join(uk, keys, "left_semi")
             .withColumn("_change_type", lit("update_postimage")) }
-        val ins2 = appended.map(a =>
+        val ins = appended.map(a =>
           updKeys.fold(a)(uk => a.join(uk, keys, "left_anti"))
             .withColumn("_change_type", lit("insert")))
-        val all = (del.toSeq ++ pre.toSeq ++ bysDel.toSeq ++ bysPre.toSeq ++
-          post.toSeq ++ ins2.toSeq)
+        (cm.oldImages(visible) ++ post ++ ins)
           .reduce(_.unionByName(_, allowMissingColumns = true))
-        writeCdcFiles(all, table)
-      }
-    val schemaJson = replacement.map(effectiveSchemaJson(_, dir))
-      .orElse(DeltaLog.currentSchemaString(table))
-      .getOrElse(sys.error(s"$dir: no mirrored metaData for a DV commit"))
-    val v = commitDv(dir, base, updates, schemaJson, added = added,
-      operation = "MERGE", cdcRels = cdcRels)
-    DeltaLog.maybeCheckpoint(spark, dir, v)
-    RewriteResult(v, updates.size.toLong, skipped.size.toLong)
+      })
   }
 
-  /** The no-matched-clause degenerate of both clause merges: a
-    * conditional idempotent insert. Source rows passing `insCond`
-    * whose key matches NO visible row append; nothing else changes and
-    * no file is touched in either DML family. Matches can only live in
+  /** The no-matched-clause degenerate of the copy-on-write clause
+    * merge: a conditional idempotent insert. Source rows passing
+    * `insCond` whose key matches NO visible row append; nothing else
+    * changes and no file is touched. Matches can only live in
     * envelope-pruned candidate files, so only those are scanned. */
   private def clauseInsertOnly(spark: SparkSession, dir: String,
       source: DataFrame, keys: Seq[String], prune: Seq[(String, Any, Any)],
@@ -2353,21 +2079,15 @@ object TxLog {
     val base = currentVersion(dir).getOrElse(
       sys.error(s"no committed version in $dir"))
     val baseM = readManifest(table, base)
-    val prev = baseM.files
-    val skipped: Set[String] =
-      scala.util.Try(DeltaLog.pruneFlags(spark, dir, prune)) match {
-        case scala.util.Success((flags, _)) =>
-          flags.collect { case (f, false) => f.path }.toSet
-        case scala.util.Failure(_) => Set.empty
-      }
-    val candidates = prev.filterNot(skipped)
-    val partCols = prev.headOption.map(pathPartCols).getOrElse(Seq.empty)
+    val (cands, skipped) = candidates(spark, dir, baseM, prune)
+    val partCols = baseM.files.headOption.map(pathPartCols)
+      .getOrElse(Seq.empty)
     val eligible = fillToTableSchema(dir,
       source.alias("s").filter(insCond))
     val rows =
-      if (candidates.isEmpty) eligible
+      if (cands.isEmpty) eligible
       else eligible.join(
-        readRels(spark, table, candidates, dvs = baseM.dvs)
+        readRels(spark, table, cands, dvs = baseM.dvs)
           .select(keys.map(col): _*),
         keys, "left_anti")
     if (rows.isEmpty) RewriteResult(base, 0L, skipped.size.toLong)
@@ -3387,16 +3107,19 @@ object TxLog {
     *  - `#op UPDATE` (DV): newly-hidden → `update_preimage`, the
     *    commit's appended batch → `update_postimage`;
     *  - appends → `insert`; dataChange=false commits (OPTIMIZE,
-    *    ZORDER) emit nothing.
+    *    ZORDER) emit nothing;
+    *  - a MERGE, and a copy-on-write DELETE/UPDATE/MERGE: the
+    *    per-row-typed change-data files its writer committed under
+    *    `delta.enableChangeDataFeed`.
     *
     * Scale: the DV diff is bitmap set-difference per file
     * (O(hidden rows), driver-side like every DV descriptor walk); the
     * hidden rows come back through ONE pred-less scan of only the
     * AFFECTED files, semi-joined on broadcast (file, pos) pairs —
-    * never a re-scan of the table. Copy-on-write rewrites refuse
-    * loudly: without CDC files or DVs, "which rows changed" is not
-    * derivable from a file swap — that refusal is what the
-    * merge-on-read writers exist to remove.
+    * never a re-scan of the table. A rewrite or MERGE committed
+    * WITHOUT change-data files (before CDF was enabled, or a RESTORE)
+    * refuses loudly: "which rows changed" is not derivable from its
+    * file swap or its appended batch.
     */
   def changeFeed(spark: SparkSession, dir: String, fromV: Long,
       toV: Long): DataFrame = {

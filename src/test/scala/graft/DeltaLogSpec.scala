@@ -2354,14 +2354,21 @@ class DeltaLogSpec extends SparkSpec {
     // the rewritten-but-unchanged survivor rows do NOT appear in the feed
     assert(feed.filter(col("event_id") > 500).count() == 0,
       "CoW CDC must carry only the changed rows, not the rewritten files")
-    // a MERGE (closure-generic rewrite) leaves no cdc -> that version refuses
-    import spark.implicits._
+    // a whole-row MERGE (the upsert clause list) types its rows too:
+    // the matched band's pre- and postimages, no inserts or deletes
     val srcDf = ev.filter(col("event_id").between(600L, 610L))
       .withColumn("value", col("value") * 100)
     TxLog.mergeInto(s, t, srcDf, Seq("event_id"))               // v5
-    val e = intercept[RuntimeException](
-      DeltaLog.tableChanges(s, t, 4L, 5L).count())
-    assert(e.getMessage.contains("change-data"), e.getMessage)
+    val mFeed = DeltaLog.tableChanges(s, t, 4L, 5L)
+    val band = ev.filter(col("event_id").between(600L, 610L)).count()
+    val mPre = mFeed.filter(col("_change_type") === "update_preimage")
+    val mPost = mFeed.filter(col("_change_type") === "update_postimage")
+    assert(band > 0 && mPre.count() == band && mPost.count() == band)
+    assert(mFeed.filter(col("_change_type").isin("insert", "delete"))
+      .count() == 0)
+    val mPreSum = mPre.agg(sum(col("value"))).collect()(0).getDouble(0)
+    val mPostSum = mPost.agg(sum(col("value"))).collect()(0).getDouble(0)
+    assert(math.abs(mPostSum - 100 * mPreSum) < 1e-6, s"$mPostSum vs $mPreSum")
   }
 
   test("protocol replay is newest-wins: a later cdc-only commit must not downgrade the DV gate") {

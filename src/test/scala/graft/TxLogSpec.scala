@@ -2105,6 +2105,89 @@ class TxLogSpec extends SparkSpec {
     assert(e.getMessage.contains("multiple source rows"), e.getMessage)
   }
 
+  test("whole-row MERGE: mergeInto, mergeIntoDv and both clause merges " +
+      "over the upsert list agree row for row and change for change") {
+    val s = spark
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions._
+    import graft.sources.DeltaLog
+    import graft.sources.TxLog.{MatchedUpdate, NotMatchedInsert}
+    val ev = events
+    val base = ev.filter(col("event_id") <= 400)
+    // updates (100..149 tripled), inserts (ids 0..29 moved past the
+    // table) and two NULL-keyed rows, which never match and insert
+    val source = ev.filter(col("event_id").between(100, 149))
+      .withColumn("value", col("value") * 3)
+      .unionByName(ev.filter(col("event_id") < 30)
+        .withColumn("event_id", col("event_id") + 100000L))
+      .unionByName(ev.filter(col("event_id").between(30, 31))
+        .withColumn("event_id", lit(null).cast("long")))
+    val keys = Seq("event_id")
+    val upsert = Seq(MatchedUpdate(
+      source.columns.map(c => c -> col(s"s.$c")).toMap), NotMatchedInsert())
+    def sorted(df: DataFrame): Seq[String] =
+      df.select(ev.columns.toSeq.map(col): _*).collect()
+        .map(_.toString).toSeq.sorted
+    val expected = sorted(base.withColumn("value",
+        when(col("event_id").between(100, 149), col("value") * 3)
+          .otherwise(col("value")))
+      .unionByName(source.filter(col("event_id").isNull ||
+        col("event_id") >= 100000L)))
+    def seeded(props: Map[String, String]): String = {
+      val t = freshTable()
+      TxLog.commitAppend(base.repartitionByRange(4, col("event_id")), t) // v1
+      TxLog.setTableProperties(s, t, props)                              // v2
+      t
+    }
+    val cdf = Map("delta.enableChangeDataFeed" -> "true")
+    val dv = cdf + ("delta.enableDeletionVectors" -> "true")
+    val merges = Seq[(String, Map[String, String], String => Any)](
+      ("mergeInto", cdf, TxLog.mergeInto(s, _, source, keys)),
+      ("mergeIntoClauses", cdf, TxLog.mergeIntoClauses(s, _, source, keys, upsert)),
+      ("mergeIntoDv", dv, TxLog.mergeIntoDv(s, _, source, keys)),
+      ("mergeIntoDvClauses", dv,
+        TxLog.mergeIntoDvClauses(s, _, source, keys, upsert)))
+    val feeds = merges.map { case (name, props, merge) =>
+      val t = seeded(props)
+      merge(t)                                                           // v3
+      val snap = sorted(TxLog.snapshot(s, t))
+      assert(snap == expected, s"$name: snapshot")
+      assert(sorted(DeltaLog.snapshot(s, t)) == snap, s"$name: Delta mirror")
+      val byType = TxLog.changeFeed(s, t, 2L, 3L).groupBy("_change_type")
+        .agg(count(lit(1)), round(sum(col("value")), 6)).collect()
+        .map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2))).toMap
+      val mirror = DeltaLog.tableChanges(s, t, 2L, 3L)
+        .groupBy("_change_type").count().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(mirror == byType.map { case (k, v) => k -> v._1 },
+        s"$name: tableChanges $mirror vs changeFeed $byType")
+      name -> byType
+    }
+    feeds.foreach { case (name, byType) =>
+      assert(byType == feeds.head._2, s"$name: $byType vs ${feeds.head}") }
+    val byType = feeds.head._2
+    assert(byType.map { case (k, v) => k -> v._1 } == Map(
+      "update_preimage" -> 50L, "update_postimage" -> 50L, "insert" -> 32L),
+      byType.toString)
+    assert(math.abs(byType("update_postimage")._2 -
+      3 * byType("update_preimage")._2) < 1e-3, byType.toString)
+    // row-tracked copy-on-write: the updated rows keep their row ids
+    val t = freshTable()
+    TxLog.commitAppend(ev.limit(0), t)
+    TxLog.setTableProperties(s, t, Map("delta.enableRowTracking" -> "true"))
+    TxLog.commitAppend(base.coalesce(1).sortWithinPartitions("event_id"), t)
+    def ids(): Map[Long, Long] = TxLog.snapshotWithRowIds(s, t)
+      .filter(col("event_id").isNotNull)
+      .select(col("event_id"), col("_row_id")).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val pre = ids()
+    TxLog.mergeInto(s, t, source, keys)
+    val post = ids()
+    pre.foreach { case (eid, rid) =>
+      assert(post(eid) == rid, s"row $eid renumbered: $rid -> ${post(eid)}") }
+    assert(sorted(TxLog.snapshot(s, t)) == expected)
+  }
+
   test("vacuum reclaims expired change-data files, keeps the retained feed intact") {
     val s = spark
     import java.nio.file.{Files => F, Paths => P}
