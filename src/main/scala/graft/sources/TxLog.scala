@@ -1212,7 +1212,7 @@ object TxLog {
   private def rewriteWhere(spark: SparkSession, dir: String,
       prune: Seq[(String, Any, Any)],
       replace: DataFrame => DataFrame,
-      changeRows: Option[DataFrame => DataFrame] = None,
+      changeRows: DataFrame => DataFrame,
       keepOnly: Option[Set[String]] = None): RewriteResult = {
     val table = Paths.get(dir)
     val base = currentVersion(dir).getOrElse(
@@ -1234,22 +1234,23 @@ object TxLog {
     if (tracked && matCol.isEmpty)
       sys.error(s"$dir: row tracking on but no materialized row-id " +
         "column name configured")
+    // the candidates read typed by the table schema, as snapshots do: a
+    // file older than a column reads it null (or its EXISTS_DEFAULT),
+    // so the rewrite cannot drop the column from the table
     val src = matCol match {
       case Some(c) => relsWithRowIds(spark, dir, base, cands)
         .withColumnRenamed("_row_id", c)
       case None => readRels(spark, table, cands,
-        dvs = baseM.dvs)
+        DeltaLog.mirroredSchemaAt(spark, table, base - 1), dvs = baseM.dvs)
     }
     val replaced = replace(src)
-    // change-data records for CDF-enabled copy-on-write DML: the
-    // DELETE/UPDATE wrappers know their per-row changes (pred + set);
-    // closure-generic rewrites (MERGE, RESTORE) pass None and their
-    // versions refuse a later tableChanges read rather than guess.
+    // change-data records for CDF-enabled copy-on-write DML: every
+    // caller (DELETE, UPDATE, MERGE) knows its typed per-row changes.
     // Change rows are TABLE rows — the hidden id column stays out.
     val cdcRels =
-      if (changeRows.isEmpty || !cdfEnabled(table)) Seq.empty
+      if (!cdfEnabled(table)) Seq.empty
       else writeCdcFiles(
-        changeRows.get(matCol.foldLeft(src)(_.drop(_))), table)
+        changeRows(matCol.foldLeft(src)(_.drop(_))), table)
     // rewritten rows are WRITES: generated columns RECOMPUTE from their
     // expressions (an update touching the base column must move the
     // derived one with it — and can never smuggle a divergent value),
@@ -1281,8 +1282,8 @@ object TxLog {
   def deleteWhere(spark: SparkSession, dir: String, pred: Column,
       prune: Seq[(String, Any, Any)] = Seq.empty): RewriteResult =
     rewriteWhere(spark, dir, prune, _.filter(coalesce(!pred, lit(true))),
-      changeRows = Some(_.filter(pred)
-        .withColumn("_change_type", lit("delete"))))
+      changeRows = _.filter(pred)
+        .withColumn("_change_type", lit("delete")))
 
   /** Merge-on-read core shared by the deletion-vector DELETE, UPDATE
     * and MERGE — the twin of the copy-on-write [[rewriteWhere]], and
@@ -1292,9 +1293,13 @@ object TxLog {
     *
     * Shape: prune the live files to [[candidates]] under `prune`; hide
     * the rows `mark` selects from the candidate scan with DV bitmaps on
-    * their files ([[dvDescriptorUpdatesBy]]); append `rows` — the new
-    * row versions, computed from the VISIBLE candidate rows (existing
-    * DVs applied) — as one batch, validated and generated-column
+    * their files ([[dvDescriptorUpdatesBy]]; with `applyOldDvs`,
+    * evaluated once the table's metadata is warm, the marking scan
+    * first drops rows existing DVs hide — a caller that re-emits its
+    * matches as new rows or change records must pass true, or a dead
+    * row would resurrect); append the `updated` row versions and the
+    * `inserts`, both computed from the VISIBLE candidate rows (existing
+    * DVs applied), as one batch, validated and generated-column
     * completed like any write; commit both in one serializable version
     * ([[commitDv]], `#op op`), mirrored as the spec's remove(old DV) /
     * add(same path, new DV) pairs plus the batch's adds. Under
@@ -1302,9 +1307,11 @@ object TxLog {
     * `changes(visible, appended)` as change-data files, `appended`
     * being the committed batch read back (postimages carry their
     * recomputed generated columns). When nothing is hidden the commit
-    * degenerates to a plain append of `rows`, and to no commit at all
-    * when they are empty. `visible` is passed by name: an operation
-    * that appends nothing and records nothing never builds that scan.
+    * degenerates to a plain append of the `inserts` (through
+    * [[commitAppend]], so an omitted identity column is assigned), and
+    * to no commit at all when there are none. `visible` is passed by
+    * name: an operation that appends nothing and records nothing never
+    * builds that scan.
     *
     * Gated on `delta.enableDeletionVectors=true` (stock Delta's writer
     * gate); the mirror commit upgrades the protocol to reader 3 /
@@ -1318,7 +1325,9 @@ object TxLog {
     */
   private def markWhere(spark: SparkSession, dir: String, op: String,
       prune: Seq[(String, Any, Any)], mark: DataFrame => DataFrame,
-      rows: (=> DataFrame) => Option[DataFrame],
+      applyOldDvs: => Boolean,
+      updated: (=> DataFrame) => Option[DataFrame],
+      inserts: (=> DataFrame) => Option[DataFrame],
       changes: (DataFrame, Option[DataFrame]) => DataFrame): RewriteResult = {
     val table = Paths.get(dir)
     DeltaLog.warmMetaCache(spark, table)
@@ -1335,30 +1344,33 @@ object TxLog {
     lazy val tableSchema = DeltaLog.currentSchemaString(table).getOrElse(
       sys.error(s"$dir: no mirrored metaData for a DV commit"))
     lazy val visible =
-      if (cands.nonEmpty) readRels(spark, table, cands, dvs = baseM.dvs)
+      if (cands.nonEmpty) readRels(spark, table, cands,
+        DeltaLog.mirroredSchemaAt(spark, table, base - 1), dvs = baseM.dvs)
       else spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](),
         org.apache.spark.sql.types.DataType.fromJson(tableSchema)
           .asInstanceOf[org.apache.spark.sql.types.StructType])
-    val batch = rows(visible)
+    val (newRows, insRows) = (updated(visible), inserts(visible))
     val cdf = cdfEnabled(table)
-    // rows re-emitted as new versions or change records must be exactly
-    // the VISIBLE matches (a raw re-match would resurrect a deleted row
-    // as an "update"), so the marking scan applies existing DVs first;
-    // a DELETE without CDF keeps the cheaper raw scan, whose re-matches
-    // the bitmap union absorbs
     val updates =
       if (cands.isEmpty) Map.empty[String, String]
       else dvDescriptorUpdatesBy(spark, table, dir, cands, mark, baseM.dvs,
-        applyOldDvs = cdf || op != "DELETE")
+        applyOldDvs)
     val partCols = baseM.files.headOption.map(pathPartCols).getOrElse(Seq.empty)
     if (updates.isEmpty) {
-      // nothing hidden: the batch, if any, is pure inserts
-      val appended = batch.filter(!_.isEmpty).map(commitAppend(_, dir, partCols))
+      // nothing hidden, so nothing updated: the inserts, if any, append
+      // as a plain batch (identity assigned, governed columns completed)
+      val appended = insRows.filter(!_.isEmpty)
+        .map(commitAppend(_, dir, partCols))
       return RewriteResult(appended.getOrElse(base), 0L,
         (if (cands.isEmpty) baseM.files.size else skipped.size).toLong)
     }
+    // the batch keeps the table's columns: one the inserts omit (an
+    // identity column) lands null, as in the copy-on-write core
+    val batch = (newRows ++ insRows)
+      .reduceOption(_.unionByName(_, allowMissingColumns = true))
     val replacement = batch.map(b => validateAndComplete(
-      generatedColumnNames(dir).foldLeft(b)(_.drop(_)), dir))
+      generatedColumnNames(dir).foldLeft(fillToTarget(b, visible.schema))(
+        _.drop(_)), dir))
     val added = replacement.map(writeBatch(_, table, partCols))
       .getOrElse(Seq.empty)
     val cdcRels =
@@ -1384,7 +1396,10 @@ object TxLog {
     */
   def deleteWhereDv(spark: SparkSession, dir: String, pred: Column,
       prune: Seq[(String, Any, Any)] = Seq.empty): RewriteResult =
-    markWhere(spark, dir, "DELETE", prune, _.filter(pred), _ => None,
+    // without CDF nothing re-emits the matches, so the marking scan
+    // skips existing DVs: the bitmap union absorbs a dead row's re-match
+    markWhere(spark, dir, "DELETE", prune, _.filter(pred),
+      applyOldDvs = cdfEnabled(Paths.get(dir)), _ => None, _ => None,
       (visible, _) => visible.filter(pred)
         .withColumn("_change_type", lit("delete")))
 
@@ -1399,7 +1414,7 @@ object TxLog {
     * metadata columns do not survive a join — and `mark` must preserve
     * them (filters and joins that keep the target's columns do). With
     * `applyOldDvs` the scan first hides rows existing DVs already
-    * delete ([[markWhere]] says when). */
+    * delete. */
   private def dvDescriptorUpdatesBy(spark: SparkSession, table: Path,
       dir: String, candidates: Seq[String], mark: DataFrame => DataFrame,
       oldDvs: Map[String, String],
@@ -1528,7 +1543,7 @@ object TxLog {
             .otherwise(col(f.name)).as(f.name))
           .getOrElse(col(f.name))
       }: _*)
-    }, changeRows = Some { df =>
+    }, changeRows = { df =>
       val hit = df.filter(coalesce(pred, lit(false)))
       hit.withColumn("_change_type", lit("update_preimage"))
         .unionByName(hit.select(hit.schema.fields.toSeq.map { f =>
@@ -1553,7 +1568,8 @@ object TxLog {
   def updateWhereDv(spark: SparkSession, dir: String, pred: Column,
       set: Map[String, Column],
       prune: Seq[(String, Any, Any)] = Seq.empty): RewriteResult =
-    markWhere(spark, dir, "UPDATE", prune, _.filter(pred), { visible =>
+    markWhere(spark, dir, "UPDATE", prune, _.filter(pred),
+      applyOldDvs = true, updated = { visible =>
       val hit = visible.filter(pred)
       val bad = set.keySet -- hit.columns.toSet
       require(bad.isEmpty,
@@ -1562,7 +1578,7 @@ object TxLog {
         set.get(f.name).map(_.cast(f.dataType).as(f.name))
           .getOrElse(col(f.name))
       }: _*))
-    }, (visible, appended) =>
+    }, inserts = _ => None, changes = (visible, appended) =>
       (visible.filter(pred).withColumn("_change_type", lit("update_preimage"))
         +: appended.toSeq.map(_.withColumn("_change_type",
           lit("update_postimage"))))
@@ -1580,13 +1596,17 @@ object TxLog {
     * [[upsert]] clause list through [[mergeIntoClauses]]. A target row
     * sharing `keys` with a source row takes every source column's
     * value; target-only columns keep theirs (stock `updateAll`), and a
-    * source column the table lacks fails ("unknown SET column"). An
-    * unmatched source row inserts, its target-only columns null;
-    * NULL-keyed source rows never match and always insert. At most one
-    * source row per non-null key (stock MERGE's multiple-match rule).
-    * On a row-tracked table updated rows keep their row ids. Under
-    * CDF the commit writes `update_preimage` / `update_postimage` /
-    * `insert` change-data files.
+    * source column the table lacks fails ("unknown SET column"). Every
+    * target row sharing a source key is updated: target rows with
+    * duplicate keys stay duplicates. An unmatched source row inserts
+    * (stock `insertAll`): a target-only column takes its DEFAULT, else
+    * null, and generated columns compute; an identity column is
+    * assigned when the merge is a pure append, and null inside a
+    * rewrite. NULL-keyed source rows never match and always insert. At
+    * most one source row per non-null key (stock MERGE's
+    * multiple-match rule). On a row-tracked table updated rows keep
+    * their row ids. Under CDF the commit writes `update_preimage` /
+    * `update_postimage` / `insert` change-data files.
     */
   def mergeInto(spark: SparkSession, dir: String, source: DataFrame,
       keys: Seq[String]): RewriteResult =
@@ -1628,7 +1648,8 @@ object TxLog {
   final case class MatchedDelete(condition: Option[Column] = None)
       extends MergeClause
   /** `WHEN NOT MATCHED [AND condition] THEN INSERT` — the whole source
-    * row, target-only columns null. */
+    * row; a target-only column takes its DEFAULT, else null, and
+    * generated columns compute ([[fillToTableSchema]]). */
   final case class NotMatchedInsert(condition: Option[Column] = None)
       extends MergeClause
   /** `WHEN NOT MATCHED BY SOURCE [AND condition] THEN UPDATE SET …` —
@@ -1670,26 +1691,34 @@ object TxLog {
         "matches; aggregate or dedupe the source first")
   }
 
-  /** Null-fill TARGET-only columns on a source-shaped insert frame —
-    * stock MERGE's INSERT contract (columns the source does not carry
-    * become null, typed by the table). Source-only columns pass
-    * through untouched (they widen the table exactly as a plain
-    * append would). */
+  /** Null-fill the columns of `target` that `df` lacks, typed by
+    * `target`. */
   private def fillToTarget(df: DataFrame,
       target: org.apache.spark.sql.types.StructType): DataFrame =
     target.fields.filterNot(f => df.columns.contains(f.name))
       .foldLeft(df)((d, f) =>
         d.withColumn(f.name, lit(null).cast(f.dataType)))
 
-  /** [[fillToTarget]] against the table's CURRENT mirrored schema — for
-    * the degenerate insert-only appends, where a narrow source batch
-    * must not REGRESS the mirrored schemaString (metaData re-emission
-    * follows the committed batch's shape). */
+  /** Stock MERGE's INSERT contract on a source-shaped insert frame,
+    * against the table's CURRENT mirrored schema: a table column the
+    * source does not carry takes its CURRENT_DEFAULT, else null.
+    * Omitted GENERATED and IDENTITY columns stay omitted — the write
+    * computes them ([[validateAndComplete]]; [[assignIdentity]] on an
+    * append). Source-only columns pass through untouched (they widen
+    * the table exactly as a plain append would). A narrow batch so
+    * completed cannot REGRESS the mirrored schemaString (metaData
+    * re-emission follows the committed batch's shape). */
   private def fillToTableSchema(dir: String, df: DataFrame): DataFrame =
-    DeltaLog.currentSchemaString(Paths.get(dir))
-      .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-      .map(fillToTarget(df, _)).getOrElse(df)
+    DeltaLog.currentSchemaString(Paths.get(dir)).toSeq
+      .flatMap(j => org.apache.spark.sql.types.DataType.fromJson(j)
+        .asInstanceOf[org.apache.spark.sql.types.StructType].fields)
+      .filterNot(f => df.columns.contains(f.name) ||
+        f.metadata.contains("delta.generationExpression") ||
+        f.metadata.contains("delta.identity.start"))
+      .foldLeft(df)((d, f) => d.withColumn(f.name,
+        (if (f.metadata.contains("CURRENT_DEFAULT"))
+          expr(f.metadata.getString("CURRENT_DEFAULT"))
+        else lit(null)).cast(f.dataType)))
 
   /** Split + validate a clause list into its three families — matched
     * (UPDATE/DELETE), not-matched (INSERT), not-matched-BY-SOURCE
@@ -1775,11 +1804,25 @@ object TxLog {
 
   /** A clause list resolved against the merge keys: what both clause
     * merges evaluate over target rows `t` and the source `s`.
-    * Construction validates the keys and the clauses' reachability. */
+    * Construction validates the keys, the clauses' reachability and
+    * the SET columns against the table schema. */
   private final class ClauseMerge(source: DataFrame, keys: Seq[String],
-      clauses: Seq[MergeClause], what: String) {
+      clauses: Seq[MergeClause], what: String, dir: String) {
     require(keys.nonEmpty, s"$what: at least one key column")
     val (matched, inserts, bySource) = splitClauses(clauses, what)
+    // a SET column the table lacks fails up front, whichever files the
+    // key envelope prunes
+    DeltaLog.warmMetaCache(source.sparkSession, Paths.get(dir))
+    DeltaLog.currentSchemaString(Paths.get(dir)).foreach { js =>
+      val columns = org.apache.spark.sql.types.DataType.fromJson(js)
+        .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames.toSet
+      val bad = (matched ++ bySource).collect {
+        case MatchedUpdate(set, _) => set.keySet -- columns
+        case NotMatchedBySourceUpdate(set, _) => set.keySet -- columns
+      }.fold(Set.empty)(_ ++ _)
+      require(bad.isEmpty,
+        s"$what: unknown SET column(s) ${bad.mkString(", ")}")
+    }
     val keyCond: Column =
       keys.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _)
     val idxExpr: Column = matchedIdxExpr(matched)
@@ -1812,15 +1855,6 @@ object TxLog {
         "left_anti")
       .withColumn("__bidx", bIdxExpr)
 
-    def requireKnownSet(columns: Seq[String]): Unit = {
-      val bad = (matched ++ bySource).collect {
-        case MatchedUpdate(set, _) => set.keySet -- columns
-        case NotMatchedBySourceUpdate(set, _) => set.keySet -- columns
-      }.fold(Set.empty)(_ ++ _)
-      require(bad.isEmpty,
-        s"$what: unknown SET column(s) ${bad.mkString(", ")}")
-    }
-
     /** The old images of the rows some DELETE or UPDATE clause accepts
       * (both families), typed `delete` / `update_preimage`. */
     def oldImages(t: DataFrame): Seq[DataFrame] = {
@@ -1847,12 +1881,16 @@ object TxLog {
           "__bidx")).toSeq
     }
 
-    /** Insert-eligible source rows whose key is not in `targetKeys`, in
-      * `t`'s shape — target-only columns null (stock INSERT). */
+    /** Insert-eligible source rows whose key is not in `targetKeys`,
+      * completed as stock INSERT completes them ([[fillToTableSchema]])
+      * and narrowed to `t`'s columns. Omitted generated and identity
+      * columns stay absent: union with `allowMissingColumns`. */
     def insertRows(t: DataFrame, targetKeys: DataFrame): Option[DataFrame] =
-      insCond.map(ic => fillToTarget(source.alias("s").filter(ic)
-        .join(targetKeys, keys, "left_anti"), t.schema)
-        .select(t.columns.toSeq.map(col): _*))
+      insCond.map { ic =>
+        val rows = fillToTableSchema(dir, source.alias("s").filter(ic)
+          .join(targetKeys, keys, "left_anti"))
+        rows.select(t.columns.toSeq.filter(rows.columns.contains).map(col): _*)
+      }
   }
 
   /** Conditional MERGE, COPY-ON-WRITE — stock Delta's full clause
@@ -1895,7 +1933,7 @@ object TxLog {
     * rewritten). */
   def mergeIntoClauses(spark: SparkSession, dir: String, source: DataFrame,
       keys: Seq[String], clauses: Seq[MergeClause]): RewriteResult = {
-    val cm = new ClauseMerge(source, keys, clauses, "mergeIntoClauses")
+    val cm = new ClauseMerge(source, keys, clauses, "mergeIntoClauses", dir)
     import cm.{bySource, matched}
     val base = currentVersion(dir).getOrElse(
       sys.error(s"no committed version in $dir"))
@@ -1948,7 +1986,6 @@ object TxLog {
     def targetKeys(t: DataFrame): DataFrame =
       discovery.map(_._2).getOrElse(t.select(keys.map(col): _*))
     val res = rewriteWhere(spark, dir, prune, { tgt =>
-      cm.requireKnownSet(tgt.columns.toSeq)
       val joined = tgt.alias("t")
         .join(source.withColumn("__m", lit(true)).alias("s"),
           cm.keyCond, "left_outer")
@@ -1962,17 +1999,19 @@ object TxLog {
         .reduceOption(_ || _)
       val survivors = dropCond.fold(joined)(c => joined.filter(!c))
         .select(tgt.schema.fields.toSeq.map(outValue): _*)
-      // on a row-tracked table an inserted row's materialized-id column
-      // is null: it reads a fresh id from the replacement file's span
-      cm.insertRows(tgt, targetKeys(tgt))
-        .fold(survivors)(survivors.unionByName(_))
+      // an inserted row's omitted generated column recomputes with the
+      // rewrite; its identity and, on a row-tracked table, its
+      // materialized-id column are null — it reads a fresh row id from
+      // the replacement file's span
+      cm.insertRows(tgt, targetKeys(tgt)).fold(survivors)(
+        survivors.unionByName(_, allowMissingColumns = true))
     }, keepOnly = discovery.map(_._1),
-    changeRows = Some { df => // df = visible candidate TABLE rows
+    changeRows = { df => // df = visible candidate TABLE rows
       (cm.oldImages(df) ++ cm.newImages(df).map(
           _.withColumn("_change_type", lit("update_postimage"))) ++
         cm.insertRows(df, targetKeys(df)).map(
           _.withColumn("_change_type", lit("insert"))))
-        .reduce(_.unionByName(_))
+        .reduce(_.unionByName(_, allowMissingColumns = true))
     })
     if (res.filesRewritten == 0L) {
       // envelope path: no live file can hold any source key, so every
@@ -2021,7 +2060,7 @@ object TxLog {
     * no row degenerates to a plain append of its inserts. */
   def mergeIntoDvClauses(spark: SparkSession, dir: String, source: DataFrame,
       keys: Seq[String], clauses: Seq[MergeClause]): RewriteResult = {
-    val cm = new ClauseMerge(source, keys, clauses, "mergeIntoDvClauses")
+    val cm = new ClauseMerge(source, keys, clauses, "mergeIntoDvClauses", dir)
     import cm.{bySource, matched}
     // an EMPTY source still drives the by-source family
     if (source.isEmpty && bySource.isEmpty)
@@ -2039,11 +2078,9 @@ object TxLog {
           .map(_.select(col("__f"), col("__p")))
           .reduceOption(_.unionByName(_)).getOrElse(v.limit(0))
       },
-      rows = { visible =>
-        cm.requireKnownSet(visible.columns.toSeq)
-        (cm.newImages(visible) ++ cm.insertRows(visible,
-          visible.select(keys.map(col): _*))).reduceOption(_.unionByName(_))
-      },
+      applyOldDvs = true,
+      updated = cm.newImages(_).reduceOption(_.unionByName(_)),
+      inserts = v => cm.insertRows(v, v.select(keys.map(col): _*)),
       changes = { (visible, appended) =>
         // postimages and inserts read back from the COMMITTED batch, so
         // generated columns carry their recomputed values; an updated
@@ -2748,8 +2785,8 @@ object TxLog {
   /** The [[mergeTable]] history replayed MERGE-ON-READ: same base
     * (events above id 200, 8 range files), same CDC-shaped source
     * (id<=200 inserts + the 201..300 band doubled), but the merge
-    * hides matched rows with DVs and appends the source — no data file
-    * rewritten. The oracle is IDENTICAL to [[mergeQuery]]'s: the two
+    * hides matched rows with DVs and appends their updated versions
+    * with the inserts — no data file rewritten. The oracle is IDENTICAL to [[mergeQuery]]'s: the two
     * merge paths must be row-for-row equivalent. */
   private def dvMergeTable(spark: SparkSession, dir: String): String =
     staged.getOrElseUpdate(s"dvmrg:$dir", {
