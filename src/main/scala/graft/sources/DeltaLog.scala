@@ -2645,8 +2645,8 @@ object DeltaLog {
       filesSkipped: Long, rowsDeleted: Long)
 
   /** Row-level DELETE committed as DELETION VECTORS — the stock-Delta
-    * representation: instead of rewriting files (TxLog's copy-on-write
-    * [[TxLog.deleteWhere]]), each affected file is re-added with a
+    * representation: instead of rewriting files (what [[TxLog.deleteWhere]]
+    * does on a table without DVs), each affected file is re-added with a
     * roaring bitmap of its now-hidden ordinal row indexes. The commit
     * cost is O(deleted rows) of bitmap METADATA plus one log entry —
     * the reason a 100 TB DELETE of a few rows is instant. Mechanics:
@@ -2669,7 +2669,8 @@ object DeltaLog {
     * mirrored tables: their commit point is the `_txlog` manifest (which
     * carries DVs as `#dv` lines), and a Delta-only commit would leave
     * the two logs diverged — mirrored tables delete via
-    * [[TxLog.deleteWhereDv]] or [[TxLog.deleteWhere]]. The table's
+    * [[TxLog.deleteWhere]], which writes deletion vectors when the table
+    * has `delta.enableDeletionVectors=true`. The table's
     * protocol should already advertise the deletionVectors feature
     * (reader 3 / writer 7).
     */
@@ -2677,8 +2678,9 @@ object DeltaLog {
       prune: Seq[(String, Any, Any)] = Seq.empty): DvDeleteResult = {
     val table = Paths.get(dir)
     require(!Files.isDirectory(table.resolve("_txlog")),
-      s"$dir is TxLog-mirrored — use TxLog.deleteWhereDv or TxLog.deleteWhere " +
-        "(its manifest is the commit point)")
+      s"$dir is TxLog-mirrored — use TxLog.deleteWhere, which writes " +
+        "deletion vectors when delta.enableDeletionVectors=true (its " +
+        "manifest is the commit point)")
     // warm from the checkpoint first: on a compacted-prefix table a cold
     // cache would read an EMPTY configuration here and let a DV delete
     // through on an appendOnly table — the silent-ungoverned case

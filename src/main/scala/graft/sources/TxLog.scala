@@ -1004,11 +1004,14 @@ object TxLog {
 
   // ------------------------------------------------ row-level rewrites
 
-  /** Outcome of a row-level rewrite ([[deleteWhere]] / [[updateWhere]] /
-    * [[mergeInto]]): the committed version (unchanged current version
-    * when no file needed rewriting), the number of data files rewritten,
-    * and the number of live files the mirror's stats PROVED untouched —
-    * the copy-on-write I/O bound: O(affected files), never O(table).
+  /** Outcome of a row-level DML ([[deleteWhere]] / [[updateWhere]] /
+    * [[mergeIntoClauses]]): the committed version (unchanged current
+    * version when no row changed), the number of touched data files —
+    * rewritten (copy-on-write) or given a deletion vector
+    * (merge-on-read), 0 for a MERGE that only inserted — and the number
+    * of live files the mirror's stats PROVED untouched, never read: the
+    * DML's I/O bound, O(affected files), never O(table). OPTIMIZE
+    * reports its compaction in the same shape.
     */
   final case class RewriteResult(version: Long, filesRewritten: Long,
       filesSkipped: Long)
@@ -1060,15 +1063,14 @@ object TxLog {
     if (dataChange && removedSet.nonEmpty) enforceAppendOnly(dir, operation)
     // a rewrite REPLACES files, and replacement rows would renumber
     // their stable ids — refuse on row-tracked tables UNLESS the caller
-    // materialized the ids into the replacement files (OPTIMIZE does);
-    // the merge-on-read paths (deleteWhereDv/updateWhereDv) preserve
-    // ids and stay available
+    // materialized the ids into the replacement files (OPTIMIZE and the
+    // copy-on-write DML do); merge-on-read DML moves no file
     if (removedSet.nonEmpty && rowTrackingOn(dir) && matAdded.isEmpty &&
         restoredRids.isEmpty && restoredMat.isEmpty)
       sys.error(s"$dir: $operation rewrites data files on a row-tracked " +
         "table (delta.enableRowTracking=true) — stable row ids would be " +
-        "renumbered; use the merge-on-read paths (deleteWhereDv/" +
-        "updateWhereDv) instead")
+        "renumbered; set delta.enableDeletionVectors=true so DML hides " +
+        "rows instead")
     // row-tracked rewrites never re-base: their id spans are baked in
     val retryable = matAdded.isEmpty && restoredRids.isEmpty &&
       restoredMat.isEmpty && dvOverride.isEmpty
@@ -1189,264 +1191,243 @@ object TxLog {
     (base.files.filterNot(skipped), skipped)
   }
 
-  /** Copy-on-write core shared by DELETE/UPDATE/MERGE: pick the
-    * candidate files (live files the Delta mirror's per-file stats
-    * CANNOT prove unaffected by the `prune` ranges), read only those,
-    * apply `replace`, and commit (previous − candidates) + replacement
-    * in one serializable version. Soundness under mirror lag: only
-    * files the replay explicitly proves no-match are skipped — a
-    * manifest file the mirror does not know yet stays a candidate, and
-    * a missing/unreadable mirror disables pruning entirely (correct,
-    * just un-pruned).
-    *
-    * ROW-TRACKED tables rewrite with their ids MATERIALIZED (the same
-    * move OPTIMIZE makes): the candidate scan attaches each row's
-    * stable id, `replace` carries the hidden column through (filters
-    * and column-wise updates preserve extra columns; a closure that
-    * unions in NEW rows leaves it null — fresh rows read fresh ids
-    * from the replacement file's claimed span via the coalesce rule),
-    * and the replacement files land it under the config-named
-    * materialized column. Survivor identity is preserved value-exactly
-    * through the rewrite.
-    */
-  private def rewriteWhere(spark: SparkSession, dir: String,
-      prune: Seq[(String, Any, Any)],
-      replace: DataFrame => DataFrame,
-      changeRows: DataFrame => DataFrame,
-      keepOnly: Option[Set[String]] = None): RewriteResult = {
-    val table = Paths.get(dir)
-    val base = currentVersion(dir).getOrElse(
-      sys.error(s"no committed version in $dir"))
-    val baseM = readManifest(table, base)
-    val prev = baseM.files
-    val (unpruned, skipped) = candidates(spark, dir, baseM, prune)
-    // `keepOnly`: a caller-supplied TOUCHED-FILE set (positive
-    // discovery, e.g. the by-source merge's join pass) — candidates
-    // narrow to it; the caller owns the proof that excluded files hold
-    // no row its closure would change
-    val cands = keepOnly.fold(unpruned)(unpruned.filter)
-    if (cands.isEmpty)
-      return RewriteResult(base, 0L, prev.size.toLong)
-    val partCols = pathPartCols(cands.head)
-    DeltaLog.warmMetaCache(spark, table)
-    val tracked = rowTrackingOn(dir)
-    val matCol = matRowIdCol(dir).filter(_ => tracked)
-    if (tracked && matCol.isEmpty)
-      sys.error(s"$dir: row tracking on but no materialized row-id " +
-        "column name configured")
-    // the candidates read typed by the table schema, as snapshots do: a
-    // file older than a column reads it null (or its EXISTS_DEFAULT),
-    // so the rewrite cannot drop the column from the table
-    val src = matCol match {
-      case Some(c) => relsWithRowIds(spark, dir, base, cands)
-        .withColumnRenamed("_row_id", c)
-      case None => readRels(spark, table, cands,
-        DeltaLog.mirroredSchemaAt(spark, table, base - 1), dvs = baseM.dvs)
-    }
-    val replaced = replace(src)
-    // change-data records for CDF-enabled copy-on-write DML: every
-    // caller (DELETE, UPDATE, MERGE) knows its typed per-row changes.
-    // Change rows are TABLE rows — the hidden id column stays out.
-    val cdcRels =
-      if (!cdfEnabled(table)) Seq.empty
-      else writeCdcFiles(
-        changeRows(matCol.foldLeft(src)(_.drop(_))), table)
-    // rewritten rows are WRITES: generated columns RECOMPUTE from their
-    // expressions (an update touching the base column must move the
-    // derived one with it — and can never smuggle a divergent value),
-    // and CHECK constraints apply exactly as for an append; the
-    // mirrored schema keeps its field metadata via effectiveSchemaJson
-    val replacement = validateAndComplete(
-      generatedColumnNames(dir).foldLeft(replaced)(_.drop(_)), dir)
-    val added = writeBatch(replacement, table, partCols)
-    // the committed schema stays the TABLE schema — the materialized id
-    // column is file-level, never a table column
-    val v = commitRewrite(dir, base, cands.toSet, added,
-      effectiveSchemaJson(matCol.foldLeft(replacement)(_.drop(_)), dir),
-      cdcRels = cdcRels, matAdded = if (tracked) added.toSet else Set.empty,
-      readPreds = prune, spark = Some(spark))
-    DeltaLog.maybeCheckpoint(spark, dir, v)
-    RewriteResult(v, cands.size.toLong, skipped.size.toLong)
-  }
+  private def dvEnabled(table: Path): Boolean =
+    DeltaLog.tableConfig(table).get("delta.enableDeletionVectors")
+      .contains("true")
 
-  /** Row-level DELETE (copy-on-write): removes rows where `pred` is
-    * TRUE (null-predicate rows survive, the SQL DELETE rule) in one
-    * serializable commit. `prune` is an optional conjunctive set of
-    * inclusive range bounds `(column, lo, hi)` (null bound = unbounded)
-    * that must OVER-APPROXIMATE `pred` — every matching row falls inside
-    * the ranges. The mirror's per-file stats then prove untouched files
-    * skip the rewrite entirely: O(affected files) I/O, the reason a
-    * 100 TB DELETE doesn't rewrite the table. Like Delta, the hint is
-    * trusted: an unsound hint deletes only the matching rows inside it.
-    */
-  def deleteWhere(spark: SparkSession, dir: String, pred: Column,
-      prune: Seq[(String, Any, Any)] = Seq.empty): RewriteResult =
-    rewriteWhere(spark, dir, prune, _.filter(coalesce(!pred, lit(true))),
-      changeRows = _.filter(pred)
-        .withColumn("_change_type", lit("delete")))
-
-  /** Merge-on-read core shared by the deletion-vector DELETE, UPDATE
-    * and MERGE — the twin of the copy-on-write [[rewriteWhere]], and
-    * the reason the DV machinery exists: NO data file is rewritten, so
-    * updating 10 rows of a 1 GB file commits O(changed rows), not the
-    * GB.
-    *
-    * Shape: prune the live files to [[candidates]] under `prune`; hide
-    * the rows `mark` selects from the candidate scan with DV bitmaps on
-    * their files ([[dvDescriptorUpdatesBy]]; with `applyOldDvs`,
-    * evaluated once the table's metadata is warm, the marking scan
-    * first drops rows existing DVs hide — a caller that re-emits its
-    * matches as new rows or change records must pass true, or a dead
-    * row would resurrect); append the `updated` row versions and the
-    * `inserts`, both computed from the VISIBLE candidate rows (existing
-    * DVs applied), as one batch, validated and generated-column
-    * completed like any write; commit both in one serializable version
-    * ([[commitDv]], `#op op`), mirrored as the spec's remove(old DV) /
-    * add(same path, new DV) pairs plus the batch's adds. Under
-    * `delta.enableChangeDataFeed` the commit also writes
-    * `changes(visible, appended)` as change-data files, `appended`
-    * being the committed batch read back (postimages carry their
-    * recomputed generated columns). When nothing is hidden the commit
-    * degenerates to a plain append of the `inserts` (through
-    * [[commitAppend]], so an omitted identity column is assigned), and
-    * to no commit at all when there are none. `visible` is passed by
-    * name: an operation that appends nothing and records nothing never
-    * builds that scan.
-    *
-    * Gated on `delta.enableDeletionVectors=true` (stock Delta's writer
-    * gate); the mirror commit upgrades the protocol to reader 3 /
-    * writer 7 with the `deletionVectors` feature, so foreign readers
-    * that cannot hide the rows refuse the table instead of
-    * resurrecting them. `delta.appendOnly` refuses. Untouched and
-    * DV-hidden rows keep their stable row ids by construction (no file
-    * moves); the appended batch claims fresh spans. A later OPTIMIZE
-    * materializes the deletes (rewrites read DV-filtered) and drops
-    * the DV with the rewritten file.
-    */
-  private def markWhere(spark: SparkSession, dir: String, op: String,
-      prune: Seq[(String, Any, Any)], mark: DataFrame => DataFrame,
-      applyOldDvs: => Boolean,
-      updated: (=> DataFrame) => Option[DataFrame],
-      inserts: (=> DataFrame) => Option[DataFrame],
-      changes: (DataFrame, Option[DataFrame]) => DataFrame): RewriteResult = {
-    val table = Paths.get(dir)
-    DeltaLog.warmMetaCache(spark, table)
-    if (!DeltaLog.tableConfig(table).get("delta.enableDeletionVectors")
-        .contains("true"))
+  /** The `*Dv` names' gate (stock Delta's writer gate): a caller that
+    * asks for deletion vectors fails instead of silently rewriting. */
+  private def requireDvs(spark: SparkSession, dir: String, op: String): Unit = {
+    DeltaLog.warmMetaCache(spark, Paths.get(dir))
+    if (!dvEnabled(Paths.get(dir)))
       sys.error(s"$dir: merge-on-read $op requires the deletionVectors " +
         "feature — setTableProperties(delta.enableDeletionVectors=true) " +
         "first (stock Delta's writer gate)")
-    enforceAppendOnly(dir, op)
+  }
+
+  // the kinds [[dml]]'s `tag` gives each row (`__kind`)
+  private val Keep = "keep"
+  private val Upd = "update"
+  private val Del = "delete"
+  private val Ins = "insert"
+  private val Provenance = Set("__file", "__pos")
+
+  /** The visible rows of the candidate files `cands` at `base`, read once
+    * for a DML: typed by the table schema (a file older than a column
+    * reads it null, or its EXISTS_DEFAULT), the deletion vectors `dvs`
+    * applied (a row-tracked read applies the version's own), each
+    * row carrying its file (`__file`, normalized absolute path) and
+    * physical row index (`__pos`). `matCol` attaches the stable row id
+    * under that name (a row-tracked rewrite materializes it). */
+  private def visibleRows(spark: SparkSession, dir: String, base: Long,
+      dvs: Map[String, String], cands: Seq[String],
+      matCol: Option[String]): DataFrame = {
+    import org.apache.spark.sql.types._
+    val table = Paths.get(dir)
+    if (cands.isEmpty) {
+      val schema = DataType.fromJson(DeltaLog.currentSchemaString(table)
+        .getOrElse(sys.error(s"$dir: no mirrored schema for a DML")))
+        .asInstanceOf[StructType]
+      (matCol.map(_ -> LongType).toSeq ++ Seq("__file" -> StringType,
+          "__pos" -> LongType))
+        .foldLeft(spark.createDataFrame(
+          java.util.List.of[org.apache.spark.sql.Row](), schema)) {
+          case (d, (c, t)) => d.withColumn(c, lit(null).cast(t)) }
+    } else matCol match {
+      case Some(c) => relsWithRowIds(spark, dir, base, cands, provenance = true)
+        .withColumnRenamed("_row_id", c)
+      case None => readRels(spark, table, cands,
+        DeltaLog.mirroredSchemaAt(spark, table, base - 1), dvs = dvs,
+        provenance = true)
+    }
+  }
+
+  /** `t` tagged for [[dml]]: `kind` as `__kind`, and as `__new` each
+    * row's new image, `image(f)` being the new value of scanned column
+    * `f`. */
+  private def tagRows(t: DataFrame, kind: Column,
+      image: org.apache.spark.sql.types.StructField => Column): DataFrame =
+    t.withColumn("__kind", kind).withColumn("__new", struct(
+      t.schema.fields.toSeq.filterNot(f => Provenance(f.name))
+        .map(f => image(f).as(f.name)): _*))
+
+  /** The one row-level DML core: DELETE, UPDATE and MERGE all run here,
+    * and the table's `delta.enableDeletionVectors` picks how the changed
+    * rows land. True: MERGE-ON-READ — DV bitmaps hide the old rows
+    * ([[dvDescriptorUpdates]]) and no data file is rewritten, so
+    * updating 10 rows of a 1 GB file commits O(changed rows). Otherwise
+    * COPY-ON-WRITE — every touched file is replaced by its surviving and
+    * updated rows in one serializable version ([[commitRewrite]]).
+    *
+    * The candidates are the live files the Delta mirror's per-file
+    * stats cannot prove outside the `prune` ranges ([[candidates]]; a
+    * file the mirror does not know yet stays a candidate, and a missing
+    * mirror disables pruning). Their visible rows are read ONCE
+    * ([[visibleRows]]), and `tag` labels each: `__kind` keep / update /
+    * delete / insert (a row tagged null is dropped), `__new` its new
+    * image, a struct of the scanned columns, and for a MERGE `__ins`, an
+    * inserted row as stock INSERT completes it. `tag`'s flag says
+    * whether the writer needs the untouched rows (a rewrite copies
+    * them). The tagged frame is persisted and released before return;
+    * everything else is a projection of it:
+    *  - the TOUCHED files, those holding an updated or deleted row — a
+    *    rewrite replaces exactly those, merge-on-read marks their rows;
+    *  - the written batch: the updated rows' new images, the inserts
+    *    (identity assigned, generated columns computed, CHECK
+    *    constraints applied, as for any write) and, for a rewrite, the
+    *    untouched rows of the touched files;
+    *  - under `delta.enableChangeDataFeed`, the change-data files: old
+    *    images typed `delete` / `update_preimage`, the batch's new
+    *    images `update_postimage` / `insert`.
+    * When no file is touched the inserts, if any, commit as a plain
+    * append; with nothing changed no version is committed.
+    * `delta.appendOnly` refuses a DML that touches a file.
+    *
+    * ROW-TRACKED tables keep their stable ids: merge-on-read moves no
+    * file, and a rewrite carries each row's id in the hidden
+    * materialized-id column, which an inserted row leaves null (it reads
+    * a fresh id from its replacement file's span). The merge-on-read
+    * commit upgrades the mirror's protocol to reader 3 / writer 7 with
+    * the `deletionVectors` feature, so foreign readers that cannot hide
+    * rows refuse the table; a later OPTIMIZE materializes the deletes.
+    */
+  private def dml(spark: SparkSession, dir: String, op: String,
+      prune: Seq[(String, Any, Any)],
+      tag: (DataFrame, Boolean) => DataFrame): RewriteResult = {
+    val table = Paths.get(dir)
+    DeltaLog.warmMetaCache(spark, table)
+    val mor = dvEnabled(table)
     val base = currentVersion(dir).getOrElse(
       sys.error(s"no committed version in $dir"))
     val baseM = readManifest(table, base)
     val (cands, skipped) = candidates(spark, dir, baseM, prune)
-    lazy val tableSchema = DeltaLog.currentSchemaString(table).getOrElse(
-      sys.error(s"$dir: no mirrored metaData for a DV commit"))
-    lazy val visible =
-      if (cands.nonEmpty) readRels(spark, table, cands,
-        DeltaLog.mirroredSchemaAt(spark, table, base - 1), dvs = baseM.dvs)
-      else spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.DataType.fromJson(tableSchema)
-          .asInstanceOf[org.apache.spark.sql.types.StructType])
-    val (newRows, insRows) = (updated(visible), inserts(visible))
-    val cdf = cdfEnabled(table)
-    val updates =
-      if (cands.isEmpty) Map.empty[String, String]
-      else dvDescriptorUpdatesBy(spark, table, dir, cands, mark, baseM.dvs,
-        applyOldDvs)
-    val partCols = baseM.files.headOption.map(pathPartCols).getOrElse(Seq.empty)
-    if (updates.isEmpty) {
-      // nothing hidden, so nothing updated: the inserts, if any, append
-      // as a plain batch (identity assigned, governed columns completed)
-      val appended = insRows.filter(!_.isEmpty)
-        .map(commitAppend(_, dir, partCols))
-      return RewriteResult(appended.getOrElse(base), 0L,
-        (if (cands.isEmpty) baseM.files.size else skipped.size).toLong)
-    }
-    // the batch keeps the table's columns: one the inserts omit (an
-    // identity column) lands null, as in the copy-on-write core
-    val batch = (newRows ++ insRows)
-      .reduceOption(_.unionByName(_, allowMissingColumns = true))
-    val replacement = batch.map(b => validateAndComplete(
-      generatedColumnNames(dir).foldLeft(fillToTarget(b, visible.schema))(
-        _.drop(_)), dir))
-    val added = replacement.map(writeBatch(_, table, partCols))
-      .getOrElse(Seq.empty)
-    val cdcRels =
-      if (!cdf) Seq.empty
-      else writeCdcFiles(changes(visible,
-        Option.when(added.nonEmpty)(readRels(spark, table, added))), table)
-    val v = commitDv(dir, base, updates,
-      replacement.fold(tableSchema)(effectiveSchemaJson(_, dir)),
-      added = added, operation = op, cdcRels = cdcRels)
-    DeltaLog.maybeCheckpoint(spark, dir, v)
-    RewriteResult(v, updates.size.toLong, skipped.size.toLong)
+    val matCol =
+      if (mor || !rowTrackingOn(dir)) None
+      else Some(matRowIdCol(dir).getOrElse(sys.error(s"$dir: row " +
+        "tracking on but no materialized row-id column name configured")))
+    // a merge-on-read DELETE without CDF re-emits none of its rows, so
+    // its scan skips the existing DVs: the bitmap union absorbs a dead
+    // row's re-match
+    val scan = visibleRows(spark, dir, base,
+      if (mor && op == "DELETE" && !cdfEnabled(table)) Map.empty else baseM.dvs,
+      cands, matCol)
+    val tableCols = scan.columns.toSeq.filterNot(c => Provenance(c) ||
+      matCol.contains(c))
+    val kind = col("__kind")
+    val tagged = tag(scan, !mor).filter(kind.isNotNull)
+    val rows = (if (mor) tagged.filter(kind =!= Keep) else tagged).persist()
+    try {
+      val changed = rows.filter(kind =!= Keep).groupBy(kind, col("__file"))
+        .count().collect().toSeq.map(r => (r.getString(0), r.getString(1)))
+      val relOf = cands.map(rel =>
+        table.resolve(rel).toAbsolutePath.toString -> rel).toMap
+      val touchedAbs = changed.collect { case (k, f) if k != Ins => f }.distinct
+      val touched = touchedAbs.map(f => relOf.getOrElse(f,
+        sys.error(s"$dir: scanned file $f missing from the manifest"))).toSet
+      val inserts = changed.exists(_._1 == Ins)
+      val partCols = baseM.files.headOption.map(pathPartCols)
+        .getOrElse(Seq.empty)
+      // no row hidden or replaced: the inserts, if any, are a plain append
+      if (touched.isEmpty)
+        return RewriteResult(if (!inserts) base else commitAppend(
+          rows.filter(kind === Ins).select(col("__ins.*")), dir, partCols),
+          0L, skipped.size.toLong)
+      enforceAppendOnly(dir, op)
+      // the rows the commit writes: new images of updated rows plus, for a
+      // rewrite, the untouched rows of the touched files — and the inserts
+      val writes = !mor || changed.exists(c => c._1 == Upd || c._1 == Ins)
+      val copied =
+        if (mor) kind === Upd
+        else kind === Upd || (kind === Keep && col("__file").isin(touchedAbs: _*))
+      val (inserted, hwm) =
+        if (!inserts) (None, None)
+        else {
+          val (df, h) = assignIdentity(rows.filter(kind === Ins)
+            .select(col("__ins.*"), lit("insert").as("_change_type")), dir)
+          (Some(df), h)
+        }
+      // generated columns recompute on every written row: an update of
+      // the base column moves the derived one, and no divergent value
+      // can be smuggled in
+      val batch = Option.when(writes) {
+        val images = rows.filter(copied).select(col("__new.*"),
+          when(kind === Upd, lit("update_postimage")).as("_change_type"))
+        validateAndComplete(generatedColumnNames(dir).foldLeft(inserted.fold(
+          images)(images.unionByName(_, allowMissingColumns = true)))(
+          _.drop(_)), dir)
+      }
+      val data = batch.map(b => alignToMirror(b.drop("_change_type"), dir))
+      val added = data.map(writeBatch(_, table, partCols)).getOrElse(Seq.empty)
+      // the committed schema stays the TABLE schema — the materialized id
+      // column is file-level, never a table column
+      val sj = data.fold(DeltaLog.currentSchemaString(table).getOrElse(
+          sys.error(s"$dir: no mirrored metaData for a DML commit"))) { d =>
+        hwm.foldLeft(effectiveSchemaJson(matCol.foldLeft(d)(_.drop(_)), dir)) {
+          case (js, (n, h)) => withIdentityHwm(js, n, h) }
+      }
+      val cdcRels =
+        if (!cdfEnabled(table)) Seq.empty
+        else {
+          val oldImages = rows.filter(kind === Upd || kind === Del)
+            .select(tableCols.map(col) :+ when(kind === Del, lit("delete"))
+              .otherwise(lit("update_preimage")).as("_change_type"): _*)
+          writeCdcFiles(batch.fold(oldImages)(b => oldImages.unionByName(
+            matCol.foldLeft(b.filter(col("_change_type").isNotNull))(
+              _.drop(_)), allowMissingColumns = true)), table)
+        }
+      val v =
+        if (mor) commitDv(dir, base, dvDescriptorUpdates(spark, table, dir,
+            rows.filter(kind === Upd || kind === Del)
+              .select(col("__file"), col("__pos")), relOf, baseM.dvs),
+          sj, added = added, operation = op, cdcRels = cdcRels)
+        else commitRewrite(dir, base, touched, added, sj, operation = op,
+          cdcRels = cdcRels, matAdded = if (matCol.isEmpty) Set.empty
+            else added.toSet, readPreds = prune, spark = Some(spark))
+      DeltaLog.maybeCheckpoint(spark, dir, v)
+      RewriteResult(v, touched.size.toLong, skipped.size.toLong)
+    } finally rows.unpersist()
   }
 
-  /** Row-level DELETE, MERGE-ON-READ (Delta deletion vectors): the
-    * matched rows' ordinal indexes are roaring-serialized into DV
-    * files and the commit records `#dv` descriptors through
-    * [[markWhere]] — no data file is rewritten, no row appended.
-    * Semantics and `prune` as [[deleteWhere]]: null-predicate rows
-    * survive, dataChange=true. Gates as [[markWhere]]. The added-files
-    * [[changesBetween]] cannot express a DV delete and refuses across
-    * one; [[changeFeed]] synthesizes its `delete` rows from the DV
-    * diff, and under CDF the commit writes them as change-data files.
+  /** Row-level DELETE: removes the rows where `pred` is TRUE
+    * (null-predicate rows survive, the SQL DELETE rule) in one
+    * serializable commit through [[dml]] — deletion vectors when the
+    * table has `delta.enableDeletionVectors=true`, a rewrite of the
+    * touched files otherwise. `prune` is an optional conjunctive set of
+    * inclusive range bounds `(column, lo, hi)` (null bound = unbounded)
+    * that must OVER-APPROXIMATE `pred` — every matching row falls inside
+    * the ranges. The mirror's per-file stats then prove untouched files
+    * skip the DML entirely: O(affected files) I/O, the reason a 100 TB
+    * DELETE doesn't read the table. Like Delta, the hint is trusted: an
+    * unsound hint deletes only the matching rows inside it. The
+    * added-files [[changesBetween]] cannot express a DV delete and
+    * refuses across one; [[changeFeed]] synthesizes its `delete` rows
+    * from the DV diff, and under CDF the commit writes them as
+    * change-data files.
     */
-  def deleteWhereDv(spark: SparkSession, dir: String, pred: Column,
+  def deleteWhere(spark: SparkSession, dir: String, pred: Column,
       prune: Seq[(String, Any, Any)] = Seq.empty): RewriteResult =
-    // without CDF nothing re-emits the matches, so the marking scan
-    // skips existing DVs: the bitmap union absorbs a dead row's re-match
-    markWhere(spark, dir, "DELETE", prune, _.filter(pred),
-      applyOldDvs = cdfEnabled(Paths.get(dir)), _ => None, _ => None,
-      (visible, _) => visible.filter(pred)
-        .withColumn("_change_type", lit("delete")))
+    dml(spark, dir, "DELETE", prune, (t, _) => tagRows(t,
+      when(coalesce(pred, lit(false)), lit(Del)).otherwise(lit(Keep)),
+      f => col(f.name)))
 
-  /** The DV-marking step of [[markWhere]]: scan `candidates`, select
-    * the matched rows with `mark` (a filter for DELETE/UPDATE; joins
-    * against the source for MERGE — which a Column predicate cannot
-    * express), roaring-serialize the
-    * matched ordinals per file (executor-side, one DV file per
-    * non-empty partition), union with any superseded bitmap, and
-    * return the per-file descriptor-JSON updates. Provenance columns
-    * `__f`/`__p` are captured from `_metadata` BEFORE `mark` runs —
-    * metadata columns do not survive a join — and `mark` must preserve
-    * them (filters and joins that keep the target's columns do). With
-    * `applyOldDvs` the scan first hides rows existing DVs already
-    * delete. */
-  private def dvDescriptorUpdatesBy(spark: SparkSession, table: Path,
-      dir: String, candidates: Seq[String], mark: DataFrame => DataFrame,
-      oldDvs: Map[String, String],
-      applyOldDvs: Boolean): Map[String, String] = {
-    val relByAbs = candidates
-      .map(rel => table.resolve(rel).toAbsolutePath.toString -> rel).toMap
+  /** [[deleteWhere]] on a table that must write deletion vectors: fails
+    * unless `delta.enableDeletionVectors=true`. */
+  def deleteWhereDv(spark: SparkSession, dir: String, pred: Column,
+      prune: Seq[(String, Any, Any)] = Seq.empty): RewriteResult = {
+    requireDvs(spark, dir, "DELETE"); deleteWhere(spark, dir, pred, prune) }
+
+  /** The DV-marking step of [[dml]]: roaring-serialize the marked
+    * `(__file, __pos)` ordinals per file (executor-side, one DV file per
+    * non-empty partition), union each with its file's superseded bitmap
+    * in `oldDvs`, and return the per-file descriptor-JSON updates keyed
+    * by manifest-relative path (`relOf` maps `__file` to it). */
+  private def dvDescriptorUpdates(spark: SparkSession, table: Path,
+      dir: String, marks: DataFrame, relOf: Map[String, String],
+      oldDvs: Map[String, String]): Map[String, String] = {
     val tableStr = table.toAbsolutePath.toString
-    // matched (file, ordinal) pairs — `_metadata` is selected PER SCAN
-    // (a union does not carry it)
-    val branches: Seq[DataFrame] =
-      if (!candidates.exists(_.split("/").exists(_.contains("="))))
-        Seq(spark.read.parquet(
-          candidates.map(r => table.resolve(r).toString): _*))
-      else candidates.groupBy(_.split("/").head).toSeq.sortBy(_._1)
-        .map { case (batch, fs) =>
-          spark.read.option("basePath", table.resolve(batch).toString)
-            .parquet(fs.map(r => table.resolve(r).toString): _*)
-        }
-    val keep =
-      if (!applyOldDvs || oldDvs.isEmpty) None
-      else Some(DeletionVectors.keepUdf(spark, table, oldDvs))
-    val hits = branches.map { b =>
-      val withProv = b
-        .withColumn("__f", col("_metadata.file_path"))
-        .withColumn("__p", col("_metadata.row_index"))
-      val visible = keep.fold(withProv)(k =>
-        withProv.filter(k(col("__f"), col("__p"))))
-      mark(visible).select(col("__f"), col("__p"))
-    }.reduce(_.unionByName(_))
     import spark.implicits._
-    val descRows: Seq[(String, String, Int, Int, Long)] = hits
-      .repartition(col("__f")).sortWithinPartitions(col("__f"), col("__p"))
+    val descRows: Seq[(String, String, Int, Int, Long)] = marks
+      .repartition(col("__file")).sortWithinPartitions(col("__file"), col("__pos"))
       .as[(String, Long)]
       .mapPartitions { it =>
         if (!it.hasNext) Iterator.empty
@@ -1468,32 +1449,28 @@ object TxLog {
           }
         }
       }.collect().toSeq
-    if (descRows.isEmpty) return Map.empty
-    val updates: Map[String, String] = descRows.map {
-      case (abs, uuid, off, size, card) =>
-        val path = new java.net.URI(abs).getPath
-        val rel = relByAbs.getOrElse(path,
-          sys.error(s"$dir: scanned file $path missing from the manifest"))
-        val fresh = DeletionVectors.Descriptor.u(
-          java.util.UUID.fromString(uuid), off, size, card)
-        val desc = oldDvs.get(rel) match {
-          case None => fresh
-          case Some(oldJson) =>
-            // union with the superseded bitmap: config-scale driver
-            // work proportional to THIS file's hidden rows
-            val merged = (DeletionVectors.parse(DeletionVectors.readBytes(
-                table, DeletionVectors.parseDescriptor(oldJson))).values ++
-              DeletionVectors.parse(DeletionVectors.readBytes(table, fresh))
-                .values).toSeq.distinct
-            val bytes = DeletionVectors.serialize(merged)
-            val uuid = java.util.UUID.randomUUID()
-            val mOff = DeletionVectors.writeDvFile(
-              table.resolve(s"deletion_vector_$uuid.bin"), Seq(bytes)).head
-            DeletionVectors.Descriptor.u(uuid, mOff, bytes.length, merged.size.toLong)
-        }
-        rel -> desc.render
+    descRows.map { case (path, uuid, off, size, card) =>
+      val rel = relOf.getOrElse(path,
+        sys.error(s"$dir: scanned file $path missing from the manifest"))
+      val fresh = DeletionVectors.Descriptor.u(
+        java.util.UUID.fromString(uuid), off, size, card)
+      val desc = oldDvs.get(rel) match {
+        case None => fresh
+        case Some(oldJson) =>
+          // union with the superseded bitmap: config-scale driver
+          // work proportional to THIS file's hidden rows
+          val merged = (DeletionVectors.parse(DeletionVectors.readBytes(
+              table, DeletionVectors.parseDescriptor(oldJson))).values ++
+            DeletionVectors.parse(DeletionVectors.readBytes(table, fresh))
+              .values).toSeq.distinct
+          val bytes = DeletionVectors.serialize(merged)
+          val uuid = java.util.UUID.randomUUID()
+          val mOff = DeletionVectors.writeDvFile(
+            table.resolve(s"deletion_vector_$uuid.bin"), Seq(bytes)).head
+          DeletionVectors.Descriptor.u(uuid, mOff, bytes.length, merged.size.toLong)
+      }
+      rel -> desc.render
     }.toMap
-    updates
   }
 
   /** Conflict-checked commit of a DV delete/update: previous data-file
@@ -1523,66 +1500,37 @@ object TxLog {
     next
   }
 
-  /** Row-level UPDATE (copy-on-write): for rows where `pred` is TRUE,
-    * replaces each column in `set` with its expression (evaluated
-    * against the OLD row, standard UPDATE semantics — assignments never
-    * see each other) cast back to the column's declared type, so the
-    * table schema cannot drift. Same pruning contract as
-    * [[deleteWhere]].
+  /** Row-level UPDATE: for rows where `pred` is TRUE, replaces each
+    * column in `set` with its expression (evaluated against the OLD row,
+    * standard UPDATE semantics — assignments never see each other) cast
+    * back to the column's declared type, so the table schema cannot
+    * drift. One commit through [[dml]]: on a deletion-vector table the
+    * old versions are hidden and the new ones land as one appended batch
+    * (they may move across partitions), otherwise the touched files are
+    * rewritten. Generated columns recompute and CHECK constraints apply
+    * to the new rows. Same pruning contract as [[deleteWhere]]; under
+    * CDF the commit writes `update_preimage` / `update_postimage`
+    * change-data files.
     */
   def updateWhere(spark: SparkSession, dir: String, pred: Column,
       set: Map[String, Column],
       prune: Seq[(String, Any, Any)] = Seq.empty): RewriteResult =
-    rewriteWhere(spark, dir, prune, { df =>
-      val bad = set.keySet -- df.columns.toSet
+    dml(spark, dir, "UPDATE", prune, { (t, _) =>
+      val bad = set.keySet -- t.columns.toSet
       require(bad.isEmpty,
         s"updateWhere: unknown column(s) ${bad.mkString(", ")}")
-      df.select(df.schema.fields.toSeq.map { f =>
-        set.get(f.name)
-          .map(e => when(coalesce(pred, lit(false)), e.cast(f.dataType))
-            .otherwise(col(f.name)).as(f.name))
-          .getOrElse(col(f.name))
-      }: _*)
-    }, changeRows = { df =>
-      val hit = df.filter(coalesce(pred, lit(false)))
-      hit.withColumn("_change_type", lit("update_preimage"))
-        .unionByName(hit.select(hit.schema.fields.toSeq.map { f =>
-          set.get(f.name).map(_.cast(f.dataType).as(f.name))
-            .getOrElse(col(f.name))
-        }: _*).withColumn("_change_type", lit("update_postimage")))
+      val hit = coalesce(pred, lit(false))
+      tagRows(t, when(hit, lit(Upd)).otherwise(lit(Keep)), f =>
+        set.get(f.name).fold(col(f.name))(e =>
+          when(hit, e.cast(f.dataType)).otherwise(col(f.name))))
     })
 
-  /** Row-level UPDATE, MERGE-ON-READ (deletion vectors): the matched
-    * rows' OLD versions are hidden by DV bitmaps on their files and
-    * their NEW versions land in one appended batch, in one commit
-    * through [[markWhere]] (stock Delta's UPDATE under
-    * `delta.enableDeletionVectors`). The new versions are exactly the
-    * VISIBLE matches, assigned as [[updateWhere]] assigns: expressions
-    * evaluate against the OLD row, cast back to the declared type;
-    * generated columns recompute; CHECK constraints apply to the new
-    * rows. Updates may move rows across partitions (the DV hides the
-    * old location, the append lands the new). Under CDF the commit
-    * writes `update_preimage` / `update_postimage` change-data files.
-    * Gates as [[markWhere]].
-    */
+  /** [[updateWhere]] on a table that must write deletion vectors: fails
+    * unless `delta.enableDeletionVectors=true`. */
   def updateWhereDv(spark: SparkSession, dir: String, pred: Column,
       set: Map[String, Column],
-      prune: Seq[(String, Any, Any)] = Seq.empty): RewriteResult =
-    markWhere(spark, dir, "UPDATE", prune, _.filter(pred),
-      applyOldDvs = true, updated = { visible =>
-      val hit = visible.filter(pred)
-      val bad = set.keySet -- hit.columns.toSet
-      require(bad.isEmpty,
-        s"updateWhereDv: unknown column(s) ${bad.mkString(", ")}")
-      Some(hit.select(hit.schema.fields.toSeq.map { f =>
-        set.get(f.name).map(_.cast(f.dataType).as(f.name))
-          .getOrElse(col(f.name))
-      }: _*))
-    }, inserts = _ => None, changes = (visible, appended) =>
-      (visible.filter(pred).withColumn("_change_type", lit("update_preimage"))
-        +: appended.toSeq.map(_.withColumn("_change_type",
-          lit("update_postimage"))))
-        .reduce(_.unionByName(_, allowMissingColumns = true)))
+      prune: Seq[(String, Any, Any)] = Seq.empty): RewriteResult = {
+    requireDvs(spark, dir, "UPDATE"); updateWhere(spark, dir, pred, set, prune) }
 
   /** The whole-row upsert as a clause list — stock Delta's
     * `whenMatched().updateAll().whenNotMatched().insertAll()`: every
@@ -1592,36 +1540,30 @@ object TxLog {
     Seq(MatchedUpdate(source.columns.map(c => c -> col(s"s.$c")).toMap),
       NotMatchedInsert())
 
-  /** Transactional MERGE (whole-row upsert), COPY-ON-WRITE: the
-    * [[upsert]] clause list through [[mergeIntoClauses]]. A target row
-    * sharing `keys` with a source row takes every source column's
-    * value; target-only columns keep theirs (stock `updateAll`), and a
-    * source column the table lacks fails ("unknown SET column"). Every
-    * target row sharing a source key is updated: target rows with
-    * duplicate keys stay duplicates. An unmatched source row inserts
-    * (stock `insertAll`): a target-only column takes its DEFAULT, else
-    * null, and generated columns compute; an identity column is
-    * assigned when the merge is a pure append, and null inside a
-    * rewrite. NULL-keyed source rows never match and always insert. At
-    * most one source row per non-null key (stock MERGE's
-    * multiple-match rule). On a row-tracked table updated rows keep
-    * their row ids. Under CDF the commit writes `update_preimage` /
-    * `update_postimage` / `insert` change-data files.
+  /** Transactional MERGE (whole-row upsert): the [[upsert]] clause list
+    * through [[mergeIntoClauses]]. A target row sharing `keys` with a
+    * source row takes every source column's value; target-only columns
+    * keep theirs (stock `updateAll`), and a source column the table
+    * lacks fails ("unknown SET column"). Every target row sharing a
+    * source key is updated: target rows with duplicate keys stay
+    * duplicates. An unmatched source row inserts (stock `insertAll`): a
+    * target-only column takes its DEFAULT, else null, generated columns
+    * compute and an identity column is assigned. NULL-keyed source rows
+    * never match and always insert. At most one source row per non-null
+    * key (stock MERGE's multiple-match rule). On a row-tracked table
+    * updated rows keep their row ids. Under CDF the commit writes
+    * `update_preimage` / `update_postimage` / `insert` change-data
+    * files.
     */
   def mergeInto(spark: SparkSession, dir: String, source: DataFrame,
       keys: Seq[String]): RewriteResult =
     mergeIntoClauses(spark, dir, source, keys, upsert(source))
 
-  /** Transactional MERGE (whole-row upsert), MERGE-ON-READ: the same
-    * [[upsert]] clause list and semantics as [[mergeInto]], through
-    * [[mergeIntoDvClauses]] — matched rows are hidden by DV bitmaps and
-    * their new versions land with the inserts in one appended batch;
-    * no data file is rewritten. Without CDF a later [[changeFeed]]
-    * across the merge refuses loudly.
-    */
+  /** [[mergeInto]] on a table that must write deletion vectors: fails
+    * unless `delta.enableDeletionVectors=true`. */
   def mergeIntoDv(spark: SparkSession, dir: String, source: DataFrame,
-      keys: Seq[String]): RewriteResult =
-    mergeIntoDvClauses(spark, dir, source, keys, upsert(source))
+      keys: Seq[String]): RewriteResult = {
+    requireDvs(spark, dir, "MERGE"); mergeInto(spark, dir, source, keys) }
 
   // ------------------------------------------------ conditional MERGE
 
@@ -1635,9 +1577,8 @@ object TxLog {
     * Clauses are ordered FIRST-MATCH-WINS within each family; a
     * matched row no matched clause accepts is left unchanged, an
     * unmatched source row no insert clause accepts is dropped.
-    * Conditions must be DETERMINISTIC — the merge evaluates them more
-    * than once (the mark scan and the rewrite scan see the same
-    * immutable files, so determinism makes the passes agree), the same
+    * Conditions must be DETERMINISTIC — the tagged rows they pick are
+    * persisted, and a lost cached block recomputes them — the same
     * requirement stock Delta places on merge conditions. */
   sealed trait MergeClause { def condition: Option[Column] }
   /** `WHEN MATCHED [AND condition] THEN UPDATE SET col = expr, …` —
@@ -1648,8 +1589,8 @@ object TxLog {
   final case class MatchedDelete(condition: Option[Column] = None)
       extends MergeClause
   /** `WHEN NOT MATCHED [AND condition] THEN INSERT` — the whole source
-    * row; a target-only column takes its DEFAULT, else null, and
-    * generated columns compute ([[fillToTableSchema]]). */
+    * row; a target-only column takes its DEFAULT, else null, generated
+    * columns compute and an identity column is assigned. */
   final case class NotMatchedInsert(condition: Option[Column] = None)
       extends MergeClause
   /** `WHEN NOT MATCHED BY SOURCE [AND condition] THEN UPDATE SET …` —
@@ -1664,61 +1605,36 @@ object TxLog {
   final case class NotMatchedBySourceDelete(condition: Option[Column] = None)
       extends MergeClause
 
-  /** Stock Delta MERGE's multiple-match rule, enforced loudly: two
-    * source rows sharing a key would both land in the appended batch
-    * (or replace one target row twice) — fail instead of silently
-    * double-writing. One aggregation over the source — cheap next to
-    * the joins the merge already runs (the source is a CDC batch).
-    * NULL-keyed rows are exempt: under the merge's `===` condition a
-    * null key can never match ANY target row (so it can never
-    * multiple-match — stock Delta accepts them too; they simply route
-    * through the not-matched family). Strictly, stock Delta also
-    * accepts duplicate NON-null keys that happen to match no target
-    * row; this engine refuses those up-front — a double-keyed CDC
-    * batch is a pipeline bug worth failing loudly on, and the eager
-    * check is what keeps the merge itself a single pass. */
-  private def requireUniqueSourceKeys(source: DataFrame, keys: Seq[String],
-      what: String): Unit = {
-    val dup = source
-      .filter(keys.map(k => col(k).isNotNull).reduce(_ && _))
-      .groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("__n")).filter(col("__n") > 1)
-      .limit(1).collect()
-    if (dup.nonEmpty)
+  /** The source pre-pass of a MERGE, one aggregate over the source: its
+    * row count, and its key envelope as prune hints — `(key, min, max)`
+    * per key column: a file whose key range cannot meet it holds no row
+    * the source can match. The same grouping enforces stock Delta
+    * MERGE's multiple-match rule loudly: two source rows sharing a key
+    * would both land in the appended batch (or replace one target row
+    * twice) — fail instead of silently double-writing. NULL-keyed rows
+    * are exempt: under the merge's `===` condition a null key can never
+    * match ANY target row (so it can never multiple-match — stock Delta
+    * accepts them too; they simply route through the not-matched
+    * family). Strictly, stock Delta also accepts duplicate NON-null keys
+    * that happen to match no target row; this engine refuses those
+    * up-front — a double-keyed CDC batch is a pipeline bug worth failing
+    * loudly on. */
+  private def sourceKeys(source: DataFrame, keys: Seq[String],
+      what: String): (Long, Seq[(String, Any, Any)]) = {
+    val keyed = keys.map(k => col(k).isNotNull).reduce(_ && _)
+    val r = source.groupBy(keys.map(col): _*).agg(count(lit(1)).as("__n"))
+      .agg(coalesce(sum(col("__n")), lit(0L)),
+        min(when(keyed && col("__n") > 1, struct(keys.map(col): _*))) +:
+          keys.flatMap(k => Seq(min(col(k)), max(col(k)))): _*)
+      .collect().head
+    if (!r.isNullAt(1))
       sys.error(s"$what: multiple source rows share the merge key (" +
-        keys.zip(dup.head.toSeq).map { case (k, v) => s"$k=$v" }
+        keys.zip(r.getStruct(1).toSeq).map { case (k, v) => s"$k=$v" }
           .mkString(", ") + ") — stock Delta MERGE fails on multiple " +
         "matches; aggregate or dedupe the source first")
+    (r.getLong(0), keys.zipWithIndex.map { case (k, i) =>
+      (k, r.get(2 + 2 * i), r.get(3 + 2 * i)) })
   }
-
-  /** Null-fill the columns of `target` that `df` lacks, typed by
-    * `target`. */
-  private def fillToTarget(df: DataFrame,
-      target: org.apache.spark.sql.types.StructType): DataFrame =
-    target.fields.filterNot(f => df.columns.contains(f.name))
-      .foldLeft(df)((d, f) =>
-        d.withColumn(f.name, lit(null).cast(f.dataType)))
-
-  /** Stock MERGE's INSERT contract on a source-shaped insert frame,
-    * against the table's CURRENT mirrored schema: a table column the
-    * source does not carry takes its CURRENT_DEFAULT, else null.
-    * Omitted GENERATED and IDENTITY columns stay omitted — the write
-    * computes them ([[validateAndComplete]]; [[assignIdentity]] on an
-    * append). Source-only columns pass through untouched (they widen
-    * the table exactly as a plain append would). A narrow batch so
-    * completed cannot REGRESS the mirrored schemaString (metaData
-    * re-emission follows the committed batch's shape). */
-  private def fillToTableSchema(dir: String, df: DataFrame): DataFrame =
-    DeltaLog.currentSchemaString(Paths.get(dir)).toSeq
-      .flatMap(j => org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType].fields)
-      .filterNot(f => df.columns.contains(f.name) ||
-        f.metadata.contains("delta.generationExpression") ||
-        f.metadata.contains("delta.identity.start"))
-      .foldLeft(df)((d, f) => d.withColumn(f.name,
-        (if (f.metadata.contains("CURRENT_DEFAULT"))
-          expr(f.metadata.getString("CURRENT_DEFAULT"))
-        else lit(null)).cast(f.dataType)))
 
   /** Split + validate a clause list into its three families — matched
     * (UPDATE/DELETE), not-matched (INSERT), not-matched-BY-SOURCE
@@ -1774,362 +1690,142 @@ object TxLog {
       .getOrElse(col(s"t.${f.name}"))
   }
 
-  private def clauseIdxs(cls: Seq[MergeClause],
-      deletes: Boolean): Seq[Int] =
-    cls.zipWithIndex.collect {
-      case (_: MatchedDelete, i) if deletes => i
-      case (_: NotMatchedBySourceDelete, i) if deletes => i
-      case (_: MatchedUpdate, i) if !deletes => i
-      case (_: NotMatchedBySourceUpdate, i) if !deletes => i
+  /** The row kind the family's first-match index column `idxCol` picks:
+    * the applied clause's update or delete, keep when none applied. */
+  private def kindOf(clauses: Seq[MergeClause], idxCol: String): Column =
+    clauses.zipWithIndex.foldLeft(lit(Keep)) { case (acc, (c, i)) =>
+      when(col(idxCol) === i, lit(c match {
+        case _: MatchedDelete | _: NotMatchedBySourceDelete => Del
+        case _ => Upd
+      })).otherwise(acc)
     }
 
-  /** OR of the insert-clause conditions (first-match-wins collapses to
-    * OR here — every insert clause inserts the same whole source row);
-    * None when the merge has no `WHEN NOT MATCHED` clause. */
-  private def insertCond(inserts: Seq[NotMatchedInsert]): Option[Column] =
-    inserts.map(c => coalesce(c.condition.getOrElse(lit(true)), lit(false)))
-      .reduceOption(_ || _)
-
-  /** The source's key envelope as prune hints — `(key, min, max)` per
-    * key column, one config-scale aggregate: a file whose key range
-    * cannot meet it holds no row the source can match. */
-  private def keyEnvelope(source: DataFrame,
-      keys: Seq[String]): Seq[(String, Any, Any)] = {
-    val bounds = source.select(keys.flatMap(k =>
-      Seq(min(col(k)).as(s"lo_$k"), max(col(k)).as(s"hi_$k"))): _*)
-      .collect().head
-    keys.zipWithIndex.map { case (k, i) =>
-      (k, bounds.get(2 * i), bounds.get(2 * i + 1)) }
-  }
-
-  /** A clause list resolved against the merge keys: what both clause
-    * merges evaluate over target rows `t` and the source `s`.
-    * Construction validates the keys, the clauses' reachability and
-    * the SET columns against the table schema. */
+  /** A clause list resolved against the merge keys: the MERGE's tag for
+    * [[dml]]. Construction validates the keys, the clauses'
+    * reachability and the SET columns against the table schema. */
   private final class ClauseMerge(source: DataFrame, keys: Seq[String],
       clauses: Seq[MergeClause], what: String, dir: String) {
+    import org.apache.spark.sql.types.{DataType, StructField, StructType}
     require(keys.nonEmpty, s"$what: at least one key column")
     val (matched, inserts, bySource) = splitClauses(clauses, what)
+    DeltaLog.warmMetaCache(source.sparkSession, Paths.get(dir))
+    private val tableFields: Seq[StructField] =
+      DeltaLog.currentSchemaString(Paths.get(dir)).toSeq.flatMap(js =>
+        DataType.fromJson(js).asInstanceOf[StructType].fields)
     // a SET column the table lacks fails up front, whichever files the
     // key envelope prunes
-    DeltaLog.warmMetaCache(source.sparkSession, Paths.get(dir))
-    DeltaLog.currentSchemaString(Paths.get(dir)).foreach { js =>
-      val columns = org.apache.spark.sql.types.DataType.fromJson(js)
-        .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames.toSet
-      val bad = (matched ++ bySource).collect {
-        case MatchedUpdate(set, _) => set.keySet -- columns
-        case NotMatchedBySourceUpdate(set, _) => set.keySet -- columns
-      }.fold(Set.empty)(_ ++ _)
-      require(bad.isEmpty,
-        s"$what: unknown SET column(s) ${bad.mkString(", ")}")
-    }
-    val keyCond: Column =
-      keys.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _)
-    val idxExpr: Column = matchedIdxExpr(matched)
-    val bIdxExpr: Column = matchedIdxExpr(bySource)
-    val insCond: Option[Column] = insertCond(inserts)
+    private val bad = (matched ++ bySource).collect {
+      case MatchedUpdate(set, _) => set.keySet
+      case NotMatchedBySourceUpdate(set, _) => set.keySet
+    }.fold(Set.empty)(_ ++ _) -- tableFields.map(_.name)
+    require(tableFields.isEmpty || bad.isEmpty,
+      s"$what: unknown SET column(s) ${bad.mkString(", ")}")
+    // OR of the insert-clause conditions (first-match-wins collapses to
+    // OR here — every insert clause inserts the same whole source row)
+    private val insCond: Option[Column] = inserts
+      .map(c => coalesce(c.condition.getOrElse(lit(true)), lit(false)))
+      .reduceOption(_ || _)
 
-    /** Rows whose family index names a DELETE (`deletes`) or an UPDATE
-      * clause; None when the family has no such clause. */
-    def matchedIs(deletes: Boolean): Option[Column] =
-      in("__idx", clauseIdxs(matched, deletes))
-    def bySourceIs(deletes: Boolean): Option[Column] =
-      in("__bidx", clauseIdxs(bySource, deletes))
-    private def in(c: String, idxs: Seq[Int]): Option[Column] =
-      Option.when(idxs.nonEmpty)(col(c).isin(idxs.map(Integer.valueOf): _*))
-
-    /** Prune hints: the source key envelope. BY SOURCE clauses can
-      * touch ANY target row, so the envelope proves nothing and
-      * pruning is off (stock Delta rewrites the same span; the clause
-      * CONDITIONS bound the change set, not the scan). */
-    def prune: Seq[(String, Any, Any)] =
-      if (bySource.nonEmpty) Seq.empty else keyEnvelope(source, keys)
-
-    /** Target rows matching a source row, with their matched index. */
-    def matchedRows(t: DataFrame): DataFrame = t.alias("t")
-      .join(source.alias("s"), keyCond, "inner")
-      .withColumn("__idx", idxExpr)
-    /** Target rows matching NO source row, with their by-source index. */
-    def unmatchedRows(t: DataFrame): DataFrame = t.alias("t")
-      .join(source.select(keys.map(col): _*).alias("s"), keyCond,
-        "left_anti")
-      .withColumn("__bidx", bIdxExpr)
-
-    /** The old images of the rows some DELETE or UPDATE clause accepts
-      * (both families), typed `delete` / `update_preimage`. */
-    def oldImages(t: DataFrame): Seq[DataFrame] = {
-      val tCols = t.columns.toSeq.map(c => col(s"t.$c").as(c))
-      def typed(rows: => DataFrame, cond: Option[Column], kind: String) =
-        cond.map(c => rows.filter(c).select(tCols: _*)
-          .withColumn("_change_type", lit(kind)))
-      (typed(matchedRows(t), matchedIs(deletes = true), "delete") ++
-        typed(matchedRows(t), matchedIs(deletes = false), "update_preimage") ++
-        typed(unmatchedRows(t), bySourceIs(deletes = true), "delete") ++
-        typed(unmatchedRows(t), bySourceIs(deletes = false),
-          "update_preimage")).toSeq
-    }
-
-    /** The new versions of the rows some UPDATE clause accepts, in
-      * `t`'s shape. */
-    def newImages(t: DataFrame): Seq[DataFrame] = {
-      def assigned(rows: => DataFrame, cond: Option[Column],
-          cls: Seq[MergeClause], idxCol: String) =
-        cond.map(c => rows.filter(c).select(t.schema.fields.toSeq.map(f =>
-          cascadeValue(f, cls, idxCol).as(f.name)): _*))
-      (assigned(matchedRows(t), matchedIs(deletes = false), matched, "__idx") ++
-        assigned(unmatchedRows(t), bySourceIs(deletes = false), bySource,
-          "__bidx")).toSeq
-    }
-
-    /** Insert-eligible source rows whose key is not in `targetKeys`,
-      * completed as stock INSERT completes them ([[fillToTableSchema]])
-      * and narrowed to `t`'s columns. Omitted generated and identity
-      * columns stay absent: union with `allowMissingColumns`. */
-    def insertRows(t: DataFrame, targetKeys: DataFrame): Option[DataFrame] =
-      insCond.map { ic =>
-        val rows = fillToTableSchema(dir, source.alias("s").filter(ic)
-          .join(targetKeys, keys, "left_anti"))
-        rows.select(t.columns.toSeq.filter(rows.columns.contains).map(col): _*)
+    /** The visible target rows `t` tagged by ONE join against the
+      * source on the keys: a target row with a source match takes the
+      * matched family's first accepting clause, one without takes the
+      * by-source family's, and an unmatched source row the insert
+      * clauses accept is tagged insert. The join keeps only the sides
+      * some row can come from: the target side when the writer needs
+      * untouched rows (`untouched`) or a BY SOURCE clause exists, the
+      * source side when an insert clause does — a full outer join when
+      * both. An inserted row (`__ins`) is the source row completed as
+      * stock INSERT completes it: a table column the source does not
+      * carry takes its CURRENT_DEFAULT, else null, and omitted generated
+      * and identity columns stay omitted — the write computes them.
+      * Source-only columns are dropped. */
+    def tag(t: DataFrame, untouched: Boolean): DataFrame = {
+      val fields = t.schema.fields.toSeq.filterNot(f => Provenance(f.name))
+      val how = (untouched || bySource.nonEmpty, insCond.nonEmpty) match {
+        case (true, true) => "full_outer"
+        case (true, false) => "left_outer"
+        case (false, true) => "right_outer"
+        case (false, false) => "inner"
       }
+      val (inT, inS) = (col("__file").isNotNull, col("__s").isNotNull)
+      val srcCols = source.columns.toSet
+      val ins = tableFields.filter(f => srcCols(f.name) ||
+          !(f.metadata.contains("delta.generationExpression") ||
+            f.metadata.contains("delta.identity.start")))
+        .map(f => (if (srcCols(f.name)) col(s"s.${f.name}")
+          else if (f.metadata.contains("CURRENT_DEFAULT"))
+            expr(f.metadata.getString("CURRENT_DEFAULT"))
+          else lit(null)).cast(f.dataType).as(f.name))
+      t.alias("t")
+        .join(source.withColumn("__s", lit(true)).alias("s"),
+          keys.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _), how)
+        .withColumn("__idx",
+          when(inT && inS, matchedIdxExpr(matched)).otherwise(lit(-1)))
+        .withColumn("__bidx",
+          when(inT && !inS, matchedIdxExpr(bySource)).otherwise(lit(-1)))
+        .select(fields.map(f => col(s"t.${f.name}").as(f.name)) ++ Seq(
+          col("__file"), col("__pos"),
+          when(inT && inS, kindOf(matched, "__idx"))
+            .when(inT, kindOf(bySource, "__bidx"))
+            .otherwise(insCond.fold(lit(null))(c => when(c, lit(Ins))))
+            .as("__kind"),
+          struct(fields.map(f => when(inS, cascadeValue(f, matched, "__idx"))
+            .otherwise(cascadeValue(f, bySource, "__bidx")).as(f.name)): _*)
+            .as("__new"),
+          struct(ins: _*).as("__ins")): _*)
+    }
   }
 
-  /** Conditional MERGE, COPY-ON-WRITE — stock Delta's full clause
-    * model over [[rewriteWhere]]: ordered
+  /** Conditional MERGE — stock Delta's full clause model: ordered
     * `WHEN MATCHED [AND cond] THEN UPDATE SET …/DELETE`,
     * `WHEN NOT MATCHED [AND cond] THEN INSERT`, and
     * `WHEN NOT MATCHED BY SOURCE [AND cond] THEN UPDATE SET …/DELETE`
     * clauses, first-match-wins per family, partial-column updates,
-    * tombstone deletes — the shape every real CDC pipeline applies
-    * (see [[MergeClause]] for the `t`/`s` reference convention).
+    * tombstone deletes — the shape every real CDC pipeline applies (see
+    * [[MergeClause]] for the `t`/`s` reference convention).
+    *
+    * One commit through [[dml]], whose strategy the table's
+    * `delta.enableDeletionVectors` picks: the rows an UPDATE or DELETE
+    * clause accepts are hidden by DV bitmaps, or their TOUCHED files
+    * (those holding such a row — stock Delta's findTouchedFiles) are
+    * rewritten; rows no clause accepts stay as they are. The new
+    * versions and the accepted inserts land as one written batch; a
+    * merge that touches no row is a plain append of its inserts.
     * Candidate files come from the mirror's stats against the source's
-    * key envelope ([[keyEnvelope]]); untouched files are never read or
-    * rewritten. With BY SOURCE clauses the envelope proves
-    * nothing (any target row may be affected), so candidates come from
-    * a TOUCHED-FILE DISCOVERY pass instead — one provenance-tagged
-    * join of the visible rows against the source keeps exactly the
-    * files holding a row some clause accepts (stock Delta's
-    * findTouchedFiles shape); files no clause touches are read once
-    * for discovery but never rewritten. The rewrite is ONE left-outer
-    * join of the visible candidate rows against the (AQE-broadcast)
-    * source: matched rows route through the matched cascade (update /
-    * delete / pass through), unmatched target rows route through the
-    * by-source cascade (pass through when absent), and insert-eligible
-    * unmatched source rows union in. On a row-tracked table updated
-    * and untouched rows KEEP their stable ids (the hidden
-    * materialized-id column rides the join untouched); inserted rows
-    * read fresh ids from the replacement file's claimed span. An EMPTY
-    * source with by-source clauses is a legal full sync (age out every
-    * accepted row).
+    * key envelope ([[sourceKeys]]); with BY SOURCE clauses the envelope
+    * proves nothing and every live file is a candidate. The candidates'
+    * visible rows are read once and tagged by one join against the
+    * source ([[ClauseMerge.tag]]). On a row-tracked table updated and
+    * untouched rows KEEP their stable ids; inserted rows claim fresh
+    * ones. An EMPTY source with by-source clauses is a legal full sync
+    * (age out every accepted row).
     *
     * Under `delta.enableChangeDataFeed` the commit writes per-row-typed
     * change-data files — `delete` for DELETE-clause rows,
     * `update_preimage`/`update_postimage` for UPDATE-clause rows,
     * `insert` for inserted source rows — so [[changeFeed]] and the
-    * mirror's `tableChanges` type the merge exactly.
-    *
-    * Source-key uniqueness is ENFORCED (stock MERGE's multiple-match
-    * rule). A merge with no matched clause degenerates to a
-    * conditional idempotent insert (anti-join append, no file
-    * rewritten). */
+    * mirror's `tableChanges` type the merge exactly; without CDF a later
+    * [[changeFeed]] across a merge-on-read MERGE refuses loudly. Source
+    * keys must be unique ([[sourceKeys]]). */
   def mergeIntoClauses(spark: SparkSession, dir: String, source: DataFrame,
       keys: Seq[String], clauses: Seq[MergeClause]): RewriteResult = {
     val cm = new ClauseMerge(source, keys, clauses, "mergeIntoClauses", dir)
-    import cm.{bySource, matched}
-    val base = currentVersion(dir).getOrElse(
-      sys.error(s"no committed version in $dir"))
+    val (n, envelope) = sourceKeys(source, keys, "mergeIntoClauses")
     // an EMPTY source still drives the by-source family (a full sync
     // against an empty feed ages out every row its conditions accept)
-    if (source.isEmpty && bySource.isEmpty) return RewriteResult(base, 0L, 0L)
-    requireUniqueSourceKeys(source, keys, "mergeIntoClauses")
-    val table = Paths.get(dir)
-    val prune = cm.prune
-    if (matched.isEmpty && bySource.isEmpty)
-      return clauseInsertOnly(spark, dir, source, keys, prune, cm.insCond.get)
-    def outValue(f: org.apache.spark.sql.types.StructField): Column =
-      if (bySource.isEmpty) cascadeValue(f, matched, "__idx").as(f.name)
-      else when(col("__matched"), cascadeValue(f, matched, "__idx"))
-        .otherwise(cascadeValue(f, bySource, "__bidx")).as(f.name)
-    // TOUCHED-FILE DISCOVERY (by-source family): the key envelope
-    // proves nothing under BY SOURCE clauses, but most syncs still
-    // change only a SUBSET of files. One extra pass joins the visible
-    // rows (with file provenance) against the source and keeps the
-    // files holding at least one row SOME clause accepts — only those
-    // rewrite (stock Delta's findTouchedFiles shape); untouched files
-    // keep their bytes and row ids entirely. The insert anti-join then
-    // runs against EVERY visible key, not just the touched files' — a
-    // source key living in an untouched file is matched, never
-    // insertable. O(touched file paths) to the driver, never rows.
-    val discovery: Option[(Set[String], DataFrame)] =
-      if (bySource.isEmpty) None
-      else {
-        val baseM = readManifest(table, base)
-        val prevRels = baseM.files
-        val prov = readRels(spark, table, prevRels,
-          dvs = baseM.dvs, provenance = true)
-        val absToRel = prevRels.map(rel =>
-          table.resolve(rel).toAbsolutePath.normalize().toString -> rel).toMap
-        val touched = prov.alias("t")
-          .join(source.withColumn("__m", lit(true)).alias("s"),
-            cm.keyCond, "left_outer")
-          .withColumn("__matched", coalesce(col("__m"), lit(false)))
-          .filter((col("__matched") && cm.idxExpr >= 0) ||
-            (!col("__matched") && cm.bIdxExpr >= 0))
-          .select(col("__file")).distinct()
-          .collect().map(_.getString(0))
-          .map(f => absToRel.getOrElse(f, sys.error(
-            s"mergeIntoClauses: provenance path $f matches no manifest entry")))
-          .toSet
-        Some((touched, prov.select(keys.map(col): _*)))
-      }
-    // the visible keys a source row must miss to insert: under
-    // discovery every visible key, not just the touched files'
-    def targetKeys(t: DataFrame): DataFrame =
-      discovery.map(_._2).getOrElse(t.select(keys.map(col): _*))
-    val res = rewriteWhere(spark, dir, prune, { tgt =>
-      val joined = tgt.alias("t")
-        .join(source.withColumn("__m", lit(true)).alias("s"),
-          cm.keyCond, "left_outer")
-        .withColumn("__matched", coalesce(col("__m"), lit(false)))
-        .withColumn("__idx",
-          when(col("__matched"), cm.idxExpr).otherwise(lit(-1)))
-        .withColumn("__bidx",
-          when(!col("__matched"), cm.bIdxExpr).otherwise(lit(-1)))
-      val dropCond = (cm.matchedIs(deletes = true).map(col("__matched") && _) ++
-        cm.bySourceIs(deletes = true).map(!col("__matched") && _))
-        .reduceOption(_ || _)
-      val survivors = dropCond.fold(joined)(c => joined.filter(!c))
-        .select(tgt.schema.fields.toSeq.map(outValue): _*)
-      // an inserted row's omitted generated column recomputes with the
-      // rewrite; its identity and, on a row-tracked table, its
-      // materialized-id column are null — it reads a fresh row id from
-      // the replacement file's span
-      cm.insertRows(tgt, targetKeys(tgt)).fold(survivors)(
-        survivors.unionByName(_, allowMissingColumns = true))
-    }, keepOnly = discovery.map(_._1),
-    changeRows = { df => // df = visible candidate TABLE rows
-      (cm.oldImages(df) ++ cm.newImages(df).map(
-          _.withColumn("_change_type", lit("update_postimage"))) ++
-        cm.insertRows(df, targetKeys(df)).map(
-          _.withColumn("_change_type", lit("insert"))))
-        .reduce(_.unionByName(_, allowMissingColumns = true))
-    })
-    if (res.filesRewritten == 0L) {
-      // envelope path: no live file can hold any source key, so every
-      // source row is unmatched — conditional pure insert. Discovery
-      // path: zero TOUCHED files still allows matched-but-unaccepted
-      // keys to exist, so the anti-join against the visible keys stays.
-      cm.insCond match {
-        case None => res
-        case Some(ic) =>
-          val cand0 = source.alias("s").filter(ic)
-          val rows = fillToTableSchema(dir, discovery.map(d =>
-            cand0.join(d._2, keys, "left_anti")).getOrElse(cand0))
-          if (rows.isEmpty) res
-          else {
-            val partCols = readManifest(table, res.version).files.headOption
-              .map(pathPartCols).getOrElse(Seq.empty)
-            RewriteResult(commitAppend(rows, dir, partCols), 0L,
-              res.filesSkipped)
-          }
-      }
-    } else res
-  }
-
-  /** Conditional MERGE, MERGE-ON-READ — [[mergeIntoClauses]]'s clause
-    * model (all three families, BY SOURCE included) over
-    * [[markWhere]]: rows an UPDATE or DELETE clause accepts — matched
-    * rows through the matched cascade, unmatched-by-source rows
-    * through the by-source cascade — are HIDDEN by DV bitmaps on their
-    * files (rows no clause accepts stay visible — nothing is touched),
-    * the UPDATE clauses' new row versions plus the insert-eligible
-    * source rows land as ONE appended batch, and no data file is
-    * rewritten: the commit stays O(changed rows), the production CDC
-    * shape at 100 TB. Candidates prune by the source key envelope
-    * (pruning off under BY SOURCE clauses — any row may be affected);
-    * the matched cascade marks via one inner join of the VISIBLE
-    * candidate rows against the (AQE-broadcast) source, the by-source
-    * cascade via one anti-join against the source keys — existing DVs
-    * applied first, so a dead row can never resurrect as a match.
-    *
-    * Under `delta.enableChangeDataFeed` the commit writes
-    * per-row-typed change-data files (`delete` / `update_preimage` /
-    * `update_postimage` / `insert`); without CDF a later [[changeFeed]]
-    * across the merge refuses loudly — the DV diff alone cannot split
-    * the appended batch between postimages and inserts. Gates as
-    * [[markWhere]]; source-key uniqueness enforced. A merge that hides
-    * no row degenerates to a plain append of its inserts. */
-  def mergeIntoDvClauses(spark: SparkSession, dir: String, source: DataFrame,
-      keys: Seq[String], clauses: Seq[MergeClause]): RewriteResult = {
-    val cm = new ClauseMerge(source, keys, clauses, "mergeIntoDvClauses", dir)
-    import cm.{bySource, matched}
-    // an EMPTY source still drives the by-source family
-    if (source.isEmpty && bySource.isEmpty)
+    if (n == 0L && cm.bySource.isEmpty)
       return RewriteResult(currentVersion(dir).getOrElse(
         sys.error(s"no committed version in $dir")), 0L, 0L)
-    requireUniqueSourceKeys(source, keys, "mergeIntoDvClauses")
-    markWhere(spark, dir, "MERGE", cm.prune,
-      // hide exactly the visible rows SOME clause accepts; rows no
-      // clause accepts stay live and untouched
-      mark = { v =>
-        (Option.when(matched.nonEmpty)(
-          cm.matchedRows(v).filter(col("__idx") =!= -1)) ++
-          Option.when(bySource.nonEmpty)(
-            cm.unmatchedRows(v).filter(col("__bidx") =!= -1)))
-          .map(_.select(col("__f"), col("__p")))
-          .reduceOption(_.unionByName(_)).getOrElse(v.limit(0))
-      },
-      applyOldDvs = true,
-      updated = cm.newImages(_).reduceOption(_.unionByName(_)),
-      inserts = v => cm.insertRows(v, v.select(keys.map(col): _*)),
-      changes = { (visible, appended) =>
-        // postimages and inserts read back from the COMMITTED batch, so
-        // generated columns carry their recomputed values; an updated
-        // row's key comes from the source (matched) or, having no
-        // source row, from the target (by-source)
-        val updKeys = (cm.matchedIs(deletes = false).map(c =>
-            cm.matchedRows(visible).filter(c)
-              .select(keys.map(k => col(s"s.$k").as(k)): _*)) ++
-          cm.bySourceIs(deletes = false).map(c =>
-            cm.unmatchedRows(visible).filter(c)
-              .select(keys.map(k => col(s"t.$k").as(k)): _*)))
-          .reduceOption(_.unionByName(_)).map(_.dropDuplicates(keys))
-        val post = appended.zip(updKeys).map { case (a, uk) =>
-          a.join(uk, keys, "left_semi")
-            .withColumn("_change_type", lit("update_postimage")) }
-        val ins = appended.map(a =>
-          updKeys.fold(a)(uk => a.join(uk, keys, "left_anti"))
-            .withColumn("_change_type", lit("insert")))
-        (cm.oldImages(visible) ++ post ++ ins)
-          .reduce(_.unionByName(_, allowMissingColumns = true))
-      })
+    dml(spark, dir, "MERGE", if (cm.bySource.isEmpty) envelope else Seq.empty,
+      cm.tag)
   }
 
-  /** The no-matched-clause degenerate of the copy-on-write clause
-    * merge: a conditional idempotent insert. Source rows passing
-    * `insCond` whose key matches NO visible row append; nothing else
-    * changes and no file is touched. Matches can only live in
-    * envelope-pruned candidate files, so only those are scanned. */
-  private def clauseInsertOnly(spark: SparkSession, dir: String,
-      source: DataFrame, keys: Seq[String], prune: Seq[(String, Any, Any)],
-      insCond: Column): RewriteResult = {
-    val table = Paths.get(dir)
-    val base = currentVersion(dir).getOrElse(
-      sys.error(s"no committed version in $dir"))
-    val baseM = readManifest(table, base)
-    val (cands, skipped) = candidates(spark, dir, baseM, prune)
-    val partCols = baseM.files.headOption.map(pathPartCols)
-      .getOrElse(Seq.empty)
-    val eligible = fillToTableSchema(dir,
-      source.alias("s").filter(insCond))
-    val rows =
-      if (cands.isEmpty) eligible
-      else eligible.join(
-        readRels(spark, table, cands, dvs = baseM.dvs)
-          .select(keys.map(col): _*),
-        keys, "left_anti")
-    if (rows.isEmpty) RewriteResult(base, 0L, skipped.size.toLong)
-    else RewriteResult(commitAppend(rows, dir, partCols), 0L,
-      skipped.size.toLong)
+  /** [[mergeIntoClauses]] on a table that must write deletion vectors:
+    * fails unless `delta.enableDeletionVectors=true`. */
+  def mergeIntoDvClauses(spark: SparkSession, dir: String, source: DataFrame,
+      keys: Seq[String], clauses: Seq[MergeClause]): RewriteResult = {
+    requireDvs(spark, dir, "MERGE")
+    mergeIntoClauses(spark, dir, source, keys, clauses)
   }
 
   /** RESTORE to an earlier committed version (Delta's RESTORE): one
@@ -2454,11 +2150,11 @@ object TxLog {
     * always; partitioned layouts read per batch so each batch dir
     * anchors its own partition discovery.
     */
-  /** `provenance = true` appends a `__file` column (the normalized
-    * absolute data-file path — [[IcebergLog.normPathCol]]'s shared
-    * spelling rule, so it joins against `table.resolve(rel)` forms) —
-    * the by-source merge's touched-file discovery needs to know which
-    * FILE each visible row came from. */
+  /** `provenance = true` appends `__file` (the normalized absolute
+    * data-file path — [[IcebergLog.normPathCol]]'s shared spelling rule,
+    * so it joins against `table.resolve(rel)` forms) and `__pos` (the
+    * row's physical index in its file): a DML needs to know which row
+    * of which FILE each visible row is. */
   private def readRels(spark: SparkSession, table: Path, rels: Seq[String],
       schema: Option[org.apache.spark.sql.types.StructType] = None,
       dvs: Map[String, String] = Map.empty,
@@ -2470,7 +2166,8 @@ object TxLog {
       val withP =
         if (!provenance) df
         else df.withColumn("__file",
-          IcebergLog.normPathCol(col("_metadata.file_path")))
+            IcebergLog.normPathCol(col("_metadata.file_path")))
+          .withColumn("__pos", col("_metadata.row_index"))
       if (dvs.isEmpty) withP
       else {
         val cols = withP.columns.toSeq
@@ -2533,19 +2230,21 @@ object TxLog {
   }
 
   /** The row-id-attaching scan over a rel subset of `version`'s live
-    * set — shared by [[snapshotWithRowIds]] (all rels) and OPTIMIZE's
-    * materializing rewrite (the files being compacted). A file with a
-    * MATERIALIZED id column (`#ridmat`) contributes ids from that
-    * column; everything else derives base + position. */
+    * set — shared by [[snapshotWithRowIds]] (all rels), OPTIMIZE's
+    * materializing rewrite (the files being compacted) and the
+    * copy-on-write DML's candidate read, which also keeps the
+    * `__file`/`__pos` provenance columns. A file with a MATERIALIZED id
+    * column (`#ridmat`) contributes ids from that column; everything
+    * else derives base + position. */
   private def relsWithRowIds(spark: SparkSession, dir: String, version: Long,
-      rels: Seq[String]): DataFrame = {
+      rels: Seq[String], provenance: Boolean = false): DataFrame = {
     val table = Paths.get(dir)
     // config may live only in the checkpoint after the JSON prefix ages
     DeltaLog.warmMetaCache(spark, table)
     if (!rowTrackingOn(dir))
       sys.error(s"$dir: snapshotWithRowIds needs delta.enableRowTracking=true")
     val m = readManifest(table, version)
-    val (rids, mat, dvs) = (m.rids, m.ridMat, m.dvs)
+    val (rids, mat) = (m.rids, m.ridMat)
     val matCol = matRowIdCol(dir)
     val missing = rels.filterNot(rids.contains)
       .filterNot(rel => DeltaLog.fileRowCount(table.resolve(rel)).contains(0L))
@@ -2564,38 +2263,13 @@ object TxLog {
     val readSchema = matCol.filterNot(schema.fieldNames.contains)
       .map(c => schema.add(c, org.apache.spark.sql.types.LongType,
         nullable = true)).getOrElse(schema)
-    // canonicalize `_metadata.file_path` (URI-escaped) to the raw path
-    // the manifest-derived map keys on — same rule the Iceberg reader
-    // applies to its delete-file joins
-    val norm = (c: Column) =>
-      when(c.startsWith("file:"),
-        regexp_replace(url_decode(regexp_replace(c, "\\+", "%2B")),
-          "^file:/+", "/"))
-        .otherwise(c)
-    def withProvenance(df: DataFrame): DataFrame = {
-      val out = df
-        .withColumn("__file", norm(col("_metadata.file_path")))
-        .withColumn("__pos", col("_metadata.row_index"))
-      if (dvs.isEmpty) out
-      else {
-        val keep = DeletionVectors.keepUdf(spark, table, dvs)
-        out.filter(keep(col("_metadata.file_path"), col("_metadata.row_index")))
-      }
-    }
-    def rd = spark.read.schema(readSchema)
-    val scanned =
-      if (!rels.exists(_.split("/").exists(_.contains("="))))
-        withProvenance(rd.parquet(rels.map(r => table.resolve(r).toString): _*))
-      else rels.groupBy(_.split("/").head).toSeq.sortBy(_._1)
-        .map { case (batch, fs) =>
-          withProvenance(rd.option("basePath", table.resolve(batch).toString)
-            .parquet(fs.map(r => table.resolve(r).toString): _*))
-        }.reduce(_.unionByName(_))
+    val scanned = readRels(spark, table, rels, Some(readSchema), dvs = m.dvs,
+      provenance = true)
     import spark.implicits._
     val bases = rids.toSeq.map { case (rel, r) =>
       (table.resolve(rel).toAbsolutePath.toString, r.base)
     }.toDF("__file_abs", "__base")
-    val internal = Set("__file", "__pos") ++ matCol
+    val internal = (if (provenance) Set.empty[String] else Provenance) ++ matCol
     val cols = scanned.columns.filterNot(internal).map(col).toSeq
     val rowId = matCol
       .map(c => coalesce(col(c), col("__base") + col("__pos")))

@@ -2229,10 +2229,13 @@ class DeltaLogSpec extends SparkSpec {
     val v5 = TxLog.currentVersion(t).get
     assert(TxLog.changeFeed(s, t, 4L, v5).count() == 0,
       "compaction must not surface rows in the typed feed")
-    // ...and a copy-on-write rewrite refuses loudly
-    TxLog.deleteWhere(s, t, col("event_id") === 600L)           // v6
+    // ...and a copy-on-write rewrite refuses loudly: with DVs off the
+    // DELETE rewrites (existing DVs stay honoured)
+    TxLog.setTableProperties(s, t,
+      Map("delta.enableDeletionVectors" -> "false"))            // v6
+    TxLog.deleteWhere(s, t, col("event_id") === 600L)           // v7
     val e = intercept[RuntimeException](
-      TxLog.changeFeed(s, t, v5, v5 + 1).count())
+      TxLog.changeFeed(s, t, v5, v5 + 2).count())
     assert(e.getMessage.contains("copy-on-write"), e.getMessage)
   }
 
@@ -2379,10 +2382,11 @@ class DeltaLogSpec extends SparkSpec {
     TxLog.commitAppend(ev.repartitionByRange(4, col("event_id")), t)
     TxLog.setTableProperties(s, t, Map("delta.enableDeletionVectors" -> "true"))
     TxLog.deleteWhereDv(s, t, col("event_id") <= 300)           // v3: DV gate up
-    TxLog.setTableProperties(s, t, Map("delta.enableChangeDataFeed" -> "true"))
+    TxLog.setTableProperties(s, t, Map("delta.enableChangeDataFeed" -> "true",
+      "delta.enableDeletionVectors" -> "false"))
     // v5: copy-on-write delete with CDF — a cdc-carrying commit with NO
     // dvUpdates, while untouched files still carry live DVs
-    TxLog.deleteWhere(s, t, col("event_id").between(50000L, 50010L))
+    TxLog.deleteWhere(s, t, col("event_id").between(900L, 910L))
     def newestProto(table: String): com.fasterxml.jackson.databind.JsonNode = {
       val ld = Paths.get(table, "_delta_log")
       val vs = Files.list(ld).iterator.asScala.map(_.getFileName.toString)
@@ -2406,7 +2410,7 @@ class DeltaLogSpec extends SparkSpec {
     // and the table still reads correctly through the external path
     assert(DeltaLog.snapshot(s, t).count() ==
       ev.filter(col("event_id") > 300 &&
-        !col("event_id").between(50000L, 50010L)).count())
+        !col("event_id").between(900L, 910L)).count())
   }
 
   test("protocol merge carries property-driven features and survives a compacted prefix") {
@@ -2429,7 +2433,8 @@ class DeltaLogSpec extends SparkSpec {
       .foreach(Files.delete)
     DeltaLog.resetMetaCache(Paths.get(t))
     TxLog.resetMirrorCache()
-    TxLog.setTableProperties(s, t, Map("delta.enableChangeDataFeed" -> "true"))
+    TxLog.setTableProperties(s, t, Map("delta.enableChangeDataFeed" -> "true",
+      "delta.enableDeletionVectors" -> "false"))
     TxLog.deleteWhere(s, t, col("event_id").between(200L, 210L)) // cdc commit
     val tail = Files.list(ld).iterator.asScala.map(_.getFileName.toString)
       .filter(n => n.endsWith(".json") && n.takeWhile(_ != '.').forall(_.isDigit))
@@ -2472,10 +2477,14 @@ class DeltaLogSpec extends SparkSpec {
             .withColumn("event_id", col("event_id") + nextId), t)
           nextId += 10000L
         case 1 => // merge-on-read delete: raises the gate
+          TxLog.setTableProperties(s, t,
+            Map("delta.enableDeletionVectors" -> "true"))
           TxLog.deleteWhereDv(s, t,
             pmod(col("event_id"), lit(97)) === lit(rnd.nextInt(97)))
           dvGateUp = true
         case 2 => // copy-on-write delete (cdc-carrying once CDF is on)
+          TxLog.setTableProperties(s, t,
+            Map("delta.enableDeletionVectors" -> "false"))
           TxLog.deleteWhere(s, t,
             pmod(col("event_id"), lit(101)) === lit(rnd.nextInt(101)))
         case 3 =>

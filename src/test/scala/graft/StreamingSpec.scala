@@ -1200,13 +1200,16 @@ class StreamingSpec extends SparkSpec {
       Seq(("event_id", null, java.lang.Long.valueOf(100L))))         // v3: DVs land
     // v4: COPY-ON-WRITE update over the same files — the rewrite drops
     // the removed files' DV entries, so dvNow != dvPrev AND removedAny;
-    // the feed must read v4's typed cdc files, not misclassify the
-    // commit as merge-on-read and leak the whole rewritten batch
+    // the feed must read v5's typed cdc files, not misclassify the
+    // commit as merge-on-read and leak the whole rewritten batch. With
+    // DVs off (v4) the UPDATE rewrites; existing DVs stay honoured.
+    graft.sources.TxLog.setTableProperties(s, tbl,
+      Map("delta.enableDeletionVectors" -> "false"))                 // v4
     graft.sources.TxLog.updateWhere(s, tbl,
       col("event_id").between(150L, 200L),
       Map("value" -> (col("value") + 10)),
       Seq(("event_id", java.lang.Long.valueOf(150L),
-        java.lang.Long.valueOf(200L))))                              // v4 CoW
+        java.lang.Long.valueOf(200L))))                              // v5 CoW
     val feed = s.read.format("graft-txlog").option("path", tbl)
       .option("readChangeFeed", "true").option("startingVersion", "4").load()
     val got = feed.groupBy(col("_change_type")).count().collect()
@@ -1217,7 +1220,7 @@ class StreamingSpec extends SparkSpec {
     assert(feed.filter(col("_change_type") === "update_preimage" &&
       col("event_id") <= 100).count() == 0)
     // and the batch changeFeed API agrees on the same history
-    val cf = graft.sources.TxLog.changeFeed(s, tbl, 3L, 4L)
+    val cf = graft.sources.TxLog.changeFeed(s, tbl, 3L, 5L)
       .groupBy(col("_change_type")).count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(cf == got, s"changeFeed vs DSv2: $cf vs $got")

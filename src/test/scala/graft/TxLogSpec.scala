@@ -941,12 +941,13 @@ class TxLogSpec extends SparkSpec {
     TxLog.commitAppend(events.limit(0), t)
     TxLog.setTableProperties(s, t, Map(
       "delta.enableRowTracking" -> "true",
-      "delta.enableDeletionVectors" -> "true",
       "delta.enableChangeDataFeed" -> "true"))
     TxLog.commitAppend(events.filter(col("event_id") < 300).coalesce(1), t)
     TxLog.commitAppendOnce(events.filter(col("event_id").between(300, 499))
       .coalesce(1), t, "codec-app", 1L)
     TxLog.deleteWhere(s, t, col("event_id") === 5)
+    TxLog.setTableProperties(s, t,
+      Map("delta.enableDeletionVectors" -> "true"))
     TxLog.deleteWhereDv(s, t, pmod(col("event_id"), lit(7)) === 0)
     TxLog.updateWhereDv(s, t, pmod(col("event_id"), lit(11)) === 0,
       Map("value" -> lit(2.0)))
@@ -1094,9 +1095,7 @@ class TxLogSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val t = freshTable()
     TxLog.commitAppend(events.limit(0), t)
-    TxLog.setTableProperties(s, t, Map(
-      "delta.enableRowTracking" -> "true",
-      "delta.enableDeletionVectors" -> "true"))
+    TxLog.setTableProperties(s, t, Map("delta.enableRowTracking" -> "true"))
     TxLog.commitAppend(events.filter(col("event_id") <= 200)
       .coalesce(1).sortWithinPartitions("event_id"), t)
     TxLog.commitAppend(events.filter(col("event_id").between(201, 400))
@@ -1151,6 +1150,8 @@ class TxLogSpec extends SparkSpec {
     assert(inserted.size == 31 && inserted.values.min >= n,
       s"merged-in inserts must claim fresh ids past $n")
     // merge-on-read DML still composes after the materializing rewrites
+    TxLog.setTableProperties(s, t,
+      Map("delta.enableDeletionVectors" -> "true"))
     TxLog.deleteWhereDv(s, t, col("event_id") === 150L)
     val end = TxLog.snapshotWithRowIds(s, t)
       .select(col("event_id"), col("_row_id")).collect()
@@ -1239,9 +1240,11 @@ class TxLogSpec extends SparkSpec {
     TxLog.setTableProperties(s, t, Map("delta.enableDeletionVectors" -> "true"))
     TxLog.deleteWhereDv(s, t, pmod(col("event_id"), lit(5)) === 0)   // v3
     val atV3 = TxLog.snapshot(s, t).count()
-    // copy-on-write delete REWRITES files (drops their DVs with them)
-    TxLog.deleteWhere(s, t, col("event_id") <= 300)                  // v4
-    TxLog.restoreTo(s, t, 3L)                                        // v5
+    // with DVs off, a delete REWRITES files (drops their DVs with them)
+    TxLog.setTableProperties(s, t,
+      Map("delta.enableDeletionVectors" -> "false"))                 // v4
+    TxLog.deleteWhere(s, t, col("event_id") <= 300)                  // v5
+    TxLog.restoreTo(s, t, 3L)                                        // v6
     assert(TxLog.snapshot(s, t).count() == atV3,
       "restored files must come back WITH their deletion vectors")
     assert(graft.sources.DeltaLog.snapshot(s, t).count() == atV3,
@@ -1733,14 +1736,21 @@ class TxLogSpec extends SparkSpec {
       val e = intercept[RuntimeException](body)
       assert(e.getMessage.contains("multiple source rows"), e.getMessage)
     }
-    refusal(TxLog.mergeInto(s, t, dup, Seq("event_id")))
+    // the plain names on a table without DVs (copy-on-write) and with
+    // them (merge-on-read); the `*Dv` names on the DV table
+    val plain = freshTable()
+    TxLog.commitAppend(ev.filter(col("event_id") < 500), plain)
+    Seq(plain, t).foreach { tbl =>
+      refusal(TxLog.mergeInto(s, tbl, dup, Seq("event_id")))
+      refusal(TxLog.mergeIntoClauses(s, tbl, dup, Seq("event_id"),
+        Seq(MatchedUpdate(Map("value" -> col("s.value"))))))
+    }
     refusal(TxLog.mergeIntoDv(s, t, dup, Seq("event_id")))
-    refusal(TxLog.mergeIntoClauses(s, t, dup, Seq("event_id"),
-      Seq(MatchedUpdate(Map("value" -> col("s.value"))))))
     refusal(TxLog.mergeIntoDvClauses(s, t, dup, Seq("event_id"),
       Seq(NotMatchedInsert())))
     // nothing committed by the refusals
     assert(TxLog.currentVersion(t).contains(2L))
+    assert(TxLog.currentVersion(plain).contains(1L))
   }
 
   test("conditional MERGE (merge-on-read): DVs hide only accepted rows, families agree, CDF typed") {
@@ -1767,10 +1777,13 @@ class TxLogSpec extends SparkSpec {
     // NO file rewritten: every v1 file still live
     assert(filesV1.subsetOf(TxLog.snapshot(s, t).inputFiles.toSet),
       "merge-on-read clauses must not rewrite files")
-    // row-for-row against the copy-on-write family on the same history
+    // row-for-row against the copy-on-write family on the same history:
+    // a twin table that differs only in the DV property
     val t2 = freshTable()
     TxLog.commitAppend(ev.filter(col("event_id") > 200)
       .repartitionByRange(8, col("event_id")), t2)
+    TxLog.setTableProperties(s, t2,
+      Map("delta.enableChangeDataFeed" -> "true"))
     TxLog.mergeIntoClauses(s, t2, source, Seq("event_id"), clauses)
     val a = TxLog.snapshot(s, t)
     val b = TxLog.snapshot(s, t2)
@@ -1888,7 +1901,7 @@ class TxLogSpec extends SparkSpec {
       TxLog.commitAppend(ev.filter(col("event_id") > 250)
         .repartitionByRange(8, col("event_id")), t)                   // v1
       TxLog.setTableProperties(s, t, Map(
-        "delta.enableDeletionVectors" -> "true",
+        "delta.enableDeletionVectors" -> mor.toString,
         "delta.enableChangeDataFeed" -> "true"))                      // v2
       if (mor) TxLog.mergeIntoDvClauses(s, t, source, Seq("event_id"), clauses)
       else TxLog.mergeIntoClauses(s, t, source, Seq("event_id"), clauses)
@@ -2045,7 +2058,7 @@ class TxLogSpec extends SparkSpec {
       TxLog.commitAppend(ev.filter(col("event_id") > 200)
         .repartitionByRange(4, col("event_id")), t)
       TxLog.setTableProperties(s, t, Map(
-        "delta.enableDeletionVectors" -> "true",
+        "delta.enableDeletionVectors" -> mor.toString,
         "delta.enableChangeDataFeed" -> "true"))
       if (mor) TxLog.mergeIntoDvClauses(s, t, source, Seq("event_id"), clauses)
       else TxLog.mergeIntoClauses(s, t, source, Seq("event_id"), clauses)
@@ -2145,7 +2158,7 @@ class TxLogSpec extends SparkSpec {
       assert(after(1L) == Seq(1.0, null, "std", null), s"$name: $after")
       assert(after(2L) == Seq(5.0, 10.0, "vip", 1L), s"$name: $after")
       assert(after(10L) == Seq(10.0, 20.0, "std", 2L), s"$name: $after")
-      assert(after(11L).take(3) == Seq(11.0, 22.0, "std"), s"$name: $after")
+      assert(after(11L) == Seq(11.0, 22.0, "std", 3L), s"$name: $after")
       // a source column the table lacks fails whether or not a live
       // file can hold the source's keys
       Seq(2L, 50L).foreach { id =>
@@ -2241,6 +2254,91 @@ class TxLogSpec extends SparkSpec {
     assert(pre.size == base.count() && pre.subsetOf(post),
       s"renumbered: ${(pre -- post).take(5)}")
     assert(sorted(TxLog.snapshot(s, t)) == expected)
+  }
+
+  test("DELETE, UPDATE and MERGE commits name their operation under both table configs") {
+    val s = spark
+    import org.apache.spark.sql.functions._
+    import scala.jdk.CollectionConverters._
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    Seq("false", "true").foreach { dv =>
+      val t = freshTable()
+      TxLog.commitAppend(events.filter(col("event_id") < 300)
+        .repartitionByRange(3, col("event_id")), t)                   // v1
+      TxLog.setTableProperties(s, t,
+        Map("delta.enableDeletionVectors" -> dv))                     // v2
+      Seq[(String, () => TxLog.RewriteResult)](
+        "DELETE" -> (() => TxLog.deleteWhere(s, t, col("event_id") < 10)),
+        "UPDATE" -> (() => TxLog.updateWhere(s, t,
+          col("event_id").between(20, 29), Map("value" -> lit(1.0)))),
+        "MERGE" -> (() => TxLog.mergeInto(s, t,
+          events.filter(col("event_id").between(100, 109))
+            .withColumn("value", lit(2.0)), Seq("event_id")))
+      ).foreach { case (op, run) =>
+        val v = run().version
+        assert(TxLog.readManifest(java.nio.file.Paths.get(t), v).op
+          .contains((op, true)), s"DVs $dv: manifest op of $op")
+        // the Delta mirror's version is the manifest's minus one
+        val info = Files.readAllLines(java.nio.file.Paths.get(t, "_delta_log",
+          f"${v - 1}%020d.json")).asScala.find(_.contains("\"commitInfo\"")).get
+        assert(mapper.readTree(info).get("commitInfo").get("operation")
+          .asText() == op, s"DVs $dv: $info")
+      }
+    }
+  }
+
+  test("the table property picks the DML strategy; the *Dv names require it") {
+    val s = spark
+    import org.apache.spark.sql.functions._
+    def table(dv: Boolean): String = {
+      val t = freshTable()
+      TxLog.commitAppend(events.filter(col("event_id") < 300)
+        .repartitionByRange(3, col("event_id")), t)
+      if (dv) TxLog.setTableProperties(s, t,
+        Map("delta.enableDeletionVectors" -> "true"))
+      t
+    }
+    val source = events.filter(col("event_id").between(100, 109))
+      .withColumn("value", lit(2.0))
+    val dml = Seq[String => TxLog.RewriteResult](
+      TxLog.deleteWhere(s, _, col("event_id") < 10),
+      TxLog.updateWhere(s, _, col("event_id").between(20, 29),
+        Map("value" -> lit(1.0))),
+      TxLog.mergeInto(s, _, source, Seq("event_id")))
+    // a DV table: no file is removed, every touched file gains a DV
+    val dvT = table(dv = true)
+    dml.foreach { run =>
+      val before = TxLog.liveRelsAt(dvT, TxLog.currentVersion(dvT).get).toSet
+      val res = run(dvT)
+      val m = TxLog.readManifest(java.nio.file.Paths.get(dvT), res.version)
+      assert(before.subsetOf(m.files.toSet), s"a DV table removed files: $res")
+      assert(res.filesRewritten > 0 && m.dvs.size >= res.filesRewritten, m.dvs.toString)
+    }
+    // a plain table: the touched files are rewritten, and no DV is written
+    val plainT = table(dv = false)
+    dml.foreach { run =>
+      val before = TxLog.liveRelsAt(plainT, TxLog.currentVersion(plainT).get).toSet
+      val res = run(plainT)
+      val m = TxLog.readManifest(java.nio.file.Paths.get(plainT), res.version)
+      assert(res.filesRewritten > 0 &&
+        (before -- m.files).size.toLong == res.filesRewritten, res.toString)
+      assert(m.dvs.isEmpty)
+    }
+    assert(TxLog.snapshot(s, dvT).except(TxLog.snapshot(s, plainT)).count() == 0 &&
+      TxLog.snapshot(s, plainT).except(TxLog.snapshot(s, dvT)).count() == 0)
+    // a *Dv name on a plain table fails with the writer gate
+    Seq[() => Any](
+      () => TxLog.deleteWhereDv(s, plainT, col("event_id") < 10),
+      () => TxLog.updateWhereDv(s, plainT, col("event_id") < 10,
+        Map("value" -> lit(1.0))),
+      () => TxLog.mergeIntoDv(s, plainT, source, Seq("event_id")),
+      () => TxLog.mergeIntoDvClauses(s, plainT, source, Seq("event_id"),
+        Seq(TxLog.NotMatchedInsert()))
+    ).foreach { run =>
+      val e = intercept[RuntimeException](run())
+      assert(e.getMessage.contains("requires the deletionVectors feature"),
+        e.getMessage)
+    }
   }
 
   test("vacuum reclaims expired change-data files, keeps the retained feed intact") {
